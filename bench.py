@@ -92,11 +92,11 @@ HEADLINE = [
     # stats fold + pruned read — the end-to-end skipping round-trip)
     "q277_rolling_hll_distinct",
     "q278_zonemap_prune",
-    # round 10: the unified table format (init + merge commits that
-    # maintain Z-order layout + zone map, then a pruned read) and the
-    # streaming manifest sink's epoch matrix (3 MERGE commits + a
-    # skipped poisoned replay + a crash/retry) — the warehouse write
-    # path end-to-end
+    # round 10: the unified table format (file-list init + a merge
+    # commit that re-clusters its files and records their zone stats,
+    # then a pruned read) and the streaming sink's epoch matrix (3
+    # fl_epoch_step MERGE commits + a skipped poisoned replay + a
+    # crash/retry) — the warehouse write path end-to-end
     "q283_manifest_pruned_read",
     "q284_stream_manifest_sink",
     # round 10 (session 2): the file-list manifest MERGE —
@@ -152,10 +152,11 @@ EAGER_BUILD = {
     # at plan-build time; timing only the returned 5-row aggregate
     # would measure none of the skipping round-trip
     "q278_zonemap_prune",
-    # q283/q284 run their manifest commits (init, merges, crash/replay
-    # epochs) at plan-build time; the returned DataFrame is a small
-    # aggregate over the final table — rebuilding per run keeps the
-    # number covering the whole commit + read round-trip
+    # q283/q284 run their file-list commits (fl_init, fl_merge_upsert,
+    # fl_epoch_step crash/replay epochs) at plan-build time; the
+    # returned DataFrame is a small aggregate over the final table —
+    # rebuilding per run keeps the number covering the whole commit +
+    # read round-trip
     "q283_manifest_pruned_read",
     "q284_stream_manifest_sink",
     "q285_filelist_merge",

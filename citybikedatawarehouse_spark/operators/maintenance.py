@@ -1,29 +1,22 @@
-"""Warehouse maintenance: small-file compaction.
+"""Warehouse maintenance on plain Parquet directories.
 
 Streaming sinks and frequent incremental appends (the reference's
 ``if_exists='append'`` pattern) fragment a table into many small
 files; at scale, scan cost becomes dominated by file-open overhead
 and the NameNode/listing path. Compaction rewrites a parquet
-directory into size-targeted files.
+directory into size-targeted files. The module also holds the
+plain-Parquet MERGE emulations, snapshot CDC extraction and digests,
+and scan-built zone maps with their pruned reads. The versioned
+table format lives in ``operators/table_format.py``.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-class CommitConflictError(RuntimeError):
-    """Raised by a CAS pointer flip when the table's pointer no
-    longer names the committing writer's parent version — a
-    concurrent writer won the race. The loser's staged version stays
-    an invisible orphan (readers only follow the pointer); retry the
-    whole operation against the new current version."""
 
 
 def _fs_swap(spark: SparkSession, staging: str, target: str, backup: str) -> None:
@@ -56,7 +49,7 @@ def _fs_swap(spark: SparkSession, staging: str, target: str, backup: str) -> Non
 def parquet_file_stats(path: str) -> tuple[int, int]:
     """(file_count, total_bytes) of the parquet data files under
     ``path`` (recursive — includes partition subdirs; skips hidden
-    ``_``/``.`` subtrees such as a version's ``_zonemap``, matching
+    ``_``/``.`` subtrees such as a table's ``_manifests``, matching
     Spark's own scan listing)."""
     n, size = 0, 0
     for root, dirs, files in os.walk(path):
@@ -128,8 +121,8 @@ def merge_upsert(
     ``merge_upsert_partitioned`` — it rewrites only the partitions
     the update keys touch (dynamic partition overwrite) instead of
     this full-table rewrite. On stores where rename is NOT atomic
-    (object stores), use ``merge_upsert_manifest`` — versioned data
-    directories published by a one-file pointer flip, crash-
+    (object stores), use ``table_format.fl_merge_upsert`` — immutable
+    data files published by a one-file pointer flip, crash-
     consistent everywhere. The emulation keeps identical semantics
     at any scale — only the rewrite/commit granularity changes."""
     n_updates = updates.count()
@@ -257,849 +250,6 @@ def merge_upsert_partitioned(
     return n_replaced, n_inserted
 
 
-# ---------------------------------------------------------------------------
-# manifest-pointer table: crash-consistent commits on plain parquet
-# ---------------------------------------------------------------------------
-
-_MANIFEST = "_MANIFEST"
-
-
-def _manifest_path(root: str) -> str:
-    return os.path.join(root, _MANIFEST)
-
-
-def manifest_current(root: str) -> str:
-    """Path of the table's current committed version directory (the
-    one the ``_MANIFEST`` pointer names). Raises if the table was
-    never initialized — an uncommitted staging write must NOT be
-    readable, that is the whole point."""
-    with open(_manifest_path(root)) as f:
-        version = f.read().strip()
-    if not version:
-        raise IOError(f"manifest table {root}: empty _MANIFEST")
-    return os.path.join(root, version)
-
-
-def manifest_read(spark: SparkSession, root: str) -> DataFrame:
-    """Read the current committed version of a manifest table."""
-    return spark.read.parquet(manifest_current(root))
-
-
-def _manifest_commit(root: str, version: str) -> None:
-    """Flip the pointer: write ``_MANIFEST.tmp``, fsync it, then
-    atomically rename over ``_MANIFEST`` (``os.replace`` — POSIX
-    atomic; on HDFS this maps to an atomic single-file rename, on S3
-    to an atomic single-object PUT, which is why the pointer is ONE
-    tiny file and not the data). A crash anywhere in this function
-    leaves either the old pointer (plus a harmless ``.tmp``) or the
-    new pointer — never a torn table, because readers only ever
-    follow the pointer."""
-    tmp = _manifest_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(version + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(root))
-
-
-def _pointer_current(root: str) -> str | None:
-    """The pointer's current version name, or None for an
-    uninitialized table — the CAS comparand."""
-    p = _manifest_path(root)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        v = f.read().strip()
-    return v or None
-
-
-_COMMIT_LOCK = "_COMMIT_LOCK"
-_LOCK_STALE_SEC = 30.0
-_LOCK_WAIT_SEC = 10.0
-
-
-def manifest_commit_cas(
-    root: str, version: str, parent: str | None
-) -> None:
-    """Optimistic-concurrency pointer flip (the Delta/Iceberg commit
-    rule): publish ``version`` IFF the pointer still names
-    ``parent`` (None = table must be uninitialized). Two concurrent
-    committers both compute their commit from the same parent; the
-    first flip wins, the second finds the pointer moved and raises
-    ``CommitConflictError`` — never a silent lost update. The staged
-    loser is an orphan invisible to pointer-following readers.
-
-    The read-compare-flip critical section is guarded by an O_EXCL
-    lock file (atomic create on POSIX/HDFS); a lock older than
-    ``_LOCK_STALE_SEC`` is presumed abandoned by a crashed writer
-    and stolen — by atomic ``os.rename`` of the corpse, so when two
-    recovery writers race over the same stale lock EXACTLY ONE
-    rename succeeds (the loser's raises FileNotFoundError and it
-    re-enters the normal acquire loop against whatever the winner
-    installs). A plain ``os.remove`` steal would be a TOCTOU hole:
-    two stealers could interleave so the second removes the first's
-    FRESH lock and both enter the critical section — a silent lost
-    update, the exact failure the CAS exists to prevent. After
-    winning the rename, the corpse's mtime is re-verified: if it
-    turns out fresh (the μs-scale race where a live holder's lock
-    was yanked between the staleness check and the rename), it is
-    restored via O_EXCL create of the original bytes, or — if the
-    slot was grabbed in between — the stealer FAILS LOUDLY rather
-    than let two writers proceed. Release is token-verified: the
-    lock is removed only if it still holds this writer's unique
-    token, so a holder that stalls past ``_LOCK_STALE_SEC`` and gets
-    legitimately stolen can never delete the thief's live lock on
-    its way out. On object stores without atomic create-if-absent,
-    swap this for the store's conditional-PUT (S3 If-None-Match,
-    GCS x-goog-if-generation-match) — the CAS contract is the same."""
-    lock = os.path.join(root, _COMMIT_LOCK)
-    token = f"{os.getpid()}:{uuid.uuid4().hex}\n"
-    deadline = time.monotonic() + _LOCK_WAIT_SEC
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, token.encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            try:
-                age = time.time() - os.path.getmtime(lock)
-            except FileNotFoundError:
-                continue  # holder just released; retry immediately
-            if age > _LOCK_STALE_SEC:
-                corpse = f"{lock}.stale.{os.getpid()}.{uuid.uuid4().hex}"
-                try:
-                    os.rename(lock, corpse)  # atomic: one stealer wins
-                except FileNotFoundError:
-                    continue  # another stealer won; re-enter acquire
-                # rename preserves mtime — re-verify the corpse really
-                # was the stale file the check saw, not a fresh lock
-                # installed in the window since
-                if time.time() - os.path.getmtime(corpse) > _LOCK_STALE_SEC:
-                    os.remove(corpse)  # confirmed crashed holder
-                    continue
-                # mis-steal of a LIVE lock: put it back exactly as it
-                # was, or fail loudly — never proceed alongside the
-                # holder we just yanked
-                with open(corpse, "rb") as f:
-                    original = f.read()
-                os.remove(corpse)
-                try:
-                    fd = os.open(
-                        lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                    )
-                    os.write(fd, original)
-                    os.close(fd)
-                except FileExistsError:
-                    raise IOError(
-                        f"commit {version}: stole a live lock {lock} "
-                        f"and could not restore it (slot re-acquired) "
-                        f"— failing rather than risk a double-entry"
-                    )
-                if time.monotonic() > deadline:
-                    raise IOError(
-                        f"commit {version}: lock {lock} looked stale "
-                        f"but kept proving live past the deadline — "
-                        f"restored it and gave up"
-                    )
-                continue
-            if time.monotonic() > deadline:
-                raise IOError(
-                    f"commit {version}: could not acquire {lock} in "
-                    f"{_LOCK_WAIT_SEC}s (held {age:.1f}s)"
-                )
-            time.sleep(0.01)
-    try:
-        cur = _pointer_current(root)
-        if cur != parent:
-            raise CommitConflictError(
-                f"commit {version}: table {root} moved from parent "
-                f"{parent!r} to {cur!r} — a concurrent writer "
-                f"committed first; retry against the new version"
-            )
-        _manifest_commit(root, version)
-    finally:
-        # token-verified release: only remove a lock that is still
-        # OURS — if we stalled past _LOCK_STALE_SEC and were stolen,
-        # the path now holds the thief's token and must be left alone
-        try:
-            with open(lock) as f:
-                still_ours = f.read() == token
-        except FileNotFoundError:
-            still_ours = False
-        if still_ours:
-            os.remove(lock)
-
-
-def _claim_dir_version(root: str) -> str:
-    """Atomically claim the next version number with an O_EXCL
-    ``vNNNNNNNN.claim`` marker (invisible to ``manifest_versions`` —
-    the suffix fails its isdigit filter), so two concurrent writers
-    can never stage into the same version directory. Claimed numbers
-    are never reissued even if the claimant crashes before writing
-    anything."""
-    claimed = []
-    for d in os.listdir(root):
-        stem = d.split(".", 1)[0]
-        if stem.startswith("v") and stem[1:].isdigit():
-            claimed.append(int(stem[1:]))
-    n = max(claimed, default=0) + 1
-    while True:
-        v = f"v{n:08d}"
-        try:
-            fd = os.open(
-                os.path.join(root, f"{v}.claim"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-            os.close(fd)
-            return v
-        except FileExistsError:
-            n += 1
-
-
-_ZONEMAP_DIR = "_zonemap"
-_PROPS_FILE = "_props.json"
-
-
-def _zonemap_path(root: str, version: str) -> str:
-    return os.path.join(root, version, _ZONEMAP_DIR)
-
-
-def _props_write(root: str, version: str, props: dict) -> None:
-    """Persist table properties (stats columns, layout spec) inside
-    the version directory — underscore-hidden from data scans, and
-    published by the same pointer flip as the data, so properties are
-    versioned and crash-consistent exactly like the zone map."""
-    import json
-
-    with open(os.path.join(root, version, _PROPS_FILE), "w") as f:
-        json.dump(props, f)
-
-
-def manifest_table_props(root: str, version: str | None = None) -> dict:
-    """Committed table properties of a manifest-table version
-    (current pointer's target by default): ``stats_cols`` — the zone
-    map's tracked columns; ``zorder_by`` — the clustering columns
-    every commit re-applies; ``layout_files`` — the range-partition
-    count of the layout. Empty dict for a plain manifest table (no
-    properties ever set)."""
-    import json
-
-    if version is None:
-        version = os.path.basename(manifest_current(root))
-    p = os.path.join(root, version, _PROPS_FILE)
-    if not os.path.isfile(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
-
-
-# Scale-adaptive persist threshold for commit slices (rows). The range
-# partitioner's sampling pass re-executes the commit plan before the
-# write does, so a persist saves one recompute — but building the
-# columnar cache costs a full extra pass of its own, and below ~10^6
-# rows that build measurably LOSES to just recomputing a local-mode
-# slice (q285 interleaved flag A/B: no-persist 4.4 s vs persist 5.9 s
-# at sf0.1, OPTIMIZATION_r12.md). Above it, the slice's upstream is a
-# multi-join pipeline whose recompute doubles real work (the 100x
-# scale points run 30-60 M-row slices). Local default 4M rows;
-# cluster operators size it to executor cache capacity via env.
-_PERSIST_MIN_ROWS_DEFAULT = 4_000_000
-
-# Byte-form of the same threshold, for call sites with no row count
-# available (init: only the optimizer's size estimate exists). ~64
-# bytes/row at the 4M-row crossover.
-_PERSIST_MIN_BYTES_DEFAULT = 256 * 1024 * 1024
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """The optimizer's sizeInBytes estimate for a plan — file-size
-    truth for scans/projections (the init shape), a crude upper bound
-    for join pipelines. Driver-side metadata only, zero jobs."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
-
-
-def _persist_wanted(
-    est_rows: int | None = None, est_bytes: int | None = None
-) -> bool:
-    """Persist a commit slice across the sampling pass + write?
-    ``SPARK_GRAFT_FL_PERSIST``: "0" = never, "1" = always (the A/B
-    hatches), unset = adaptive on the slice's KNOWN row estimate
-    (manifest n_rows + update counts — no extra job) against
-    ``SPARK_GRAFT_FL_PERSIST_MIN_ROWS``, or on a byte estimate
-    against ``SPARK_GRAFT_FL_PERSIST_MIN_BYTES``. Unknown size ->
-    persist (the conservative choice at scale)."""
-    mode = os.environ.get("SPARK_GRAFT_FL_PERSIST")
-    if mode == "0":
-        return False
-    if mode == "1":
-        return True
-    if est_rows is not None:
-        return est_rows >= int(
-            os.environ.get(
-                "SPARK_GRAFT_FL_PERSIST_MIN_ROWS",
-                str(_PERSIST_MIN_ROWS_DEFAULT),
-            )
-        )
-    if est_bytes is not None:
-        return est_bytes >= int(
-            os.environ.get(
-                "SPARK_GRAFT_FL_PERSIST_MIN_BYTES",
-                str(_PERSIST_MIN_BYTES_DEFAULT),
-            )
-        )
-    return True
-
-
-def _apply_layout(
-    df: DataFrame,
-    props: dict,
-    bounds: dict[str, tuple[int, int]] | None = None,
-) -> DataFrame:
-    """Re-apply the table's committed clustering to a commit's output:
-    Z-order key over ``zorder_by``, range-partitioned into
-    ``layout_files`` files — Delta's OPTIMIZE ZORDER BY maintained ON
-    WRITE, so every version's files keep tight multi-dimensional
-    min/max boxes and the zone map stays PRUNABLE, not merely
-    correct. Without this, a merge's shuffle output scatters keys
-    across files and skipping quietly degrades to nothing.
-    ``bounds`` (col -> (min, max), may be wider than the data, never
-    narrower) skips the Z-order bounds aggregate pass — suppliers
-    with per-file zone stats (the file-list format) already know
-    them."""
-    zcols = props.get("zorder_by") or []
-    if not zcols:
-        return df
-    from citybikedatawarehouse_spark.functions.layout import zorder_key
-
-    n = int(props.get("layout_files") or 16)
-    return (
-        zorder_key(df, list(zcols), bounds=bounds)
-        .repartitionByRange(n, "z_key")
-        .drop("z_key")
-    )
-
-
-def _zonemap_write(
-    spark: SparkSession, root: str, version: str, cols: tuple[str, ...]
-) -> None:
-    """Compute and persist the per-file zone map INSIDE the version
-    directory (``<root>/<version>/_zonemap``). The underscore prefix
-    makes it invisible to Spark's data scans of the version dir (the
-    same hidden-path rule that hides ``_SUCCESS``), and co-locating
-    stats with data in the IMMUTABLE version directory is what makes
-    zone-map maintenance transactional for free: the one atomic
-    pointer flip publishes data and stats together, so a reader can
-    never observe a version whose stats disagree with its files —
-    there is no second commit to crash between.
-
-    Stats come from the freshly written files' parquet FOOTERS when
-    every tracked column's footer stats are trustworthy-exact
-    (``footer_zone_stats`` — O(files) driver-side metadata reads,
-    zero Spark jobs, the way Delta/Iceberg gather commit stats),
-    else the one-scan ``zone_map_stats`` fold. The fast path removes
-    a full re-read of every commit's output from the write path."""
-    vdir = os.path.join(root, version)
-    zpath = _zonemap_path(root, version)
-    fast = footer_zone_stats(vdir, cols)
-    if fast is not None and len(fast):
-        if os.path.exists(zpath):
-            raise IOError(f"zone map already exists: {zpath}")
-        os.makedirs(zpath)
-        fast = fast.rename(columns={"path": "file"}).reset_index(drop=True)
-        # match the scan path's input_file_name() URI form exactly —
-        # consumers compare these strings against Spark-derived file
-        # lists (tests pin the equality)
-        fast["file"] = "file://" + fast["file"]
-        fast.to_parquet(os.path.join(zpath, "zonemap.parquet"), index=False)
-        return
-    zone_map_stats(spark, vdir, cols).coalesce(1).write.mode(
-        "errorifexists"
-    ).parquet(zpath)
-
-
-def _dir_parquet_rows(path: str) -> int:
-    """Row total of the parquet files directly under ``path`` from
-    their footers — driver-side metadata, no Spark job."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for f in os.listdir(path):
-        if f.endswith(".parquet") and not f.startswith(("_", ".")):
-            total += pq.read_metadata(os.path.join(path, f)).num_rows
-    return total
-
-
-def _zonemap_rows(root: str, version: str) -> int | None:
-    """Total row count of a committed version from its zone map
-    (driver-side O(files) read of the n_rows column), or None when
-    the version carries no zone map. Feeds the adaptive persist
-    decision — no Spark job."""
-    zpath = _zonemap_path(root, version)
-    if not os.path.isdir(zpath):
-        return None
-    import pandas as pd
-
-    files = [f for f in os.listdir(zpath) if f.endswith(".parquet")]
-    if not files:
-        return None
-    total = 0
-    for f in sorted(files):
-        m = pd.read_parquet(
-            os.path.join(zpath, f), columns=["n_rows"]
-        )
-        total += int(m["n_rows"].sum())
-    return total
-
-
-def _zonemap_bounds(
-    root: str, version: str, zcols: list[str]
-) -> dict[str, tuple[int, int]] | None:
-    """Z-order bounds (col -> (min, max)) from a committed version's
-    zone map, read driver-side (O(files) tiny rows). Lets the next
-    commit's ``_apply_layout`` skip the bounds aggregate — an extra
-    full computation of the commit input per write. None (caller
-    computes bounds in-plan) when the version has no zone map, a
-    column is untracked/NULL, or a stat is not exactly integral —
-    supplied bounds may be wider than the data but never narrower."""
-    if not zcols:
-        return None
-    zpath = _zonemap_path(root, version)
-    if not os.path.isdir(zpath):
-        return None
-    import pandas as pd
-
-    files = [f for f in os.listdir(zpath) if f.endswith(".parquet")]
-    if not files:
-        return None
-    m = pd.concat(
-        [pd.read_parquet(os.path.join(zpath, f)) for f in sorted(files)],
-        ignore_index=True,
-    )
-    if len(m) == 0:
-        return None
-    out: dict[str, tuple[int, int]] = {}
-    for c in zcols:
-        if f"min_{c}" not in m.columns or f"max_{c}" not in m.columns:
-            return None
-        mns, mxs = m[f"min_{c}"], m[f"max_{c}"]
-        if mns.isna().any() or mxs.isna().any():
-            return None
-        try:
-            lo, hi = mns.min(), mxs.max()
-            if int(lo) != lo or int(hi) != hi:
-                return None
-        except (TypeError, ValueError, OverflowError):
-            return None
-        out[c] = (int(lo), int(hi))
-    return out
-
-
-def manifest_stats_cols(
-    spark: SparkSession, root: str, version: str | None = None
-) -> tuple[str, ...]:
-    """The stats columns a manifest table's zone map tracks — from the
-    committed table properties, falling back to inference from the
-    zone map's own schema (min_<c>/max_<c> pairs) for versions that
-    predate the props file. Empty if the version carries no zone map —
-    commits on such a table skip stats maintenance (plain-manifest
-    mode)."""
-    if version is None:
-        version = os.path.basename(manifest_current(root))
-    props = manifest_table_props(root, version)
-    if props.get("stats_cols"):
-        return tuple(props["stats_cols"])
-    zpath = _zonemap_path(root, version)
-    if not os.path.isdir(zpath):
-        return ()
-    cols = spark.read.parquet(zpath).columns
-    return tuple(
-        c[len("min_"):]
-        for c in cols
-        if c.startswith("min_") and f"max_{c[len('min_'):]}" in cols
-    )
-
-
-def manifest_zone_map(
-    spark: SparkSession, root: str, version: str | None = None
-) -> DataFrame:
-    """The committed zone map of a manifest-table version (current
-    pointer's target by default). Raises if the table was committed
-    without ``stats_cols`` — callers that want graceful fallback
-    check ``manifest_stats_cols`` first."""
-    if version is None:
-        version = os.path.basename(manifest_current(root))
-    zpath = _zonemap_path(root, version)
-    if not os.path.isdir(zpath):
-        raise IOError(
-            f"manifest table {root} version {version}: no zone map "
-            f"(initialize/commit with stats_cols to maintain one)"
-        )
-    return spark.read.parquet(zpath)
-
-
-def manifest_read_pruned(
-    spark: SparkSession,
-    root: str,
-    preds: dict[str, tuple],
-    version: str | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Zone-map-pruned read of a manifest table: open only the data
-    files whose per-column [min, max] zones intersect EVERY
-    ``col -> (lo, hi)`` range in ``preds`` (per-column keep lists
-    intersected — conjunctive pruning, the Delta/Iceberg
-    data-skipping contract). Returns ``(df, n_read, n_total)`` so
-    callers can assert the prune engaged.
-
-    Pruning is lossless by construction (files are only skipped when
-    PROVEN disjoint; NULL-stats files are always kept —
-    ``zonemap_prune_files``), and the returned frame still needs the
-    predicate applied: a kept file may contain out-of-range rows.
-    An all-files-pruned result is a legal empty relation, not an
-    error (``read_pruned_files``).
-
-    Scale shape: the stats consult is O(files) driver-side rows —
-    the same cardinality Spark's file index already holds to plan
-    any scan — and the executors open only the kept files. On a
-    100 TB table with a tight Z-order layout this is the difference
-    between a full scan and a corner of the curve (q281's measured
-    shape), now available on EVERY committed version without
-    rebuilding stats per query."""
-    if version is None:
-        version = os.path.basename(manifest_current(root))
-    stats = manifest_zone_map(spark, root, version)
-    have = manifest_stats_cols(spark, root, version)
-    missing = [c for c in preds if c not in have]
-    if missing:
-        raise ValueError(
-            f"manifest table {root}: no zone-map stats for {missing} "
-            f"(tracked: {list(have)})"
-        )
-    keep: set[str] | None = None
-    n_total = 0
-    for col, (lo, hi) in preds.items():
-        files, n_total = zonemap_prune_files(stats, col, lo, hi)
-        keep = set(files) if keep is None else keep & set(files)
-    kept = sorted(keep or set())
-    vdir = os.path.join(root, version)
-    return read_pruned_files(spark, kept, vdir), len(kept), n_total
-
-
-def manifest_init(
-    spark: SparkSession,
-    root: str,
-    df: DataFrame,
-    stats_cols: tuple[str, ...] = (),
-    zorder_by: tuple[str, ...] = (),
-    layout_files: int = 16,
-) -> str:
-    """Create a manifest table at ``root`` with ``df`` as version 1.
-
-    ``stats_cols`` and ``zorder_by`` turn the plain manifest into the
-    full table format: the version's zone map (min/max per file for
-    ``stats_cols``) and table properties are stored INSIDE the version
-    directory before the pointer flips, and from then on EVERY commit
-    (``merge_upsert_manifest``, ``compact_manifest``) re-applies the
-    Z-order clustering and rebuilds the zone map automatically —
-    layout, stats and data are one atomic publish, and
-    ``manifest_read_pruned`` gets a prunable layout on every version,
-    not just v1. ``zorder_by`` columns must be castable to BIGINT
-    (``functions/layout.zorder_key``'s contract). Returns the
-    committed version name."""
-    os.makedirs(root, exist_ok=True)
-    version = _claim_dir_version(root)
-    props = {
-        "stats_cols": list(stats_cols),
-        "zorder_by": list(zorder_by),
-        "layout_files": layout_files,
-    }
-    # with a Z-order spec the layout needs a bounds pass and the
-    # range partitioner a sampling pass — three computations of the
-    # input without a persist. Adaptive on the optimizer's size
-    # estimate (no manifest exists yet to count from): below the
-    # threshold the cache build loses to recomputing a small local
-    # slice (_persist_wanted). SPARK_GRAFT_FL_PERSIST=0/1 force.
-    cache_input = bool(zorder_by) and _persist_wanted(
-        est_bytes=_plan_size_bytes(df)
-    )
-    if cache_input:
-        df = df.persist()
-    try:
-        out = _apply_layout(df, props)
-        out.write.mode("errorifexists").parquet(os.path.join(root, version))
-    finally:
-        if cache_input:
-            df.unpersist()
-    if stats_cols:
-        _zonemap_write(spark, root, version, tuple(stats_cols))
-    if stats_cols or zorder_by:
-        _props_write(root, version, props)
-    manifest_commit_cas(root, version, parent=None)
-    return version
-
-
-def manifest_vacuum(
-    root: str,
-    keep: int = 2,
-    retain_hours: float = 168.0,
-    force: bool = False,
-) -> list[str]:
-    """Delete version directories older than the newest ``keep``,
-    never touching the current pointer's target (asserted). Returns
-    the removed directory names.
-
-    Retention guard (same rule as ``fl_vacuum``, Delta's ``VACUUM
-    ... RETAIN``): a version committed within the last
-    ``retain_hours`` (default 7 days) is never dropped even outside
-    ``keep`` — recency is the reader lease on a shared filesystem,
-    so a reader that resolved the version pre-vacuum still finds it.
-    ``force=True`` bypasses the horizon — torn-read hazard for any
-    reader mid-query on a force-dropped version."""
-    import shutil
-
-    current = os.path.basename(manifest_current(root))
-    versions = sorted(
-        d for d in os.listdir(root) if d.startswith("v") and d[1:].isdigit()
-    )
-    to_drop = [d for d in versions[:-keep] if d != current]
-    if not force:
-        horizon = time.time() - retain_hours * 3600.0
-        to_drop = [
-            d
-            for d in to_drop
-            if os.path.getmtime(os.path.join(root, d)) < horizon
-        ]
-    for d in to_drop:
-        shutil.rmtree(os.path.join(root, d))
-    return to_drop
-
-
-def compact_manifest(
-    spark: SparkSession,
-    root: str,
-    target_file_mb: int = 128,
-    sort_by: tuple[str, ...] = (),
-) -> str:
-    """``compact_parquet`` for manifest tables: rewrite the current
-    version into ~target-sized files as a NEW version and flip the
-    pointer — compaction becomes just another commit, with the same
-    crash matrix as ``merge_upsert_manifest`` (readers never see a
-    half-compacted table, and the pre-compaction version stays
-    readable until vacuumed). Returns the new version name."""
-    cur = manifest_current(root)
-    parent = os.path.basename(cur)
-    df = spark.read.parquet(cur)
-    _, total = parquet_file_stats(cur)
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    props = manifest_table_props(root)
-    if props.get("zorder_by") and not sort_by:
-        # size-retargeted Z-order rewrite: compaction IS the table's
-        # OPTIMIZE, so it re-clusters on the committed spec with the
-        # new file count and records it for future commits. Bounds
-        # come from the parent's zone map (skips the bounds pass);
-        # the input is a plain scan of the parent version, so the
-        # range partitioner's sampling pass re-reads files, not a
-        # join pipeline — no persist needed.
-        props = {**props, "layout_files": n_files}
-        out = _apply_layout(
-            df,
-            props,
-            bounds=_zonemap_bounds(
-                root, parent, list(props["zorder_by"])
-            ),
-        )
-    else:
-        out = (
-            df.repartitionByRange(n_files, *sort_by)
-            if sort_by
-            else df.coalesce(n_files)
-        )
-    version = _claim_dir_version(root)
-    out.write.mode("errorifexists").parquet(os.path.join(root, version))
-    # compaction rewrites files, so the zone map MUST be rebuilt for
-    # the new layout — same transactional placement as merge: stats
-    # land inside the unpublished version dir, one flip publishes both
-    stats_cols = manifest_stats_cols(spark, root)
-    if stats_cols:
-        _zonemap_write(spark, root, version, stats_cols)
-    if props:
-        _props_write(root, version, props)
-    manifest_commit_cas(root, version, parent)
-    return version
-
-
-def merge_upsert_manifest(
-    spark: SparkSession,
-    root: str,
-    updates: DataFrame,
-    key: str,
-    _crash_before_commit: bool = False,
-    _pause_before_commit=None,
-    extra_props: dict | None = None,
-) -> tuple[int, int]:
-    """``merge_upsert`` with a MANIFEST-POINTER commit instead of the
-    directory swap: the merged result is written to a brand-new
-    version directory, then a one-file pointer flip publishes it —
-    write-new, fsync manifest, atomic replace. This is the
-    crash-consistency mode for stores where directory rename is NOT
-    atomic (object stores: S3A rename = copy+delete with a visible
-    partial window — the ``_fs_swap`` caveat): here the data files
-    are immutable once written and the only mutation readers can
-    observe is the single-object pointer update. The same layout is
-    the kernel of Delta/Iceberg's log; this is the minimal
-    dependency-free form of it.
-
-    Crash matrix (exercised by the crash-injection test):
-    - before/while writing the new version dir -> pointer untouched,
-      readers keep the full old version; the orphan staging dir is
-      retried/ignored (a re-run writes the NEXT version number).
-    - between data write and pointer flip
-      (``_crash_before_commit``) -> same as above.
-    - mid pointer write -> ``.tmp`` is torn but ``_MANIFEST`` is
-      only ever REPLACED atomically; readers keep the old version.
-
-    Returns (n_replaced, n_inserted). Old versions remain readable
-    (time travel) until ``manifest_vacuum``.
-
-    Round-10 table-format duties, all inside the same commit: the
-    merged output is re-clustered to the committed ``zorder_by`` spec,
-    the zone map is rebuilt into the new version dir, and table
-    properties (plus ``extra_props`` riders — e.g. a streaming sink's
-    epoch id, the txnVersion idempotence pattern) are carried forward.
-    """
-    parent = os.path.basename(manifest_current(root))
-    props = manifest_table_props(root)
-    zcols = list(props.get("zorder_by") or [])
-    # ONE aggregate over the updates: row count, duplicate-key check
-    # (count_distinct excludes NULL — counted separately) and the
-    # updates' Z-order bounds all ride it, replacing the former
-    # count() + distinct().count() pair of full passes
-    counts = updates.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(F.col(key)).alias("k"),
-        F.max(F.col(key).isNull().cast("int")).alias("has_null"),
-        *[
-            f
-            for c in zcols
-            for f in (
-                F.min(F.col(c).cast("long")).alias(f"__zmn_{c}"),
-                F.max(F.col(c).cast("long")).alias(f"__zmx_{c}"),
-            )
-        ],
-    ).first()
-    n_updates = counts["n"]
-    n_update_keys = counts["k"] + (1 if counts["has_null"] else 0)
-    if n_update_keys != n_updates:
-        raise ValueError(
-            f"merge_upsert_manifest: updates has "
-            f"{n_updates - n_update_keys} duplicate '{key}' rows; "
-            f"MERGE requires unique source keys"
-        )
-    target = manifest_read(spark, root)
-    # Matched-count strategy (no separate semi-join count job in the
-    # common case): zero-job arithmetic from metadata — parent
-    # zone-map row total + updates − rows actually written (footers of
-    # the fresh version dir); one semi-join count only if the parent
-    # has no zone map. Deliberately NOT observe()-based:
-    # Observation.get's py4j row fetch crashes (toPyRow assertion)
-    # when AQE empty-relation propagation elides the metric points
-    # (e.g. an empty update batch) and was flaky even on non-empty
-    # batches in the driver environment.
-    zrows = _zonemap_rows(root, parent)
-    cache = bool(zcols) and _persist_wanted(
-        est_rows=None if zrows is None else zrows + n_updates
-    )
-    kept = target.join(updates.select(key), key, "left_anti")
-    merged = kept.unionByName(updates.select(*target.columns))
-    version = _claim_dir_version(root)
-    # layout + zone-map maintenance are part of the SAME commit: the
-    # merged output is re-clustered to the table's committed Z-order
-    # spec (so skipping stays EFFECTIVE, not just correct, after every
-    # merge), then data, stats and props are all written into the new
-    # still-unpublished version dir — the pointer flip below publishes
-    # them atomically. A crash anywhere before the flip orphans the
-    # whole version together; a reader following the pointer can never
-    # see stats or layout from one version paired with data of another.
-    #
-    # Z-order bounds = parent version's zone map UNION the updates'
-    # bounds (rode the counts aggregate) — the layout's bounds pass,
-    # a full extra computation of the merge plan, disappears; any
-    # gap (no zone map, NULL/non-integral stats) falls back in-plan.
-    bounds = None
-    if zcols:
-        upd = {}
-        for c in zcols:
-            lo, hi = counts[f"__zmn_{c}"], counts[f"__zmx_{c}"]
-            if lo is None or hi is None:
-                upd = None
-                break
-            upd[c] = (int(lo), int(hi))
-        parent_b = _zonemap_bounds(root, parent, zcols)
-        if upd is not None and parent_b is not None:
-            bounds = {
-                c: (
-                    min(upd[c][0], parent_b[c][0]),
-                    max(upd[c][1], parent_b[c][1]),
-                )
-                for c in zcols
-            }
-    merged = _apply_layout(merged, props, bounds=bounds)
-    # the range partitioner SAMPLES its input to pick split points —
-    # without a persist the merge plan (table scan + anti-join +
-    # union) executes once for the sample pass and again for the
-    # write; the persist decision was taken above with the counting
-    # strategy (below the threshold the cache build loses to the
-    # recompute, _persist_wanted)
-    if cache:
-        merged = merged.persist()
-    try:
-        merged.write.mode("errorifexists").parquet(
-            os.path.join(root, version)
-        )
-    finally:
-        if cache:
-            merged.unpersist()
-    if zrows is not None:
-        # zero-job arithmetic: parent rows from its zone map, rows
-        # actually written from the fresh files' footers —
-        # written = (target - matched) + updates
-        # (exact whether or not the merged slice was persisted)
-        n_replaced = zrows + n_updates - _dir_parquet_rows(
-            os.path.join(root, version)
-        )
-    else:
-        # zone-map-less table: one semi-join count is the only
-        # correct source left
-        n_replaced = target.join(
-            updates.select(key), key, "left_semi"
-        ).count()
-    n_inserted = n_updates - n_replaced
-    stats_cols = manifest_stats_cols(spark, root)
-    if stats_cols:
-        _zonemap_write(spark, root, version, stats_cols)
-    if extra_props:
-        # rider properties (e.g. a streaming sink's epoch id) are part
-        # of the SAME atomic commit — the Delta txnAppId/txnVersion
-        # pattern: a commit and its exactly-once marker can't tear
-        props = {**props, **extra_props}
-    if props:
-        _props_write(root, version, props)
-    if _pause_before_commit is not None:
-        _pause_before_commit()
-    if _crash_before_commit:
-        raise RuntimeError(
-            "merge_upsert_manifest: injected crash between data write "
-            "and pointer flip (test hook)"
-        )
-    manifest_commit_cas(root, version, parent)
-    return n_replaced, n_inserted
-
-
 def cdc_extract(
     old: DataFrame,
     new: DataFrame,
@@ -1205,89 +355,6 @@ def bucket_digest(
     )
 
 
-def footer_stats_trustworthy(arrow_type) -> bool:
-    """Types whose parquet footer min/max are EXACT and ordered the
-    way Spark's min/max aggregates order them: integers, dates,
-    booleans, timestamps. Excluded on purpose — float/double (NaN:
-    Spark's max treats NaN as largest while parquet writers skip
-    NaNs in stats) and strings/binary (writers may truncate long
-    byte-array stats). Untrusted types make the caller fall back to
-    a Spark scan, never to wrong stats."""
-    import pyarrow.types as pat
-
-    return (
-        pat.is_integer(arrow_type)
-        or pat.is_date(arrow_type)
-        or pat.is_boolean(arrow_type)
-        or pat.is_timestamp(arrow_type)
-    )
-
-
-def footer_zone_stats(path: str, cols: tuple[str, ...]):
-    """Per-file (path, n_rows, min_<c>, max_<c>) for every parquet
-    data file directly under ``path``, read from the file FOOTERS —
-    O(files) driver-side metadata, zero Spark jobs. This is how
-    Delta/Iceberg gather per-file stats at commit time; the scan
-    form (``zone_map_stats``) remains for bootstrap/repair and as
-    the fallback. Returns a pandas DataFrame, or None whenever any
-    tracked column's footer stats cannot be trusted bit-exactly
-    (untrusted type, absent statistics, or a chunk whose min/max is
-    missing for any reason other than being all-NULL) — the caller
-    must then use the scan path. ``SPARK_GRAFT_FOOTER_STATS=0``
-    disables the fast path globally (A/B escape hatch)."""
-    if os.environ.get("SPARK_GRAFT_FOOTER_STATS") == "0":
-        return None
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    recs: list[dict] = []
-    for fname in sorted(os.listdir(path)):
-        if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
-            continue
-        fp = os.path.join(path, fname)
-        md = pq.read_metadata(fp)
-        arrow_schema = md.schema.to_arrow_schema()
-        rec: dict = {"path": fp, "n_rows": md.num_rows}
-        for c in cols:
-            idx = arrow_schema.get_field_index(c)
-            if idx < 0 or not footer_stats_trustworthy(
-                arrow_schema.field(idx).type
-            ):
-                return None
-            mn = mx = None
-            for rg in range(md.num_row_groups):
-                rgm = md.row_group(rg)
-                cc = None
-                for ci in range(rgm.num_columns):
-                    cand = rgm.column(ci)
-                    if cand.path_in_schema == c:
-                        cc = cand
-                        break
-                if cc is None:
-                    return None
-                st = cc.statistics
-                if st is None:
-                    return None
-                if not st.has_min_max:
-                    # an all-NULL chunk legitimately has no min/max
-                    # and contributes no values; anything else means
-                    # the writer dropped stats -> fall back
-                    if st.has_null_count and st.null_count == cc.num_values:
-                        continue
-                    return None
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            rec[f"min_{c}"] = mn
-            rec[f"max_{c}"] = mx
-        recs.append(rec)
-    cols_order = ["path", "n_rows"] + [
-        f"{m}_{c}" for c in cols for m in ("min", "max")
-    ]
-    if not recs:
-        return pd.DataFrame(columns=cols_order)
-    return pd.DataFrame(recs)[cols_order]
-
-
 def zone_map_stats(
     spark: SparkSession, path: str, cols: tuple[str, ...]
 ) -> DataFrame:
@@ -1361,38 +428,6 @@ def read_pruned_files(
     return spark.createDataFrame([], schema)
 
 
-def manifest_versions(root: str) -> list[str]:
-    """All committed-or-orphan version directories of a manifest
-    table, oldest first. The current pointer's target is always a
-    member; earlier entries are readable history until
-    ``manifest_vacuum`` drops them; an entry NEWER than the pointer
-    is an orphan from a crashed writer (readable by nobody who
-    follows the pointer — exactly the crash contract)."""
-    return sorted(
-        d
-        for d in os.listdir(root)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-
-
-def manifest_read_version(
-    spark: SparkSession, root: str, version: str
-) -> DataFrame:
-    """Time-travel read: a SPECIFIC committed version of a manifest
-    table, bypassing the current pointer. Versions are immutable
-    once written (commits only ever ADD a directory and flip the
-    pointer), so this read is a consistent snapshot with no
-    coordination — the Delta/Iceberg ``VERSION AS OF``, in the
-    dependency-free manifest layout."""
-    p = os.path.join(root, version)
-    if not os.path.isdir(p):
-        raise IOError(
-            f"manifest table {root}: no version {version!r} "
-            f"(have {manifest_versions(root)})"
-        )
-    return spark.read.parquet(p)
-
-
 def _norm_file_uri(p: str) -> str:
     """Canonical form for comparing file identities across the two
     renderings in play: ``input_file_name()`` emits URL-ENCODED
@@ -1419,7 +454,7 @@ def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
     """Recursively list data files under ``path`` through the Hadoop
     FileSystem API — works on any Hadoop-supported store (HDFS, S3A,
     local), unlike ``os.walk``. Skips hidden files/dirs (``_``/``.``
-    prefixes, e.g. ``_SUCCESS``, ``_zonemap``) exactly as Spark's own
+    prefixes, e.g. ``_SUCCESS``, ``_manifests``) exactly as Spark's own
     scan listing does."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)

@@ -1,10 +1,10 @@
-"""File-list manifest table format: O(touched-files) MERGE.
+"""File-list manifest table format: the repo's versioned table.
 
-The directory-version manifest (operators/maintenance.py,
-``manifest_init``/``merge_upsert_manifest``) rewrites the WHOLE table
-per commit — correct, but at 100 TB a merge that touches 0.1 % of the
-keys cannot cost a full rewrite. This module is the file-level form,
-the actual kernel of Delta/Iceberg:
+The reference's warehouse sink is a plain ``to_sql(if_exists=
+'append'|'replace')`` (create_db_from_csv.py) — no versions, no
+incremental merge. This module adds both at the file level, the
+actual kernel of Delta/Iceberg, so a merge that touches 0.1 % of the
+keys of a 100 TB table costs those files, not a full rewrite:
 
 - a **version is a manifest**: a small driver-side relation of
   ``(path, n_rows, min_/max_ stats per tracked column, write-time
@@ -64,6 +64,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 import pandas as pd
 
@@ -71,18 +72,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from citybikedatawarehouse_spark.operators.maintenance import (
-    CommitConflictError,  # noqa: F401  (re-export: the format's error)
-    _apply_layout,
     _norm_file_uri,
-    _persist_wanted,
-    _plan_size_bytes,
     cdc_extract,
-    footer_zone_stats,
-    manifest_commit_cas,
     zone_map_stats,
 )
 
 _MANIFEST_DIR = "_manifests"
+
+
+class CommitConflictError(RuntimeError):
+    """Raised by a CAS pointer flip when the table's pointer no
+    longer names the committing writer's parent version — a
+    concurrent writer won the race. The loser's staged version stays
+    an invisible orphan (readers only follow the pointer); retry the
+    whole operation against the new current version."""
 
 
 class CheckViolation(ValueError):
@@ -101,7 +104,9 @@ def _pointer_path(root: str) -> str:
 
 
 def fl_current_version(root: str) -> str:
-    """Name of the committed current version (pointer target)."""
+    """Name of the committed current version (pointer target). Raises
+    ``FileNotFoundError`` for a table that was never initialized — an
+    uncommitted staging write must NOT be readable."""
     with open(_pointer_path(root)) as f:
         version = f.read().strip()
     if not version:
@@ -159,12 +164,302 @@ def _claim_version(root: str) -> str:
             n += 1
 
 
-def _fl_commit(root: str, version: str, parent: str | None) -> None:
-    """CAS pointer flip: publishes ``version`` iff the pointer still
-    names ``parent`` (None = table must be uninitialized); raises
-    ``CommitConflictError`` otherwise, leaving the staged version as
-    an invisible orphan."""
-    manifest_commit_cas(root, version, parent)
+def _manifest_commit(root: str, version: str) -> None:
+    """Flip the pointer: write ``_MANIFEST.tmp``, fsync it, then
+    atomically rename over ``_MANIFEST`` (``os.replace`` — POSIX
+    atomic; on HDFS this maps to an atomic single-file rename, on S3
+    to an atomic single-object PUT, which is why the pointer is ONE
+    tiny file and not the data). A crash anywhere in this function
+    leaves either the old pointer (plus a harmless ``.tmp``) or the
+    new pointer — never a torn table, because readers only ever
+    follow the pointer."""
+    tmp = _pointer_path(root) + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(version + "\n")
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, _pointer_path(root))
+
+
+_COMMIT_LOCK = "_COMMIT_LOCK"
+_LOCK_STALE_SEC = 30.0
+_LOCK_WAIT_SEC = 10.0
+
+
+def manifest_commit_cas(
+    root: str, version: str, parent: str | None
+) -> None:
+    """Optimistic-concurrency pointer flip (the Delta/Iceberg commit
+    rule): publish ``version`` IFF the pointer still names
+    ``parent`` (None = table must be uninitialized). Two concurrent
+    committers both compute their commit from the same parent; the
+    first flip wins, the second finds the pointer moved and raises
+    ``CommitConflictError`` — never a silent lost update. The staged
+    loser is an orphan invisible to pointer-following readers.
+
+    The read-compare-flip critical section is guarded by an O_EXCL
+    lock file (atomic create on POSIX/HDFS); a lock older than
+    ``_LOCK_STALE_SEC`` is presumed abandoned by a crashed writer
+    and stolen — by atomic ``os.rename`` of the corpse, so when two
+    recovery writers race over the same stale lock EXACTLY ONE
+    rename succeeds (the loser's raises FileNotFoundError and it
+    re-enters the normal acquire loop against whatever the winner
+    installs). A plain ``os.remove`` steal would be a TOCTOU hole:
+    two stealers could interleave so the second removes the first's
+    FRESH lock and both enter the critical section — a silent lost
+    update, the exact failure the CAS exists to prevent. After
+    winning the rename, the corpse's mtime is re-verified: if it
+    turns out fresh (the μs-scale race where a live holder's lock
+    was yanked between the staleness check and the rename), it is
+    restored via O_EXCL create of the original bytes, or — if the
+    slot was grabbed in between — the stealer FAILS LOUDLY rather
+    than let two writers proceed. Release is token-verified: the
+    lock is removed only if it still holds this writer's unique
+    token, so a holder that stalls past ``_LOCK_STALE_SEC`` and gets
+    legitimately stolen can never delete the thief's live lock on
+    its way out. On object stores without atomic create-if-absent,
+    swap this for the store's conditional-PUT (S3 If-None-Match,
+    GCS x-goog-if-generation-match) — the CAS contract is the same."""
+    lock = os.path.join(root, _COMMIT_LOCK)
+    token = f"{os.getpid()}:{uuid.uuid4().hex}\n"
+    deadline = time.monotonic() + _LOCK_WAIT_SEC
+    while True:
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.write(fd, token.encode())
+            os.close(fd)
+            break
+        except FileExistsError:
+            try:
+                age = time.time() - os.path.getmtime(lock)
+            except FileNotFoundError:
+                continue  # holder just released; retry immediately
+            if age > _LOCK_STALE_SEC:
+                corpse = f"{lock}.stale.{os.getpid()}.{uuid.uuid4().hex}"
+                try:
+                    os.rename(lock, corpse)  # atomic: one stealer wins
+                except FileNotFoundError:
+                    continue  # another stealer won; re-enter acquire
+                # rename preserves mtime — re-verify the corpse really
+                # was the stale file the check saw, not a fresh lock
+                # installed in the window since
+                if time.time() - os.path.getmtime(corpse) > _LOCK_STALE_SEC:
+                    os.remove(corpse)  # confirmed crashed holder
+                    continue
+                # mis-steal of a LIVE lock: put it back exactly as it
+                # was, or fail loudly — never proceed alongside the
+                # holder we just yanked
+                with open(corpse, "rb") as f:
+                    original = f.read()
+                os.remove(corpse)
+                try:
+                    fd = os.open(
+                        lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY
+                    )
+                    os.write(fd, original)
+                    os.close(fd)
+                except FileExistsError:
+                    raise IOError(
+                        f"commit {version}: stole a live lock {lock} "
+                        f"and could not restore it (slot re-acquired) "
+                        f"— failing rather than risk a double-entry"
+                    )
+                if time.monotonic() > deadline:
+                    raise IOError(
+                        f"commit {version}: lock {lock} looked stale "
+                        f"but kept proving live past the deadline — "
+                        f"restored it and gave up"
+                    )
+                continue
+            if time.monotonic() > deadline:
+                raise IOError(
+                    f"commit {version}: could not acquire {lock} in "
+                    f"{_LOCK_WAIT_SEC}s (held {age:.1f}s)"
+                )
+            time.sleep(0.01)
+    try:
+        try:
+            cur = fl_current_version(root)
+        except FileNotFoundError:
+            cur = None  # uninitialized table
+        if cur != parent:
+            raise CommitConflictError(
+                f"commit {version}: table {root} moved from parent "
+                f"{parent!r} to {cur!r} — a concurrent writer "
+                f"committed first; retry against the new version"
+            )
+        _manifest_commit(root, version)
+    finally:
+        # token-verified release: only remove a lock that is still
+        # OURS — if we stalled past _LOCK_STALE_SEC and were stolen,
+        # the path now holds the thief's token and must be left alone
+        try:
+            with open(lock) as f:
+                still_ours = f.read() == token
+        except FileNotFoundError:
+            still_ours = False
+        if still_ours:
+            os.remove(lock)
+
+
+# ---------------------------------------------------------------------------
+# commit-slice layout + persist policy
+# ---------------------------------------------------------------------------
+
+# Scale-adaptive persist threshold for commit slices (rows). The range
+# partitioner's sampling pass re-executes the commit plan before the
+# write does, so a persist saves one recompute — but building the
+# columnar cache costs a full extra pass of its own, and below ~10^6
+# rows that build measurably LOSES to just recomputing a local-mode
+# slice (q285 interleaved A/B: no-persist 4.4 s vs persist 5.9 s at
+# sf0.1, OPTIMIZATION_r12.md). Above it, the slice's upstream is a
+# multi-join pipeline whose recompute doubles real work (the 100x
+# scale points run 30-60 M-row slices).
+_PERSIST_MIN_ROWS = 4_000_000
+
+# Byte-form of the same threshold, for call sites with no row count
+# available (init: only the optimizer's size estimate exists). ~64
+# bytes/row at the 4M-row crossover.
+_PERSIST_MIN_BYTES = 256 * 1024 * 1024
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's sizeInBytes estimate for a plan — file-size
+    truth for scans/projections (the init shape), a crude upper bound
+    for join pipelines. Driver-side metadata only, zero jobs."""
+    try:
+        return int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:
+        return None
+
+
+def _persist_wanted(
+    est_rows: int | None = None, est_bytes: int | None = None
+) -> bool:
+    """Persist a commit slice across the sampling pass + write?
+    Decided on the slice's KNOWN row estimate (manifest n_rows +
+    update counts — no extra job) against ``_PERSIST_MIN_ROWS``, or
+    on a byte estimate against ``_PERSIST_MIN_BYTES``. Unknown size
+    -> persist (the conservative choice at scale)."""
+    if est_rows is not None:
+        return est_rows >= _PERSIST_MIN_ROWS
+    if est_bytes is not None:
+        return est_bytes >= _PERSIST_MIN_BYTES
+    return True
+
+
+def _apply_layout(
+    df: DataFrame,
+    props: dict,
+    bounds: dict[str, tuple[int, int]] | None = None,
+) -> DataFrame:
+    """Re-apply the table's committed clustering to a commit's output:
+    Z-order key over ``zorder_by``, range-partitioned into
+    ``layout_files`` files — Delta's OPTIMIZE ZORDER BY maintained ON
+    WRITE, so every version's files keep tight multi-dimensional
+    min/max boxes and the manifest zones stay PRUNABLE, not merely
+    correct. Without this, a merge's shuffle output scatters keys
+    across files and skipping quietly degrades to nothing.
+    ``bounds`` (col -> (min, max), may be wider than the data, never
+    narrower) skips the Z-order bounds aggregate pass — callers
+    derive them from the manifest's per-file zone stats."""
+    zcols = props.get("zorder_by") or []
+    if not zcols:
+        return df
+    from citybikedatawarehouse_spark.functions.layout import zorder_key
+
+    n = int(props.get("layout_files") or 16)
+    return (
+        zorder_key(df, list(zcols), bounds=bounds)
+        .repartitionByRange(n, "z_key")
+        .drop("z_key")
+    )
+
+
+# ---------------------------------------------------------------------------
+# commit stats from parquet footers
+# ---------------------------------------------------------------------------
+
+
+def footer_stats_trustworthy(arrow_type) -> bool:
+    """Types whose parquet footer min/max are EXACT and ordered the
+    way Spark's min/max aggregates order them: integers, dates,
+    booleans, timestamps. Excluded on purpose — float/double (NaN:
+    Spark's max treats NaN as largest while parquet writers skip
+    NaNs in stats) and strings/binary (writers may truncate long
+    byte-array stats). Untrusted types make the caller fall back to
+    a Spark scan, never to wrong stats."""
+    import pyarrow.types as pat
+
+    return (
+        pat.is_integer(arrow_type)
+        or pat.is_date(arrow_type)
+        or pat.is_boolean(arrow_type)
+        or pat.is_timestamp(arrow_type)
+    )
+
+
+def footer_zone_stats(path: str, cols: tuple[str, ...]):
+    """Per-file (path, n_rows, min_<c>, max_<c>) for every parquet
+    data file directly under ``path``, read from the file FOOTERS —
+    O(files) driver-side metadata, zero Spark jobs. This is how
+    Delta/Iceberg gather per-file stats at commit time; the scan
+    form (``zone_map_stats``) remains for bootstrap/repair and as
+    the fallback. Returns a pandas DataFrame, or None whenever any
+    tracked column's footer stats cannot be trusted bit-exactly
+    (untrusted type, absent statistics, or a chunk whose min/max is
+    missing for any reason other than being all-NULL) — the caller
+    must then use the scan path."""
+    import pyarrow.parquet as pq
+
+    recs: list[dict] = []
+    for fname in sorted(os.listdir(path)):
+        if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
+            continue
+        fp = os.path.join(path, fname)
+        md = pq.read_metadata(fp)
+        arrow_schema = md.schema.to_arrow_schema()
+        rec: dict = {"path": fp, "n_rows": md.num_rows}
+        for c in cols:
+            idx = arrow_schema.get_field_index(c)
+            if idx < 0 or not footer_stats_trustworthy(
+                arrow_schema.field(idx).type
+            ):
+                return None
+            mn = mx = None
+            for rg in range(md.num_row_groups):
+                rgm = md.row_group(rg)
+                cc = None
+                for ci in range(rgm.num_columns):
+                    cand = rgm.column(ci)
+                    if cand.path_in_schema == c:
+                        cc = cand
+                        break
+                if cc is None:
+                    return None
+                st = cc.statistics
+                if st is None:
+                    return None
+                if not st.has_min_max:
+                    # an all-NULL chunk legitimately has no min/max
+                    # and contributes no values; anything else means
+                    # the writer dropped stats -> fall back
+                    if st.has_null_count and st.null_count == cc.num_values:
+                        continue
+                    return None
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+            rec[f"min_{c}"] = mn
+            rec[f"max_{c}"] = mx
+        recs.append(rec)
+    cols_order = ["path", "n_rows"] + [
+        f"{m}_{c}" for c in cols for m in ("min", "max")
+    ]
+    if not recs:
+        return pd.DataFrame(columns=cols_order)
+    return pd.DataFrame(recs)[cols_order]
 
 
 def fl_lineage(root: str) -> list[str]:
@@ -319,8 +614,9 @@ def _stats_of_commit(
     Delta/Iceberg gather commit stats), else one zone_map_stats scan
     folding map-side to O(files) rows. Paths normalized to plain
     filesystem form, each row stamped with the commit's write-time
-    schema signature. ``SPARK_GRAFT_FOOTER_STATS=0`` forces the scan
-    path (A/B escape hatch)."""
+    schema signature. The column types select the scan path: floats,
+    strings, or a writer that dropped stats (``footer_zone_stats``
+    returns None)."""
     fast = footer_zone_stats(commit_dir, cols)
     if fast is not None:
         fast = fast.copy()
@@ -380,7 +676,7 @@ def fl_init(
     # when persisted, the bounds aggregate materializes the cache and
     # the input computes ONCE; below the threshold the cache build
     # measurably loses to recomputing a small local slice
-    # (_persist_wanted rationale). SPARK_GRAFT_FL_PERSIST=0/1 force.
+    # (_persist_wanted rationale).
     cache_input = bool(zorder_by) and _persist_wanted(
         est_bytes=_plan_size_bytes(df)
     )
@@ -397,7 +693,7 @@ def fl_init(
         spark, cdir, tuple(props["stats_cols"]), _schema_sig(props["schema"])
     )
     _write_manifest(root, version, manifest, props)
-    _fl_commit(root, version, parent=None)
+    manifest_commit_cas(root, version, parent=None)
     return version
 
 
@@ -672,8 +968,7 @@ def fl_merge_upsert(
     targeting is then ONE broadcast range join of distinct update
     keys x O(files) zones reading from the cache; one scan of the
     touched subset for the merge itself; shuffle volume
-    O(touched + updates). The 100 TB merge this repo's
-    directory-format could not express.
+    O(touched + updates), never O(table).
 
     Counts deliberately avoid ``observe()``/``Observation.get``: its
     py4j row fetch hard-crashes (toPyRow assertion) when AQE
@@ -857,7 +1152,7 @@ def fl_merge_upsert(
                 "fl_merge_upsert: injected crash between manifest write "
                 "and pointer flip (test hook)"
             )
-        _fl_commit(root, version, parent)
+        manifest_commit_cas(root, version, parent)
         return n_replaced, n_inserted, len(touched), len(m)
     finally:
         if merged_cached is not None:
@@ -1105,7 +1400,7 @@ def fl_delete(
             "fl_delete: injected crash between sidecar write and "
             "pointer flip (test hook)"
         )
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return n_new, version
 
 
@@ -1162,7 +1457,7 @@ def fl_compact(
         if cached:
             df.unpersist()
     _write_manifest(root, version, manifest, props)
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version
 
 
@@ -1201,7 +1496,7 @@ def fl_add_constraint(
         fl_manifest(root, parent),
         {**props, "constraints": constraints, "parent": parent},
     )
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version
 
 
@@ -1223,7 +1518,7 @@ def fl_drop_constraint(spark: SparkSession, root: str, name: str) -> str:
         fl_manifest(root, parent),
         {**props, "constraints": constraints, "parent": parent},
     )
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version
 
 
@@ -1282,7 +1577,7 @@ def fl_optimize(
     )
     manifest = pd.concat([big, fresh], ignore_index=True)
     _write_manifest(root, version, manifest, {**props, "parent": parent})
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version, len(small), len(m)
 
 
@@ -1336,7 +1631,7 @@ def fl_set_zorder(
     }
     version = _claim_version(root)
     _write_manifest(root, version, m, new_props)
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version
 
 
@@ -1356,7 +1651,7 @@ def fl_restore(spark: SparkSession, root: str, version: str) -> str:
     props = {**fl_table_props(root, version), "parent": parent}
     new_version = _claim_version(root)
     _write_manifest(root, new_version, m, props)
-    _fl_commit(root, new_version, parent)
+    manifest_commit_cas(root, new_version, parent)
     return new_version
 
 
@@ -1391,7 +1686,7 @@ def fl_add_column(
     version = _claim_version(root)
     new_props = {**props, "schema": schema + [new_field], "parent": parent}
     _write_manifest(root, version, fl_manifest(root, parent), new_props)
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version
 
 
@@ -1449,7 +1744,7 @@ def fl_rename_column(
         )
     version = _claim_version(root)
     _write_manifest(root, version, m, new_props)
-    _fl_commit(root, version, parent)
+    manifest_commit_cas(root, version, parent)
     return version
 
 

@@ -140,8 +140,7 @@ _REC_NEIGH_CAP = 100  # item-item neighborhood cap: top co-parts kept per part
 # union marker rows, deleting the r9 sort-merge anti-join (see the
 # plan comment in q237). Correct because the global top-K is a subset
 # of the union of per-bucket top-Ks under the same total order
-# (score desc, cand asc). SPARK_GRAFT_REC_SINGLE_STAGE=1 restores the
-# r9 single-window plan (the A/B knob).
+# (score desc, cand asc).
 _REC_PART_BUCKETS = 32
 
 @register(
@@ -353,89 +352,60 @@ def q237_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         # branch
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    owned = profile.select(
-        F.col("o_custkey").alias("ck_o"), F.col("l_partkey").alias("pk_o")
+    # round-10 two-stage top-k, still ONE corpus-scale exchange —
+    # now keyed (o_custkey, cand-bucket) so the hot customer's
+    # candidate mass spreads over _REC_PART_BUCKETS partitions
+    # instead of concentrating in one:
+    # - the ownership anti-join is folded into the score agg as
+    #   union MARKER rows (profile parts with n_co=0, __own=1;
+    #   max(__own) flags owned candidates) — this deletes the
+    #   sort-merge anti-join and both of its per-task sorts, the
+    #   biggest memory stackers of the r9 stage (a first two-stage
+    #   attempt that ADDED a second corpus-scale exchange instead
+    #   traded the 8 g memory wall for this box's ~72 GB shuffle-
+    #   scratch wall: SPILL_OUT_OF_MEMORY "No space left on
+    #   device" at skewed-50x — recorded in PERFORMANCE.md);
+    # - the per-(customer, bucket) partial top-K runs on the SAME
+    #   exchange (partitioning {cust,bkt} ⊆ window keys), cutting
+    #   what reaches the global per-customer sort to
+    #   K * _REC_PART_BUCKETS rows per customer;
+    # - correct because the global top-K has <= K members in any
+    #   bucket, each surviving its bucket's top-K under the same
+    #   (score desc, cand) total order, and marker rows add 0 to
+    #   sums — a pure execution rewrite, oracle-identical.
+    cand_src = profile.join(
+        co_sym, profile.l_partkey == co_sym.p
+    ).select(
+        "o_custkey",
+        F.col("q").alias("cand"),
+        F.col("n_co").cast("long").alias("n_co"),
+        F.lit(0).alias("__own"),
     )
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_REC_SINGLE_STAGE") == "1":
-        # r9 plan (the A/B reference): ONE customer-keyed exchange
-        # serves the agg, the anti-join AND the top-k window —
-        # hash(o_custkey) satisfies groupBy(o_custkey, cand) by subset
-        # co-partitioning (SPARK-35703), the anti-join keeps the left
-        # partitioning, the window then only sorts. Minimal shuffles,
-        # but it stacks the agg hash map, BOTH sort-merge-join sorts
-        # of the anti-join, and the window sort into one task context
-        # per customer partition — the skewed-50x OOM mode
-        # (PERFORMANCE.md round 9/10).
-        scores = (
-            profile.join(co_sym, profile.l_partkey == co_sym.p)
-            .select("o_custkey", F.col("q").alias("cand"), "n_co")
-            .repartition("o_custkey")
-            .groupBy("o_custkey", "cand")
-            .agg(F.sum("n_co").cast("bigint").alias("score"))
-            .join(
-                owned,
-                (F.col("o_custkey") == F.col("ck_o"))
-                & (F.col("cand") == F.col("pk_o")),
-                "left_anti",
-            )
+    markers = profile.select(
+        "o_custkey",
+        F.col("l_partkey").alias("cand"),
+        F.lit(0).cast("long").alias("n_co"),
+        F.lit(1).alias("__own"),
+    )
+    pw = W.partitionBy("o_custkey", "__bkt").orderBy(
+        F.col("score").desc(), F.col("cand")
+    )
+    scores = (
+        cand_src.unionByName(markers)
+        .withColumn(
+            "__bkt", F.pmod(F.hash("cand"), F.lit(_REC_PART_BUCKETS))
         )
-    else:
-        # round-10 two-stage top-k, still ONE corpus-scale exchange —
-        # now keyed (o_custkey, cand-bucket) so the hot customer's
-        # candidate mass spreads over _REC_PART_BUCKETS partitions
-        # instead of concentrating in one:
-        # - the ownership anti-join is folded into the score agg as
-        #   union MARKER rows (profile parts with n_co=0, __own=1;
-        #   max(__own) flags owned candidates) — this deletes the
-        #   sort-merge anti-join and both of its per-task sorts, the
-        #   biggest memory stackers of the r9 stage (a first two-stage
-        #   attempt that ADDED a second corpus-scale exchange instead
-        #   traded the 8 g memory wall for this box's ~72 GB shuffle-
-        #   scratch wall: SPILL_OUT_OF_MEMORY "No space left on
-        #   device" at skewed-50x — recorded in PERFORMANCE.md);
-        # - the per-(customer, bucket) partial top-K runs on the SAME
-        #   exchange (partitioning {cust,bkt} ⊆ window keys), cutting
-        #   what reaches the global per-customer sort to
-        #   K * _REC_PART_BUCKETS rows per customer;
-        # - correct because the global top-K has <= K members in any
-        #   bucket, each surviving its bucket's top-K under the same
-        #   (score desc, cand) total order, and marker rows add 0 to
-        #   sums — a pure execution rewrite, oracle-identical.
-        cand_src = profile.join(
-            co_sym, profile.l_partkey == co_sym.p
-        ).select(
-            "o_custkey",
-            F.col("q").alias("cand"),
-            F.col("n_co").cast("long").alias("n_co"),
-            F.lit(0).alias("__own"),
+        .repartition("o_custkey", "__bkt")
+        .groupBy("o_custkey", "__bkt", "cand")
+        .agg(
+            F.sum("n_co").cast("bigint").alias("score"),
+            F.max("__own").alias("__own"),
         )
-        markers = profile.select(
-            "o_custkey",
-            F.col("l_partkey").alias("cand"),
-            F.lit(0).cast("long").alias("n_co"),
-            F.lit(1).alias("__own"),
-        )
-        pw = W.partitionBy("o_custkey", "__bkt").orderBy(
-            F.col("score").desc(), F.col("cand")
-        )
-        scores = (
-            cand_src.unionByName(markers)
-            .withColumn(
-                "__bkt", F.pmod(F.hash("cand"), F.lit(_REC_PART_BUCKETS))
-            )
-            .repartition("o_custkey", "__bkt")
-            .groupBy("o_custkey", "__bkt", "cand")
-            .agg(
-                F.sum("n_co").cast("bigint").alias("score"),
-                F.max("__own").alias("__own"),
-            )
-            .where(F.col("__own") == 0)
-            .withColumn("__prnk", F.row_number().over(pw))
-            .where(F.col("__prnk") <= _REC_K)
-            .drop("__bkt", "__prnk", "__own")
-        )
+        .where(F.col("__own") == 0)
+        .withColumn("__prnk", F.row_number().over(pw))
+        .where(F.col("__prnk") <= _REC_K)
+        .drop("__bkt", "__prnk", "__own")
+    )
     rk = W.partitionBy("o_custkey").orderBy(F.col("score").desc(), F.col("cand"))
     topk = (
         scores.withColumn("rnk", F.row_number().over(rk))

@@ -13,7 +13,6 @@ emits the file-reduction claim as a self-oracled boolean.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 
@@ -1423,35 +1422,33 @@ def q278_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q280_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time travel over the manifest-pointer table: init a versioned
-    table (v1 = every 10th order), MERGE a deterministic change set
-    through the crash-consistent pointer-flip commit (updates bump
-    price +1.0 and flag status R on every 100th order; inserts add
-    the %10=5 cohort), then read BOTH versions — v1 via
-    ``manifest_read_version`` (the VERSION AS OF path, bypassing the
-    pointer) and v2 via the pointer — and summarize each. The oracle
-    reconstructs both snapshots relationally, so the parity check
-    proves the committed history IS the algebra it claims to be:
-    old versions are immutable, unaffected by later commits, and a
-    reader pinned to v1 sees pre-merge truth bit-for-bit.
+    """Time travel over the file-list table: init a versioned table
+    (v1 = every 10th order), MERGE a deterministic change set through
+    the crash-consistent pointer-flip commit (updates bump price +1.0
+    and flag status R on every 100th order; inserts add the %10=5
+    cohort), then read BOTH versions with ``fl_read(version=...)`` —
+    the VERSION AS OF path, v1 pinned by name and v2 resolved from
+    the pointer — and summarize each. The oracle reconstructs both
+    snapshots relationally, so the parity check proves the committed
+    history IS the algebra it claims to be: old versions are
+    immutable, unaffected by later commits, and a reader pinned to v1
+    sees pre-merge truth bit-for-bit.
 
-    Scale shape: versions are immutable parquet directories —
-    snapshot reads need no locks at any table size; the merge is
-    merge_upsert_manifest's key-join (one shuffle) + pointer flip.
-    History cost is bounded by ``manifest_vacuum`` retention, and at
-    100 TB the version delta would be partition-scoped (the
-    merge_upsert_partitioned shape) rather than the full-table
-    rewrite this fixture-sized table uses.
+    Scale shape: a version is a manifest over immutable, shared data
+    files — snapshot reads need no locks at any table size; the merge
+    rewrites only the files whose key zones the change set touches,
+    then flips the pointer. History cost is bounded by ``fl_vacuum``
+    retention (reference-counted, so shared files survive).
 
-    Cites: operators/maintenance.py manifest_init /
-    merge_upsert_manifest / manifest_read_version (crash matrix in
-    tests/test_maintenance_and_stream_joins.py).
+    Cites: operators/table_format.py fl_init / fl_merge_upsert /
+    fl_read (crash matrix in tests/test_maintenance_and_stream_joins.py
+    and tests/test_table_format_filelist.py).
     """
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_current,
-        manifest_init,
-        manifest_read_version,
-        merge_upsert_manifest,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_current_version,
+        fl_init,
+        fl_merge_upsert,
+        fl_read,
     )
 
     o = _t(spark, sf_dir, "orders").select(
@@ -1460,7 +1457,9 @@ def q280_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="cbdw_timetravel_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     root = base + "/orders_versioned"
-    v1_name = manifest_init(spark, root, o.where(F.col("o_orderkey") % 10 == 0))
+    v1_name = fl_init(
+        spark, root, o.where(F.col("o_orderkey") % 10 == 0), key="o_orderkey"
+    )
     updates = o.where(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey",
         "o_custkey",
@@ -1468,14 +1467,14 @@ def q280_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("R").alias("o_orderstatus"),
     )
     inserts = o.where(F.col("o_orderkey") % 10 == 5)
-    merge_upsert_manifest(
+    fl_merge_upsert(
         spark, root, updates.unionByName(inserts), key="o_orderkey"
     )
-    # v2 resolved from the COMMITTED pointer, not manifest_versions()
-    # [-1]: the listing can legally contain an orphan directory from a
+    # v2 resolved from the COMMITTED pointer, not fl_versions()[-1]:
+    # the listing can legally contain an orphan manifest from a
     # crashed concurrent writer, and the crash contract this query's
     # docstring cites is "readers only ever follow the pointer"
-    v2_name = os.path.basename(manifest_current(root))
+    v2_name = fl_current_version(root)
 
     def _summary(df: DataFrame, label: str) -> DataFrame:
         return df.agg(
@@ -1490,8 +1489,8 @@ def q280_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version", "n_rows", "key_checksum", "revenue", "n_r_status"
         )
 
-    v1 = manifest_read_version(spark, root, v1_name)
-    v2 = manifest_read_version(spark, root, v2_name)
+    v1 = fl_read(spark, root, v1_name)
+    v2 = fl_read(spark, root, v2_name)
     return _summary(v1, "v1").unionByName(_summary(v2, "v2"))
 
 
@@ -1643,43 +1642,43 @@ _TF_DT_LO, _TF_DT_HI = "1996-01-01", "1996-06-30"
     """,
 )
 def q283_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-10 unification of q278 + q280 + q281 into ONE table
-    format: a manifest table initialized with ``stats_cols`` +
-    ``zorder_by`` gets, from every subsequent commit, (a) the Z-order
-    clustering re-applied to the commit's output, (b) the per-file
-    zone map rebuilt INSIDE the new version directory, and (c) table
-    properties carried forward — all published by the single atomic
-    pointer flip, so layout, stats and data can never desync (the
-    crash matrix is tested in tests/test_round10_table_format.py).
+    """q278 + q280 + q281 unified into ONE table format: a file-list
+    table initialized with ``stats_cols`` + ``zorder_by`` gets, from
+    every subsequent commit, (a) the Z-order clustering re-applied to
+    the files the commit writes, (b) per-file zone stats recorded in
+    the new version's manifest, and (c) table properties carried
+    forward — all published by the single atomic pointer flip, so
+    layout, stats and data can never desync (the crash matrix is
+    tested in tests/test_round10_table_format.py).
 
     The query proves the contract end-to-end ON THE POST-MERGE
     version — the case the three round-9 demos could not express:
     init orders Z-ordered on (customer, order day), MERGE an update
     batch (every 100th order repriced) plus an insert batch (the held
     -out 10 % of keys), then answer a two-range predicate through
-    ``manifest_read_pruned`` and audit it group-by-group against the
-    full scan of the same committed version. ``matches_full_scan``
+    ``fl_read_pruned`` and audit it group-by-group against the full
+    scan (``fl_read``) of the same committed version. ``matches_full_scan``
     proves the prune lossless AFTER the merge re-clustered the data;
     ``files_skipped`` proves it still ENGAGES — i.e. the commit
     maintained the layout, not just the stats.
 
     Scale shape: the merge's extra cost over a plain commit is one
-    Z-key range shuffle of the commit output (the price of clustered-
-    on-write); the stats fold is O(files) map-side-combined rows; the
-    pruned read opens only box-intersecting files of the CURRENT
-    version with zero stats recomputation. This is the Delta/Iceberg
-    read/write loop, dependency-free.
+    Z-key range shuffle of the files it rewrites (the price of
+    clustered-on-write); commit stats come from the new files'
+    parquet footers; the pruned read opens only box-intersecting
+    files of the CURRENT version with zero stats recomputation. This
+    is the Delta/Iceberg read/write loop, dependency-free.
 
-    Cites: operators/maintenance.manifest_init / merge_upsert_manifest
-    / manifest_read_pruned; reference's append-only sink
+    Cites: operators/table_format.fl_init / fl_merge_upsert /
+    fl_read_pruned; reference's append-only sink
     (create_db_from_csv.py) has no versioning/skipping story — this is
     the §2.4 warehouse-gap surface.
     """
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_init,
-        manifest_read,
-        manifest_read_pruned,
-        merge_upsert_manifest,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_init,
+        fl_merge_upsert,
+        fl_read,
+        fl_read_pruned,
     )
 
     day = F.datediff(
@@ -1696,10 +1695,11 @@ def q283_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="cbdw_tableformat_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     root = base + "/orders_tf"
-    manifest_init(
+    fl_init(
         spark,
         root,
         o.where(F.col("o_orderkey") % 10 != 5),
+        key="o_orderkey",
         stats_cols=("o_custkey", "o_orderday"),
         zorder_by=("o_custkey", "o_orderday"),
         layout_files=16,
@@ -1708,7 +1708,7 @@ def q283_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
     )
     inserts = o.where(F.col("o_orderkey") % 10 == 5)
-    merge_upsert_manifest(
+    fl_merge_upsert(
         spark, root, updates.unionByName(inserts), key="o_orderkey"
     )
 
@@ -1716,7 +1716,7 @@ def q283_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     day_lo = (_dt.date.fromisoformat(_TF_DT_LO) - _dt.date(1970, 1, 1)).days
     day_hi = (_dt.date.fromisoformat(_TF_DT_HI) - _dt.date(1970, 1, 1)).days
-    pruned_df, n_read, n_total = manifest_read_pruned(
+    pruned_df, n_read, n_total = fl_read_pruned(
         spark,
         root,
         {
@@ -1740,7 +1740,7 @@ def q283_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     pruned = _agg(pruned_df, "n_orders", "revenue")
-    full = _agg(manifest_read(spark, root), "n_full", "rev_full")
+    full = _agg(fl_read(spark, root), "n_full", "rev_full")
     return (
         pruned.join(full, "o_orderpriority", "full")
         .select(
@@ -1793,14 +1793,14 @@ def q284_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming manifest sink's full at-least-once matrix, run
     deterministically in batch (the repo's stream-equals-batch gate
     pattern) so the DRIVER can oracle it: three micro-batch epochs
-    merge-commit into one manifest table through the EXACT production
-    step (streaming/incremental.manifest_epoch_step), with
+    merge-commit into one file-list table through the EXACT production
+    step (streaming/incremental.fl_epoch_step), with
 
     - a REPLAY of epoch 1 carrying POISONED rows (price +1000) — the
       exactly-once guard must skip it, and if it ever did not, the
       poison lands in the final aggregate and the DuckDB oracle
       catches it (idempotence is oracle-visible, not just asserted),
-    - a CRASHED attempt of epoch 2 (kill between version write and
+    - a CRASHED attempt of epoch 2 (kill between manifest write and
       pointer flip) — readers keep the epoch-1 table, then the
       retried epoch commits; a torn or double-applied state again
       breaks the oracle match.
@@ -1811,22 +1811,22 @@ def q284_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the committed table properties — proving the txnVersion rode the
     same commit as the data.
 
-    Scale shape: each epoch is one key-partitioned merge join + one
-    pointer flip (see merge_upsert_manifest); exactly-once costs one
-    tiny local props read per epoch, not a log scan.
+    Scale shape: each epoch rewrites only the files its keys touch,
+    then flips the pointer (see table_format.fl_merge_upsert);
+    exactly-once costs one tiny local props read per epoch, not a log
+    scan.
 
     Cites: reference's append-only stream sink (create_db_from_csv.py
     ``if_exists='append'``) — no transactional or replay story; §2.4
     streaming-warehouse gap surface.
     """
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_init,
-        manifest_read,
-        manifest_table_props,
-        merge_upsert_manifest,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_init,
+        fl_read,
+        fl_table_props,
     )
     from citybikedatawarehouse_spark.streaming.incremental import (
-        manifest_epoch_step,
+        fl_epoch_step,
     )
 
     o = _t(spark, sf_dir, "orders").select(
@@ -1835,7 +1835,9 @@ def q284_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="cbdw_streamsink_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     root = base + "/orders_sink"
-    manifest_init(spark, root, o.where(F.col("o_orderkey") % 10 == 0))
+    fl_init(
+        spark, root, o.where(F.col("o_orderkey") % 10 == 0), key="o_orderkey"
+    )
 
     def _wave(mod: int, delta: float, tag: str) -> DataFrame:
         return o.where(F.col("o_orderkey") % mod == 0).select(
@@ -1845,29 +1847,27 @@ def q284_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(tag).alias("o_orderstatus"),
         )
 
-    st0, _, _ = manifest_epoch_step(_wave(30, 1.0, "E0"), 0, root, "o_orderkey")
-    st1, _, _ = manifest_epoch_step(_wave(50, 2.0, "E1"), 1, root, "o_orderkey")
+    st0, *_ = fl_epoch_step(_wave(30, 1.0, "E0"), 0, root, "o_orderkey")
+    st1, *_ = fl_epoch_step(_wave(50, 2.0, "E1"), 1, root, "o_orderkey")
     # poisoned replay of epoch 1: MUST be skipped — were it merged,
     # the +1000 prices would blow the oracle's revenue match
-    st1r, _, _ = manifest_epoch_step(
-        _wave(50, 1000.0, "XX"), 1, root, "o_orderkey"
-    )
+    st1r, *_ = fl_epoch_step(_wave(50, 1000.0, "XX"), 1, root, "o_orderkey")
     # epoch 2 crashes before the pointer flip, then is replayed
     try:
-        manifest_epoch_step(
+        fl_epoch_step(
             _wave(70, 3.0, "E2"), 2, root, "o_orderkey",
             _crash_before_commit=True,
         )
     except RuntimeError:
         pass
-    st2, _, _ = manifest_epoch_step(_wave(70, 3.0, "E2"), 2, root, "o_orderkey")
+    st2, *_ = fl_epoch_step(_wave(70, 3.0, "E2"), 2, root, "o_orderkey")
     assert (st0, st1, st1r, st2) == (
         "committed", "committed", "skipped", "committed",
     ), (st0, st1, st1r, st2)
 
-    last_epoch = int(manifest_table_props(root)["last_epoch"])
+    last_epoch = int(fl_table_props(root)["last_epoch"])
     return (
-        manifest_read(spark, root)
+        fl_read(spark, root)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1916,8 +1916,8 @@ _FL_K_LO, _FL_K_HI = 1000, 2000
     """,
 )
 def q285_filelist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB MERGE shape the directory-version manifest cannot
-    express: a file-list manifest table (version = manifest of
+    """The 100 TB MERGE shape, a full-table rewrite avoided: a
+    file-list manifest table (version = manifest of
     immutable shared data files with inline per-file stats) takes an
     upsert that touches a narrow key band plus append-only inserts,
     and rewrites ONLY the files whose key zone intersects the update

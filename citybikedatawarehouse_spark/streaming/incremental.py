@@ -1174,8 +1174,8 @@ def kmv_estimate(sketch: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# streaming sink into the manifest table format (round 10): every
-# micro-batch is one transactional MERGE commit, exactly-once by epoch
+# streaming sink into the file-list table format: every micro-batch
+# is one transactional MERGE commit, exactly-once by epoch
 # ---------------------------------------------------------------------------
 
 
@@ -1186,7 +1186,7 @@ def _dedup_batch_last_wins(
     requires unique source keys, so keep each key's row with the max
     (order_col, then any-column tiebreak via max struct) —
     deterministic last-change-wins in ONE map-side-combinable agg,
-    no window. Shared by both sink formats."""
+    no window."""
     if dedup_order_col is None:
         return batch_df
     others = [c for c in batch_df.columns if c != key]
@@ -1223,102 +1223,6 @@ def _epoch_is_replay(
     )
 
 
-def manifest_epoch_step(
-    batch_df: DataFrame,
-    epoch_id: int,
-    root: str,
-    key: str,
-    dedup_order_col: str | None = None,
-    txn_app_id: str | None = None,
-    _crash_before_commit: bool = False,
-) -> tuple[str, int, int]:
-    """One micro-batch -> one ``merge_upsert_manifest`` commit, with
-    the epoch id recorded in the SAME atomic commit (``extra_props``,
-    the Delta ``txnAppId``/``txnVersion`` idempotent-sink pattern).
-
-    foreachBatch is at-least-once: after a crash between the sink's
-    side effect and the checkpoint write, Structured Streaming REPLAYS
-    the epoch. The two halves of the contract:
-
-    - **never a torn table**: the commit is the manifest pointer flip
-      — a crash anywhere before it (including mid-write, or the
-      injected ``_crash_before_commit``) leaves the pointer on the
-      previous version; readers never observe partial batch data,
-      half-built zone maps, or a stats/data mismatch (stats live
-      inside the version directory).
-    - **replay is a no-op**: the committed ``last_epoch`` property is
-      read BEFORE merging; a batch whose epoch is <= it was already
-      published (the crash happened after the flip, before the
-      checkpoint) and is skipped entirely — exactly-once publication
-      on top of at-least-once delivery.
-
-    ``dedup_order_col``: micro-batches of a CDC stream can carry
-    several changes for one key; MERGE requires unique source keys,
-    so when set, only each key's row with the max (order_col, then
-    any-column tiebreak via max struct) survives — last-change-wins
-    within the epoch.
-
-    Returns ("committed"|"skipped", n_replaced, n_inserted).
-
-    Scale shape: identical to ``merge_upsert_manifest`` — the merge
-    is one key-partitioned join of table x batch, the layout re-
-    cluster is one range shuffle of the commit output, stats fold to
-    O(files) rows. The epoch check is one tiny local file read. At
-    100 TB the per-epoch rewrite cost is why real deployments pair
-    this with partitioned merges (``merge_upsert_partitioned``) or
-    deletion vectors; the COMMIT contract is the same either way.
-
-    Cites: reference's append-only stream sink has no transactional
-    story (create_db_from_csv.py if_exists='append'); this is the
-    §2.4 streaming-warehouse gap surface.
-    """
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_table_props,
-        merge_upsert_manifest,
-    )
-
-    if _epoch_is_replay(manifest_table_props(root), epoch_id, txn_app_id):
-        return "skipped", 0, 0
-    updates = _dedup_batch_last_wins(batch_df, key, dedup_order_col)
-    n_rep, n_ins = merge_upsert_manifest(
-        batch_df.sparkSession,
-        root,
-        updates,
-        key=key,
-        _crash_before_commit=_crash_before_commit,
-        extra_props={
-            "last_epoch": int(epoch_id),
-            "txn_app_id": txn_app_id,
-        },
-    )
-    return "committed", n_rep, n_ins
-
-
-def start_manifest_upsert_stream(
-    updates_stream: DataFrame,
-    root: str,
-    key: str,
-    dedup_order_col: str | None = None,
-    txn_app_id: str | None = None,
-):
-    """Streaming upsert sink into a manifest table (initialized via
-    ``manifest_init`` — optionally with stats_cols/zorder_by, which
-    every epoch commit then maintains): each micro-batch becomes one
-    atomic, exactly-once MERGE commit. The table is always readable
-    (plain or zone-map-pruned) at some committed epoch boundary —
-    never mid-batch. Pass the query's checkpoint location (or any
-    stable query name) as ``txn_app_id`` so the replay guard is keyed
-    to THIS stream's lineage — a restart from a fresh checkpoint then
-    commits instead of being mistaken for a replay."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        manifest_epoch_step(
-            batch_df, epoch_id, root, key, dedup_order_col, txn_app_id
-        )
-
-    return updates_stream.writeStream.foreachBatch(step).start()
-
-
 def fl_epoch_step(
     batch_df: DataFrame,
     epoch_id: int,
@@ -1328,17 +1232,35 @@ def fl_epoch_step(
     txn_app_id: str | None = None,
     _crash_before_commit: bool = False,
 ) -> tuple[str, int, int, int, int]:
-    """``manifest_epoch_step`` for the FILE-LIST manifest format
-    (operators/table_format.py) — the streaming CDC sink at its
-    100 TB shape: each micro-batch is one exactly-once MERGE commit
-    that rewrites ONLY the data files whose key zones intersect the
+    """One micro-batch -> one ``fl_merge_upsert`` commit into a
+    file-list table (operators/table_format.py), with the epoch id
+    recorded in the SAME atomic commit (``extra_props``, the Delta
+    ``txnAppId``/``txnVersion`` idempotent-sink pattern). Each epoch
+    rewrites ONLY the data files whose key zones intersect the
     batch's keys, so per-epoch cost tracks the batch, not the table.
-    Same epoch contract as the directory-format step: the committed
-    ``last_epoch`` property is read before merging, a replayed epoch
-    is skipped, and a crash before the pointer flip leaves readers on
-    the previous committed version. Empty batches are clean no-ops.
-    Returns ("committed"|"skipped", n_replaced, n_inserted,
-    files_rewritten, files_total)."""
+
+    foreachBatch is at-least-once: after a crash between the sink's
+    side effect and the checkpoint write, Structured Streaming
+    REPLAYS the epoch. The two halves of the contract:
+
+    - **never a torn table**: the commit is the manifest pointer flip
+      — a crash anywhere before it (including the injected
+      ``_crash_before_commit``) leaves readers on the previous
+      committed version, stats included (the manifest IS the stats).
+    - **replay is a no-op**: the committed ``last_epoch`` property is
+      read BEFORE merging; a batch whose epoch is <= it (for the same
+      ``txn_app_id``) was already published and is skipped entirely —
+      exactly-once publication on top of at-least-once delivery.
+
+    ``dedup_order_col``: a CDC micro-batch can carry several changes
+    for one key; MERGE requires unique source keys, so when set only
+    each key's last change survives (``_dedup_batch_last_wins``).
+    Empty batches are clean no-ops. Returns ("committed"|"skipped",
+    n_replaced, n_inserted, files_rewritten, files_total).
+
+    Cites: reference's append-only stream sink has no transactional
+    story (create_db_from_csv.py if_exists='append'); this is the
+    §2.4 streaming-warehouse gap surface."""
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_merge_upsert,
         fl_table_props,
@@ -1371,9 +1293,12 @@ def start_fl_upsert_stream(
     """Streaming upsert sink into a file-list manifest table
     (``fl_init`` first; cluster by the merge key so epochs stay
     file-sparse): every micro-batch is one atomic, exactly-once,
-    O(touched-files) MERGE commit. Pass the query's checkpoint
-    location as ``txn_app_id`` to key the replay guard to this
-    stream's lineage (see ``start_manifest_upsert_stream``)."""
+    O(touched-files) MERGE commit. The table is always readable
+    (plain or zone-map-pruned) at some committed epoch boundary —
+    never mid-batch. Pass the query's checkpoint location (or any
+    stable query name) as ``txn_app_id`` so the replay guard is keyed
+    to THIS stream's lineage — a restart from a fresh checkpoint then
+    commits instead of being mistaken for a replay."""
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         fl_epoch_step(

@@ -71,7 +71,7 @@ def main() -> None:
     timed(tf, "_parquet_rows")
     timed(tf, "_claim_version")
     timed(tf, "_write_manifest")
-    timed(tf, "_fl_commit")
+    timed(tf, "manifest_commit_cas")
     timed(tf, "fl_changes")
 
     # whole-op timers (note: these INCLUDE the phases above)

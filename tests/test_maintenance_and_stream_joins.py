@@ -386,105 +386,104 @@ def test_cdc_extract_apply_identity_and_minimality(spark, tmp_path):
     assert cdc_extract(applied, new, "k", ("v", "x")).count() == 0
 
 
-def test_merge_upsert_manifest_crash_injection(spark, tmp_path):
-    """Crash-consistency proof for the manifest-pointer commit: kill
-    the merge BETWEEN the data write and the pointer flip and show
-    readers still see the complete OLD table (never a torn one);
+def test_fl_merge_crash_injection(spark, tmp_path):
+    """Crash-consistency proof for the file-list pointer commit: kill
+    the merge BETWEEN the manifest write and the pointer flip and
+    show readers still see the complete OLD table (never a torn one);
     retry succeeds; torn pointer tmp files are invisible; vacuum
     never deletes the live version."""
     import os
 
     import pytest
 
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_current,
-        manifest_init,
-        manifest_read,
-        manifest_vacuum,
-        merge_upsert_manifest,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_current_version,
+        fl_init,
+        fl_merge_upsert,
+        fl_read,
+        fl_vacuum,
+        fl_versions,
     )
+
+    def kv(df):
+        return {(r["k"], r["v"]) for r in df.collect()}
 
     root = str(tmp_path / "mt")
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
     )
-    v1 = manifest_init(spark, root, base)
-    assert manifest_current(root).endswith(v1)
-    before = {(r["k"], r["v"]) for r in manifest_read(spark, root).collect()}
+    v1 = fl_init(spark, root, base, key="k")
+    assert fl_current_version(root) == v1
+    before = kv(fl_read(spark, root))
     assert before == {(1, "a"), (2, "b"), (3, "c")}
 
     updates = spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string")
 
-    # crash AFTER the new version's data files exist, BEFORE the flip
+    # crash AFTER the new version's files + manifest exist, BEFORE the flip
     with pytest.raises(RuntimeError, match="injected crash"):
-        merge_upsert_manifest(
+        fl_merge_upsert(
             spark, root, updates, "k", _crash_before_commit=True
         )
-    # the orphan version dir is on disk...
-    orphans = [
-        d for d in os.listdir(root) if d.startswith("v") and d != v1
-    ]
-    assert orphans, "crash injection must leave the staged version"
+    # the orphan version is on disk...
+    assert [v for v in fl_versions(root) if v != v1], (
+        "crash injection must leave the staged version"
+    )
     # ...but readers still follow the pointer to the intact old table
-    assert manifest_current(root).endswith(v1)
-    got = {(r["k"], r["v"]) for r in manifest_read(spark, root).collect()}
-    assert got == before
+    assert fl_current_version(root) == v1
+    assert kv(fl_read(spark, root)) == before
 
-    # a torn pointer tmp (crash mid-manifest-write) is also invisible
+    # a torn pointer tmp (crash mid-pointer-write) is also invisible
     with open(os.path.join(root, "_MANIFEST.tmp"), "w") as f:
         f.write("v9")  # torn: no newline, bogus target, never fsynced
-    assert manifest_current(root).endswith(v1)
+    assert fl_current_version(root) == v1
 
     # retry commits cleanly (next version number, orphan ignored)
-    n_replaced, n_inserted = merge_upsert_manifest(spark, root, updates, "k")
+    n_replaced, n_inserted, _, _ = fl_merge_upsert(spark, root, updates, "k")
     assert (n_replaced, n_inserted) == (1, 1)
-    got2 = {(r["k"], r["v"]) for r in manifest_read(spark, root).collect()}
+    got2 = kv(fl_read(spark, root))
     assert got2 == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
 
     # old version still readable (time travel) until vacuumed
-    assert {(r["k"], r["v"]) for r in spark.read.parquet(
-        os.path.join(root, v1)
-    ).collect()} == before
-    current = os.path.basename(manifest_current(root))
+    assert kv(fl_read(spark, root, v1)) == before
+    current = fl_current_version(root)
     # default retention would keep the fresh version; retention
     # semantics are pinned in test_round12_table_format
-    assert manifest_vacuum(root, keep=1) == []
-    dropped = manifest_vacuum(root, keep=1, retain_hours=0.0)
-    assert v1 in dropped and current not in dropped
-    assert {(r["k"], r["v"]) for r in manifest_read(spark, root).collect()} \
-        == got2
+    assert fl_vacuum(spark, root, keep=1) == []
+    fl_vacuum(spark, root, keep=1, retain_hours=0.0)
+    assert fl_versions(root) == [current]
+    assert kv(fl_read(spark, root)) == got2
 
     # duplicate source keys still rejected, pointer untouched
     dup = spark.createDataFrame([(5, "x"), (5, "y")], "k long, v string")
     with pytest.raises(ValueError, match="duplicate"):
-        merge_upsert_manifest(spark, root, dup, "k")
-    assert os.path.basename(manifest_current(root)) == current
+        fl_merge_upsert(spark, root, dup, "k")
+    assert fl_current_version(root) == current
 
 
-def test_compact_manifest_is_a_commit(spark, tmp_path):
-    """Manifest-mode compaction: same rows, fewer files, published by
-    a pointer flip — the old version intact until vacuum."""
-    import os
-
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        compact_manifest,
-        manifest_current,
-        manifest_init,
-        manifest_read,
-        parquet_file_stats,
+def test_fl_compact_is_a_commit(spark, tmp_path):
+    """File-list compaction: same rows, fewer files, published by a
+    pointer flip — the old version intact until vacuum."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_compact,
+        fl_current_version,
+        fl_init,
+        fl_manifest,
+        fl_read,
     )
 
     root = str(tmp_path / "ct")
-    # many-partition write to fragment the table
-    df = spark.range(1000).repartition(16)
-    v1 = manifest_init(spark, root, df)
-    n_before, _ = parquet_file_stats(os.path.join(root, v1))
+    # a 16-file range layout stands in for a fragmented table
+    v1 = fl_init(
+        spark, root, spark.range(1000), key="id",
+        zorder_by=("id",), layout_files=16,
+    )
+    n_before = len(fl_manifest(root, v1))
     assert n_before >= 16
-    v2 = compact_manifest(spark, root, target_file_mb=512)
-    assert os.path.basename(manifest_current(root)) == v2
-    n_after, _ = parquet_file_stats(manifest_current(root))
+    v2 = fl_compact(spark, root, layout_files=2)
+    assert fl_current_version(root) == v2
+    n_after = len(fl_manifest(root))
     assert n_after < n_before
-    got = sorted(r.id for r in manifest_read(spark, root).collect())
+    got = sorted(r.id for r in fl_read(spark, root).collect())
     assert got == list(range(1000))
-    # pre-compaction version still on disk until vacuumed
-    assert os.path.exists(os.path.join(root, v1))
+    # pre-compaction version still readable until vacuumed
+    assert fl_read(spark, root, v1).count() == 1000

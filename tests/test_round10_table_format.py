@@ -1,33 +1,37 @@
-"""Round-10 unified table format: manifest commits that maintain the
-Z-order layout, the per-version zone map, and table properties
-transactionally (all inside the immutable version directory, published
-by the one atomic pointer flip), plus zone-map-pruned reads.
+"""Unified table format: commits that maintain the Z-order layout, the
+per-file zone stats, and table properties transactionally (all in the
+version's manifest, published by the one atomic pointer flip), plus
+zone-map-pruned reads.
 
-Contract under test (VERDICT r9 "Next round" item 2): q278 (zone-map
-prune), q280 (time travel) and q281 (Z-order skipping) stop being
-three demos and become ONE API — ``manifest_init(stats_cols,
-zorder_by)`` -> every commit re-clusters + re-stats -> ``manifest_
-read_pruned`` consults the committed stats; and a crash anywhere
-before the pointer flip can never desync stats/layout from data.
+Contract under test: q278 (zone-map prune), q280 (time travel) and
+q281 (Z-order skipping) are ONE API — ``fl_init(stats_cols,
+zorder_by)`` -> every commit re-clusters the files it writes and
+records their stats -> ``fl_read_pruned`` consults the committed
+stats; and a crash anywhere before the pointer flip can never desync
+stats/layout from data.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from citybikedatawarehouse_spark.operators.maintenance import (
-    compact_manifest,
-    manifest_current,
-    manifest_init,
-    manifest_read,
-    manifest_read_pruned,
-    manifest_stats_cols,
-    manifest_table_props,
-    manifest_zone_map,
-    merge_upsert_manifest,
+    _norm_file_uri,
     parquet_file_stats,
     read_pruned_files,
+)
+from citybikedatawarehouse_spark.operators.table_format import (
+    fl_compact,
+    fl_current_version,
+    fl_init,
+    fl_manifest,
+    fl_merge_upsert,
+    fl_read,
+    fl_read_pruned,
+    fl_table_props,
 )
 
 
@@ -42,31 +46,29 @@ def _orders(spark, sf_dir):
     )
 
 
-def _tf_init(spark, sf_dir, tmp_path, **kw):
+def _tf_init(spark, sf_dir, tmp_path):
     root = str(tmp_path / "tf")
     o = _orders(spark, sf_dir)
-    manifest_init(
+    fl_init(
         spark,
         root,
         o.where(F.col("o_orderkey") % 10 != 5),
+        key="o_orderkey",
         stats_cols=("o_custkey", "o_orderday"),
         zorder_by=("o_custkey", "o_orderday"),
         layout_files=8,
-        **kw,
     )
     return root, o
 
 
-def _stats_file_set(spark, root, version=None):
-    zm = manifest_zone_map(spark, root, version)
-    return {r["file"] for r in zm.select("file").collect()}
+def _stats_file_set(root):
+    return set(fl_manifest(root)["path"])
 
 
 def _data_file_set(spark, root):
-    cur = manifest_current(root)
     return {
-        r["f"]
-        for r in spark.read.parquet(cur)
+        _norm_file_uri(r["f"])
+        for r in fl_read(spark, root)
         .select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
@@ -75,45 +77,43 @@ def _data_file_set(spark, root):
 
 def test_commits_maintain_zone_map_and_props(spark, sf_dir, tmp_path):
     """Every commit kind (init, merge, compact) leaves the CURRENT
-    version with a zone map that describes exactly its own data files
+    version with a manifest that describes exactly its own data files
     and row count, and carries the table properties forward."""
     root, o = _tf_init(spark, sf_dir, tmp_path)
 
     def _check():
-        assert _stats_file_set(spark, root) == _data_file_set(spark, root)
-        zm = manifest_zone_map(spark, root)
+        assert _stats_file_set(root) == _data_file_set(spark, root)
         assert (
-            zm.agg(F.sum("n_rows")).collect()[0][0]
-            == manifest_read(spark, root).count()
+            int(fl_manifest(root)["n_rows"].sum())
+            == fl_read(spark, root).count()
         )
-        assert manifest_stats_cols(spark, root) == (
-            "o_custkey",
-            "o_orderday",
-        )
-        assert manifest_table_props(root)["zorder_by"] == [
+        props = fl_table_props(root)
+        assert props["stats_cols"] == [
+            "o_orderkey",
             "o_custkey",
             "o_orderday",
         ]
+        assert props["zorder_by"] == ["o_custkey", "o_orderday"]
 
     _check()  # init
     updates = o.where(F.col("o_orderkey") % 100 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
     )
     inserts = o.where(F.col("o_orderkey") % 10 == 5)
-    n_rep, n_ins = merge_upsert_manifest(
+    n_rep, n_ins, _, _ = fl_merge_upsert(
         spark, root, updates.unionByName(inserts), key="o_orderkey"
     )
     assert n_rep > 0 and n_ins > 0
     _check()  # merge
-    compact_manifest(spark, root, target_file_mb=1)
-    _check()  # compact (zone map rebuilt for the rewritten files)
+    fl_compact(spark, root, layout_files=4)
+    _check()  # compact (stats recorded for the rewritten files)
 
 
 def test_pruned_read_lossless_and_skips_after_merge(
     spark, sf_dir, tmp_path
 ):
-    """manifest_read_pruned on the POST-MERGE version: the pruned
-    relation filtered by the predicate equals the full scan filtered
+    """fl_read_pruned on the POST-MERGE version: the pruned relation
+    filtered by the predicate equals the full scan filtered
     (losslessness), and files are actually skipped — i.e. the merge
     commit re-applied the Z-order layout, keeping the stats PRUNABLE,
     not merely correct."""
@@ -122,11 +122,11 @@ def test_pruned_read_lossless_and_skips_after_merge(
         (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") % 10 != 5)
     ).withColumn("o_totalprice", F.col("o_totalprice") * F.lit(2.0))
     inserts = o.where(F.col("o_orderkey") % 10 == 5)
-    merge_upsert_manifest(
+    fl_merge_upsert(
         spark, root, updates.unionByName(inserts), key="o_orderkey"
     )
 
-    full = manifest_read(spark, root)
+    full = fl_read(spark, root)
     lo_d, hi_d = (
         full.agg(F.min("o_orderday"), F.max("o_orderday")).collect()[0]
     )
@@ -135,7 +135,7 @@ def test_pruned_read_lossless_and_skips_after_merge(
         "o_custkey": (1, 30),
         "o_orderday": (lo_d, lo_d + span // 5),
     }
-    pruned, n_read, n_total = manifest_read_pruned(spark, root, preds)
+    pruned, n_read, n_total = fl_read_pruned(spark, root, preds)
     assert 0 < n_read < n_total, (n_read, n_total)
     cond = F.col("o_custkey").between(*preds["o_custkey"]) & F.col(
         "o_orderday"
@@ -153,250 +153,99 @@ def test_pruned_read_disjoint_predicate_is_empty_not_error(
     spark, sf_dir, tmp_path
 ):
     """A predicate disjoint from every zone yields an EMPTY relation
-    with the table's schema (round-9 ADVICE: the raw
-    spark.read.parquet(*[]) call would error)."""
+    with the table's schema (the raw spark.read.parquet(*[]) call
+    would error)."""
     root, _o = _tf_init(spark, sf_dir, tmp_path)
-    pruned, n_read, n_total = manifest_read_pruned(
+    pruned, n_read, n_total = fl_read_pruned(
         spark, root, {"o_custkey": (10**9, 2 * 10**9)}
     )
     assert n_read == 0 and n_total > 0
     assert pruned.count() == 0
-    assert pruned.columns == manifest_read(spark, root).columns
+    assert pruned.columns == fl_read(spark, root).columns
 
 
 def test_pruned_read_rejects_untracked_column(spark, sf_dir, tmp_path):
     root, _o = _tf_init(spark, sf_dir, tmp_path)
-    with pytest.raises(ValueError, match="no zone-map stats"):
-        manifest_read_pruned(spark, root, {"o_totalprice": (0, 1)})
+    with pytest.raises(ValueError, match="no stats"):
+        fl_read_pruned(spark, root, {"o_totalprice": (0, 1)})
 
 
 def test_crash_before_commit_never_desyncs_stats(
     spark, sf_dir, tmp_path
 ):
-    """Kill the merge between the new version's data/stats write and
-    the pointer flip: the pointer still names the OLD version, whose
-    zone map still describes exactly its own files — readers (plain
-    and pruned) are byte-identical to before the crash, and the
+    """Kill the merge between the new version's data/manifest write
+    and the pointer flip: the pointer still names the OLD version,
+    whose manifest still describes exactly its own files — readers
+    (plain and pruned) are identical to before the crash, and the
     retried merge commits cleanly with consistent stats."""
     root, o = _tf_init(spark, sf_dir, tmp_path)
-    before_version = manifest_current(root)
-    before_rows = manifest_read(spark, root).count()
+    before_version = fl_current_version(root)
+    before_rows = fl_read(spark, root).count()
     updates = o.where(F.col("o_orderkey") % 100 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
     )
     with pytest.raises(RuntimeError, match="injected crash"):
-        merge_upsert_manifest(
+        fl_merge_upsert(
             spark, root, updates, key="o_orderkey",
             _crash_before_commit=True,
         )
     # pointer untouched; stats of the CURRENT version still match its
-    # own files exactly (the orphan's stats are invisible: stats live
-    # INSIDE the version dir, so there is no shared mutable stats
-    # table a half-commit could have polluted)
-    assert manifest_current(root) == before_version
-    assert _stats_file_set(spark, root) == _data_file_set(spark, root)
-    assert manifest_read(spark, root).count() == before_rows
-    pruned, n_read, n_total = manifest_read_pruned(
+    # own files exactly (the orphan's manifest is keyed by its own
+    # version name, so a half-commit cannot pollute the live one)
+    assert fl_current_version(root) == before_version
+    assert _stats_file_set(root) == _data_file_set(spark, root)
+    assert fl_read(spark, root).count() == before_rows
+    pruned, n_read, n_total = fl_read_pruned(
         spark, root, {"o_custkey": (1, 50)}
     )
     cond = F.col("o_custkey").between(1, 50)
     assert (
         pruned.where(cond).count()
-        == manifest_read(spark, root).where(cond).count()
+        == fl_read(spark, root).where(cond).count()
     )
     # retry commits cleanly
-    merge_upsert_manifest(spark, root, updates, key="o_orderkey")
-    assert manifest_current(root) != before_version
-    assert _stats_file_set(spark, root) == _data_file_set(spark, root)
+    fl_merge_upsert(spark, root, updates, key="o_orderkey")
+    assert fl_current_version(root) != before_version
+    assert _stats_file_set(root) == _data_file_set(spark, root)
 
 
 def test_plain_manifest_mode_unchanged(spark, tmp_path):
-    """A table initialized WITHOUT stats/layout keeps the round-8
-    plain-manifest behavior: commits work, no zone map, no props,
-    and manifest_zone_map says so instead of guessing."""
+    """A table initialized WITHOUT stats/layout: commits work, the
+    manifest tracks only the merge key, and a pruned read on an
+    untracked column says so instead of guessing."""
     root = str(tmp_path / "plain")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    manifest_init(spark, root, df)
-    assert manifest_table_props(root) == {}
-    assert manifest_stats_cols(spark, root) == ()
-    with pytest.raises(IOError, match="no zone map"):
-        manifest_zone_map(spark, root)
-    merge_upsert_manifest(
+    fl_init(spark, root, df, key="k")
+    props = fl_table_props(root)
+    assert props["stats_cols"] == ["k"] and props["zorder_by"] == []
+    with pytest.raises(ValueError, match="no stats"):
+        fl_read_pruned(spark, root, {"v": ("a", "b")})
+    fl_merge_upsert(
         spark,
         root,
         spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"),
         key="k",
     )
-    got = {
-        (r["k"], r["v"]) for r in manifest_read(spark, root).collect()
-    }
+    got = {(r["k"], r["v"]) for r in fl_read(spark, root).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
 def test_hidden_dirs_invisible_to_data_scans(spark, sf_dir, tmp_path):
-    """The _zonemap dir and _props.json inside a version directory
-    must not leak into data reads or file stats."""
+    """The _manifests dir and the _MANIFEST pointer under the table
+    root must not leak into data reads or file stats."""
     root, _o = _tf_init(spark, sf_dir, tmp_path)
-    cur = manifest_current(root)
-    df = spark.read.parquet(cur)
+    commit_dir = os.path.dirname(next(iter(_stats_file_set(root))))
+    df = spark.read.parquet(commit_dir)
     assert set(df.columns) == {
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderday"
     }
-    n_files, _ = parquet_file_stats(cur)
+    n_files, _ = parquet_file_stats(root)
     assert n_files == len(_data_file_set(spark, root)) == 8
 
 
 def test_read_pruned_files_empty_list(spark, sf_dir, tmp_path):
     root, _o = _tf_init(spark, sf_dir, tmp_path)
-    cur = manifest_current(root)
-    empty = read_pruned_files(spark, [], cur)
+    commit_dir = os.path.dirname(next(iter(_stats_file_set(root))))
+    empty = read_pruned_files(spark, [], commit_dir)
     assert empty.count() == 0
-    assert empty.schema == spark.read.parquet(cur).schema
-
-
-# ---------------------------------------------------------------------------
-# streaming sink -> manifest commits (VERDICT r9 item 6)
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import types as T  # noqa: E402
-
-from citybikedatawarehouse_spark.streaming.incremental import (  # noqa: E402
-    manifest_epoch_step,
-    start_manifest_upsert_stream,
-)
-
-_KV_SCHEMA = T.StructType(
-    [
-        T.StructField("k", T.LongType(), True),
-        T.StructField("v", T.StringType(), True),
-        T.StructField("seq", T.LongType(), True),
-    ]
-)
-
-
-def _kv(spark, rows):
-    return spark.createDataFrame(rows, _KV_SCHEMA)
-
-
-def test_manifest_epoch_step_exactly_once_and_crash_safe(
-    spark, tmp_path
-):
-    """The foreachBatch step's full at-least-once matrix, driven on
-    the EXACT production function: replayed epoch skipped, crash
-    before the pointer flip leaves the table readable at the previous
-    epoch boundary (never torn), retry of the crashed epoch commits,
-    and a within-batch multi-change key resolves last-change-wins."""
-    root = str(tmp_path / "sink")
-    manifest_init(spark, root, _kv(spark, [(1, "a", 0), (2, "b", 0)]))
-
-    # epoch 0: plain upsert
-    st, n_rep, n_ins = manifest_epoch_step(
-        _kv(spark, [(2, "B", 1), (3, "c", 1)]), 0, root, key="k"
-    )
-    assert (st, n_rep, n_ins) == ("committed", 1, 1)
-    assert manifest_table_props(root)["last_epoch"] == 0
-
-    # replay of epoch 0 (checkpoint lost after commit): skipped, table
-    # and version pointer untouched
-    v_before = manifest_current(root)
-    st, _, _ = manifest_epoch_step(
-        _kv(spark, [(2, "B", 1), (3, "c", 1)]), 0, root, key="k"
-    )
-    assert st == "skipped"
-    assert manifest_current(root) == v_before
-
-    # epoch 1: batch carries TWO changes for key 3 -> last (max seq) wins
-    st, _, _ = manifest_epoch_step(
-        _kv(spark, [(3, "c2", 2), (3, "c3", 3), (4, "d", 2)]),
-        1,
-        root,
-        key="k",
-        dedup_order_col="seq",
-    )
-    assert st == "committed"
-    want_e1 = {(1, "a"), (2, "B"), (3, "c3"), (4, "d")}
-    got = {
-        (r["k"], r["v"]) for r in manifest_read(spark, root).collect()
-    }
-    assert got == want_e1
-
-    # epoch 2 crashes between version write and pointer flip: the
-    # reader still sees the epoch-1 table exactly — never torn
-    v_before = manifest_current(root)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        manifest_epoch_step(
-            _kv(spark, [(4, "D", 4)]), 2, root, key="k",
-            _crash_before_commit=True,
-        )
-    assert manifest_current(root) == v_before
-    assert manifest_table_props(root)["last_epoch"] == 1
-    got = {
-        (r["k"], r["v"]) for r in manifest_read(spark, root).collect()
-    }
-    assert got == want_e1
-
-    # replay of the crashed epoch commits cleanly
-    st, _, _ = manifest_epoch_step(
-        _kv(spark, [(4, "D", 4)]), 2, root, key="k"
-    )
-    assert st == "committed"
-    assert manifest_table_props(root)["last_epoch"] == 2
-    got = {
-        (r["k"], r["v"]) for r in manifest_read(spark, root).collect()
-    }
-    assert got == {(1, "a"), (2, "B"), (3, "c3"), (4, "D")}
-
-
-def test_manifest_stream_sink_e2e_maintains_format(spark, tmp_path):
-    """End-to-end writeStream -> manifest table WITH layout + stats:
-    three micro-batches of upserts land as three commits; the final
-    table equals the batch-merged ground truth, the epoch watermark
-    is recorded, and the zone map still describes exactly the current
-    version's files (the streaming path maintains the table format,
-    not just the data)."""
-    src = tmp_path / "src"
-    # keys are DISJOINT across batches (the file source's batch order
-    # is not contractual — part-file names are random — so the final
-    # state must not depend on it; cross-batch upsert ordering is
-    # covered deterministically by the step-level test above). Key 5
-    # changes twice WITHIN its batch -> exercises dedup_order_col.
-    days = [
-        [(1, "a", 1), (2, "b", 1), (3, "c", 1)],
-        [(4, "d", 2), (5, "e", 3), (5, "e3", 4)],
-        [(6, "f", 5)],
-    ]
-    for day in days:
-        _kv(spark, day).coalesce(1).write.mode("append").parquet(str(src))
-    root = str(tmp_path / "tbl")
-    # seed row: a manifest version must contain at least one parquet
-    # file for schema-bearing reads (an all-empty write has no footer)
-    manifest_init(
-        spark,
-        root,
-        _kv(spark, [(0, "seed", 0)]),
-        stats_cols=("k",),
-        zorder_by=("k",),
-        layout_files=2,
-    )
-    stream = (
-        spark.readStream.schema(_KV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = start_manifest_upsert_stream(
-        stream, root, key="k", dedup_order_col="seq"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r["k"], r["v"]) for r in manifest_read(spark, root).collect()
-    }
-    assert got == {
-        (0, "seed"), (1, "a"), (2, "b"), (3, "c"), (4, "d"),
-        (5, "e3"), (6, "f"),
-    }
-    assert manifest_table_props(root)["last_epoch"] == 2
-    assert _stats_file_set(spark, root) == _data_file_set(spark, root)
+    assert empty.schema == spark.read.parquet(commit_dir).schema

@@ -13,12 +13,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citybikedatawarehouse_spark.operators.maintenance import (
-    CommitConflictError,
     _list_parquet_files,
     zone_map_append,
     zone_map_stats,
 )
 from citybikedatawarehouse_spark.operators.table_format import (
+    CommitConflictError,
     fl_add_column,
     fl_changes,
     fl_compact,
@@ -560,43 +560,6 @@ def test_change_feed_replays_streamed_epochs(spark, tmp_path):
               for r in fl_read(spark, root, versions[0]).collect()}
     state1 = apply_feed(state1, fl_changes(spark, root, versions[0]))
     assert set(state1.items()) == want
-
-
-def test_directory_format_concurrent_writers_one_wins(
-    spark, sf_dir, tmp_path
-):
-    """The same CAS contract on the DIRECTORY-version format
-    (maintenance.merge_upsert_manifest): exactly one of two racing
-    writers commits; the loser raises and its staged version dir is
-    an orphan invisible to pointer-following readers."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_init,
-        manifest_read,
-        merge_upsert_manifest,
-    )
-
-    root = str(tmp_path / "dircas")
-    o = _orders(spark, sf_dir)
-    manifest_init(spark, root, o)
-    inner = o.where(F.col("o_orderkey") % 100 == 0).withColumn(
-        "o_orderstatus", F.lit("A")
-    )
-    outer = o.where(F.col("o_orderkey") % 100 == 50).withColumn(
-        "o_orderstatus", F.lit("Z")
-    )
-    with pytest.raises(CommitConflictError, match="moved from parent"):
-        merge_upsert_manifest(
-            spark, root, outer, key="o_orderkey",
-            _pause_before_commit=lambda: merge_upsert_manifest(
-                spark, root, inner, key="o_orderkey"
-            ),
-        )
-    got = manifest_read(spark, root)
-    assert got.where(F.col("o_orderstatus") == "A").count() == inner.count()
-    assert got.where(F.col("o_orderstatus") == "Z").count() == 0
-    # double-init rejected on this format too
-    with pytest.raises(CommitConflictError):
-        manifest_init(spark, root, o.limit(1))
 
 
 def test_optimize_packs_only_small_files_and_preserves_mor(

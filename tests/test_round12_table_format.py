@@ -25,13 +25,9 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from citybikedatawarehouse_spark.operators import maintenance as mnt
 from citybikedatawarehouse_spark.operators import table_format as tf
-from citybikedatawarehouse_spark.operators.maintenance import (
-    CommitConflictError,
-    manifest_commit_cas,
-)
 from citybikedatawarehouse_spark.operators.table_format import (
+    CommitConflictError,
     _delete_keys_df,
     fl_changes,
     fl_current_version,
@@ -44,6 +40,7 @@ from citybikedatawarehouse_spark.operators.table_format import (
     fl_table_props,
     fl_vacuum,
     fl_versions,
+    manifest_commit_cas,
 )
 
 
@@ -206,7 +203,7 @@ def _pointer_init(root, version="v1"):
 
 
 def _stale_lock(root, content="corpse\n", age=120.0):
-    lock = os.path.join(root, mnt._COMMIT_LOCK)
+    lock = os.path.join(root, tf._COMMIT_LOCK)
     with open(lock, "w") as f:
         f.write(content)
     t = time.time() - age
@@ -227,7 +224,7 @@ def test_two_stealers_exactly_one_enters(tmp_path, monkeypatch):
 
     occupancy = {"cur": 0, "max": 0}
     occ_lock = threading.Lock()
-    real_commit = mnt._manifest_commit
+    real_commit = tf._manifest_commit
 
     def slow_commit(r, v):
         with occ_lock:
@@ -240,7 +237,7 @@ def test_two_stealers_exactly_one_enters(tmp_path, monkeypatch):
             with occ_lock:
                 occupancy["cur"] -= 1
 
-    monkeypatch.setattr(mnt, "_manifest_commit", slow_commit)
+    monkeypatch.setattr(tf, "_manifest_commit", slow_commit)
 
     barrier = threading.Barrier(2)
     results = {}
@@ -262,8 +259,8 @@ def test_two_stealers_exactly_one_enters(tmp_path, monkeypatch):
     assert sorted(results.values()) == ["conflict", "ok"]
     assert occupancy["max"] == 1, "two writers inside the CAS critical section"
     winner = next(v for v, r in results.items() if r == "ok")
-    assert mnt._pointer_current(root) == winner
-    assert not os.path.exists(os.path.join(root, mnt._COMMIT_LOCK))
+    assert tf.fl_current_version(root) == winner
+    assert not os.path.exists(os.path.join(root, tf._COMMIT_LOCK))
 
 
 def test_stalled_holder_release_is_token_verified(tmp_path, monkeypatch):
@@ -273,11 +270,11 @@ def test_stalled_holder_release_is_token_verified(tmp_path, monkeypatch):
     lock still carrying the stalled writer's own token."""
     root = str(tmp_path / "cas2")
     _pointer_init(root)
-    monkeypatch.setattr(mnt, "_LOCK_STALE_SEC", 0.05)
+    monkeypatch.setattr(tf, "_LOCK_STALE_SEC", 0.05)
 
     hold = threading.Event()
     inside = threading.Event()
-    real_commit = mnt._manifest_commit
+    real_commit = tf._manifest_commit
 
     def stall_on_v2(r, v):
         if v == "v2":
@@ -285,7 +282,7 @@ def test_stalled_holder_release_is_token_verified(tmp_path, monkeypatch):
             assert hold.wait(10)
         real_commit(r, v)
 
-    monkeypatch.setattr(mnt, "_manifest_commit", stall_on_v2)
+    monkeypatch.setattr(tf, "_manifest_commit", stall_on_v2)
 
     t = threading.Thread(
         target=lambda: manifest_commit_cas(root, "v2", "v1")
@@ -296,10 +293,10 @@ def test_stalled_holder_release_is_token_verified(tmp_path, monkeypatch):
 
     # a recovery writer steals the stalled lock and commits
     manifest_commit_cas(root, "v3", "v1")
-    assert mnt._pointer_current(root) == "v3"
+    assert tf.fl_current_version(root) == "v3"
 
     # a THIRD writer now holds the lock when the stalled one resumes
-    lock = os.path.join(root, mnt._COMMIT_LOCK)
+    lock = os.path.join(root, tf._COMMIT_LOCK)
     with open(lock, "w") as f:
         f.write("thief-token\n")
     hold.set()
@@ -320,7 +317,7 @@ def test_missteal_of_live_lock_restores_and_fails_loudly(
     entering the critical section alongside the live holder."""
     root = str(tmp_path / "cas3")
     _pointer_init(root)
-    lock = os.path.join(root, mnt._COMMIT_LOCK)
+    lock = os.path.join(root, tf._COMMIT_LOCK)
     with open(lock, "w") as f:
         f.write("live-holder\n")  # fresh mtime: genuinely live
 
@@ -329,12 +326,12 @@ def test_missteal_of_live_lock_restores_and_fails_loudly(
     def lying_getmtime(path):
         # the lock path itself reports ancient (the stale TOCTOU
         # decision); the renamed corpse keeps its REAL fresh mtime
-        if os.path.basename(path) == mnt._COMMIT_LOCK:
+        if os.path.basename(path) == tf._COMMIT_LOCK:
             return 0.0
         return real_getmtime(path)
 
     monkeypatch.setattr(os.path, "getmtime", lying_getmtime)
-    monkeypatch.setattr(mnt, "_LOCK_WAIT_SEC", 0.3)
+    monkeypatch.setattr(tf, "_LOCK_WAIT_SEC", 0.3)
 
     with pytest.raises(IOError, match="proving live|could not acquire"):
         manifest_commit_cas(root, "v2", "v1")
@@ -342,7 +339,7 @@ def test_missteal_of_live_lock_restores_and_fails_loudly(
     monkeypatch.undo()
     with open(lock) as f:
         assert f.read() == "live-holder\n"  # restored, not stolen
-    assert mnt._pointer_current(root) == "v1"  # never flipped
+    assert tf.fl_current_version(root) == "v1"  # never flipped
 
 
 # ---------------------------------------------------------------------------
@@ -431,32 +428,6 @@ def test_merge_counts_ride_the_write_no_count_job(
     assert got.count() == n_band
 
 
-def test_manifest_vacuum_retention_parity(spark, tmp_path):
-    """The directory-format vacuum honors the same retention rule as
-    fl_vacuum: fresh versions survive a default vacuum, force drops
-    them."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_init,
-        manifest_vacuum,
-        merge_upsert_manifest,
-    )
-
-    root = str(tmp_path / "dirfmt")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    manifest_init(spark, root, df)
-    merge_upsert_manifest(
-        spark, root,
-        spark.createDataFrame([(2, "B")], "k long, v string"), "k",
-    )
-    merge_upsert_manifest(
-        spark, root,
-        spark.createDataFrame([(3, "c")], "k long, v string"), "k",
-    )
-    assert manifest_vacuum(root, keep=1) == []          # all too young
-    dropped = manifest_vacuum(root, keep=1, force=True)
-    assert len(dropped) == 2
-
-
 # ---------------------------------------------------------------------------
 # cluster-spec evolution (ALTER TABLE CLUSTER BY)
 # ---------------------------------------------------------------------------
@@ -523,22 +494,24 @@ def test_set_zorder_rejects_unknown_column(spark, sf_dir, tmp_path):
 
 
 def test_persist_wanted_thresholds(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_FL_PERSIST", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_FL_PERSIST_MIN_ROWS", raising=False)
-    assert not mnt._persist_wanted(est_rows=100)
-    assert mnt._persist_wanted(est_rows=mnt._PERSIST_MIN_ROWS_DEFAULT)
-    assert not mnt._persist_wanted(est_bytes=1024)
-    assert mnt._persist_wanted(est_bytes=mnt._PERSIST_MIN_BYTES_DEFAULT)
+    assert not tf._persist_wanted(est_rows=100)
+    assert tf._persist_wanted(est_rows=tf._PERSIST_MIN_ROWS)
+    assert not tf._persist_wanted(est_bytes=1024)
+    assert tf._persist_wanted(est_bytes=tf._PERSIST_MIN_BYTES)
     # unknown size -> persist (the conservative choice at scale)
-    assert mnt._persist_wanted()
-    monkeypatch.setenv("SPARK_GRAFT_FL_PERSIST", "0")
-    assert not mnt._persist_wanted(est_rows=10**12)
-    monkeypatch.setenv("SPARK_GRAFT_FL_PERSIST", "1")
-    assert mnt._persist_wanted(est_rows=1)
-    monkeypatch.setenv("SPARK_GRAFT_FL_PERSIST", "")
-    monkeypatch.setenv("SPARK_GRAFT_FL_PERSIST_MIN_ROWS", "10")
-    assert mnt._persist_wanted(est_rows=10)
-    assert not mnt._persist_wanted(est_rows=9)
+    assert tf._persist_wanted()
+    # the thresholds are read at call time: raising them past any
+    # size means never persist, zero means always persist
+    monkeypatch.setattr(tf, "_PERSIST_MIN_ROWS", 10**13)
+    assert not tf._persist_wanted(est_rows=10**12)
+    monkeypatch.setattr(tf, "_PERSIST_MIN_ROWS", 0)
+    assert tf._persist_wanted(est_rows=1)
+    monkeypatch.setattr(tf, "_PERSIST_MIN_ROWS", 10)
+    assert tf._persist_wanted(est_rows=10)
+    assert not tf._persist_wanted(est_rows=9)
+    monkeypatch.setattr(tf, "_PERSIST_MIN_BYTES", 10)
+    assert tf._persist_wanted(est_bytes=10)
+    assert not tf._persist_wanted(est_bytes=9)
 
 
 def test_merge_identical_with_and_without_persist(
@@ -551,8 +524,11 @@ def test_merge_identical_with_and_without_persist(
 
     o = _orders(spark, sf_dir)
     states = {}
-    for mode in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_FL_PERSIST", mode)
+    # "0": thresholds past any size (never persist); "1": zero
+    # thresholds (always persist) — init and merge alike
+    for mode, threshold in (("0", 10**18), ("1", 0)):
+        monkeypatch.setattr(tf, "_PERSIST_MIN_ROWS", threshold)
+        monkeypatch.setattr(tf, "_PERSIST_MIN_BYTES", threshold)
         root = str(tmp_path / f"flpersist_{mode}")
         fl_init(
             spark, root, o, key="o_orderkey",
@@ -565,35 +541,6 @@ def test_merge_identical_with_and_without_persist(
         states[mode] = (
             counts[:2],
             fl_read(spark, root)
-            .orderBy("o_orderkey")
-            .toPandas(),
-        )
-    assert states["0"][0] == states["1"][0]
-    pd.testing.assert_frame_equal(states["0"][1], states["1"][1])
-
-
-def test_dir_merge_identical_with_and_without_persist(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    import pandas as pd
-
-    o = _orders(spark, sf_dir)
-    states = {}
-    for mode in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_FL_PERSIST", mode)
-        root = str(tmp_path / f"dirpersist_{mode}")
-        mnt.manifest_init(
-            spark, root, o.where(F.col("o_orderkey") % 3 != 0),
-            stats_cols=("o_orderkey",), zorder_by=("o_orderkey",),
-            layout_files=4,
-        )
-        upd = o.where(F.col("o_orderkey") % 6 == 0)
-        counts = mnt.merge_upsert_manifest(
-            spark, root, upd, key="o_orderkey"
-        )
-        states[mode] = (
-            counts,
-            mnt.manifest_read(spark, root)
             .orderBy("o_orderkey")
             .toPandas(),
         )

@@ -147,14 +147,14 @@ def test_hll_register_window_merge_is_exact_monoid(spark):
 
 
 def test_manifest_time_travel_immutability(spark, tmp_path):
-    """A committed version read via manifest_read_version is
+    """A committed version read via fl_read(version=...) is
     bit-identical before and after a later merge commit — the
     snapshot-isolation contract time travel rests on."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_init,
-        manifest_read_version,
-        manifest_versions,
-        merge_upsert_manifest,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_current_version,
+        fl_init,
+        fl_merge_upsert,
+        fl_read,
     )
 
     root = str(tmp_path / "tt")
@@ -162,33 +162,33 @@ def test_manifest_time_travel_immutability(spark, tmp_path):
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
         "k int, s string, v double",
     )
-    v1 = manifest_init(spark, root, v1_df)
-    before = sorted(map(tuple, manifest_read_version(spark, root, v1).collect()))
+    v1 = fl_init(spark, root, v1_df, key="k")
+    before = sorted(map(tuple, fl_read(spark, root, v1).collect()))
     updates = spark.createDataFrame(
         [(2, "B", 99.0), (4, "d", 40.0)], "k int, s string, v double"
     )
-    n_rep, n_ins = merge_upsert_manifest(spark, root, updates, key="k")
+    n_rep, n_ins, _, _ = fl_merge_upsert(spark, root, updates, key="k")
     assert (n_rep, n_ins) == (1, 1)
-    after = sorted(map(tuple, manifest_read_version(spark, root, v1).collect()))
+    after = sorted(map(tuple, fl_read(spark, root, v1).collect()))
     assert before == after == [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)]
-    v2 = manifest_versions(root)[-1]
+    v2 = fl_current_version(root)
     assert v2 != v1
-    cur = sorted(map(tuple, manifest_read_version(spark, root, v2).collect()))
+    cur = sorted(map(tuple, fl_read(spark, root, v2).collect()))
     assert cur == [(1, "a", 10.0), (2, "B", 99.0), (3, "c", 30.0), (4, "d", 40.0)]
 
 
-def test_manifest_read_version_rejects_unknown(spark, tmp_path):
+def test_fl_read_rejects_unknown_version(spark, tmp_path):
     import pytest as _pytest
 
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        manifest_init,
-        manifest_read_version,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_init,
+        fl_read,
     )
 
     root = str(tmp_path / "tt2")
-    manifest_init(spark, root, spark.range(3))
+    fl_init(spark, root, spark.range(3), key="id")
     with _pytest.raises(IOError, match="no version"):
-        manifest_read_version(spark, root, "v99999999")
+        fl_read(spark, root, "v99999999")
 
 
 def test_feature_hashing_census_laws(spark, sf_dir):

@@ -234,6 +234,60 @@ def test_props_carry_and_extra_props_ride_commit(spark, sf_dir, tmp_path):
     assert p["last_epoch"] == 7 and p["zorder_by"] == ["o_orderkey"]
 
 
+def test_float_stats_column_uses_scan_stats(spark, sf_dir, tmp_path):
+    """o_totalprice is DOUBLE, whose parquet footer min/max are not
+    trusted (NaN ordering), so its commit stats come from the Spark
+    scan fallback: the manifest's per-file min/max equal Spark's
+    min/max over each file, and a pruned read on the column matches
+    the full scan."""
+    from citybikedatawarehouse_spark.operators.maintenance import (
+        _norm_file_uri,
+    )
+    from citybikedatawarehouse_spark.operators.table_format import (
+        footer_zone_stats,
+    )
+
+    root = str(tmp_path / "fldouble")
+    o = _orders(spark, sf_dir)
+    fl_init(
+        spark, root, o, key="o_orderkey",
+        stats_cols=("o_totalprice",), zorder_by=("o_totalprice",),
+        layout_files=8,
+    )
+    m = fl_manifest(root)
+    commit_dir = os.path.dirname(m["path"].iloc[0])
+    assert footer_zone_stats(commit_dir, ("o_totalprice",)) is None
+    per_file = {
+        _norm_file_uri(r["f"]): (r["mn"], r["mx"])
+        for r in fl_read(spark, root)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(
+            F.min("o_totalprice").alias("mn"),
+            F.max("o_totalprice").alias("mx"),
+        )
+        .collect()
+    }
+    assert per_file == {
+        p: (mn, mx)
+        for p, mn, mx in zip(
+            m["path"], m["min_o_totalprice"], m["max_o_totalprice"]
+        )
+    }
+
+    lo = o.agg(F.expr("percentile(o_totalprice, 0.4)")).first()[0]
+    hi = o.agg(F.expr("percentile(o_totalprice, 0.6)")).first()[0]
+    df, n_read, n_total = fl_read_pruned(
+        spark, root, {"o_totalprice": (lo, hi)}
+    )
+    assert 0 < n_read < n_total
+    band = F.col("o_totalprice").between(lo, hi)
+    agg = [F.count(F.lit(1)), F.sum("o_orderkey")]
+    assert (
+        df.where(band).agg(*agg).collect()
+        == o.where(band).agg(*agg).collect()
+    )
+
+
 # ---------------------------------------------------------------------------
 # streaming sink -> file-list manifest commits
 # ---------------------------------------------------------------------------
@@ -352,6 +406,20 @@ def test_fl_stream_sink_e2e(spark, tmp_path):
     }
     assert fl_read(spark, root).count() == 104
     assert fl_table_props(root)["last_epoch"] == 2
+    # the streaming path maintains the format, not just the data: the
+    # current manifest names exactly the files a read opens
+    from citybikedatawarehouse_spark.operators.maintenance import (
+        _norm_file_uri,
+    )
+
+    read_files = {
+        _norm_file_uri(r["f"])
+        for r in fl_read(spark, root)
+        .select(F.input_file_name().alias("f"))
+        .distinct()
+        .collect()
+    }
+    assert set(fl_manifest(root)["path"]) == read_files
 
 
 # ---------------------------------------------------------------------------
