@@ -557,6 +557,39 @@ def _empty_relation(spark: SparkSession, props: dict) -> DataFrame:
     return spark.createDataFrame([], ddl)
 
 
+def _schema_additions(
+    spark: SparkSession, root: str, props: dict, df: DataFrame
+) -> list[dict]:
+    """The fields ``df`` carries that the table schema lacks, matched
+    BY NAME and given fresh ids after the highest ever assigned (the
+    ``fl_add_column`` rule). A table column that ``df`` lacks or
+    types differently cannot be followed by name — a rename, drop or
+    type change upstream — and raises instead of silently dropping
+    data. Driver-side analysis only, zero jobs."""
+    incoming = {f.name: f.dataType for f in df.schema.fields}
+    for f in _empty_relation(spark, props).schema.fields:
+        if f.name not in incoming:
+            raise ValueError(
+                f"filelist table {root}: column {f.name!r} is missing "
+                f"from the incoming rows (renamed or dropped upstream); "
+                f"schema merge follows columns by name only"
+            )
+        if incoming[f.name] != f.dataType:
+            raise ValueError(
+                f"filelist table {root}: column {f.name!r} changed type "
+                f"{f.dataType.simpleString()} -> "
+                f"{incoming[f.name].simpleString()}; schema merge "
+                f"cannot follow a type change"
+            )
+    names = {f["name"] for f in props["schema"]}
+    next_id = max(f["id"] for f in props["schema"]) + 1
+    new = [f for f in df.schema.fields if f.name not in names]
+    return [
+        {"id": next_id + i, "name": f.name, "type": f.dataType.simpleString()}
+        for i, f in enumerate(new)
+    ]
+
+
 def _read_files(
     spark: SparkSession, m_subset: pd.DataFrame, props: dict
 ) -> DataFrame:
@@ -650,14 +683,16 @@ def fl_init(
     stats_cols: tuple[str, ...] = (),
     zorder_by: tuple[str, ...] = (),
     layout_files: int = 16,
+    extra_props: dict | None = None,
 ) -> str:
     """Create a file-list manifest table with ``df`` as version 1.
     The MERGE key's per-file min/max is always tracked (merge
     targeting needs it); ``stats_cols`` adds skipping columns;
     ``zorder_by`` sets the clustering every commit re-applies to the
     files it writes. Cluster by the merge key (or lead with it) to
-    make merges file-sparse — the standard Delta guidance. Fails with
-    ``CommitConflictError`` if the table is already initialized."""
+    make merges file-sparse — the standard Delta guidance.
+    ``extra_props`` rides the commit, as on ``fl_merge_upsert``. Fails
+    with ``CommitConflictError`` if the table is already initialized."""
     os.makedirs(os.path.join(root, "data"), exist_ok=True)
     version = _claim_version(root)
     props = {
@@ -668,6 +703,7 @@ def fl_init(
         "schema": _schema_fields(df),
         "delete_dirs": [],
         "parent": None,
+        **(extra_props or {}),
     }
     # with a Z-order spec the layout needs a bounds pass and the
     # range partitioner a sampling pass — three computations of the
@@ -923,6 +959,8 @@ def fl_merge_upsert(
     _crash_before_commit: bool = False,
     _pause_before_commit=None,
     extra_props: dict | None = None,
+    deletes: DataFrame | None = None,
+    merge_schema: bool = False,
 ) -> tuple[int, int, int, int]:
     """MERGE (upsert) that rewrites ONLY the data files whose key
     zone intersects the update keys; every other file is carried into
@@ -954,6 +992,23 @@ def fl_merge_upsert(
     re-insert, and a stale set entry would silently hide it from
     every reader.
 
+    ``deletes`` (a frame with a ``key`` column) fuses a merge-on-read
+    DELETE into the SAME commit: its distinct keys are staged and
+    folded exactly as ``fl_delete`` does and join the commit's delete
+    set, so the upsert and the delete publish with one pointer flip
+    and no reader ever sees one without the other. The result equals
+    this merge followed by ``fl_delete(deletes)``: a key in both ends
+    up deleted. Empty ``updates`` with non-empty ``deletes`` is a
+    delete-only commit; both empty is a no-op.
+
+    ``merge_schema=True`` follows the incoming schema BY NAME, in the
+    same commit: a column of ``updates`` the table lacks is appended
+    with a fresh field id (older files read it as NULL, exactly as
+    after ``fl_add_column``), and a table column that ``updates``
+    lacks or carries with another type — a rename or a type change
+    upstream — raises ``ValueError`` naming it instead of dropping
+    it. A schema change alone still commits.
+
     Commit = claim version -> stage new files + manifest + props ->
     CAS pointer flip (conflict -> ``CommitConflictError``, staged
     version stays an invisible orphan). Crash anywhere before the
@@ -968,7 +1023,9 @@ def fl_merge_upsert(
     targeting is then ONE broadcast range join of distinct update
     keys x O(files) zones reading from the cache; one scan of the
     touched subset for the merge itself; shuffle volume
-    O(touched + updates), never O(table).
+    O(touched + updates), never O(table). ``deletes`` adds one write
+    of its distinct keys; without it the job sequence is the plain
+    merge's.
 
     Counts deliberately avoid ``observe()``/``Observation.get``: its
     py4j row fetch hard-crashes (toPyRow assertion) when AQE
@@ -983,9 +1040,15 @@ def fl_merge_upsert(
             f"filelist table {root}: merge key {key!r} != table key "
             f"{props['key']!r}"
         )
+    added = (
+        _schema_additions(spark, root, props, updates) if merge_schema else []
+    )
+    if added:
+        props = {**props, "schema": props["schema"] + added}
     zcols = list(props.get("zorder_by") or [])
     updates = updates.persist()
     merged_cached = None
+    staged = None
     try:
         constraints = props.get("constraints") or {}
         row_metrics = [
@@ -1035,10 +1098,6 @@ def fl_merge_upsert(
             1 if counts["__has_null"] else 0
         )
         n_updates = counts["n"]
-        if n_updates == 0:
-            # empty micro-batches are routine in streaming — a no-op,
-            # not an empty commit
-            return 0, 0, 0, len(m)
         for name, sql in constraints.items():
             n_viol = counts[f"__viol_{name}"]
             if n_viol:
@@ -1053,6 +1112,40 @@ def fl_merge_upsert(
                 f"{n_updates - n_update_keys} duplicate '{key}' rows; "
                 f"MERGE requires unique source keys"
             )
+        if deletes is not None:
+            staged, _ = _stage_delete_keys(root, deletes, key)
+
+        def publish(version: str, manifest: pd.DataFrame, dels: list[str]):
+            # the ONE commit tail: fused delete batch, props, CAS flip
+            nonlocal staged
+            if staged is not None:
+                dels = _publish_delete_keys(
+                    spark, key, staged, _delete_dir(root, f"{version}_del"),
+                    dels,
+                )
+                staged = None
+            new_props = {**props, "delete_dirs": dels, "parent": parent}
+            if extra_props:
+                new_props.update(extra_props)
+            _write_manifest(root, version, manifest, new_props)
+            if _pause_before_commit is not None:
+                _pause_before_commit()
+            if _crash_before_commit:
+                raise RuntimeError(
+                    "fl_merge_upsert: injected crash between manifest "
+                    "write and pointer flip (test hook)"
+                )
+            manifest_commit_cas(root, version, parent)
+
+        if n_updates == 0:
+            # empty micro-batches are routine in streaming — a no-op,
+            # not an empty commit; a fused delete batch or a schema
+            # change alone commits with every file carried
+            if staged is not None or added:
+                publish(
+                    _claim_version(root), m, props.get("delete_dirs") or []
+                )
+            return 0, 0, 0, len(m)
         keys_frame = updates.select(key).distinct()
         touched, hits = _targeting_hits(spark, m, key, keys_frame)
         if hits is not None:
@@ -1141,20 +1234,11 @@ def fl_merge_upsert(
                 delete_dirs = [ddir]
             else:
                 shutil.rmtree(ddir, ignore_errors=True)
-        new_props = {**props, "delete_dirs": delete_dirs, "parent": parent}
-        if extra_props:
-            new_props.update(extra_props)
-        _write_manifest(root, version, manifest, new_props)
-        if _pause_before_commit is not None:
-            _pause_before_commit()
-        if _crash_before_commit:
-            raise RuntimeError(
-                "fl_merge_upsert: injected crash between manifest write "
-                "and pointer flip (test hook)"
-            )
-        manifest_commit_cas(root, version, parent)
+        publish(version, manifest, delete_dirs)
         return n_replaced, n_inserted, len(touched), len(m)
     finally:
+        if staged is not None:
+            shutil.rmtree(staged, ignore_errors=True)
         if merged_cached is not None:
             merged_cached.unpersist()
         updates.unpersist()
@@ -1281,6 +1365,56 @@ def _delete_keys_df(
     return out
 
 
+def _stage_delete_keys(
+    root: str, keys: DataFrame, key: str
+) -> tuple[str | None, int]:
+    """Write a delete batch's distinct keys into a temp dir BEFORE any
+    version is claimed; returns (staged dir, n keys), or (None, 0) for
+    an empty batch. Claiming only once the batch proves non-empty
+    matters: empty delete batches are routine in streaming, and a
+    claim up front would leak one orphan .claim marker per empty batch
+    forever (claimed numbers are never reissued). An empty batch must
+    also be a no-op, not an empty commit — a committed zero-row dir
+    would make the delete set non-empty forever, so every later read
+    pays the anti-join and merges lose the pure-append fast path."""
+    tdir = _delete_dir(root, f"tmp_{uuid.uuid4().hex}")
+    keys.select(key).distinct().write.mode("errorifexists").parquet(tdir)
+    n = _parquet_rows(tdir)  # footer read, no second Spark job
+    if n == 0:
+        shutil.rmtree(tdir, ignore_errors=True)
+        return None, 0
+    return tdir, n
+
+
+def _publish_delete_keys(
+    spark: SparkSession,
+    key: str,
+    staged: str,
+    ddir: str,
+    dirs: list[str],
+) -> list[str]:
+    """Move a staged delete batch to ``ddir`` (named after the claimed
+    version) and return the commit's delete-dir list: ``dirs`` plus
+    it, folded into one ``<ddir>_fold`` dir (executor-side distinct +
+    rewrite) once past ``_DELETE_FOLD_AFTER`` dirs."""
+    os.rename(staged, ddir)  # same filesystem: atomic move into place
+    dirs = list(dirs) + [ddir]
+    if len(dirs) > _DELETE_FOLD_AFTER:
+        fdir = f"{ddir}_fold"
+        # per-dir positional binding (not spark.read.parquet(*dirs)):
+        # dirs written before a key rename carry the old column name,
+        # and a multi-dir read resolves by name -> NULLs. Route
+        # through the same reader every consumer uses.
+        (
+            _delete_keys_df(spark, {"delete_dirs": dirs, "key": key})
+            .distinct()
+            .write.mode("errorifexists")
+            .parquet(fdir)
+        )
+        dirs = [fdir]
+    return dirs
+
+
 def fl_delete_keys(
     spark: SparkSession, root: str, version: str | None = None
 ) -> pd.DataFrame:
@@ -1357,42 +1491,17 @@ def fl_delete(
     work stays bounded. Commit = claim version -> stage delete files
     + manifest copy + props -> CAS pointer flip; same crash/conflict
     matrix as every other commit."""
-    import uuid as _uuid
-
     parent = fl_current_version(root)
     props = fl_table_props(root, parent)
     key = props["key"]
-    # stage into a temp dir FIRST and claim the version only once the
-    # batch proves non-empty: empty delete batches are routine in
-    # streaming, and claiming up front would leak one orphan .claim
-    # marker per empty batch forever (claimed numbers are never
-    # reissued). An empty batch must also be a no-op, not an empty
-    # commit — a committed zero-row dir would make the delete set
-    # non-empty forever, so every later read pays the anti-join and
-    # merges lose the pure-append fast path.
-    tdir = _delete_dir(root, f"tmp_{_uuid.uuid4().hex}")
-    keys.select(key).distinct().write.mode("errorifexists").parquet(tdir)
-    n_new = _parquet_rows(tdir)  # footer read, no second Spark job
-    if n_new == 0:
-        shutil.rmtree(tdir, ignore_errors=True)
+    tdir, n_new = _stage_delete_keys(root, keys, key)
+    if tdir is None:
         return 0, parent
     version = _claim_version(root)
-    ddir = _delete_dir(root, version)
-    os.rename(tdir, ddir)  # same filesystem: atomic move into place
-    dirs = list(props.get("delete_dirs") or []) + [ddir]
-    if len(dirs) > _DELETE_FOLD_AFTER:
-        fdir = _delete_dir(root, f"{version}_fold")
-        # per-dir positional binding (not spark.read.parquet(*dirs)):
-        # dirs written before a key rename carry the old column name,
-        # and a multi-dir read resolves by name -> NULLs. Route
-        # through the same reader every consumer uses.
-        (
-            _delete_keys_df(spark, {"delete_dirs": dirs, "key": key})
-            .distinct()
-            .write.mode("errorifexists")
-            .parquet(fdir)
-        )
-        dirs = [fdir]
+    dirs = _publish_delete_keys(
+        spark, key, tdir, _delete_dir(root, version),
+        props.get("delete_dirs") or [],
+    )
     new_props = {**props, "delete_dirs": dirs, "parent": parent}
     _write_manifest(root, version, fl_manifest(root, parent), new_props)
     if _crash_before_commit:

@@ -2931,11 +2931,14 @@ def q293_fl_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-to-table INCREMENTAL REPLICATION over the change feed
     (streaming/changes_feed.replicate_changes) — the canonical CDC
     consumer: the q292 history (init, band MERGE + tail inserts, MOR
-    delete of %10==7, re-insert of %50==7) is replayed onto a SECOND
-    file-list table commit by commit — initial snapshot ``fl_init``s
-    the replica; each later source commit applies as one fl_delete
-    (D keys) + one fl_merge_upsert (I/U payloads), so the replica is
-    itself a transactional table with its own lineage.
+    delete of %10==7, re-insert of %50==7) is replicated onto a SECOND
+    file-list table two source commits per batch — the first batch
+    ``fl_init``s the replica from the source snapshot at its last
+    version; the next applies the NET diff of the remaining two
+    commits as ONE fused replica commit (D keys become its delete
+    set, I/U rows its merge, one pointer flip), tagged with the
+    source version it reproduces. The replica is itself a
+    transactional table whose every version is an exact source state.
 
     The oracle derives the replica's final state purely relationally
     and the engine pins ``replica_equals_source``: the signed-count
@@ -2945,12 +2948,14 @@ def q293_fl_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement.
 
     Scale shape: replication cost tracks the CHANGES (O(changed
-    files) feed reads, O(changed keys) replica commits), never the
-    table — the 100 TB sync pattern; driver work is O(versions)
-    metadata plus one tiny offset file.
+    files) diff reads, O(changed keys) written per replica commit,
+    one replica commit per batch), never the table — the 100 TB sync
+    pattern; driver work is O(versions) metadata plus one tiny offset
+    file.
 
     Cites: streaming/changes_feed.replicate_changes (crash-replay
-    convergence proven in tests/test_changes_feed.py); the reference
+    convergence and replica-lineage == source-states proven in
+    tests/test_changes_feed.py); the reference
     copies tables only by full re-load (create_db_from_csv.py) — no
     incremental sync exists there.
     """

@@ -4,6 +4,7 @@ sink (``streaming/incremental.start_fl_upsert_stream``) writes:
 
     write stream --(exactly-once MERGE commits)--> fl table
     fl table --(this module: per-commit I/U/D feed)--> read stream
+    fl table --(replicate_changes: net diff per batch)--> replica
 
 Shape: Delta's ``readChangeFeed`` with ``startingVersion`` in
 micro-batch form. The source of truth for progress is ONE tiny
@@ -14,24 +15,32 @@ pairs), each row tagged with ``_commit_version``, rate-limited to
 ``versions_per_batch`` commits per batch so a consumer that fell far
 behind catches up in bounded steps instead of one giant diff.
 
-Why per-commit pairs instead of one (offset, head) diff: CDC
-consumers want commit attribution (which commit deleted this key),
-and net-diffing across commits would silently collapse intermediate
-states a downstream audit may need. The cost model is unchanged —
-each pair diff is O(that commit's changed files), the whole point of
-``fl_changes``.
+Why per-commit pairs for the feed: CDC consumers want commit
+attribution (which commit deleted this key), and net-diffing across
+commits would silently collapse intermediate states a downstream
+audit may need. Each pair diff is O(that commit's changed files),
+the whole point of ``fl_changes``.
+
+Replication needs no attribution — only the end state — so
+``replicate_changes`` takes the NET diff of each batch instead:
+``fl_changes(src, replicated_from, target)`` applied as one fused
+replica commit tagged with the source version it reproduces. Every
+replica version is then an exact source state, and catching up costs
+O(batches) replica commits rather than two per source commit.
 
 Delivery contract: the offset is persisted AFTER the consumer's step
 returns (at-least-once); a step that is idempotent per
 ``_commit_version`` — e.g. an epoch-keyed overwrite sink, or a MERGE
 keyed on (commit, key) — makes the pipeline exactly-once, the same
 contract Spark's own foreachBatch gives. Crash between step and
-offset write replays exactly the unacknowledged batch.
+offset write replays exactly the unacknowledged batch. Replication
+is idempotent by construction: each diff starts from the replica's
+own ``replicated_from`` tag, never from the offset.
 
 Scale shape: everything driver-side here is O(versions) metadata (the
 lineage walk and the offset file); all row work stays in
 ``fl_changes``'s executor plan (touched-files-only scans, one
-key-partitioned full-outer join per commit). The live-query wrapper
+key-partitioned full-outer join per diff). The live-query wrapper
 (``start_fl_changes_feed``) drives the cursor from a rate-source
 ticker inside a real StreamingQuery, consuming at most one cursor
 batch per tick — start/stop/awaitTermination lifecycle for free, no
@@ -60,6 +69,9 @@ _OFFSET_FILE = "offset.json"
 # startingVersion=0 behavior)
 BEFORE_FIRST = "<before-first>"
 
+# replica commit prop: the source version whose state the replica holds
+REPLICATED_FROM = "replicated_from"
+
 
 def _read_offset(checkpoint_dir: str | None) -> str | None:
     if not checkpoint_dir:
@@ -82,6 +94,23 @@ def _write_offset(checkpoint_dir: str | None, version: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, p)  # atomic: a crash leaves old or new, never torn
+
+
+def _after(
+    root: str, lineage: list[str], version: str, what: str
+) -> list[str]:
+    """The committed versions newer than ``version``, oldest first —
+    failing loudly when ``version`` has left the lineage."""
+    if version == BEFORE_FIRST:
+        return lineage
+    if version not in lineage:
+        raise ValueError(
+            f"changes feed on {root}: {what} {version!r} "
+            f"is not in the committed lineage {lineage} — it was "
+            f"vacuumed away (consumer fell behind the retention "
+            f"horizon) or belongs to an orphaned writer"
+        )
+    return lineage[lineage.index(version) + 1 :]
 
 
 class FlChangesCursor:
@@ -122,17 +151,7 @@ class FlChangesCursor:
             fl_lineage,
         )
 
-        lineage = fl_lineage(self.root)
-        if self.offset == BEFORE_FIRST:
-            return lineage
-        if self.offset not in lineage:
-            raise ValueError(
-                f"changes feed on {self.root}: offset {self.offset!r} "
-                f"is not in the committed lineage {lineage} — it was "
-                f"vacuumed away (consumer fell behind the retention "
-                f"horizon) or belongs to an orphaned writer"
-            )
-        return lineage[lineage.index(self.offset) + 1 :]
+        return _after(self.root, fl_lineage(self.root), self.offset, "offset")
 
     def next_batch(self) -> tuple[DataFrame, str] | None:
         """The next micro-batch as (changes_df, new_offset), or None
@@ -255,86 +274,100 @@ def replicate_changes(
     versions_per_batch: int = 4,
     max_batches: int | None = None,
 ) -> int:
-    """Table-to-table INCREMENTAL REPLICATION over the change feed —
-    the canonical CDC consumer (Delta deep-clone-incremental /
-    Fivetran-style sync), composed entirely from this module's
-    cursor and the table format's own write ops, so every applied
-    batch is itself an atomic commit on the replica:
+    """Table-to-table INCREMENTAL REPLICATION by net diff — the
+    canonical CDC consumer (Delta deep-clone-incremental /
+    Fivetran-style sync). Each batch of up to ``versions_per_batch``
+    pending source commits, ending at source version ``target``,
+    lands on the replica as ONE atomic commit tagged
+    ``replicated_from = target``:
 
-    - the initial-snapshot batch (all op=I) ``fl_init``s the replica
-      with the source's key/stats/zorder/layout props;
-    - each later batch applies PER SOURCE COMMIT, in commit order:
-      D keys -> ``fl_delete`` (merge-on-read, no replica rewrite),
-      I/U payloads -> ``fl_merge_upsert`` (O(touched-files));
-      within one commit the feed nets each key to at most one op, so
-      delete-before-upsert is always safe.
+    - the first batch ``fl_init``s the replica from the source's MOR
+      snapshot AT ``target`` with that version's key/stats/zorder/
+      layout props — no replay of the initial snapshot plus each diff;
+    - every later batch applies ``fl_changes(src, tag, target)``, the
+      NET diff from the version the replica's tag names, as one fused
+      ``fl_merge_upsert``: D keys form the commit's delete set, I/U
+      rows its merge, source columns the replica lacks are appended
+      (``merge_schema``), one CAS pointer flip publishes all of it.
 
-    Exactly-once state: the offset acks after the whole batch
-    applies (at-least-once delivery), and a replayed batch
-    re-applies to the SAME logical state (delete of already-absent
-    keys and upsert of identical rows are state-idempotent), so the
-    replica converges regardless of crashes between apply and ack.
-    Cost tracks the CHANGES, never the table: a 100 TB source whose
-    day touched 0.1 % of keys replicates that day as O(changed
-    files) reads and O(changed keys) replica commits. Returns the
-    number of source commits applied."""
+    So every replica version is the exact state of the source version
+    its tag names — no reader sees a half-applied batch — and catching
+    up costs O(batches) replica commits, not O(commits). An empty net
+    diff (e.g. a compaction-only batch) commits nothing: the tag lags
+    but the two MOR states agree.
+
+    Delivery contract: the checkpoint offset acks AFTER the commit
+    (at-least-once), and each diff starts from the replica's own tag,
+    never from the offset. A crash between commit and ack therefore
+    re-runs safely whatever window the rerun takes: a batch ending at
+    or before the tag is acked with no commit, a longer one diffs
+    from the tag — a diff from the stale offset would miss keys
+    inserted after it and deleted by the new target. A tag that left
+    the source lineage (vacuumed, orphaned writer) fails loudly, like
+    the cursor's offset. ``max_batches`` bounds the batches, hence
+    the replica commits, of one call. Returns the number of source
+    commits the offset advanced over."""
     from citybikedatawarehouse_spark.operators.table_format import (
-        fl_delete,
+        fl_changes,
         fl_init,
+        fl_lineage,
         fl_merge_upsert,
+        fl_read_mor,
         fl_table_props,
     )
 
-    applied = 0
-
-    def step(df: DataFrame, _offset: str) -> None:
-        nonlocal applied
-        src_props = fl_table_props(src_root)
-        key = src_props["key"]
-        cols = [f["name"] for f in src_props["schema"]]
-        # the diff behind this batch is a full-outer join over the
-        # commit's changed files — persist it so the D-filter and the
-        # I/U-filter (and the merge's constraint aggregate) compute
-        # it ONCE, not once per consuming action
-        df = df.persist()
-        try:
-            if not os.path.exists(os.path.join(dst_root, "_MANIFEST")):
-                fl_init(
-                    spark,
-                    dst_root,
-                    df.where(F.col("op") == "I").select(*cols),
-                    key=key,
-                    stats_cols=tuple(src_props.get("stats_cols", [])),
-                    zorder_by=tuple(src_props.get("zorder_by", [])),
-                    layout_files=src_props.get("layout_files", 16),
+    cur = FlChangesCursor(
+        spark, src_root, None, versions_per_batch, checkpoint_dir
+    )
+    applied = n = 0
+    while max_batches is None or n < max_batches:
+        lineage = fl_lineage(src_root)
+        pending = _after(src_root, lineage, cur.offset, "offset")
+        if not pending:
+            break
+        take = pending[:versions_per_batch]
+        target = take[-1]
+        props = fl_table_props(src_root, target)
+        key = props["key"]
+        tag = {REPLICATED_FROM: target}
+        if not os.path.exists(os.path.join(dst_root, "_MANIFEST")):
+            fl_init(
+                spark,
+                dst_root,
+                fl_read_mor(spark, src_root, target),
+                key=key,
+                stats_cols=tuple(props.get("stats_cols", [])),
+                zorder_by=tuple(props.get("zorder_by", [])),
+                layout_files=props.get("layout_files", 16),
+                extra_props=tag,
+            )
+        else:
+            base = fl_table_props(dst_root).get(REPLICATED_FROM)
+            if base is None:
+                raise ValueError(
+                    f"replica {dst_root} has no {REPLICATED_FROM!r} tag "
+                    f"— it was not written by replicate_changes"
                 )
-                applied += 1
-                return
-            dels = df.where(F.col("op") == "D").select(key)
-            fl_delete(spark, dst_root, dels)  # empty batch = no-op
-            ups = df.where(F.col("op").isin("I", "U")).select(*cols)
-            fl_merge_upsert(spark, dst_root, ups, key=key)
-            applied += 1
-        finally:
-            df.unpersist()
-
-    # one COMMIT per cursor batch regardless of the caller's
-    # versions_per_batch: commits must apply to the replica in order
-    # anyway, and a single-commit batch means the offset IS the
-    # commit version — no job to rediscover which versions a batch
-    # holds. versions_per_batch still bounds how many commits one
-    # CALL may apply (rate limiting composes with max_batches).
-    budget = (
-        None
-        if max_batches is None
-        else max_batches * max(1, versions_per_batch)
-    )
-    run_fl_changes_stream(
-        spark,
-        src_root,
-        step,
-        versions_per_batch=1,
-        checkpoint_dir=checkpoint_dir,
-        max_batches=budget,
-    )
+            # a target at or before the tag was already committed by a
+            # run whose ack was lost: nothing to apply
+            if target in _after(src_root, lineage, base, "replica tag"):
+                cols = [f["name"] for f in props["schema"]]
+                # persisted: the merge's aggregate materializes the
+                # diff once, the delete staging reads it from cache
+                diff = fl_changes(spark, src_root, base, target).persist()
+                try:
+                    fl_merge_upsert(
+                        spark,
+                        dst_root,
+                        diff.where(F.col("op").isin("I", "U")).select(*cols),
+                        key=key,
+                        deletes=diff.where(F.col("op") == "D").select(key),
+                        merge_schema=True,
+                        extra_props=tag,
+                    )
+                finally:
+                    diff.unpersist()
+        cur.ack(target)
+        applied += len(take)
+        n += 1
     return applied

@@ -20,9 +20,11 @@ Measured per shape:
 - ``full_copy_s`` — the naive alternative: re-clone the whole source
   MOR state into a fresh table.
 
-Measured shape (honest): incremental is ~FLAT across N (its cost is
-~25 fixed-latency local Spark jobs across the 3 diffs and the
-replica's own transactional commits — table-size-independent), while
+Measured shape (honest; measured with the per-commit replication
+pump that preceded net-diff batching, not re-measured since):
+incremental is ~FLAT across N (its cost is ~25 fixed-latency local
+Spark jobs across the 3 diffs and the replica's own transactional
+commits — table-size-independent), while
 at these page-cache sizes the streaming full copy is still cheaper
 in absolute wall. The crossover is a cost-model argument the
 flatness makes concrete: the copy is O(table) real I/O once the

@@ -2,13 +2,16 @@
 file-list table's per-commit change feed — stream-equals-batch over a
 multi-commit history, initial-snapshot semantics, checkpointed
 resume with no gaps or duplicates, the live StreamingQuery wrapper,
-and the vacuumed-offset failure mode."""
+the vacuumed-offset failure mode — and net-diff replication: replica
+lineage equals source states, lost-ack reruns, schema evolution and a
+Spark job budget."""
 
 from __future__ import annotations
 
 import os
 import time
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,11 +39,38 @@ def _orders(spark, sf_dir):
     )
 
 
-def _history(spark, sf_dir, tmp_path, name):
+def _count_jobs(spark, group, fn):
+    """Run ``fn`` under a Spark job group and return (its result, the
+    number of jobs the group ran) — read once the listener bus has
+    drained, so no job is missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _history(spark, sf_dir, tmp_path, name, merge_jobs=None):
     """init -> merge (band update + tail inserts) -> MOR delete ->
     merge (re-insert a deleted subset): 4 committed versions with
-    I, U and D all represented, including delete-then-reinsert."""
+    I, U and D all represented, including delete-then-reinsert.
+    ``merge_jobs``, when a list, receives each merge's Spark job
+    count."""
     root = str(tmp_path / name)
+
+    def merge(df):
+        def run():
+            fl_merge_upsert(spark, root, df, key="o_orderkey")
+
+        if merge_jobs is None:
+            run()
+        else:
+            group = f"{name}.merge{len(merge_jobs)}"
+            merge_jobs.append(_count_jobs(spark, group, run)[1])
+
     o = _orders(spark, sf_dir)
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -53,14 +83,14 @@ def _history(spark, sf_dir, tmp_path, name):
         (F.col("o_totalprice") + F.lit(1.0)).alias("o_totalprice"),
         F.lit("R").alias("o_orderstatus"),
     )
-    fl_merge_upsert(spark, root, updates, key="o_orderkey")
+    merge(updates)
     doomed = fl_read_mor(spark, root).where(F.col("o_orderkey") % 10 == 7)
     fl_delete(spark, root, doomed)
     reinserts = o.where(F.col("o_orderkey") % 50 == 7).select(
         "o_orderkey", "o_custkey", "o_totalprice",
         F.lit("N").alias("o_orderstatus"),
     )
-    fl_merge_upsert(spark, root, reinserts, key="o_orderkey")
+    merge(reinserts)
     return root, o
 
 
@@ -389,3 +419,213 @@ def test_live_loop_write_stream_to_read_stream(spark, tmp_path):
         else:
             state[r["k"]] = r["v"]
     assert state == want
+
+
+# ---------------------------------------------------------------------------
+# replication by net diff: one tagged replica commit per batch
+# ---------------------------------------------------------------------------
+
+
+def _sorted_pd(df, key):
+    return df.toPandas().sort_values(key).reset_index(drop=True)
+
+
+def test_replication_rerun_with_wider_window_after_lost_ack(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between a replica commit and its ack, then a rerun that
+    takes a LONGER window: the diff must start from the replica's tag.
+    Started from the stale offset it would miss the key inserted in
+    the unacked batch and deleted after it, leaving it in the
+    replica."""
+    from citybikedatawarehouse_spark.streaming import changes_feed
+    from citybikedatawarehouse_spark.streaming.changes_feed import (
+        replicate_changes,
+    )
+
+    src = str(tmp_path / "wide_src")
+    dst = str(tmp_path / "wide_dst")
+    ckpt = str(tmp_path / "wide_ckpt")
+    base = spark.range(0, 200).select(
+        F.col("id").alias("k"), F.lit(0).alias("v")
+    )
+    fl_init(spark, src, base, key="k", zorder_by=("k",), layout_files=2)
+    assert replicate_changes(spark, src, dst, checkpoint_dir=ckpt) == 1
+
+    ins = spark.createDataFrame([(1000, 1)], "k bigint, v int")
+    fl_merge_upsert(spark, src, ins, key="k")
+
+    def lost_ack(*_a):
+        raise RuntimeError("crash before the ack")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(changes_feed, "_write_offset", lost_ack)
+        with pytest.raises(RuntimeError, match="before the ack"):
+            replicate_changes(
+                spark, src, dst, checkpoint_dir=ckpt, versions_per_batch=1
+            )
+    # the batch committed on the replica, the offset did not move
+    assert fl_read_mor(spark, dst).where("k = 1000").count() == 1
+
+    fl_delete(spark, src, spark.createDataFrame([(1000,)], "k bigint"))
+
+    n_before = len(fl_lineage(dst))
+    n = replicate_changes(
+        spark, src, dst, checkpoint_dir=ckpt, versions_per_batch=10
+    )
+    assert n == 2  # the offset advanced over both source commits
+    assert len(fl_lineage(dst)) == n_before + 1  # one replica commit
+    pd.testing.assert_frame_equal(
+        _sorted_pd(fl_read_mor(spark, dst), "k"),
+        _sorted_pd(fl_read_mor(spark, src), "k"),
+    )
+
+
+def _kv_source(spark, root):
+    df = spark.range(0, 100).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    fl_init(spark, root, df, key="k", zorder_by=("k",), layout_files=2)
+
+
+def _write_note(spark, root):
+    """A merge that writes the evolved ``note`` column on five keys."""
+    rows = spark.range(10, 15).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("v"),
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("note"),
+    )
+    fl_merge_upsert(spark, root, rows, key="k")
+
+
+def test_fresh_replica_of_schema_evolved_source(spark, tmp_path):
+    """A source that gained a column after v1 replicates into a fresh
+    replica one commit per batch: each batch reads the props of ITS
+    target version, so the v1 snapshot is not asked for the head's
+    columns, and the add-column alone lands as a schema-only commit."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_add_column,
+    )
+    from citybikedatawarehouse_spark.streaming.changes_feed import (
+        replicate_changes,
+    )
+
+    src = str(tmp_path / "evo_src")
+    dst = str(tmp_path / "evo_dst")
+    _kv_source(spark, src)
+    fl_add_column(spark, src, "note", "string")
+    _write_note(spark, src)
+    assert replicate_changes(spark, src, dst, versions_per_batch=1) == 3
+    assert len(fl_lineage(dst)) == 3
+    got = _sorted_pd(fl_read_mor(spark, dst), "k")
+    assert list(got.columns) == ["k", "v", "note"]
+    pd.testing.assert_frame_equal(
+        got, _sorted_pd(fl_read_mor(spark, src), "k")
+    )
+
+
+def test_existing_replica_follows_add_column(spark, tmp_path):
+    """An add-column on the source reaches an EXISTING replica in the
+    same replica commit as the rows that write it; untouched rows read
+    the new column as NULL, as on the source."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_add_column,
+        fl_table_props,
+    )
+    from citybikedatawarehouse_spark.streaming.changes_feed import (
+        replicate_changes,
+    )
+
+    src = str(tmp_path / "add_src")
+    dst = str(tmp_path / "add_dst")
+    ckpt = str(tmp_path / "add_ckpt")
+    _kv_source(spark, src)
+    replicate_changes(spark, src, dst, checkpoint_dir=ckpt)
+    fl_add_column(spark, src, "note", "string")
+    _write_note(spark, src)
+    n_before = len(fl_lineage(dst))
+    assert replicate_changes(spark, src, dst, checkpoint_dir=ckpt) == 2
+    assert len(fl_lineage(dst)) == n_before + 1
+    schema = fl_table_props(dst)["schema"]
+    assert [f["name"] for f in schema] == ["k", "v", "note"]
+    assert schema[-1]["id"] == max(f["id"] for f in schema[:-1]) + 1
+    got = _sorted_pd(fl_read_mor(spark, dst), "k")
+    pd.testing.assert_frame_equal(
+        got, _sorted_pd(fl_read_mor(spark, src), "k")
+    )
+    assert got["note"].notna().sum() == 5
+
+
+def test_replica_refuses_rename_and_type_change(spark, tmp_path):
+    """A source rename cannot be followed by name: replication raises
+    naming the column instead of dropping it. The fused commit refuses
+    a type change the same way, with nothing committed."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_rename_column,
+    )
+    from citybikedatawarehouse_spark.streaming.changes_feed import (
+        replicate_changes,
+    )
+
+    src = str(tmp_path / "ren_src")
+    dst = str(tmp_path / "ren_dst")
+    _kv_source(spark, src)
+    replicate_changes(spark, src, dst)
+    fl_rename_column(spark, src, "v", "w")
+    fl_merge_upsert(
+        spark, src,
+        spark.createDataFrame([(3, 7)], "k bigint, w bigint"), key="k",
+    )
+    head = fl_current_version(dst)
+    with pytest.raises(ValueError, match="column 'v' is missing"):
+        replicate_changes(spark, src, dst)
+
+    retyped = spark.createDataFrame([(3, "7")], "k bigint, v string")
+    with pytest.raises(ValueError, match="column 'v' changed type"):
+        fl_merge_upsert(spark, dst, retyped, key="k", merge_schema=True)
+    assert fl_current_version(dst) == head
+
+
+def test_replication_batches_budget_and_lineage(spark, sf_dir, tmp_path):
+    """Replicating the four-commit ``_history`` in batches of two:
+
+    - every replica version is the exact MOR state of the source
+      version its ``replicated_from`` tag names, so no reader of the
+      replica sees a state the source never had;
+    - deterministic cost counters: at most ceil(4 / 2) replica
+      versions, and at most half the Spark jobs of the per-commit
+      delete-then-merge pump it replaced (78 jobs, measured with 4
+      local cores); a merge with no D keys still runs exactly the jobs
+      it ran before the fused delete existed (14 with no delete set,
+      22 with one)."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_table_props,
+    )
+    from citybikedatawarehouse_spark.streaming.changes_feed import (
+        REPLICATED_FROM,
+        replicate_changes,
+    )
+
+    merge_jobs = []
+    src, _ = _history(spark, sf_dir, tmp_path, "batch_src", merge_jobs)
+    assert merge_jobs == [14, 22]
+
+    dst = str(tmp_path / "batch_dst")
+    applied, n_jobs = _count_jobs(
+        spark, "batch_replicate",
+        lambda: replicate_changes(spark, src, dst, versions_per_batch=2),
+    )
+    src_lineage = fl_lineage(src)
+    assert applied == len(src_lineage) == 4
+    assert n_jobs <= 78 // 2
+    assert len(fl_lineage(dst)) <= -(-4 // 2)
+
+    tags = []
+    for v in fl_lineage(dst):
+        tag = fl_table_props(dst, v)[REPLICATED_FROM]
+        tags.append(tag)
+        got = _sorted_pd(fl_read_mor(spark, dst, v), "o_orderkey")
+        want = _sorted_pd(fl_read_mor(spark, src, tag), "o_orderkey")
+        pd.testing.assert_frame_equal(got, want)
+    # one commit per batch of two source commits, each ending a batch
+    assert tags == [src_lineage[1], src_lineage[3]]
