@@ -88,8 +88,9 @@ HEADLINE = [
     # legs it will one day replace)
     "q275_kmv_overlap",
     # round 9 session 3: sketch-partial window merge (5 exchanges,
-    # 2 explode fan-outs) and zone-map data skipping (layout write +
-    # stats fold + pruned read — the end-to-end skipping round-trip)
+    # 2 explode fan-outs) and zone-map data skipping (fl_init layout
+    # write + footer stats + manifest-pruned read — the end-to-end
+    # skipping round-trip)
     "q277_rolling_hll_distinct",
     "q278_zonemap_prune",
     # round 10: the unified table format (file-list init + a merge
@@ -148,9 +149,10 @@ EAGER_BUILD = {
     "q179_copurchase_communities",
     # q262 persists its flagged edge list (same rationale as q176)
     "q262_triangle_sample_estimate",
-    # q278's layout write + stats build + prune-list collect all run
-    # at plan-build time; timing only the returned 5-row aggregate
-    # would measure none of the skipping round-trip
+    # q278's fl_init (layout write + footer zone stats + pointer flip)
+    # and manifest prune run at plan-build time; timing only the
+    # returned 5-row aggregate would measure none of the skipping
+    # round-trip
     "q278_zonemap_prune",
     # q283/q284 run their file-list commits (fl_init, fl_merge_upsert,
     # fl_epoch_step crash/replay epochs) at plan-build time; the

@@ -4,10 +4,10 @@ Streaming sinks and frequent incremental appends (the reference's
 ``if_exists='append'`` pattern) fragment a table into many small
 files; at scale, scan cost becomes dominated by file-open overhead
 and the NameNode/listing path. Compaction rewrites a parquet
-directory into size-targeted files. The module also holds the
-plain-Parquet MERGE emulations, snapshot CDC extraction and digests,
-and scan-built zone maps with their pruned reads. The versioned
-table format lives in ``operators/table_format.py``.
+directory into size-targeted files. The module also holds snapshot
+CDC extraction and bucket digests. Everything versioned — MERGE,
+per-file zone stats and pruned reads — is the table format in
+``operators/table_format.py``.
 """
 
 from __future__ import annotations
@@ -85,169 +85,6 @@ def compact_parquet(
     out.write.mode("overwrite").parquet(staging)
     _fs_swap(spark, staging, path, path.rstrip("/") + "__precompact")
     return spark.read.parquet(path)
-
-
-def merge_upsert(
-    spark,
-    target_path: str,
-    updates: DataFrame,
-    key: str,
-) -> tuple[int, int]:
-    """MERGE INTO emulation on plain Parquet: rows in ``updates``
-    replace target rows with the same ``key``; unmatched update rows
-    are inserted; all other target rows carry over. Returns
-    (n_replaced, n_inserted).
-
-    MERGE semantics require the source keys to be unique (SQL MERGE
-    raises on multiple matches for one target row); a duplicate-key
-    ``updates`` would silently produce a duplicate-key result table,
-    so it is rejected up front.
-
-    Durability: the merged result is written to a STAGING directory
-    first, then swapped in (target moved aside as backup, staging
-    renamed over it, backup removed) — the same pattern as
-    ``compact_parquet``, through the Hadoop FileSystem API
-    (``_fs_swap``; atomic where rename is native — HDFS/local — with
-    a documented copy-window caveat on object stores). The target
-    files are never deleted before a complete replacement exists on
-    disk, so a crash mid-merge leaves either the old table or the
-    new one, never neither. (A plain ``mode('overwrite')`` on the
-    target would delete it first and hold the only copy in
-    non-replicated executor memory.)
-
-    Scale path: on a transactional table format (Delta/Iceberg,
-    jars not present in this sandbox) this is a real MERGE with
-    file-level pruning; on partitioned plain Parquet use
-    ``merge_upsert_partitioned`` — it rewrites only the partitions
-    the update keys touch (dynamic partition overwrite) instead of
-    this full-table rewrite. On stores where rename is NOT atomic
-    (object stores), use ``table_format.fl_merge_upsert`` — immutable
-    data files published by a one-file pointer flip, crash-
-    consistent everywhere. The emulation keeps identical semantics
-    at any scale — only the rewrite/commit granularity changes."""
-    n_updates = updates.count()
-    n_update_keys = updates.select(key).distinct().count()
-    if n_update_keys != n_updates:
-        raise ValueError(
-            f"merge_upsert: updates has {n_updates - n_update_keys} "
-            f"duplicate '{key}' rows; MERGE requires unique source keys"
-        )
-    target = spark.read.parquet(target_path)
-    matched = target.join(updates.select(key), key, "left_semi")
-    n_replaced = matched.count()
-    n_inserted = n_updates - n_replaced
-    kept = target.join(updates.select(key), key, "left_anti")
-    merged = kept.unionByName(updates.select(*target.columns))
-    staging = target_path.rstrip("/") + "__merging"
-    merged.write.mode("overwrite").parquet(staging)
-    _fs_swap(spark, staging, target_path, target_path.rstrip("/") + "__premerge")
-    return n_replaced, n_inserted
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key: str,
-    partition_cols: tuple[str, ...],
-) -> tuple[int, int]:
-    """Partition-pruned MERGE on a ``partitionBy(*partition_cols)``
-    parquet table: identical semantics to ``merge_upsert`` but only
-    the partitions the update keys touch are rewritten — the scale
-    shape for a year/month-partitioned 100 TB fact where a day's
-    upsert touches one partition, not the table. Returns
-    (n_replaced, n_inserted).
-
-    How: the touched-partition set = the updates' own partition
-    values (routes inserts) — after verifying no matched key CHANGES
-    partition (target semi-join on key, partition tuples compared).
-    The target is then read WITH a partition filter (Catalyst prunes
-    the scan to those directories), merged exactly like
-    ``merge_upsert``, and written back under
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` — Spark
-    replaces only the partition directories present in the written
-    frame, atomically per partition via the file commit protocol; no
-    staging swap of the whole table, untouched partition files are
-    never opened, listed for rewrite, or re-committed.
-
-    A key whose update row lands in a DIFFERENT partition than its
-    current target row is rejected: dynamic overwrite could then
-    leave the stale row behind in a partition the write never
-    touches (worse, silently). Partition-moving upserts need the
-    full-table ``merge_upsert`` (or a real MERGE on Delta/Iceberg).
-    """
-    n_updates = updates.count()
-    n_update_keys = updates.select(key).distinct().count()
-    if n_update_keys != n_updates:
-        raise ValueError(
-            f"merge_upsert_partitioned: updates has "
-            f"{n_updates - n_update_keys} duplicate '{key}' rows; "
-            f"MERGE requires unique source keys"
-        )
-    if n_updates == 0:
-        return 0, 0
-    pcols = list(partition_cols)
-    target = spark.read.parquet(target_path)
-    # a matched key must stay in its partition — join target rows to
-    # their update row and compare partition tuples
-    moved = (
-        target.select(key, *pcols)
-        .join(
-            updates.select(key, *[F.col(c).alias(f"__u_{c}") for c in pcols]),
-            key,
-        )
-        .where(
-            ~F.struct(*pcols).eqNullSafe(
-                F.struct(*[F.col(f"__u_{c}").alias(c) for c in pcols])
-            )
-        )
-    )
-    n_moved = moved.count()
-    if n_moved:
-        raise ValueError(
-            f"merge_upsert_partitioned: {n_moved} matched key(s) change "
-            f"partition {pcols}; dynamic partition overwrite would leave "
-            f"stale rows — use merge_upsert (full rewrite) for "
-            f"partition-moving upserts"
-        )
-    # touched partitions: small distinct list (bounded by the number
-    # of partition directories an upsert batch spans), rendered as an
-    # OR of equality conjunctions — the exact shape Catalyst's
-    # partition pruning recognizes, so the target scan lists only the
-    # touched directories
-    touched = [
-        tuple(r[c] for c in pcols)
-        for r in updates.select(*pcols).distinct().collect()
-    ]
-    from functools import reduce
-
-    part_filter = reduce(
-        lambda a, b: a | b,
-        [
-            reduce(
-                lambda a, b: a & b,
-                [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, t)],
-            )
-            for t in touched
-        ],
-    )
-    slice_df = target.where(part_filter)
-    matched = slice_df.join(updates.select(key), key, "left_semi")
-    n_replaced = matched.count()
-    n_inserted = n_updates - n_replaced
-    kept = slice_df.join(updates.select(key), key, "left_anti")
-    merged = kept.unionByName(updates.select(*target.columns))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(*pcols)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n_replaced, n_inserted
 
 
 def cdc_extract(
@@ -353,166 +190,3 @@ def bucket_digest(
             F.expr("bit_xor(__rh)").cast("bigint").alias(digest_col),
         )
     )
-
-
-def zone_map_stats(
-    spark: SparkSession, path: str, cols: tuple[str, ...]
-) -> DataFrame:
-    """Per-file zone map: (file, n_rows, min_<c>, max_<c> per stats
-    column) for every parquet data file under ``path``. The read-side
-    half of multi-dimensional data skipping — q77's Z-order key keeps
-    each file's min/max box TIGHT at write time; this table is what a
-    reader consults to skip files whose box cannot intersect a
-    predicate. Parquet footers already carry these stats per
-    row-group, and table formats (Delta/Iceberg) lift them into the
-    commit log; this builds the same relation engine-side so the
-    pruning contract is testable on plain parquet, with no format
-    dependency.
-
-    Scale shape: one scan that folds map-side into ONE row per file
-    (groupBy input_file_name is keyed by file, and a file's rows are
-    co-located in its scan partitions, so partial aggregation
-    collapses nearly everything before the |files|-row shuffle). At
-    100 TB the stats table is O(files) ~ 10^5-10^6 tiny rows — this
-    is the relation you persist alongside the table (or in the
-    metastore) and incrementally append to on ingest, not rebuild
-    per query."""
-    df = spark.read.parquet(path)
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
-
-
-def zonemap_prune_files(
-    stats: DataFrame, col: str, lo, hi
-) -> tuple[list[str], int]:
-    """Files whose [min_<col>, max_<col>] zone intersects [lo, hi],
-    plus the total file count. Interval-overlap test with NULL
-    safety: a file whose stats are NULL for the column (all-NULL
-    zone, or stats never collected) is KEPT — pruning may only ever
-    skip a file PROVEN disjoint, never one merely unknown, or
-    skipping becomes a wrong-answer bug instead of a missed
-    optimization.
-
-    The collect here is the stats relation itself — O(files) tiny
-    rows, the same thing Spark's own driver-side file index (or a
-    Delta/Iceberg snapshot) holds to plan any scan; pruning shrinks
-    what the executors read, it does not add driver state beyond
-    the listing that already exists."""
-    rows = stats.select("file", f"min_{col}", f"max_{col}").collect()
-    keep = [
-        r["file"]
-        for r in rows
-        if r[f"min_{col}"] is None
-        or r[f"max_{col}"] is None
-        or not (r[f"max_{col}"] < lo or r[f"min_{col}"] > hi)
-    ]
-    return keep, len(rows)
-
-
-def read_pruned_files(
-    spark: SparkSession, files: list[str], schema_source: str
-) -> DataFrame:
-    """Read a pruned file list, with the empty-list case handled: a
-    predicate disjoint from EVERY zone is a legal (and at scale,
-    desirable) outcome, and must yield an empty relation with the
-    table's schema — not the error ``spark.read.parquet()`` raises
-    on zero paths. The schema comes from a footer-only read of
-    ``schema_source`` (the table/version directory), so no data is
-    scanned for the empty case."""
-    if files:
-        return spark.read.parquet(*files)
-    schema = spark.read.parquet(schema_source).schema
-    return spark.createDataFrame([], schema)
-
-
-def _norm_file_uri(p: str) -> str:
-    """Canonical form for comparing file identities across the two
-    renderings in play: ``input_file_name()`` emits URL-ENCODED
-    ``file:///`` URIs (a space becomes ``%20``), while Hadoop
-    ``Path.toString``/local paths are unencoded. Unquote the escapes
-    and strip the scheme so both sides meet in the middle — without
-    the unquote, a path containing any URL-special character would
-    never match its own stats row and be re-scanned into a duplicate
-    entry (round-9 ADVICE)."""
-    from urllib.parse import unquote
-
-    p = unquote(p)
-    if ":" in p.split("/", 1)[0]:  # scheme prefix (file:, hdfs:, s3a:)
-        p = p.split(":", 1)[1]
-        # file:///x, file:/x, hdfs://host/x all reduce to /x modulo
-        # authority; local-vs-local comparison is exact, cross-store
-        # comparisons never mix schemes in one zone map
-        while p.startswith("//"):
-            p = p[1:]
-    return p
-
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
-    """Recursively list data files under ``path`` through the Hadoop
-    FileSystem API — works on any Hadoop-supported store (HDFS, S3A,
-    local), unlike ``os.walk``. Skips hidden files/dirs (``_``/``.``
-    prefixes, e.g. ``_SUCCESS``, ``_manifests``) exactly as Spark's own
-    scan listing does."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # listFiles yields scheme-QUALIFIED paths (file:/...); qualify the
-    # root the same way or the ancestor walk below never terminates at
-    # it and hidden-prefixed ancestors ABOVE the root (a table under
-    # /x/_work/...) wrongly hide every file (round-10 ADVICE)
-    root = fs.makeQualified(jpath)
-    out: list[str] = []
-    it = fs.listFiles(jpath, True)  # recursive
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        if not p.getName().endswith(".parquet"):
-            continue
-        # reject if any path segment strictly under `root` is hidden
-        rel, hidden = p, False
-        while rel is not None and str(rel) != str(root):
-            if rel.getName().startswith(("_", ".")):
-                hidden = True
-                break
-            rel = rel.getParent()
-        if not hidden:
-            out.append(str(p))
-    return sorted(out)
-
-
-def zone_map_append(
-    spark: SparkSession, path: str, stats: DataFrame
-) -> DataFrame:
-    """Incrementally maintain a zone map after an append: compute
-    min/max stats ONLY for data files not yet in ``stats`` and union
-    them in — making the "persist the stats, don't rebuild per
-    query" contract real. The stats columns are inferred from the
-    existing relation (min_<c>/max_<c> pairs), so the appended rows
-    carry the same schema.
-
-    Scale shape: the incremental scan reads ONLY the new files
-    (explicit path list -> Spark's file index holds just those), and
-    the fold is O(new files) rows; the untouched history's stats are
-    never recomputed. This is what ingest does at 100 TB — per-batch
-    stats appended to the metastore — vs ``zone_map_stats``'s full
-    rebuild, which exists for bootstrap and repair."""
-    cols = [
-        c[len("min_"):]
-        for c in stats.columns
-        if c.startswith("min_") and f"max_{c[len('min_'):]}" in stats.columns
-    ]
-    known = {_norm_file_uri(r["file"]) for r in stats.select("file").collect()}
-    all_files = _list_parquet_files(spark, path)
-    new_files = [f for f in all_files if _norm_file_uri(f) not in known]
-    if not new_files:
-        return stats
-    df = spark.read.parquet(*new_files)
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    fresh = df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
-    return stats.select(fresh.columns).unionByName(fresh)

@@ -71,11 +71,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from citybikedatawarehouse_spark.operators.maintenance import (
-    _norm_file_uri,
-    cdc_extract,
-    zone_map_stats,
-)
+from citybikedatawarehouse_spark.operators.maintenance import cdc_extract
 
 _MANIFEST_DIR = "_manifests"
 
@@ -354,6 +350,7 @@ def _apply_layout(
     df: DataFrame,
     props: dict,
     bounds: dict[str, tuple[int, int]] | None = None,
+    pack: bool = False,
 ) -> DataFrame:
     """Re-apply the table's committed clustering to a commit's output:
     Z-order key over ``zorder_by``, range-partitioned into
@@ -364,13 +361,17 @@ def _apply_layout(
     across files and skipping quietly degrades to nothing.
     ``bounds`` (col -> (min, max), may be wider than the data, never
     narrower) skips the Z-order bounds aggregate pass — callers
-    derive them from the manifest's per-file zone stats."""
+    derive them from the manifest's per-file zone stats. ``pack``
+    marks the rewrites whose job is file size (compact, OPTIMIZE): on
+    a table with no Z-order spec they still cap the output at
+    ``layout_files`` files, by a shuffle-free coalesce; init and
+    merge keep the caller's partitioning there."""
     zcols = props.get("zorder_by") or []
+    n = int(props.get("layout_files") or 16)
     if not zcols:
-        return df
+        return df.coalesce(n) if pack else df
     from citybikedatawarehouse_spark.functions.layout import zorder_key
 
-    n = int(props.get("layout_files") or 16)
     return (
         zorder_key(df, list(zcols), bounds=bounds)
         .repartitionByRange(n, "z_key")
@@ -406,12 +407,12 @@ def footer_zone_stats(path: str, cols: tuple[str, ...]):
     data file directly under ``path``, read from the file FOOTERS —
     O(files) driver-side metadata, zero Spark jobs. This is how
     Delta/Iceberg gather per-file stats at commit time; the scan
-    form (``zone_map_stats``) remains for bootstrap/repair and as
-    the fallback. Returns a pandas DataFrame, or None whenever any
-    tracked column's footer stats cannot be trusted bit-exactly
-    (untrusted type, absent statistics, or a chunk whose min/max is
-    missing for any reason other than being all-NULL) — the caller
-    must then use the scan path."""
+    form (``zone_map_stats``) is the fallback. Returns a pandas
+    DataFrame, or None whenever any tracked column's footer stats
+    cannot be trusted bit-exactly (untrusted type, absent
+    statistics, or a chunk whose min/max is missing for any reason
+    other than being all-NULL) — the caller must then use the scan
+    path."""
     import pyarrow.parquet as pq
 
     recs: list[dict] = []
@@ -460,6 +461,50 @@ def footer_zone_stats(path: str, cols: tuple[str, ...]):
     if not recs:
         return pd.DataFrame(columns=cols_order)
     return pd.DataFrame(recs)[cols_order]
+
+
+def zone_map_stats(
+    spark: SparkSession, path: str, cols: tuple[str, ...]
+) -> DataFrame:
+    """Per-file zone map by SCAN: (file, n_rows, min_<c>, max_<c> per
+    stats column) for every parquet data file under ``path``. The
+    fallback of ``_stats_of_commit`` when ``footer_zone_stats`` cannot
+    trust the footers (floats, strings, a writer that dropped stats):
+    the same relation, computed from the rows instead of the metadata.
+
+    Scale shape: one scan that folds map-side into ONE row per file
+    (groupBy input_file_name is keyed by file, and a file's rows are
+    co-located in its scan partitions, so partial aggregation
+    collapses nearly everything before the |files|-row shuffle) —
+    O(files) rows, written into the manifest once per commit, never
+    rebuilt per query."""
+    df = spark.read.parquet(path)
+    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
+    for c in cols:
+        aggs.append(F.min(c).alias(f"min_{c}"))
+        aggs.append(F.max(c).alias(f"max_{c}"))
+    return df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
+
+
+def _norm_file_uri(p: str) -> str:
+    """Canonical form for comparing file identities across the two
+    renderings in play: ``input_file_name()`` emits URL-ENCODED
+    ``file:///`` URIs (a space becomes ``%20``), while Hadoop
+    ``Path.toString``/local paths are unencoded. Unquote the escapes
+    and strip the scheme so both sides meet in the middle — without
+    the unquote, a path containing any URL-special character would
+    never match its own manifest row."""
+    from urllib.parse import unquote
+
+    p = unquote(p)
+    if ":" in p.split("/", 1)[0]:  # scheme prefix (file:, hdfs:, s3a:)
+        p = p.split(":", 1)[1]
+        # file:///x, file:/x, hdfs://host/x all reduce to /x modulo
+        # authority; local-vs-local comparison is exact, cross-store
+        # comparisons never mix schemes in one manifest
+        while p.startswith("//"):
+            p = p[1:]
+    return p
 
 
 def fl_lineage(root: str) -> list[str]:
@@ -1432,10 +1477,12 @@ def fl_delete_keys(
 
 
 def _apply_deletes(
-    spark: SparkSession, df: DataFrame, root: str, version: str | None
+    spark: SparkSession, df: DataFrame, root: str, version: str
 ) -> DataFrame:
-    if version is None:
-        version = fl_current_version(root)
+    """``df`` (files of ``version``) minus ``version``'s delete set.
+    Callers resolve the version ONCE for both halves: re-reading the
+    pointer here would pair one version's files with a later
+    commit's delete set."""
     props = fl_table_props(root, version)
     dels = _delete_keys_df(spark, props)
     if dels is None:
@@ -1454,6 +1501,8 @@ def fl_read_mor(
     anti-join — the read-side cost of not rewriting on delete).
     ``fl_read`` stays the raw file view; use this one when the table
     uses ``fl_delete``."""
+    if version is None:
+        version = fl_current_version(root)
     return _apply_deletes(spark, fl_read(spark, root, version), root, version)
 
 
@@ -1463,6 +1512,8 @@ def fl_read_pruned_mor(
     preds: dict[str, tuple],
     version: str | None = None,
 ) -> tuple[DataFrame, int, int]:
+    if version is None:
+        version = fl_current_version(root)
     df, n_read, n_total = fl_read_pruned(spark, root, preds, version)
     return _apply_deletes(spark, df, root, version), n_read, n_total
 
@@ -1558,7 +1609,7 @@ def fl_compact(
             bounds = _manifest_bounds(
                 fl_manifest(root, parent), list(props.get("zorder_by") or [])
             )
-            _apply_layout(df, props, bounds=bounds).write.mode(
+            _apply_layout(df, props, bounds=bounds, pack=True).write.mode(
                 "errorifexists"
             ).parquet(cdir)
             manifest = _stats_of_commit(spark, cdir, cols, sig)
@@ -1675,7 +1726,7 @@ def fl_optimize(
     if cached:
         df = df.persist()
     try:
-        _apply_layout(df, slice_props, bounds=bounds).write.mode(
+        _apply_layout(df, slice_props, bounds=bounds, pack=True).write.mode(
             "errorifexists"
         ).parquet(cdir)
     finally:

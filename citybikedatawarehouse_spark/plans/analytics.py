@@ -7433,7 +7433,7 @@ def q251_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q252_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full CDC apply — the missing third of the mutation family
-    beside SCD2 history (q108) and keyed upsert (merge_upsert): an
+    beside SCD2 history (q108) and keyed upsert (fl_merge_upsert): an
     ordered insert/update/delete log (synthesized md5-
     deterministically from orders: every key inserts, ~30% later
     update with +10% price, ~10% later delete) collapses to final
@@ -7448,7 +7448,7 @@ def q252_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE window over the ops log keyed by the primary
     key — the same single-shuffle shape Delta/Iceberg MERGE
     executes; no join against the previous snapshot is needed when
-    the log carries full rows (vs merge_upsert's snapshot+delta
+    the log carries full rows (vs fl_merge_upsert's snapshot+delta
     join). At 100 TB the log is partitioned by ingest date and the
     window runs per key within AQE-coalesced partitions."""
     o = _t(spark, sf_dir, "orders")

@@ -481,7 +481,7 @@ def q241_gdpr_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact tables (one scan each); the orphan proof is an anti-join of
     two relations ALREADY restricted to the cohort's orders. Output
     is 4 rows. At 100 TB the same plan applies the deletes via
-    partition-filtered rewrites (merge_upsert's MERGE shape)."""
+    file-targeted rewrites (fl_merge_upsert's MERGE shape)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     l = _t(spark, sf_dir, "lineitem")
@@ -1310,42 +1310,46 @@ def q278_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map data skipping, end to end: lay orders out by date
     (repartitionByRange keeps each file's o_orderdate min/max box
     tight — q77's Z-order key is the multi-column generalisation),
-    build the per-file min/max stats relation
-    (operators/maintenance.zone_map_stats), answer a one-quarter
-    revenue query reading ONLY the files whose zone intersects the
-    quarter, and AUDIT the shortcut: matches_full_scan compares the
-    pruned answer to the unpruned one group by group, files_skipped
-    asserts the prune actually dropped files. This is the mechanism
-    that turns a 100 TB scan into a ~1-partition read for
-    time-windowed queries — parquet row-group stats / Delta-Iceberg
-    file stats, reproduced engine-side so the contract (skip only
-    what is PROVEN disjoint) is testable on plain parquet.
+    commit them as a file-list table whose manifest records each
+    file's o_orderdate zone from the parquet footers
+    (operators/table_format.fl_init with ``stats_cols``), answer a
+    one-quarter revenue query through ``fl_read_pruned`` — reading
+    ONLY the files whose zone intersects the quarter — and AUDIT the
+    shortcut: matches_full_scan compares the pruned answer to the
+    unpruned one group by group, files_skipped asserts the prune
+    actually dropped files. This is the mechanism that turns a
+    100 TB scan into a ~1-partition read for time-windowed queries —
+    parquet row-group stats / Delta-Iceberg file stats, with the
+    contract (skip only what is PROVEN disjoint) testable here.
 
-    Scale shape: stats build is one scan folding to O(files) rows
-    (persisted in practice, rebuilt here to keep the query
-    self-contained); the pruned read opens only intersecting files —
-    at a 16-file layout over 7 years, a quarter touches 1-2. The
-    audit's full scan exists only to prove equality at test scale;
-    production reads the pruned side alone."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        read_pruned_files,
-        zone_map_stats,
-        zonemap_prune_files,
+    Scale shape: the stats are O(files) manifest rows written at
+    commit time from footers, with no scan; the pruned read opens
+    only intersecting files — at a 16-file layout over 7 years, a
+    quarter touches 1-2. The audit's full scan exists only to prove
+    equality at test scale; production reads the pruned side alone."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_init,
+        fl_read_pruned,
     )
 
     o = _t(spark, sf_dir, "orders")
     base = tempfile.mkdtemp(prefix="cbdw_zonemap_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    work = base + "/orders_by_date"
-    o.repartitionByRange(16, "o_orderdate").write.mode("overwrite").parquet(
-        work
+    root = base + "/orders_by_date"
+    fl_init(
+        spark,
+        root,
+        o.repartitionByRange(16, "o_orderdate"),
+        key="o_orderkey",
+        stats_cols=("o_orderdate",),
     )
-    stats = zone_map_stats(spark, work, ("o_orderdate",))
     import datetime as _dt
 
     lo = _dt.datetime.fromisoformat(_ZM_LO)
     hi = _dt.datetime.fromisoformat(_ZM_HI + " 23:59:59")
-    files, n_total = zonemap_prune_files(stats, "o_orderdate", lo, hi)
+    pruned_df, n_read, n_total = fl_read_pruned(
+        spark, root, {"o_orderdate": (lo, hi)}
+    )
 
     in_range = F.col("o_orderdate").between(
         F.lit(_ZM_LO).cast("timestamp_ntz"),
@@ -1362,9 +1366,7 @@ def q278_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # empty prune list (predicate disjoint from all zones) is a legal
-    # empty result, not a read error (round-9 ADVICE)
-    pruned = _agg(read_pruned_files(spark, files, work), "n_orders", "revenue")
+    pruned = _agg(pruned_df, "n_orders", "revenue")
     full = _agg(o, "n_full", "rev_full")
     return (
         pruned.join(full, "o_orderpriority", "full")
@@ -1376,7 +1378,7 @@ def q278_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_orders").eqNullSafe(F.col("n_full"))
                 & F.col("revenue").eqNullSafe(F.col("rev_full"))
             ).alias("matches_full_scan"),
-            F.lit(len(files) < n_total).alias("files_skipped"),
+            F.lit(n_read < n_total).alias("files_skipped"),
         )
     )
 
@@ -1521,29 +1523,30 @@ def q281_zorder_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full multi-dimensional data-skipping round trip: write
     orders range-partitioned by the q77 Z-ORDER key over (custkey,
     order day) — so every file's min/max box is tight in BOTH
-    dimensions — then answer a two-predicate query (customer range
-    AND date quarter) reading only the files whose zone intersects
-    BOTH ranges (per-column prune lists intersected). A 1-D date
-    layout (q278) cannot skip on customer; the Morton interleave
-    buys pruning on either predicate, or both, from ONE layout —
-    Delta OPTIMIZE ZORDER BY + file stats, reproduced engine-side.
-    Audited like q278: matches_full_scan proves losslessness group
-    by group; files_skipped proves the prune engaged.
+    dimensions — commit them as a file-list table tracking both
+    columns' zones, then answer a two-predicate query (customer range
+    AND date quarter) through ``fl_read_pruned``, which reads only
+    the files whose zone intersects BOTH ranges. A 1-D date layout
+    (q278) cannot skip on customer; the Morton interleave buys
+    pruning on either predicate, or both, from ONE layout — Delta
+    OPTIMIZE ZORDER BY + file stats. Audited like q278:
+    matches_full_scan proves losslessness group by group;
+    files_skipped proves the prune engaged.
 
-    Scale shape: layout write is the one-off OPTIMIZE cost; stats
-    fold to O(files) rows (ingest-maintained via zone_map_append at
-    scale); the pruned read opens only box-intersecting files. At a
-    16-file z-layout, a quarter x 1/10th-customer-range box touches
-    a corner of the curve, not a stripe.
+    Scale shape: layout write is the one-off OPTIMIZE cost; the zones
+    are O(files) manifest rows read from the footers at commit time
+    (every later commit records its own files' zones); the pruned
+    read opens only box-intersecting files. At a 16-file z-layout, a
+    quarter x 1/10th-customer-range box touches a corner of the
+    curve, not a stripe.
 
     Cites: functions/layout.zorder_key (q77 write side);
-    operators/maintenance.zone_map_stats / zonemap_prune_files.
+    operators/table_format.fl_init / fl_read_pruned.
     """
     from citybikedatawarehouse_spark.functions.layout import zorder_key
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        read_pruned_files,
-        zone_map_stats,
-        zonemap_prune_files,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_init,
+        fl_read_pruned,
     )
 
     o = _t(spark, sf_dir, "orders").withColumn(
@@ -1552,27 +1555,28 @@ def q281_zorder_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = tempfile.mkdtemp(prefix="cbdw_zorder_zm_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    work = base + "/orders_zordered"
-    (
+    root = base + "/orders_zordered"
+    fl_init(
+        spark,
+        root,
         zorder_key(o, ["o_custkey", "__day"])
         .repartitionByRange(16, "z_key")
-        .drop("z_key", "__day")
-        .write.mode("overwrite")
-        .parquet(work)
+        .drop("z_key", "__day"),
+        key="o_orderkey",
+        stats_cols=("o_custkey", "o_orderdate"),
     )
-    stats = zone_map_stats(
-        spark, work, ("o_custkey", "o_orderdate")
-    ).persist()
     import datetime as _dt
 
     dt_lo = _dt.datetime.fromisoformat(_ZM2_DT_LO)
     dt_hi = _dt.datetime.fromisoformat(_ZM2_DT_HI + " 23:59:59")
-    f_ck, n_total = zonemap_prune_files(
-        stats, "o_custkey", _ZM2_CK_LO, _ZM2_CK_HI
+    pruned_df, n_read, n_total = fl_read_pruned(
+        spark,
+        root,
+        {
+            "o_custkey": (_ZM2_CK_LO, _ZM2_CK_HI),
+            "o_orderdate": (dt_lo, dt_hi),
+        },
     )
-    f_dt, _ = zonemap_prune_files(stats, "o_orderdate", dt_lo, dt_hi)
-    files = sorted(set(f_ck) & set(f_dt))
-    stats.unpersist()
 
     pred = F.col("o_custkey").between(_ZM2_CK_LO, _ZM2_CK_HI) & F.col(
         "o_orderdate"
@@ -1591,9 +1595,7 @@ def q281_zorder_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # empty prune list (predicate disjoint from all zones) is a legal
-    # empty result, not a read error (round-9 ADVICE)
-    pruned = _agg(read_pruned_files(spark, files, work), "n_orders", "revenue")
+    pruned = _agg(pruned_df, "n_orders", "revenue")
     full = _agg(_t(spark, sf_dir, "orders"), "n_full", "rev_full")
     return (
         pruned.join(full, "o_orderpriority", "full")
@@ -1605,7 +1607,7 @@ def q281_zorder_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_orders").eqNullSafe(F.col("n_full"))
                 & F.col("revenue").eqNullSafe(F.col("rev_full"))
             ).alias("matches_full_scan"),
-            F.lit(len(files) < n_total).alias("files_skipped"),
+            F.lit(n_read < n_total).alias("files_skipped"),
         )
     )
 

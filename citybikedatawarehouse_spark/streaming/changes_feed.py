@@ -309,6 +309,7 @@ def replicate_changes(
     commits the offset advanced over."""
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_changes,
+        fl_current_version,
         fl_init,
         fl_lineage,
         fl_merge_upsert,
@@ -330,7 +331,12 @@ def replicate_changes(
         props = fl_table_props(src_root, target)
         key = props["key"]
         tag = {REPLICATED_FROM: target}
-        if not os.path.exists(os.path.join(dst_root, "_MANIFEST")):
+        try:
+            fl_current_version(dst_root)
+            fresh = False
+        except FileNotFoundError:  # the replica was never initialized
+            fresh = True
+        if fresh:
             fl_init(
                 spark,
                 dst_root,

@@ -230,133 +230,6 @@ def test_asof_auto_strategy_costs_one_job(spark):
     assert len(after - before) <= 3
 
 
-def test_merge_upsert_semantics_and_self_overwrite(spark, tmp_path):
-    """Upsert replaces matched keys, inserts unmatched ones, keeps
-    the rest — writing safely over the files it just read."""
-    from citybikedatawarehouse_spark.operators.maintenance import merge_upsert
-
-    path = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    ).write.parquet(path)
-    updates = spark.createDataFrame(
-        [(2, "B"), (4, "d")], "k long, v string"
-    )
-    n_replaced, n_inserted = merge_upsert(spark, path, updates, "k")
-    assert (n_replaced, n_inserted) == (1, 1)
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
-    # idempotent re-apply: same updates -> same table
-    merge_upsert(spark, path, updates, "k")
-    got2 = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got2 == got
-    # staging/backup dirs are swapped away, not left behind
-    import os
-
-    assert not os.path.exists(path + "__merging")
-    assert not os.path.exists(path + "__premerge")
-    # duplicate source keys violate MERGE semantics -> rejected,
-    # target untouched
-    import pytest
-
-    dup = spark.createDataFrame([(5, "x"), (5, "y")], "k long, v string")
-    with pytest.raises(ValueError, match="duplicate"):
-        merge_upsert(spark, path, dup, "k")
-    got3 = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got3 == got
-
-
-def test_merge_upsert_partitioned_rewrites_only_touched_partitions(
-    spark, tmp_path
-):
-    """Dynamic-partition-overwrite merge: identical MERGE semantics,
-    but untouched partition directories keep their exact files
-    (names + mtimes) — the scan and the rewrite are both pruned to
-    the partitions the update batch touches."""
-    import os
-
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        merge_upsert_partitioned,
-    )
-
-    path = str(tmp_path / "pt")
-    spark.createDataFrame(
-        [
-            (1, 2020, "a"), (2, 2020, "b"),
-            (3, 2021, "c"), (4, 2021, "d"),
-            (5, 2022, "e"),
-        ],
-        "k long, yr int, v string",
-    ).write.partitionBy("yr").parquet(path)
-
-    def files_of(year: int) -> dict[str, tuple[int, float]]:
-        d = os.path.join(path, f"yr={year}")
-        return {
-            f: (os.path.getsize(os.path.join(d, f)),
-                os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    before_2020, before_2022 = files_of(2020), files_of(2022)
-
-    # touch only yr=2021: replace k=3, insert k=6
-    updates = spark.createDataFrame(
-        [(3, 2021, "C"), (6, 2021, "f")], "k long, yr int, v string"
-    )
-    n_replaced, n_inserted = merge_upsert_partitioned(
-        spark, path, updates, "k", ("yr",)
-    )
-    assert (n_replaced, n_inserted) == (1, 1)
-    got = {
-        (r["k"], r["yr"], r["v"]) for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        (1, 2020, "a"), (2, 2020, "b"),
-        (3, 2021, "C"), (4, 2021, "d"),
-        (5, 2022, "e"), (6, 2021, "f"),
-    }
-    # untouched partitions: byte-identical file sets, never rewritten
-    assert files_of(2020) == before_2020
-    assert files_of(2022) == before_2022
-
-    # idempotent re-apply
-    merge_upsert_partitioned(spark, path, updates, "k", ("yr",))
-    assert {
-        (r["k"], r["yr"], r["v"]) for r in spark.read.parquet(path).collect()
-    } == got
-
-    # a key that CHANGES partition would strand its old row in a
-    # directory the dynamic overwrite never touches -> rejected
-    mover = spark.createDataFrame([(5, 2021, "E")], "k long, yr int, v string")
-    with pytest.raises(ValueError, match="change partition"):
-        merge_upsert_partitioned(spark, path, mover, "k", ("yr",))
-    assert {
-        (r["k"], r["yr"], r["v"]) for r in spark.read.parquet(path).collect()
-    } == got
-
-    # duplicate source keys still rejected
-    dup = spark.createDataFrame(
-        [(7, 2021, "x"), (7, 2021, "y")], "k long, yr int, v string"
-    )
-    with pytest.raises(ValueError, match="duplicate"):
-        merge_upsert_partitioned(spark, path, dup, "k", ("yr",))
-
-
-def test_merge_upsert_partitioned_scan_is_partition_pruned(spark, tmp_path):
-    """The target read inside the partitioned merge must list only the
-    touched partition directories — assert via the plan's partition
-    filters on an equivalent pruned scan."""
-    path = str(tmp_path / "pt2")
-    spark.createDataFrame(
-        [(i, 2020 + i % 3, f"v{i}") for i in range(30)],
-        "k long, yr int, v string",
-    ).write.partitionBy("yr").parquet(path)
-    pruned = spark.read.parquet(path).where(F.col("yr").eqNullSafe(F.lit(2021)))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "2021" in plan
-
-
 def test_cdc_extract_apply_identity_and_minimality(spark, tmp_path):
     """The CDC loop laws: apply(extract(old, new), old) == new, and
     extract(new, new) == empty (minimal log)."""

@@ -4,11 +4,13 @@ version's manifest, published by the one atomic pointer flip), plus
 zone-map-pruned reads.
 
 Contract under test: q278 (zone-map prune), q280 (time travel) and
-q281 (Z-order skipping) are ONE API — ``fl_init(stats_cols,
+q281 (Z-order skipping) all run on ONE API — ``fl_init(stats_cols,
 zorder_by)`` -> every commit re-clusters the files it writes and
 records their stats -> ``fl_read_pruned`` consults the committed
-stats; and a crash anywhere before the pointer flip can never desync
-stats/layout from data.
+stats, and an all-pruned read is an empty relation with the table
+schema; and a crash anywhere before the pointer flip can never
+desync stats/layout from data. There is no second, scan-built zone
+map to keep in step.
 """
 
 from __future__ import annotations
@@ -19,11 +21,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from citybikedatawarehouse_spark.operators.maintenance import (
-    _norm_file_uri,
     parquet_file_stats,
-    read_pruned_files,
 )
 from citybikedatawarehouse_spark.operators.table_format import (
+    _norm_file_uri,
     fl_compact,
     fl_current_version,
     fl_init,
@@ -241,11 +242,3 @@ def test_hidden_dirs_invisible_to_data_scans(spark, sf_dir, tmp_path):
     }
     n_files, _ = parquet_file_stats(root)
     assert n_files == len(_data_file_set(spark, root)) == 8
-
-
-def test_read_pruned_files_empty_list(spark, sf_dir, tmp_path):
-    root, _o = _tf_init(spark, sf_dir, tmp_path)
-    commit_dir = os.path.dirname(next(iter(_stats_file_set(root))))
-    empty = read_pruned_files(spark, [], commit_dir)
-    assert empty.count() == 0
-    assert empty.schema == spark.read.parquet(commit_dir).schema

@@ -12,11 +12,6 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citybikedatawarehouse_spark.operators.maintenance import (
-    _list_parquet_files,
-    zone_map_append,
-    zone_map_stats,
-)
 from citybikedatawarehouse_spark.operators.table_format import (
     CommitConflictError,
     fl_add_column,
@@ -432,35 +427,6 @@ def test_fresh_checkpoint_lineage_is_not_mistaken_for_replay(
     assert fl_epoch_step(
         kv([(9, "x")]), 0, root, key="k", txn_app_id="ckptB"
     )[0] == "skipped"
-
-
-# ---------------------------------------------------------------------------
-# listing fix: tables under hidden-prefixed ancestors
-# ---------------------------------------------------------------------------
-
-
-def test_list_parquet_files_under_hidden_ancestor(spark, tmp_path):
-    """Round-10 ADVICE (medium): a table under a hidden-prefixed
-    ANCESTOR (e.g. /root/.cache/... or a _work staging area) must
-    still list its files — only segments strictly below the listing
-    root are hidden-filtered."""
-    root = tmp_path / "_work" / "tbl"
-    df = spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-    )
-    df.coalesce(2).write.parquet(str(root))
-    files = _list_parquet_files(spark, str(root))
-    assert len(files) == 2
-
-    # and zone_map_append sees new files there (the silent-miss path)
-    stats = zone_map_stats(spark, str(root), ("k",))
-    df2 = spark.range(100, 150).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-    )
-    df2.coalesce(1).write.mode("append").parquet(str(root))
-    appended = zone_map_append(spark, str(root), stats)
-    assert appended.count() == 3
-    assert appended.agg(F.sum("n_rows")).collect()[0][0] == 150
 
 
 # ---------------------------------------------------------------------------

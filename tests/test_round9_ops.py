@@ -1,18 +1,25 @@
-"""Round-9 session-3 operators: zone-map data skipping
-(operators/maintenance.zone_map_stats / zonemap_prune_files) and the
-rolling-window HLL merge (q277) — the monoid property the query
-relies on, tested directly on the register algebra."""
+"""Round-9 session-3 operators: zone-map data skipping — the scan-built
+per-file zone map (operators/table_format.zone_map_stats) and the
+manifest-pruned read (table_format.fl_read_pruned) over the zones a
+commit records from parquet footers — and the rolling-window HLL
+merge (q277): the monoid property the query relies on, tested
+directly on the register algebra."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
 from citybikedatawarehouse_spark.functions.keys import hll_parts
-from citybikedatawarehouse_spark.operators.maintenance import (
+from citybikedatawarehouse_spark.operators.table_format import (
+    fl_init,
+    fl_manifest,
+    fl_read,
+    fl_read_pruned,
+    footer_zone_stats,
     zone_map_stats,
-    zonemap_prune_files,
 )
 from citybikedatawarehouse_spark.sources.readers import load_table
 
@@ -23,6 +30,22 @@ def _range_layout(spark, sf_dir, tmp_path, n_files=8):
         n_files, "o_orderdate"
     ).write.parquet(path)
     return path
+
+
+def _range_table(spark, sf_dir, tmp_path, n_files=8):
+    """Orders range-laid-out by date, committed as a file-list table
+    whose manifest tracks each file's o_orderdate zone."""
+    root = str(tmp_path / "orders_ranged_tf")
+    fl_init(
+        spark,
+        root,
+        load_table(spark, sf_dir, "orders").repartitionByRange(
+            n_files, "o_orderdate"
+        ),
+        key="o_orderkey",
+        stats_cols=("o_orderdate",),
+    )
+    return root
 
 
 def test_zone_map_stats_one_row_per_file_and_consistent(
@@ -52,9 +75,8 @@ def test_zonemap_prune_is_lossless_and_actually_skips(
     filtering gives EXACTLY the full-scan filter result (losslessness
     — the correctness contract), and at least one narrow predicate
     drops files (effectiveness)."""
-    path = _range_layout(spark, sf_dir, tmp_path)
-    stats = zone_map_stats(spark, path, ("o_orderdate",)).cache()
-    full = spark.read.parquet(path)
+    root = _range_table(spark, sf_dir, tmp_path)
+    full = fl_read(spark, root)
     skipped_somewhere = False
     for lo, hi in [
         ("1996-02-01", "1996-04-30"),  # narrow: should prune
@@ -63,13 +85,13 @@ def test_zonemap_prune_is_lossless_and_actually_skips(
     ]:
         lo_ts = dt.datetime.fromisoformat(lo)
         hi_ts = dt.datetime.fromisoformat(hi + " 23:59:59")
-        files, n_total = zonemap_prune_files(
-            stats, "o_orderdate", lo_ts, hi_ts
+        pruned, n_read, n_total = fl_read_pruned(
+            spark, root, {"o_orderdate": (lo_ts, hi_ts)}
         )
         cond = F.col("o_orderdate").between(F.lit(lo_ts), F.lit(hi_ts))
         want = full.where(cond)
-        if files:
-            got = spark.read.parquet(*files).where(cond)
+        if n_read:
+            got = pruned.where(cond)
             assert got.count() == want.count()
             assert (
                 got.agg(F.sum("o_orderkey")).collect()
@@ -77,7 +99,7 @@ def test_zonemap_prune_is_lossless_and_actually_skips(
             )
         else:
             assert want.count() == 0
-        if len(files) < n_total:
+        if n_read < n_total:
             skipped_somewhere = True
     assert skipped_somewhere
 
@@ -85,20 +107,21 @@ def test_zonemap_prune_is_lossless_and_actually_skips(
 def test_zonemap_prune_keeps_null_stats_files(spark, tmp_path):
     """A file whose zone stats are NULL (all-NULL column) must be
     KEPT — pruning may only skip files proven disjoint."""
-    path = str(tmp_path / "nullzones")
+    root = str(tmp_path / "nullzones")
+    # range-split on k: one file holds v in [10, 20], the other only
+    # NULLs
     df = spark.createDataFrame(
-        [(1, 10), (2, 20)], "k int, v int"
-    ).repartition(1)
-    df.write.parquet(path)
-    spark.createDataFrame(
-        [(3, None), (4, None)], "k int, v int"
-    ).repartition(1).write.mode("append").parquet(path)
-    stats = zone_map_stats(spark, path, ("v",))
-    files, n_total = zonemap_prune_files(stats, "v", 100, 200)
+        [(1, 10), (2, 20), (3, None), (4, None)], "k int, v int"
+    ).repartitionByRange(2, "k")
+    fl_init(spark, root, df, key="k", stats_cols=("v",))
+    # the zones come from the footers: the all-NULL chunk has no
+    # min/max, which the footer path records as a NULL zone
+    commit_dir = os.path.dirname(fl_manifest(root)["path"].iloc[0])
+    assert footer_zone_stats(commit_dir, ("k", "v")) is not None
+    kept, n_read, n_total = fl_read_pruned(spark, root, {"v": (100, 200)})
     # the non-null file [10,20] is disjoint from [100,200] -> skipped;
     # the all-NULL file has unknown zone -> kept
-    assert n_total == 2 and len(files) == 1
-    kept = spark.read.parquet(*files)
+    assert n_total == 2 and n_read == 1
     assert {r["k"] for r in kept.collect()} == {3, 4}
 
 
@@ -261,51 +284,14 @@ def test_zonemap_pruned_scan_reads_fewer_files(spark, sf_dir, tmp_path):
     """The pruned read's file list — Spark's own inputFiles() — must
     be a strict subset of the layout for a narrow predicate: the
     skipping happens at scan-planning time, not as a filter."""
-    import datetime as dt
-
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        zone_map_stats,
-        zonemap_prune_files,
+    root = _range_table(spark, sf_dir, tmp_path)
+    pruned, n_read, n_total = fl_read_pruned(
+        spark,
+        root,
+        {"o_orderdate": (dt.datetime(1996, 2, 1), dt.datetime(1996, 4, 30))},
     )
-
-    path = _range_layout(spark, sf_dir, tmp_path)
-    stats = zone_map_stats(spark, path, ("o_orderdate",))
-    files, n_total = zonemap_prune_files(
-        stats,
-        "o_orderdate",
-        dt.datetime(1996, 2, 1),
-        dt.datetime(1996, 4, 30),
-    )
-    pruned = spark.read.parquet(*files)
-    assert 0 < len(pruned.inputFiles()) < n_total
-    assert len(spark.read.parquet(path).inputFiles()) == n_total
-
-
-def test_zone_map_append_equals_full_rebuild(spark, tmp_path):
-    """After an append, zone_map_append(old_stats) must equal a full
-    zone_map_stats rebuild — and must NOT recompute stats for files
-    it already has (idempotent on no-change)."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        zone_map_append,
-        zone_map_stats,
-    )
-
-    path = str(tmp_path / "growing")
-    spark.createDataFrame(
-        [(i, i * 10) for i in range(100)], "k int, v int"
-    ).repartition(2).write.parquet(path)
-    stats0 = zone_map_stats(spark, path, ("v",)).cache()
-    stats0.count()
-    # idempotent when nothing new
-    assert zone_map_append(spark, path, stats0) is stats0
-    spark.createDataFrame(
-        [(i, i * 10) for i in range(100, 150)], "k int, v int"
-    ).repartition(1).write.mode("append").parquet(path)
-    inc = zone_map_append(spark, path, stats0)
-    full = zone_map_stats(spark, path, ("v",))
-    assert sorted(map(tuple, inc.collect())) == sorted(
-        map(tuple, full.collect())
-    )
+    assert 0 < len(pruned.inputFiles()) == n_read < n_total
+    assert len(fl_read(spark, root).inputFiles()) == n_total
 
 
 def test_zorder_layout_prunes_on_both_dimensions(spark, sf_dir, tmp_path):
@@ -313,36 +299,37 @@ def test_zorder_layout_prunes_on_both_dimensions(spark, sf_dir, tmp_path):
     maps prune files; on a date-only range layout, the custkey zone
     map is impotent (every file spans ~the full key range). This is
     the measurable reason q281 z-orders instead of sorting by date."""
-    import datetime as dt
-
     from citybikedatawarehouse_spark.functions.layout import zorder_key
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        zone_map_stats,
-        zonemap_prune_files,
-    )
 
     o = load_table(spark, sf_dir, "orders").withColumn(
         "__day",
         F.datediff(F.to_date("o_orderdate"), F.to_date(F.lit("1970-01-01"))),
     )
-    zpath = str(tmp_path / "zordered")
-    (
-        zorder_key(o, ["o_custkey", "__day"])
+    zroot = str(tmp_path / "zordered")
+    droot = str(tmp_path / "datesorted")
+    layouts = {
+        zroot: zorder_key(o, ["o_custkey", "__day"])
         .repartitionByRange(16, "z_key")
-        .drop("z_key", "__day")
-        .write.parquet(zpath)
-    )
-    dpath = str(tmp_path / "datesorted")
-    o.drop("__day").repartitionByRange(16, "o_orderdate").write.parquet(dpath)
+        .drop("z_key", "__day"),
+        droot: o.drop("__day").repartitionByRange(16, "o_orderdate"),
+    }
+    for root, df in layouts.items():
+        fl_init(
+            spark, root, df, key="o_orderkey",
+            stats_cols=("o_custkey", "o_orderdate"),
+        )
 
     ck_hi = o.agg(F.expr("percentile(o_custkey, 0.1)")).collect()[0][0]
     dt_lo, dt_hi = dt.datetime(1997, 1, 1), dt.datetime(1997, 3, 31)
-    for path, custkey_should_prune in ((zpath, True), (dpath, False)):
-        stats = zone_map_stats(spark, path, ("o_custkey", "o_orderdate"))
-        f_ck, n = zonemap_prune_files(stats, "o_custkey", 1, int(ck_hi))
-        f_dt, _ = zonemap_prune_files(stats, "o_orderdate", dt_lo, dt_hi)
-        assert len(f_dt) < n or path == zpath  # date prunes on its layout
+    for root, custkey_should_prune in ((zroot, True), (droot, False)):
+        _, n_ck, n = fl_read_pruned(
+            spark, root, {"o_custkey": (1, int(ck_hi))}
+        )
+        _, n_dt, _ = fl_read_pruned(
+            spark, root, {"o_orderdate": (dt_lo, dt_hi)}
+        )
+        assert n_dt < n or root == zroot  # date prunes on its layout
         if custkey_should_prune:
-            assert len(f_ck) < n, (path, len(f_ck), n)
+            assert n_ck < n, (root, n_ck, n)
         else:
-            assert len(f_ck) == n, (path, len(f_ck), n)
+            assert n_ck == n, (root, n_ck, n)

@@ -10,13 +10,19 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from citybikedatawarehouse_spark.operators import table_format
 from citybikedatawarehouse_spark.operators.table_format import (
+    fl_compact,
     fl_current_version,
+    fl_delete,
     fl_init,
     fl_manifest,
     fl_merge_upsert,
+    fl_optimize,
     fl_read,
+    fl_read_mor,
     fl_read_pruned,
+    fl_read_pruned_mor,
     fl_table_props,
     fl_vacuum,
     fl_versions,
@@ -240,10 +246,8 @@ def test_float_stats_column_uses_scan_stats(spark, sf_dir, tmp_path):
     scan fallback: the manifest's per-file min/max equal Spark's
     min/max over each file, and a pruned read on the column matches
     the full scan."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        _norm_file_uri,
-    )
     from citybikedatawarehouse_spark.operators.table_format import (
+        _norm_file_uri,
         footer_zone_stats,
     )
 
@@ -408,7 +412,7 @@ def test_fl_stream_sink_e2e(spark, tmp_path):
     assert fl_table_props(root)["last_epoch"] == 2
     # the streaming path maintains the format, not just the data: the
     # current manifest names exactly the files a read opens
-    from citybikedatawarehouse_spark.operators.maintenance import (
+    from citybikedatawarehouse_spark.operators.table_format import (
         _norm_file_uri,
     )
 
@@ -517,3 +521,76 @@ def test_delete_time_travel_applies_version_set(spark, sf_dir, tmp_path):
     _, v2 = fl_delete(spark, root, doomed)
     assert fl_read_mor(spark, root, v1).count() == n_all
     assert fl_read_mor(spark, root, v2).count() == n_all - doomed.count()
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        lambda spark, root: fl_read_mor(spark, root),
+        lambda spark, root: fl_read_pruned_mor(spark, root, {"k": (0, 9)})[0],
+    ],
+    ids=["fl_read_mor", "fl_read_pruned_mor"],
+)
+def test_mor_read_resolves_the_pointer_once(spark, tmp_path, monkeypatch, read):
+    """A commit that lands while a merge-on-read read is being planned
+    must not mix two versions: the files and the delete set both come
+    from the version the read resolved first. The race is injected
+    deterministically — the first pointer read of the table commits
+    a concurrent upsert before returning."""
+    root = str(tmp_path / "race")
+    fl_init(
+        spark, root,
+        spark.createDataFrame([(1, "a"), (2, "x")], "k long, v string"),
+        key="k",
+    )
+    fl_delete(spark, root, spark.createDataFrame([(1,)], "k long"))
+    resolved = fl_current_version(root)
+    real = table_format.fl_current_version
+    raced = []
+
+    def racing(r):
+        v = real(r)
+        if r == root and not raced:
+            raced.append(v)  # set first: the merge's own reads pass through
+            fl_merge_upsert(
+                spark, root,
+                spark.createDataFrame([(1, "b")], "k long, v string"),
+                key="k",
+            )
+        return v
+
+    monkeypatch.setattr(table_format, "fl_current_version", racing)
+    got = {(r["k"], r["v"]) for r in read(spark, root).collect()}
+    monkeypatch.setattr(table_format, "fl_current_version", real)
+    assert raced == [resolved] and fl_current_version(root) != resolved
+    want = {(r["k"], r["v"]) for r in fl_read_mor(spark, root, resolved).collect()}
+    assert want == {(2, "x")}
+    assert got == want
+
+
+@pytest.mark.parametrize("rewrite", ["optimize", "compact"])
+def test_file_size_target_applies_without_zorder(spark, tmp_path, rewrite):
+    """OPTIMIZE and compaction exist to set file sizes, so they honour
+    ``target_rows_per_file`` / ``layout_files`` on a table that has no
+    Z-order spec too — same rows, the requested file count."""
+    root = str(tmp_path / rewrite)
+    fl_init(
+        spark, root,
+        spark.range(0, 400)
+        .select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+        .repartition(8),
+        key="k",
+    )
+    assert len(fl_manifest(root)) == 8
+    before = sorted(map(tuple, fl_read(spark, root).collect()))
+    if rewrite == "optimize":
+        _, packed, total = fl_optimize(
+            spark, root, small_rows=100, target_rows_per_file=1000
+        )
+        assert (packed, total) == (8, 8)
+        want_files = 1
+    else:
+        fl_compact(spark, root, layout_files=2)
+        want_files = 2
+    assert len(fl_manifest(root)) == want_files
+    assert sorted(map(tuple, fl_read(spark, root).collect())) == before

@@ -1,0 +1,61 @@
+"""Guard the table format's on-disk layout: only
+``operators/table_format.py`` may spell the names of a table's
+pointer, manifest directory, props and claim files. Any other module
+that reaches for them bypasses the format's API (``fl_current_version``
+raises ``FileNotFoundError`` on an uninitialized table; ``fl_manifest``
+/ ``fl_table_props`` read a version) and breaks the day the layout
+changes. Docstrings may describe the layout; code may not use it."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+_PKG = pathlib.Path(__file__).resolve().parent.parent / "citybikedatawarehouse_spark"
+_OWNER = "operators/table_format.py"
+_LAYOUT_NAMES = ("_MANIFEST", "_manifests", ".props.json", ".claim")
+
+
+def _docstring_nodes(tree: ast.AST) -> set[int]:
+    ids = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        ):
+            body = node.body
+            if (
+                body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+                and isinstance(body[0].value.value, str)
+            ):
+                ids.add(id(body[0].value))
+    return ids
+
+
+def _layout_constants(path: pathlib.Path) -> list[tuple[int, str]]:
+    tree = ast.parse(path.read_text())
+    docs = _docstring_nodes(tree)
+    return [
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docs
+        and any(name in node.value for name in _LAYOUT_NAMES)
+    ]
+
+
+def test_only_table_format_spells_the_table_layout():
+    stray = {}
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = str(path.relative_to(_PKG))
+        if rel == _OWNER:
+            continue
+        hits = _layout_constants(path)
+        if hits:
+            stray[rel] = hits
+    assert not stray, f"table layout names outside {_OWNER}: {stray}"
+    # the scan must actually see the names where they belong
+    assert _layout_constants(_PKG / _OWNER)
