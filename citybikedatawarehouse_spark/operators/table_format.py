@@ -34,7 +34,16 @@ keys of a 100 TB table costs those files, not a full rewrite:
   with O_EXCL marker files and the flip verifies the pointer still
   names the writer's parent, so two concurrent committers cannot
   silently lose an update — exactly one wins, the loser gets
-  ``CommitConflictError`` and its orphan stays invisible to readers.
+  ``CommitConflictError`` and its orphan stays invisible to readers;
+- **every commit records what it did**: its props carry
+  ``operation`` (init, merge, delete, compact, optimize, set_zorder,
+  add_constraint, drop_constraint, restore, add_column,
+  rename_column, clone) and ``data_change`` — False for the
+  layout-only operations (compact, optimize, set_zorder and the two
+  constraint commits), which leave ``fl_read_mor`` unchanged, so the
+  change feed steps over them without reading a file (Delta's
+  ``dataChange=false`` on OPTIMIZE). A version written before the
+  flag existed counts as a data change.
 
 Layout on disk::
 
@@ -558,13 +567,33 @@ def fl_table_props(root: str, version: str | None = None) -> dict:
         return json.load(f)
 
 
+# operations that move or re-describe rows without changing what
+# fl_read_mor returns: their commits record data_change=False
+_LAYOUT_ONLY_OPS = frozenset(
+    {"compact", "optimize", "set_zorder", "add_constraint", "drop_constraint"}
+)
+
+
 def _write_manifest(
-    root: str, version: str, manifest: pd.DataFrame, props: dict
+    root: str,
+    version: str,
+    manifest: pd.DataFrame,
+    props: dict,
+    *,
+    operation: str,
 ) -> None:
     """Stage a version's manifest + props. NOT visible to readers
     until the pointer flips — both artifacts are keyed by the
     claimed version name, so a crashed or conflicted writer leaves
-    only orphans."""
+    only orphans. Stamps the commit's ``operation`` and
+    ``data_change`` over whatever ``props`` carried: every commit
+    copies its parent's props forward, so a flag left to each caller
+    would be inherited by the next commit."""
+    props = {
+        **props,
+        "operation": operation,
+        "data_change": operation not in _LAYOUT_ONLY_OPS,
+    }
     manifest.reset_index(drop=True).to_parquet(
         _manifest_file(root, version), index=False
     )
@@ -633,6 +662,45 @@ def _schema_additions(
         {"id": next_id + i, "name": f.name, "type": f.dataType.simpleString()}
         for i, f in enumerate(new)
     ]
+
+
+def _store_assign(
+    spark: SparkSession, root: str, props: dict, df: DataFrame
+) -> DataFrame:
+    """``df`` with every table column cast to the table's type, by
+    Spark's store-assignment rule (the one ``INSERT INTO`` applies): a
+    numeric column of another width is cast, and under ANSI an
+    overflowing value fails the first action over it; a pair Spark
+    would not store-assign (string into bigint) raises ``ValueError``
+    naming the column. A commit's files must carry the table's
+    physical types — one INT64 file under an INT column makes every
+    later read of the table fail. Columns the table lacks pass
+    through; matching types return ``df`` itself, the plan unchanged.
+    Driver-side analysis only, zero jobs."""
+    types = {f["name"]: f["type"] for f in props["schema"]}
+    if all(
+        types.get(f.name) in (None, f.dataType.simpleString())
+        for f in df.schema
+    ):
+        return df  # the common case, decided without a JVM call
+    table = {f.name: f.dataType for f in _empty_relation(spark, props).schema}
+    jvm = spark._jvm
+    to_jvm = jvm.org.apache.spark.sql.types.DataType.fromJson
+    can_assign = jvm.org.apache.spark.sql.catalyst.expressions.Cast.canANSIStoreAssign
+    sel = []
+    for f in df.schema:
+        want = table.get(f.name, f.dataType)
+        if want == f.dataType:
+            sel.append(F.col(f.name))
+            continue
+        if not can_assign(to_jvm(f.dataType.json()), to_jvm(want.json())):
+            raise ValueError(
+                f"filelist table {root}: cannot store column {f.name!r} "
+                f"of type {f.dataType.simpleString()} into "
+                f"{want.simpleString()}"
+            )
+        sel.append(F.col(f.name).cast(want).alias(f.name))
+    return df.select(*sel)
 
 
 def _read_files(
@@ -773,7 +841,7 @@ def fl_init(
     manifest = _stats_of_commit(
         spark, cdir, tuple(props["stats_cols"]), _schema_sig(props["schema"])
     )
-    _write_manifest(root, version, manifest, props)
+    _write_manifest(root, version, manifest, props, operation="init")
     manifest_commit_cas(root, version, parent=None)
     return version
 
@@ -1052,7 +1120,10 @@ def fl_merge_upsert(
     after ``fl_add_column``), and a table column that ``updates``
     lacks or carries with another type — a rename or a type change
     upstream — raises ``ValueError`` naming it instead of dropping
-    it. A schema change alone still commits.
+    it. A schema change alone still commits. Without it, incoming
+    columns are cast to the table's types first (``_store_assign``,
+    Spark's store-assignment rule), so a commit never writes a file
+    whose physical type disagrees with the table's.
 
     Commit = claim version -> stage new files + manifest + props ->
     CAS pointer flip (conflict -> ``CommitConflictError``, staged
@@ -1091,7 +1162,7 @@ def fl_merge_upsert(
     if added:
         props = {**props, "schema": props["schema"] + added}
     zcols = list(props.get("zorder_by") or [])
-    updates = updates.persist()
+    updates = _store_assign(spark, root, props, updates).persist()
     merged_cached = None
     staged = None
     try:
@@ -1172,7 +1243,9 @@ def fl_merge_upsert(
             new_props = {**props, "delete_dirs": dels, "parent": parent}
             if extra_props:
                 new_props.update(extra_props)
-            _write_manifest(root, version, manifest, new_props)
+            _write_manifest(
+                root, version, manifest, new_props, operation="merge"
+            )
             if _pause_before_commit is not None:
                 _pause_before_commit()
             if _crash_before_commit:
@@ -1554,7 +1627,10 @@ def fl_delete(
         props.get("delete_dirs") or [],
     )
     new_props = {**props, "delete_dirs": dirs, "parent": parent}
-    _write_manifest(root, version, fl_manifest(root, parent), new_props)
+    _write_manifest(
+        root, version, fl_manifest(root, parent), new_props,
+        operation="delete",
+    )
     if _crash_before_commit:
         raise RuntimeError(
             "fl_delete: injected crash between sidecar write and "
@@ -1616,7 +1692,7 @@ def fl_compact(
     finally:
         if cached:
             df.unpersist()
-    _write_manifest(root, version, manifest, props)
+    _write_manifest(root, version, manifest, props, operation="compact")
     manifest_commit_cas(root, version, parent)
     return version
 
@@ -1655,6 +1731,7 @@ def fl_add_constraint(
         version,
         fl_manifest(root, parent),
         {**props, "constraints": constraints, "parent": parent},
+        operation="add_constraint",
     )
     manifest_commit_cas(root, version, parent)
     return version
@@ -1677,6 +1754,7 @@ def fl_drop_constraint(spark: SparkSession, root: str, name: str) -> str:
         version,
         fl_manifest(root, parent),
         {**props, "constraints": constraints, "parent": parent},
+        operation="drop_constraint",
     )
     manifest_commit_cas(root, version, parent)
     return version
@@ -1736,7 +1814,10 @@ def fl_optimize(
         spark, cdir, tuple(props["stats_cols"]), _schema_sig(props["schema"])
     )
     manifest = pd.concat([big, fresh], ignore_index=True)
-    _write_manifest(root, version, manifest, {**props, "parent": parent})
+    _write_manifest(
+        root, version, manifest, {**props, "parent": parent},
+        operation="optimize",
+    )
     manifest_commit_cas(root, version, parent)
     return version, len(small), len(m)
 
@@ -1790,7 +1871,7 @@ def fl_set_zorder(
         "parent": parent,
     }
     version = _claim_version(root)
-    _write_manifest(root, version, m, new_props)
+    _write_manifest(root, version, m, new_props, operation="set_zorder")
     manifest_commit_cas(root, version, parent)
     return version
 
@@ -1810,8 +1891,86 @@ def fl_restore(spark: SparkSession, root: str, version: str) -> str:
     m = fl_manifest(root, version)  # raises if vacuumed/unknown
     props = {**fl_table_props(root, version), "parent": parent}
     new_version = _claim_version(root)
-    _write_manifest(root, new_version, m, props)
+    _write_manifest(root, new_version, m, props, operation="restore")
     manifest_commit_cas(root, new_version, parent)
+    return new_version
+
+
+def fl_clone(
+    src_root: str,
+    dst_root: str,
+    version: str,
+    extra_props: dict | None = None,
+) -> str:
+    """DEEP CLONE (Delta ``CREATE TABLE ... DEEP CLONE ... VERSION AS
+    OF``): ``dst_root`` becomes a new table whose first version is
+    ``src_root``'s ``version`` — its data files and delete dirs are
+    copied byte for byte under the clone commit's own data and delete
+    dir names (so later commits to the clone never collide with a
+    copied name), its manifest rows (per-file stats, write-time
+    ``schema_cols``) are kept with the paths rewritten, and its props
+    keep the schema with its field ids, ``key``, ``stats_cols``,
+    ``zorder_by`` and ``layout_files``. Constraints and other
+    source-only props are not carried; ``extra_props`` rides the
+    commit. Files are immutable, so the copy is already laid out: no
+    Spark job, one CAS flip. A manifest path or delete dir outside
+    ``src_root`` raises ``ValueError``; an initialized ``dst_root``
+    raises ``CommitConflictError``. Returns the clone's version."""
+    try:
+        fl_current_version(dst_root)
+    except FileNotFoundError:
+        pass
+    else:
+        raise CommitConflictError(
+            f"clone into {dst_root}: the table is already initialized"
+        )
+    props = fl_table_props(src_root, version)
+    m = fl_manifest(src_root, version)
+    dels = props.get("delete_dirs") or []
+    src_abs = os.path.abspath(src_root)
+    outside = [
+        p
+        for p in [*m["path"], *dels]
+        if os.path.commonpath([src_abs, os.path.abspath(p)]) != src_abs
+    ]
+    if outside:
+        raise ValueError(
+            f"clone of {src_root} {version}: {outside[:3]} lie outside "
+            f"the table root"
+        )
+    os.makedirs(os.path.join(dst_root, "data"), exist_ok=True)
+    new_version = _claim_version(dst_root)
+    cdir = _commit_dir(dst_root, new_version)
+    os.makedirs(cdir)
+    paths = []
+    for p in m["path"]:
+        # prefixed with the source commit dir: part names are unique
+        # within a commit dir, not across them
+        q = os.path.join(
+            cdir,
+            f"{os.path.basename(os.path.dirname(p))}_{os.path.basename(p)}",
+        )
+        shutil.copyfile(p, q)
+        paths.append(q)
+    new_dels = []
+    for i, d in enumerate(dels):
+        q = _delete_dir(dst_root, f"{new_version}_{i}")
+        shutil.copytree(d, q)
+        new_dels.append(q)
+    new_props = {
+        **{
+            k: props[k]
+            for k in ("key", "stats_cols", "zorder_by", "layout_files", "schema")
+        },
+        "delete_dirs": new_dels,
+        "parent": None,
+        **(extra_props or {}),
+    }
+    _write_manifest(
+        dst_root, new_version, m.assign(path=paths), new_props,
+        operation="clone",
+    )
+    manifest_commit_cas(dst_root, new_version, parent=None)
     return new_version
 
 
@@ -1845,7 +2004,10 @@ def fl_add_column(
     }
     version = _claim_version(root)
     new_props = {**props, "schema": schema + [new_field], "parent": parent}
-    _write_manifest(root, version, fl_manifest(root, parent), new_props)
+    _write_manifest(
+        root, version, fl_manifest(root, parent), new_props,
+        operation="add_column",
+    )
     manifest_commit_cas(root, version, parent)
     return version
 
@@ -1903,7 +2065,7 @@ def fl_rename_column(
             columns={f"min_{old}": f"min_{new}", f"max_{old}": f"max_{new}"}
         )
     version = _claim_version(root)
-    _write_manifest(root, version, m, new_props)
+    _write_manifest(root, version, m, new_props, operation="rename_column")
     manifest_commit_cas(root, version, parent)
     return version
 
@@ -1911,6 +2073,32 @@ def fl_rename_column(
 # ---------------------------------------------------------------------------
 # CDC read: change feed between two committed versions
 # ---------------------------------------------------------------------------
+
+
+def fl_skip_layout_only(root: str, from_version: str, to_version: str) -> str:
+    """``from_version`` advanced over the layout-only commits
+    (``data_change=False``) that follow it on the committed path to
+    ``to_version``: the newest version of that path whose MOR state is
+    provably ``from_version``'s. ``from_version`` itself when the next
+    commit changes data, or when it is not an ancestor of
+    ``to_version``. Walks parent pointers: O(commits between) props
+    reads, no Spark job."""
+    path: list[tuple[str, bool]] = []
+    v: str | None = to_version
+    while v != from_version:
+        if v is None:
+            return from_version
+        try:
+            props = fl_table_props(root, v)
+        except FileNotFoundError:  # vacuumed ancestry
+            return from_version
+        path.append((v, props.get("data_change", True)))
+        v = props.get("parent")
+    for v, data_change in reversed(path):
+        if data_change:
+            break
+        from_version = v
+    return from_version
 
 
 def fl_changes(
@@ -1939,16 +2127,36 @@ def fl_changes(
     rows carry the key's FROM-version payload — an intermediate
     update that was itself deleted before ``to_version`` is invisible
     to the diff, exactly as in Delta's CDF when reading across the
-    same range. U rows carry the new payload. Scale shape: O(changed
-    files + delete deltas) scan,
-    one key-partitioned full-outer join of the two changed-region
-    images; never O(table)."""
+    same range. U rows carry the new payload.
+
+    Layout-only commits are free: ``from_version`` first advances
+    over the ``data_change=False`` commits that follow it toward
+    ``to_version`` (``fl_skip_layout_only``), so a compaction at the
+    start of the range is never diffed file by file, and a range of
+    nothing else — or ``from_version == to_version`` — returns the
+    empty typed (op, key, payload) relation without reading a file
+    or running a job.
+
+    Scale shape: O(changed files + delete deltas) scan, one
+    key-partitioned full-outer join of the two changed-region images;
+    never O(table)."""
     if to_version is None:
         to_version = fl_current_version(root)
+    from_version = fl_skip_layout_only(root, from_version, to_version)
     props_new = fl_table_props(root, to_version)
-    props_old = fl_table_props(root, from_version)
     key = props_new["key"]
     payload = [f["name"] for f in props_new["schema"] if f["name"] != key]
+    if from_version == to_version:
+        # constant-false filter: the optimizer folds it to an empty
+        # local relation, which collects without a Spark job
+        types = {f["name"]: f["type"] for f in props_new["schema"]}
+        cols = ", ".join(
+            f"CAST(NULL AS {t}) AS `{c}`"
+            for c, t in [("op", "string")]
+            + [(c, types[c]) for c in (key, *payload)]
+        )
+        return spark.sql(f"SELECT {cols} WHERE false")
+    props_old = fl_table_props(root, from_version)
     m_old = fl_manifest(root, from_version)
     m_new = fl_manifest(root, to_version)
     old_paths, new_paths = set(m_old["path"]), set(m_new["path"])

@@ -2935,11 +2935,11 @@ def q293_fl_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer: the q292 history (init, band MERGE + tail inserts, MOR
     delete of %10==7, re-insert of %50==7) is replicated onto a SECOND
     file-list table two source commits per batch — the first batch
-    ``fl_init``s the replica from the source snapshot at its last
-    version; the next applies the NET diff of the remaining two
-    commits as ONE fused replica commit (D keys become its delete
-    set, I/U rows its merge, one pointer flip), tagged with the
-    source version it reproduces. The replica is itself a
+    ``fl_clone``s the source version it ends at (its committed files
+    copied, no Spark job); the next applies the NET diff of the
+    remaining two commits as ONE fused replica commit (D keys become
+    its delete set, I/U rows its merge, one pointer flip), tagged
+    with the source version it reproduces. The replica is itself a
     transactional table whose every version is an exact source state.
 
     The oracle derives the replica's final state purely relationally

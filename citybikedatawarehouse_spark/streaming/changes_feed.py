@@ -28,6 +28,16 @@ replica commit tagged with the source version it reproduces. Every
 replica version is then an exact source state, and catching up costs
 O(batches) replica commits rather than two per source commit.
 
+Both halves take from metadata what the table already records. A
+layout-only source commit (``data_change=False``: compaction,
+OPTIMIZE, cluster-spec and constraint changes) leaves the
+merge-on-read state unchanged, so ``fl_changes`` steps over it: the
+cursor's batch for a compaction is empty and runs no Spark job, and
+a replication batch of nothing else acks with no replica commit. A
+fresh replica is seeded by ``fl_clone`` — the source version's
+immutable, already laid-out files copied under the replica's names —
+instead of re-reading and rewriting the snapshot.
+
 Delivery contract: the offset is persisted AFTER the consumer's step
 returns (at-least-once); a step that is idempotent per
 ``_commit_version`` — e.g. an epoch-keyed overwrite sink, or a MERGE
@@ -281,11 +291,19 @@ def replicate_changes(
     lands on the replica as ONE atomic commit tagged
     ``replicated_from = target``:
 
-    - the first batch ``fl_init``s the replica from the source's MOR
-      snapshot AT ``target`` with that version's key/stats/zorder/
-      layout props — no replay of the initial snapshot plus each diff;
-    - every later batch applies ``fl_changes(src, tag, target)``, the
-      NET diff from the version the replica's tag names, as one fused
+    - the first batch ``fl_clone``s the source version ``target``
+      into the empty replica: its data files and delete dirs are
+      copied, its manifest stats, field ids and key/stats/zorder/
+      layout props kept, one pointer flip, no Spark job — no replay
+      of the initial snapshot plus each diff, and no rewrite of
+      files that are immutable and already laid out;
+    - a later batch whose source commits are all layout-only
+      (``data_change=False``, e.g. a compaction) is acked with no
+      replica commit and no job: the tag lags, but the two MOR states
+      agree;
+    - every other batch applies ``fl_changes(src, tag, target)``, the
+      NET diff from the version the replica's tag names (advanced
+      over the layout-only commits that follow it), as one fused
       ``fl_merge_upsert``: D keys form the commit's delete set, I/U
       rows its merge, source columns the replica lacks are appended
       (``merge_schema``), one CAS pointer flip publishes all of it.
@@ -293,8 +311,7 @@ def replicate_changes(
     So every replica version is the exact state of the source version
     its tag names — no reader sees a half-applied batch — and catching
     up costs O(batches) replica commits, not O(commits). An empty net
-    diff (e.g. a compaction-only batch) commits nothing: the tag lags
-    but the two MOR states agree.
+    diff commits nothing either.
 
     Delivery contract: the checkpoint offset acks AFTER the commit
     (at-least-once), and each diff starts from the replica's own tag,
@@ -309,11 +326,11 @@ def replicate_changes(
     commits the offset advanced over."""
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_changes,
+        fl_clone,
         fl_current_version,
-        fl_init,
         fl_lineage,
         fl_merge_upsert,
-        fl_read_mor,
+        fl_skip_layout_only,
         fl_table_props,
     )
 
@@ -328,8 +345,6 @@ def replicate_changes(
             break
         take = pending[:versions_per_batch]
         target = take[-1]
-        props = fl_table_props(src_root, target)
-        key = props["key"]
         tag = {REPLICATED_FROM: target}
         try:
             fl_current_version(dst_root)
@@ -337,16 +352,7 @@ def replicate_changes(
         except FileNotFoundError:  # the replica was never initialized
             fresh = True
         if fresh:
-            fl_init(
-                spark,
-                dst_root,
-                fl_read_mor(spark, src_root, target),
-                key=key,
-                stats_cols=tuple(props.get("stats_cols", [])),
-                zorder_by=tuple(props.get("zorder_by", [])),
-                layout_files=props.get("layout_files", 16),
-                extra_props=tag,
-            )
+            fl_clone(src_root, dst_root, target, extra_props=tag)
         else:
             base = fl_table_props(dst_root).get(REPLICATED_FROM)
             if base is None:
@@ -354,9 +360,16 @@ def replicate_changes(
                     f"replica {dst_root} has no {REPLICATED_FROM!r} tag "
                     f"— it was not written by replicate_changes"
                 )
-            # a target at or before the tag was already committed by a
-            # run whose ack was lost: nothing to apply
+            # nothing to apply when the target is at or before the tag
+            # (committed by a run whose ack was lost), nor when every
+            # source commit since the tag is layout-only
             if target in _after(src_root, lineage, base, "replica tag"):
+                base = fl_skip_layout_only(src_root, base, target)
+            else:
+                base = target
+            if base != target:
+                props = fl_table_props(src_root, target)
+                key = props["key"]
                 cols = [f["name"] for f in props["schema"]]
                 # persisted: the merge's aggregate materializes the
                 # diff once, the delete staging reads it from cache

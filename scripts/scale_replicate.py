@@ -21,7 +21,10 @@ Measured per shape:
   MOR state into a fresh table.
 
 Measured shape (honest; measured with the per-commit replication
-pump that preceded net-diff batching, not re-measured since):
+pump that preceded net-diff batching, not re-measured since — nor
+after the replica warm-up became an ``fl_clone`` file copy and
+layout-only source commits became free; ``full_copy_s`` still times
+the ``fl_init`` rewrite of the MOR state, not ``fl_clone``):
 incremental is ~FLAT across N (its cost is ~25 fixed-latency local
 Spark jobs across the 3 diffs and the replica's own transactional
 commits — table-size-independent), while

@@ -22,3 +22,28 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     df = QUERIES[name](spark, sf_dir)
     assert df.columns  # schema resolves
     assert df.count() >= 0
+
+
+def test_q281_oracle_parity_at_sf001(spark, sf_dir, monkeypatch):
+    """q281's customer range covers every customer at sf0.001, so there
+    it prunes by date alone. At sf0.01 the oracle must still match and
+    the customer zones must prune too: the two-predicate read opens
+    fewer files than the date predicate alone would."""
+    import os
+
+    from citybikedatawarehouse_spark.operators import table_format
+
+    name = "q281_zorder_zonemap_prune"
+    real, reads = table_format.fl_read_pruned, []
+
+    def spy(spark, root, preds, *a, **kw):
+        out = real(spark, root, preds, *a, **kw)
+        by_date = real(spark, root, {"o_orderdate": preds["o_orderdate"]})
+        reads.append((out[1], by_date[1]))
+        return out
+
+    monkeypatch.setattr(table_format, "fl_read_pruned", spy)
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    compare(spark, name, QUERIES[name], ORACLES[name], sf001)
+    ((n_read, n_by_date),) = reads
+    assert n_read < n_by_date

@@ -594,3 +594,87 @@ def test_file_size_target_applies_without_zorder(spark, tmp_path, rewrite):
         want_files = 2
     assert len(fl_manifest(root)) == want_files
     assert sorted(map(tuple, fl_read(spark, root).collect())) == before
+
+
+def test_merge_casts_incoming_columns_to_table_types(spark, tmp_path):
+    """Rows typed wider than the table (bigint into an int column) are
+    stored in the table's type, by Spark's store-assignment rule, so
+    the table stays readable after both the pure-append and the
+    touched-file merge path. An overflowing value fails the merge with
+    nothing committed, and a pair Spark would not store-assign is
+    refused."""
+    root = str(tmp_path / "cast")
+    fl_init(
+        spark, root,
+        spark.createDataFrame([(1, 10), (2, 20)], "k bigint, v int"), key="k",
+    )
+    fl_merge_upsert(
+        spark, root, spark.createDataFrame([(5, 50)], "k bigint, v bigint"),
+        key="k",
+    )
+    fl_merge_upsert(
+        spark, root, spark.createDataFrame([(1, 11)], "k int, v bigint"),
+        key="k",
+    )
+    got = fl_read(spark, root)
+    assert got.schema["v"].dataType.simpleString() == "int"
+    assert sorted(map(tuple, got.collect())) == [(1, 11), (2, 20), (5, 50)]
+
+    head = fl_current_version(root)
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        fl_merge_upsert(
+            spark, root,
+            spark.createDataFrame([(6, 1 << 40)], "k bigint, v bigint"),
+            key="k",
+        )
+    with pytest.raises(ValueError, match="cannot store column 'v'"):
+        fl_merge_upsert(
+            spark, root,
+            spark.createDataFrame([(6, "x")], "k bigint, v string"), key="k",
+        )
+    assert fl_current_version(root) == head
+
+
+def test_commits_record_operation_and_data_change(spark, tmp_path):
+    """Every commit stamps its own ``operation`` and ``data_change``
+    (False only for the layout-only operations), never the value its
+    parent's props carried forward."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_add_column,
+        fl_add_constraint,
+        fl_clone,
+        fl_drop_constraint,
+        fl_lineage,
+        fl_rename_column,
+        fl_restore,
+        fl_set_zorder,
+    )
+
+    root = str(tmp_path / "ops")
+    df = spark.range(0, 40).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
+    )
+    v1 = fl_init(spark, root, df.repartition(2), key="k")
+    fl_merge_upsert(spark, root, df.where("k < 3"), key="k")
+    fl_delete(spark, root, df.where("k = 4"))
+    fl_compact(spark, root, layout_files=2)
+    fl_optimize(spark, root, small_rows=1000)
+    fl_set_zorder(spark, root, ("k",))
+    fl_add_constraint(spark, root, "v_nonneg", "v >= 0")
+    fl_drop_constraint(spark, root, "v_nonneg")
+    fl_add_column(spark, root, "note", "string")
+    fl_rename_column(spark, root, "v", "w")
+    fl_restore(spark, root, v1)
+    clone = str(tmp_path / "ops_clone")
+    fl_clone(root, clone, fl_current_version(root))
+
+    props = [fl_table_props(root, v) for v in fl_lineage(root)]
+    props.append(fl_table_props(clone))
+    got = [(p["operation"], p["data_change"]) for p in props]
+    assert got == [
+        ("init", True), ("merge", True), ("delete", True),
+        ("compact", False), ("optimize", False), ("set_zorder", False),
+        ("add_constraint", False), ("drop_constraint", False),
+        ("add_column", True), ("rename_column", True), ("restore", True),
+        ("clone", True),
+    ]
