@@ -34,7 +34,10 @@ keys of a 100 TB table costs those files, not a full rewrite:
   with O_EXCL marker files and the flip verifies the pointer still
   names the writer's parent, so two concurrent committers cannot
   silently lose an update — exactly one wins, the loser gets
-  ``CommitConflictError`` and its orphan stays invisible to readers;
+  ``CommitConflictError`` and its orphan stays invisible to readers.
+  Every operation publishes through ONE path, ``_commit`` (stage
+  manifest + props, then flip), and writes its data files through
+  ONE path, ``_write_files`` (layout, write, footer stats);
 - **every commit records what it did**: its props carry
   ``operation`` (init, merge, delete, compact, optimize, set_zorder,
   add_constraint, drop_constraint, restore, add_column,
@@ -74,6 +77,7 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
 import pandas as pd
 
@@ -464,12 +468,7 @@ def footer_zone_stats(path: str, cols: tuple[str, ...]):
             rec[f"min_{c}"] = mn
             rec[f"max_{c}"] = mx
         recs.append(rec)
-    cols_order = ["path", "n_rows"] + [
-        f"{m}_{c}" for c in cols for m in ("min", "max")
-    ]
-    if not recs:
-        return pd.DataFrame(columns=cols_order)
-    return pd.DataFrame(recs)[cols_order]
+    return pd.DataFrame(recs, columns=_zone_cols(cols))
 
 
 def zone_map_stats(
@@ -525,21 +524,30 @@ def fl_lineage(root: str) -> list[str]:
     replays: every adjacent pair is one committed diff. O(versions)
     driver-side metadata reads; stops at the oldest version still on
     disk (vacuumed ancestry is simply not replayable)."""
-    chain: list[str] = []
-    v: str | None = fl_current_version(root)
-    while v is not None:
-        try:
-            props = fl_table_props(root, v)
-        except FileNotFoundError:
-            break  # this ancestor was vacuumed: not replayable
-        chain.append(v)
-        v = props.get("parent")
+    chain = [v for v, _ in _ancestry(root, fl_current_version(root))]
     chain.reverse()
     return chain
 
 
+def _ancestry(root: str, version: str | None):
+    """Yield (version, props) for ``version`` and then each ancestor,
+    newest first, by parent pointers; stops after the first commit or
+    at the first ancestor no longer on disk (vacuumed)."""
+    while version is not None:
+        try:
+            props = fl_table_props(root, version)
+        except FileNotFoundError:
+            return
+        yield version, props
+        version = props.get("parent")
+
+
 def _manifest_file(root: str, version: str) -> str:
     return os.path.join(root, _MANIFEST_DIR, f"{version}.parquet")
+
+
+def _props_file(root: str, version: str) -> str:
+    return os.path.join(root, _MANIFEST_DIR, f"{version}.props.json")
 
 
 def fl_manifest(root: str, version: str | None = None) -> pd.DataFrame:
@@ -562,8 +570,7 @@ def fl_manifest(root: str, version: str | None = None) -> pd.DataFrame:
 def fl_table_props(root: str, version: str | None = None) -> dict:
     if version is None:
         version = fl_current_version(root)
-    p = os.path.join(root, _MANIFEST_DIR, f"{version}.props.json")
-    with open(p) as f:
+    with open(_props_file(root, version)) as f:
         return json.load(f)
 
 
@@ -574,33 +581,60 @@ _LAYOUT_ONLY_OPS = frozenset(
 )
 
 
-def _write_manifest(
+def _commit(
     root: str,
-    version: str,
+    parent: str | None,
     manifest: pd.DataFrame,
     props: dict,
     *,
     operation: str,
-) -> None:
-    """Stage a version's manifest + props. NOT visible to readers
-    until the pointer flips — both artifacts are keyed by the
-    claimed version name, so a crashed or conflicted writer leaves
-    only orphans. Stamps the commit's ``operation`` and
-    ``data_change`` over whatever ``props`` carried: every commit
-    copies its parent's props forward, so a flag left to each caller
-    would be inherited by the next commit."""
+    version: str | None = None,
+    before_flip=None,
+) -> str:
+    """THE commit path: stage a version's manifest + props, then CAS
+    the pointer from ``parent`` (None = uninitialized table) to it.
+    Claims a version unless the caller already claimed one to write
+    its files under. Staged artifacts are keyed by the version name,
+    so a writer that crashes (``before_flip`` is where the test hooks
+    inject one) or loses the race leaves only invisible orphans.
+    ``parent``, ``operation`` and ``data_change`` are stamped over
+    whatever ``props`` carried: every commit copies its parent's props
+    forward, so a field left to each caller would be inherited by the
+    next commit. Returns the committed version."""
+    if version is None:
+        version = _claim_version(root)
     props = {
         **props,
+        "parent": parent,
         "operation": operation,
         "data_change": operation not in _LAYOUT_ONLY_OPS,
     }
     manifest.reset_index(drop=True).to_parquet(
         _manifest_file(root, version), index=False
     )
-    with open(
-        os.path.join(root, _MANIFEST_DIR, f"{version}.props.json"), "w"
-    ) as f:
+    with open(_props_file(root, version), "w") as f:
         json.dump(props, f)
+    if before_flip is not None:
+        before_flip()
+    manifest_commit_cas(root, version, parent)
+    return version
+
+
+def _test_hooks(op: str, crash: bool, pause=None):
+    """``before_flip`` for an operation's test hooks: pause, crash."""
+    if not crash and pause is None:
+        return None
+
+    def before_flip():
+        if pause is not None:
+            pause()
+        if crash:
+            raise RuntimeError(
+                f"{op}: injected crash between manifest write and "
+                f"pointer flip (test hook)"
+            )
+
+    return before_flip
 
 
 # ---------------------------------------------------------------------------
@@ -626,9 +660,16 @@ def _schema_sig(fields: list[dict]) -> str:
     return json.dumps([[f["id"], f["name"]] for f in fields])
 
 
-def _empty_relation(spark: SparkSession, props: dict) -> DataFrame:
-    ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in props["schema"])
-    return spark.createDataFrame([], ddl)
+def _empty_relation(spark: SparkSession, fields: list[dict]) -> DataFrame:
+    """An empty relation with ``fields`` (``{"name", "type"}`` dicts,
+    the schema-props shape) as its columns. A constant-false filter
+    that the optimizer folds to an empty local relation, so it
+    collects without a Spark job; each type string is parsed as a
+    data type on its own and each name is only an alias, so an
+    invalid type raises and no text is spliced into SQL."""
+    return spark.range(1).where(F.lit(False)).select(
+        *[F.lit(None).cast(f["type"]).alias(f["name"]) for f in fields]
+    )
 
 
 def _schema_additions(
@@ -641,7 +682,7 @@ def _schema_additions(
     type change upstream — and raises instead of silently dropping
     data. Driver-side analysis only, zero jobs."""
     incoming = {f.name: f.dataType for f in df.schema.fields}
-    for f in _empty_relation(spark, props).schema.fields:
+    for f in _empty_relation(spark, props["schema"]).schema.fields:
         if f.name not in incoming:
             raise ValueError(
                 f"filelist table {root}: column {f.name!r} is missing "
@@ -683,13 +724,13 @@ def _store_assign(
         for f in df.schema
     ):
         return df  # the common case, decided without a JVM call
-    table = {f.name: f.dataType for f in _empty_relation(spark, props).schema}
+    table = _empty_relation(spark, props["schema"]).schema
     jvm = spark._jvm
     to_jvm = jvm.org.apache.spark.sql.types.DataType.fromJson
     can_assign = jvm.org.apache.spark.sql.catalyst.expressions.Cast.canANSIStoreAssign
     sel = []
     for f in df.schema:
-        want = table.get(f.name, f.dataType)
+        want = table[f.name].dataType if f.name in types else f.dataType
         if want == f.dataType:
             sel.append(F.col(f.name))
             continue
@@ -715,7 +756,7 @@ def _read_files(
     written), a handful; each group is one ordinary pruned parquet
     scan, so pushdown/pruning per group is untouched."""
     if len(m_subset) == 0:
-        return _empty_relation(spark, props)
+        return _empty_relation(spark, props["schema"])
     cur = props["schema"]
     cur_sig = _schema_sig(cur)
     if "schema_cols" not in m_subset.columns:
@@ -735,16 +776,13 @@ def _read_files(
             else:
                 sel.append(F.col(phys).alias(f["name"]))
         parts.append(dfg.select(*sel))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
-def _manifest_cols_order(cols: tuple[str, ...]) -> list[str]:
+def _zone_cols(cols: tuple[str, ...]) -> list[str]:
     return ["path", "n_rows"] + [
         f"{m}_{c}" for c in cols for m in ("min", "max")
-    ] + ["schema_cols"]
+    ]
 
 
 def _stats_of_commit(
@@ -763,29 +801,53 @@ def _stats_of_commit(
     schema signature. The column types select the scan path: floats,
     strings, or a writer that dropped stats (``footer_zone_stats``
     returns None)."""
-    fast = footer_zone_stats(commit_dir, cols)
-    if fast is not None:
-        fast = fast.copy()
-        fast["schema_cols"] = schema_sig
-        cols_order = _manifest_cols_order(cols)
-        if len(fast) == 0:
-            return pd.DataFrame(columns=cols_order)
-        return fast[cols_order]
-    rows = zone_map_stats(spark, commit_dir, cols).collect()
-    recs = []
-    for r in rows:
-        d = r.asDict()
-        d["path"] = _norm_file_uri(d.pop("file"))
-        d["schema_cols"] = schema_sig
-        recs.append(d)
-    cols_order = _manifest_cols_order(cols)
-    if not recs:
-        return pd.DataFrame(columns=cols_order)
-    return pd.DataFrame(recs)[cols_order]
+    stats = footer_zone_stats(commit_dir, cols)
+    if stats is None:
+        rows = zone_map_stats(spark, commit_dir, cols).collect()
+        recs = [r.asDict() for r in rows]
+        for d in recs:
+            d["path"] = _norm_file_uri(d.pop("file"))
+        stats = pd.DataFrame(recs, columns=_zone_cols(cols))
+    return stats.assign(schema_cols=schema_sig)[
+        [*_zone_cols(cols), "schema_cols"]
+    ]
 
 
 def _commit_dir(root: str, version: str) -> str:
     return os.path.join(root, "data", f"c_{version}")
+
+
+def _write_files(
+    spark: SparkSession,
+    root: str,
+    version: str,
+    df: DataFrame,
+    props: dict,
+    *,
+    bounds: dict[str, tuple[int, int]] | None = None,
+    pack: bool = False,
+    persist: bool = False,
+) -> pd.DataFrame:
+    """THE data-file write of a commit: ``df`` laid out on the table's
+    clustering (``_apply_layout`` with ``props``, ``bounds`` and
+    ``pack``) into the claimed ``version``'s commit dir, then the new
+    files' manifest rows from their footers (``_stats_of_commit``).
+    ``persist`` caches ``df`` across the range partitioner's sampling
+    pass and the write, released as soon as the files exist — the
+    caller decides it with ``_persist_wanted``."""
+    if persist:
+        df = df.persist()
+    cdir = _commit_dir(root, version)
+    try:
+        _apply_layout(df, props, bounds=bounds, pack=pack).write.mode(
+            "errorifexists"
+        ).parquet(cdir)
+    finally:
+        if persist:
+            df.unpersist()
+    return _stats_of_commit(
+        spark, cdir, tuple(props["stats_cols"]), _schema_sig(props["schema"])
+    )
 
 
 def fl_init(
@@ -815,7 +877,6 @@ def fl_init(
         "layout_files": layout_files,
         "schema": _schema_fields(df),
         "delete_dirs": [],
-        "parent": None,
         **(extra_props or {}),
     }
     # with a Z-order spec the layout needs a bounds pass and the
@@ -826,24 +887,14 @@ def fl_init(
     # the input computes ONCE; below the threshold the cache build
     # measurably loses to recomputing a small local slice
     # (_persist_wanted rationale).
-    cache_input = bool(zorder_by) and _persist_wanted(
-        est_bytes=_plan_size_bytes(df)
+    manifest = _write_files(
+        spark, root, version, df, props,
+        persist=bool(zorder_by)
+        and _persist_wanted(est_bytes=_plan_size_bytes(df)),
     )
-    if cache_input:
-        df = df.persist()
-    try:
-        out = _apply_layout(df, props)
-        cdir = _commit_dir(root, version)
-        out.write.mode("errorifexists").parquet(cdir)
-    finally:
-        if cache_input:
-            df.unpersist()
-    manifest = _stats_of_commit(
-        spark, cdir, tuple(props["stats_cols"]), _schema_sig(props["schema"])
+    return _commit(
+        root, None, manifest, props, operation="init", version=version
     )
-    _write_manifest(root, version, manifest, props, operation="init")
-    manifest_commit_cas(root, version, parent=None)
-    return version
 
 
 def fl_read(
@@ -891,12 +942,15 @@ def fl_read_pruned(
     return _read_files(spark, m[keep], props), int(keep.sum()), len(m)
 
 
-def _zone_touched_paths(
+def _targeting_hits(
     spark: SparkSession, m_subset: pd.DataFrame, key: str, keys_df: DataFrame
-) -> set[str]:
+) -> tuple[set[str], DataFrame | None]:
     """Exact per-file merge/change targeting: which files' [min, max]
-    key zones contain at least one update key. NULL-zone files are
-    conservatively touched (driver-side — no join needed for them).
+    key zones contain at least one key of ``keys_df``. Returns (the
+    paths touched with no Spark job needed — NULL-zone files, which
+    are conservatively touched — , a LAZY distinct touched-``path``
+    frame for the caller to collect, or None when the zone set
+    resolves entirely driver-side).
 
     Integer keys (every merge key in practice) take a grid-bucketed
     BROADCAST HASH JOIN: the zone set is cut into uniform integer
@@ -912,24 +966,6 @@ def _zone_touched_paths(
     join. The collect is O(touched files) paths, the same
     cardinality the driver already plans scans with — never the keys
     themselves."""
-    touched, hits = _targeting_hits(spark, m_subset, key, keys_df)
-    if hits is None:
-        return touched
-    return touched | {r["path"] for r in hits.collect()}
-
-
-def _targeting_hits(
-    spark: SparkSession, m_subset: pd.DataFrame, key: str, keys_df: DataFrame
-) -> tuple[set[str], DataFrame | None]:
-    """The lazy half of ``_zone_touched_paths``: driver-side grid
-    planning over the manifest zones, returning (paths touched with
-    no Spark job needed — the NULL-zone files — , a LAZY distinct
-    touched-``path`` frame to collect, or None when the zone set
-    resolves entirely driver-side). Split out so ``fl_merge_upsert``
-    can attach ``observe()`` metric points to ``keys_df`` and harvest
-    its row counts / bounds / constraint violations from the SAME
-    action that collects the touched paths — one pass over the
-    updates instead of two."""
     if len(m_subset) == 0:
         return set(), None
     mn_s, mx_s = m_subset[f"min_{key}"], m_subset[f"max_{key}"]
@@ -1163,7 +1199,6 @@ def fl_merge_upsert(
         props = {**props, "schema": props["schema"] + added}
     zcols = list(props.get("zorder_by") or [])
     updates = _store_assign(spark, root, props, updates).persist()
-    merged_cached = None
     staged = None
     try:
         constraints = props.get("constraints") or {}
@@ -1198,21 +1233,13 @@ def fl_merge_upsert(
         # row count, CHECK violations, Z-order bounds AND the
         # duplicate-source-key check (count_distinct excludes NULL —
         # counted separately); the targeting pass below then reuses
-        # the materialized cache. Deliberately NOT observe()-fused
-        # with targeting: Observation.get's py4j row fetch crashes
-        # (toPyRow assertion) when AQE empty-relation propagation
-        # elides the metric points (empty micro-batch) and was flaky
-        # even on non-empty replication batches. The aggregate also
-        # puts the empty-batch no-op return BEFORE any targeting job.
-        agg_row = updates.agg(
+        # the materialized cache, and an empty batch returns before
+        # any targeting job (no observe(): see the docstring)
+        counts = updates.agg(
             *row_metrics,
             F.count_distinct(F.col(key)).alias("__kd"),
             F.max(F.col(key).isNull().cast("int")).alias("__has_null"),
-        ).first()
-        counts = agg_row.asDict()
-        counts["k_groups"] = counts["__kd"] + (
-            1 if counts["__has_null"] else 0
-        )
+        ).first().asDict()
         n_updates = counts["n"]
         for name, sql in constraints.items():
             n_viol = counts[f"__viol_{name}"]
@@ -1221,7 +1248,7 @@ def fl_merge_upsert(
                     f"fl_merge_upsert: {n_viol} update row(s) violate "
                     f"CHECK constraint {name!r} ({sql}); nothing committed"
                 )
-        n_update_keys = counts["k_groups"]
+        n_update_keys = counts["__kd"] + (1 if counts["__has_null"] else 0)
         if n_update_keys != n_updates:
             raise ValueError(
                 f"fl_merge_upsert: updates has "
@@ -1232,7 +1259,7 @@ def fl_merge_upsert(
             staged, _ = _stage_delete_keys(root, deletes, key)
 
         def publish(version: str, manifest: pd.DataFrame, dels: list[str]):
-            # the ONE commit tail: fused delete batch, props, CAS flip
+            # the merge's commit tail: fused delete batch, then _commit
             nonlocal staged
             if staged is not None:
                 dels = _publish_delete_keys(
@@ -1240,20 +1267,16 @@ def fl_merge_upsert(
                     dels,
                 )
                 staged = None
-            new_props = {**props, "delete_dirs": dels, "parent": parent}
-            if extra_props:
-                new_props.update(extra_props)
-            _write_manifest(
-                root, version, manifest, new_props, operation="merge"
+            _commit(
+                root, parent, manifest,
+                {**props, "delete_dirs": dels, **(extra_props or {})},
+                operation="merge",
+                version=version,
+                before_flip=_test_hooks(
+                    "fl_merge_upsert", _crash_before_commit,
+                    _pause_before_commit,
+                ),
             )
-            if _pause_before_commit is not None:
-                _pause_before_commit()
-            if _crash_before_commit:
-                raise RuntimeError(
-                    "fl_merge_upsert: injected crash between manifest "
-                    "write and pointer flip (test hook)"
-                )
-            manifest_commit_cas(root, version, parent)
 
         if n_updates == 0:
             # empty micro-batches are routine in streaming — a no-op,
@@ -1279,10 +1302,11 @@ def fl_merge_upsert(
             # anti-join to run — zero jobs beyond the write itself
             n_replaced = 0
             merged = updates.select(*cols)
+            cache = False  # the updates are already persisted
         else:
-            touched_df = _read_files(spark, touched_m, props)
-            if dels_df is not None:
-                touched_df = touched_df.join(dels_df, key, "left_anti")
+            touched_df = _minus_keys(
+                _read_files(spark, touched_m, props), dels_df, key
+            )
             # the layout's range partitioner SAMPLES its input INSIDE
             # the write action, i.e. the merge plan (touched scan +
             # two anti-joins + union) executes once for the sample
@@ -1298,22 +1322,14 @@ def fl_merge_upsert(
             )
             kept = touched_df.join(updates.select(key), key, "left_anti")
             merged = kept.unionByName(updates.select(*cols))
-            if cache:
-                merged_cached = merged.persist()
-                merged = merged_cached
             n_replaced = None  # resolved after the write below
 
         version = _claim_version(root)
-        slice_props = {**props, "layout_files": max(1, len(touched))}
-        cdir = _commit_dir(root, version)
-        _apply_layout(
-            merged, slice_props, bounds=_merge_bounds(touched_m, counts, zcols)
-        ).write.mode("errorifexists").parquet(cdir)
-        fresh = _stats_of_commit(
-            spark,
-            cdir,
-            tuple(props["stats_cols"]),
-            _schema_sig(props["schema"]),
+        fresh = _write_files(
+            spark, root, version, merged,
+            {**props, "layout_files": max(1, len(touched))},
+            bounds=_merge_bounds(touched_m, counts, zcols),
+            persist=cache,
         )
         if n_replaced is None:
             if dels_df is None:
@@ -1347,18 +1363,13 @@ def fl_merge_upsert(
                 updates.select(key), key, "left_anti"
             )
             ddir = _delete_dir(root, version)
-            surviving.write.mode("errorifexists").parquet(ddir)
-            if _parquet_rows(ddir):
+            if _write_nonempty(surviving, ddir):
                 delete_dirs = [ddir]
-            else:
-                shutil.rmtree(ddir, ignore_errors=True)
         publish(version, manifest, delete_dirs)
         return n_replaced, n_inserted, len(touched), len(m)
     finally:
         if staged is not None:
             shutil.rmtree(staged, ignore_errors=True)
-        if merged_cached is not None:
-            merged_cached.unpersist()
         updates.unpersist()
 
 
@@ -1385,11 +1396,17 @@ def fl_vacuum(
     ``retain_hours`` above the longest query/retention window.
     ``force=True`` bypasses the horizon — TORN-READ HAZARD: any
     reader mid-query on a force-dropped version will see its files
-    deleted underneath it (FileNotFoundException mid-scan). Returns
-    deleted data-file paths."""
+    deleted underneath it (FileNotFoundException mid-scan).
+    ``keep=0`` keeps only the pointer's target (and, without
+    ``force``, the versions inside the horizon); a negative ``keep``
+    raises ``ValueError``. Returns deleted data-file paths."""
+    if keep < 0:
+        raise ValueError(f"fl_vacuum: keep must be >= 0, got {keep}")
     current = fl_current_version(root)
     versions = fl_versions(root)
-    drop = [v for v in versions[:-keep] if v != current]
+    drop = [
+        v for v in versions[: max(0, len(versions) - keep)] if v != current
+    ]
     if not force:
         horizon = time.time() - retain_hours * 3600.0
         drop = [
@@ -1397,27 +1414,23 @@ def fl_vacuum(
             for v in drop
             if os.path.getmtime(_manifest_file(root, v)) < horizon
         ]
-    keep_versions = [v for v in versions if v not in drop]
-    referenced: set[str] = set()
-    referenced_dels: set[str] = set()
-    for v in keep_versions:
-        referenced |= set(fl_manifest(root, v)["path"])
-        referenced_dels |= set(fl_table_props(root, v).get("delete_dirs", []))
-    doomed: set[str] = set()
-    doomed_dels: set[str] = set()
-    for v in drop:
-        doomed |= set(fl_manifest(root, v)["path"]) - referenced
-        doomed_dels |= (
-            set(fl_table_props(root, v).get("delete_dirs", []))
-            - referenced_dels
-        )
-        os.remove(_manifest_file(root, v))
-        for sidecar in (
-            os.path.join(root, _MANIFEST_DIR, f"{v}.props.json"),
-            os.path.join(root, _MANIFEST_DIR, f"{v}.claim"),
-        ):
-            if os.path.isfile(sidecar):
-                os.remove(sidecar)
+
+    def refs(vs) -> tuple[set[str], set[str]]:
+        paths: set[str] = set()
+        dels: set[str] = set()
+        for v in vs:
+            paths |= set(fl_manifest(root, v)["path"])
+            dels |= set(fl_table_props(root, v).get("delete_dirs", []))
+        return paths, dels
+
+    kept, kept_dels = refs(v for v in versions if v not in drop)
+    dropped, dropped_dels = refs(drop)
+    doomed, doomed_dels = dropped - kept, dropped_dels - kept_dels
+    # a dropped version's manifest, props and claim share its stem
+    mdir = os.path.join(root, _MANIFEST_DIR)
+    for f in os.listdir(mdir):
+        if f.split(".", 1)[0] in drop:
+            os.remove(os.path.join(mdir, f))
     for p in sorted(doomed):
         os.remove(p)
     for d in sorted(doomed_dels):
@@ -1434,19 +1447,23 @@ def _delete_dir(root: str, tag: str) -> str:
     return os.path.join(root, "deletes", f"d_{tag}")
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count of a freshly-written parquet dir from the file
-    FOOTERS (driver-side metadata read, O(files) milliseconds) — so
-    commit bookkeeping never costs a second Spark job over data the
-    executors just wrote. A dir with no part files (an empty frame's
-    write) counts 0."""
+def _write_nonempty(df: DataFrame, path: str) -> int:
+    """Write ``df`` to ``path`` and return its row count, read from
+    the file FOOTERS (driver-side metadata, O(files) milliseconds), so
+    commit bookkeeping never costs a second Spark job — neither an
+    emptiness probe before the write nor a count after it. A 0-row
+    write's dir (no part files, or empty ones) is removed."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for f in os.listdir(path):
-        if f.endswith(".parquet") and not f.startswith(("_", ".")):
-            total += pq.read_metadata(os.path.join(path, f)).num_rows
-    return total
+    df.write.mode("errorifexists").parquet(path)
+    n = sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if n == 0:
+        shutil.rmtree(path, ignore_errors=True)
+    return n
 
 
 def _delete_keys_df(
@@ -1477,10 +1494,8 @@ def _delete_keys_df(
                 f"{df.columns} — positional key binding would mis-bind"
             )
         parts.append(df.toDF(key))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)  # positional: all sides already renamed
-    return out
+    # positional union: every side is already renamed
+    return reduce(DataFrame.union, parts)
 
 
 def _stage_delete_keys(
@@ -1496,12 +1511,8 @@ def _stage_delete_keys(
     would make the delete set non-empty forever, so every later read
     pays the anti-join and merges lose the pure-append fast path."""
     tdir = _delete_dir(root, f"tmp_{uuid.uuid4().hex}")
-    keys.select(key).distinct().write.mode("errorifexists").parquet(tdir)
-    n = _parquet_rows(tdir)  # footer read, no second Spark job
-    if n == 0:
-        shutil.rmtree(tdir, ignore_errors=True)
-        return None, 0
-    return tdir, n
+    n = _write_nonempty(keys.select(key).distinct(), tdir)
+    return (tdir if n else None), n
 
 
 def _publish_delete_keys(
@@ -1557,14 +1568,16 @@ def _apply_deletes(
     pointer here would pair one version's files with a later
     commit's delete set."""
     props = fl_table_props(root, version)
-    dels = _delete_keys_df(spark, props)
-    if dels is None:
-        return df
-    # no forced broadcast: the delete files' sizes are known to the
-    # planner, so AQE/size stats pick broadcast while the set is
-    # small and a shuffled anti-join once it is not — a billion-key
-    # delete set must not try to build a broadcast table
-    return df.join(dels, props["key"], "left_anti")
+    return _minus_keys(df, _delete_keys_df(spark, props), props["key"])
+
+
+def _minus_keys(df: DataFrame, keys: DataFrame | None, key: str) -> DataFrame:
+    """``df`` without the rows whose ``key`` is in ``keys`` (None =
+    no keys). No forced broadcast: the delete files' sizes are known
+    to the planner, so AQE/size stats pick broadcast while the set is
+    small and a shuffled anti-join once it is not — a billion-key
+    delete set must not try to build a broadcast table."""
+    return df if keys is None else df.join(keys, key, "left_anti")
 
 
 def fl_read_mor(
@@ -1626,17 +1639,13 @@ def fl_delete(
         spark, key, tdir, _delete_dir(root, version),
         props.get("delete_dirs") or [],
     )
-    new_props = {**props, "delete_dirs": dirs, "parent": parent}
-    _write_manifest(
-        root, version, fl_manifest(root, parent), new_props,
+    _commit(
+        root, parent, fl_manifest(root, parent),
+        {**props, "delete_dirs": dirs},
         operation="delete",
+        version=version,
+        before_flip=_test_hooks("fl_delete", _crash_before_commit),
     )
-    if _crash_before_commit:
-        raise RuntimeError(
-            "fl_delete: injected crash between sidecar write and "
-            "pointer flip (test hook)"
-        )
-    manifest_commit_cas(root, version, parent)
     return n_new, version
 
 
@@ -1649,52 +1658,38 @@ def fl_compact(
     read-side anti-join disappears, and streaming-epoch file
     fragmentation is bin-packed away. One full rewrite, amortized
     across every delete and small commit since the last fold — the
-    OPTIMIZE of this format. A state left empty by deletes commits an
+    OPTIMIZE of this format. Emptiness is read from the new files'
+    footers after the write, not probed before it: a state left empty
+    by deletes has its commit dir removed and commits an
     explicitly-empty manifest (``fl_read`` then returns an empty
     relation with the table schema). Returns the new version name."""
     parent = fl_current_version(root)
-    props = dict(fl_table_props(root, parent))
+    props = {**fl_table_props(root, parent), "delete_dirs": []}
     if layout_files is not None:
         props["layout_files"] = layout_files
-    props["delete_dirs"] = []
-    props["parent"] = parent
-    df = fl_read_mor(spark, root, parent)
+    m = fl_manifest(root, parent)
     version = _claim_version(root)
-    sig = _schema_sig(props["schema"])
-    cols = tuple(props["stats_cols"])
-    # persist the MOR state across the emptiness probe, the range
-    # partitioner's sampling pass and the write (otherwise the
-    # files-minus-delete-set plan computes up to three times) —
-    # adaptively, on the manifest's row total (an upper bound of the
-    # MOR state; below the threshold the cache build loses to the
-    # recompute, _persist_wanted). Z-order bounds come from the
-    # manifest zones when complete — wider than the post-delete data
-    # is fine, narrower impossible
-    cached = _persist_wanted(int(fl_manifest(root, parent)["n_rows"].sum()))
-    if cached:
-        df = df.persist()
-    try:
-        if df.limit(1).count() == 0:
-            # every row deleted: commit an explicitly-empty manifest
-            # (no data dir at all) — fl_read returns an empty
-            # relation with the table schema, and the delete set is
-            # gone
-            manifest = pd.DataFrame(columns=_manifest_cols_order(cols))
-        else:
-            cdir = _commit_dir(root, version)
-            bounds = _manifest_bounds(
-                fl_manifest(root, parent), list(props.get("zorder_by") or [])
-            )
-            _apply_layout(df, props, bounds=bounds, pack=True).write.mode(
-                "errorifexists"
-            ).parquet(cdir)
-            manifest = _stats_of_commit(spark, cdir, cols, sig)
-    finally:
-        if cached:
-            df.unpersist()
-    _write_manifest(root, version, manifest, props, operation="compact")
-    manifest_commit_cas(root, version, parent)
-    return version
+    # persist the MOR state across the range partitioner's sampling
+    # pass and the write (otherwise the files-minus-delete-set plan
+    # computes twice) — adaptively, on the manifest's row total (an
+    # upper bound of the MOR state; below the threshold the cache
+    # build loses to the recompute, _persist_wanted). Z-order bounds
+    # come from the manifest zones when complete — wider than the
+    # post-delete data is fine, narrower impossible
+    manifest = _write_files(
+        spark, root, version, fl_read_mor(spark, root, parent), props,
+        bounds=_manifest_bounds(m, list(props.get("zorder_by") or [])),
+        pack=True,
+        persist=_persist_wanted(int(m["n_rows"].sum())),
+    )
+    if int(manifest["n_rows"].sum()) == 0:
+        # every row deleted: no data dir at all, and the delete set is
+        # gone with it
+        shutil.rmtree(_commit_dir(root, version), ignore_errors=True)
+        manifest = manifest.iloc[:0]
+    return _commit(
+        root, parent, manifest, props, operation="compact", version=version
+    )
 
 
 def fl_add_constraint(
@@ -1725,16 +1720,11 @@ def fl_add_constraint(
             f"{name!r} ({sql_expr}); constraint not added"
         )
     constraints[name] = sql_expr
-    version = _claim_version(root)
-    _write_manifest(
-        root,
-        version,
-        fl_manifest(root, parent),
-        {**props, "constraints": constraints, "parent": parent},
+    return _commit(
+        root, parent, fl_manifest(root, parent),
+        {**props, "constraints": constraints},
         operation="add_constraint",
     )
-    manifest_commit_cas(root, version, parent)
-    return version
 
 
 def fl_drop_constraint(spark: SparkSession, root: str, name: str) -> str:
@@ -1748,16 +1738,11 @@ def fl_drop_constraint(spark: SparkSession, root: str, name: str) -> str:
             f"(have {sorted(constraints)})"
         )
     del constraints[name]
-    version = _claim_version(root)
-    _write_manifest(
-        root,
-        version,
-        fl_manifest(root, parent),
-        {**props, "constraints": constraints, "parent": parent},
+    return _commit(
+        root, parent, fl_manifest(root, parent),
+        {**props, "constraints": constraints},
         operation="drop_constraint",
     )
-    manifest_commit_cas(root, version, parent)
-    return version
 
 
 def fl_optimize(
@@ -1785,40 +1770,25 @@ def fl_optimize(
     if len(small) < 2:
         return parent, 0, len(m)
     big = m[~m.index.isin(small.index)]
-    df = _read_files(spark, small, props)
     n_small_rows = int(small["n_rows"].sum())
     per_file = target_rows_per_file or max(small_rows, 1)
-    slice_props = {
-        **props,
-        "layout_files": max(1, -(-n_small_rows // per_file)),
-    }
     version = _claim_version(root)
-    cdir = _commit_dir(root, version)
     # bounds from the packed files' own zones (skips the bounds
     # pass); persist the small-file slice across the sampling pass
     # and the write — adaptively on its exact row count
     # (_persist_wanted; OPTIMIZE's slice is re-read small files, the
     # cheapest possible recompute)
-    bounds = _manifest_bounds(small, list(props.get("zorder_by") or []))
-    cached = _persist_wanted(n_small_rows)
-    if cached:
-        df = df.persist()
-    try:
-        _apply_layout(df, slice_props, bounds=bounds, pack=True).write.mode(
-            "errorifexists"
-        ).parquet(cdir)
-    finally:
-        if cached:
-            df.unpersist()
-    fresh = _stats_of_commit(
-        spark, cdir, tuple(props["stats_cols"]), _schema_sig(props["schema"])
+    fresh = _write_files(
+        spark, root, version, _read_files(spark, small, props),
+        {**props, "layout_files": max(1, -(-n_small_rows // per_file))},
+        bounds=_manifest_bounds(small, list(props.get("zorder_by") or [])),
+        pack=True,
+        persist=_persist_wanted(n_small_rows),
     )
-    manifest = pd.concat([big, fresh], ignore_index=True)
-    _write_manifest(
-        root, version, manifest, {**props, "parent": parent},
-        operation="optimize",
+    _commit(
+        root, parent, pd.concat([big, fresh], ignore_index=True), props,
+        operation="optimize", version=version,
     )
-    manifest_commit_cas(root, version, parent)
     return version, len(small), len(m)
 
 
@@ -1864,16 +1834,11 @@ def fl_set_zorder(
             col = f"{side}_{c}"
             if col not in m.columns:
                 m[col] = pd.NA  # NULL zone: conservatively unprunable
-    new_props = {
-        **props,
-        "zorder_by": list(zorder_by),
-        "stats_cols": new_stats,
-        "parent": parent,
-    }
-    version = _claim_version(root)
-    _write_manifest(root, version, m, new_props, operation="set_zorder")
-    manifest_commit_cas(root, version, parent)
-    return version
+    return _commit(
+        root, parent, m,
+        {**props, "zorder_by": list(zorder_by), "stats_cols": new_stats},
+        operation="set_zorder",
+    )
 
 
 def fl_restore(spark: SparkSession, root: str, version: str) -> str:
@@ -1889,11 +1854,9 @@ def fl_restore(spark: SparkSession, root: str, version: str) -> str:
     if version == parent:
         return parent
     m = fl_manifest(root, version)  # raises if vacuumed/unknown
-    props = {**fl_table_props(root, version), "parent": parent}
-    new_version = _claim_version(root)
-    _write_manifest(root, new_version, m, props, operation="restore")
-    manifest_commit_cas(root, new_version, parent)
-    return new_version
+    return _commit(
+        root, parent, m, fl_table_props(root, version), operation="restore"
+    )
 
 
 def fl_clone(
@@ -1963,15 +1926,12 @@ def fl_clone(
             for k in ("key", "stats_cols", "zorder_by", "layout_files", "schema")
         },
         "delete_dirs": new_dels,
-        "parent": None,
         **(extra_props or {}),
     }
-    _write_manifest(
-        dst_root, new_version, m.assign(path=paths), new_props,
-        operation="clone",
+    return _commit(
+        dst_root, None, m.assign(path=paths), new_props,
+        operation="clone", version=new_version,
     )
-    manifest_commit_cas(dst_root, new_version, parent=None)
-    return new_version
 
 
 # ---------------------------------------------------------------------------
@@ -1995,21 +1955,18 @@ def fl_add_column(
         raise ValueError(
             f"filelist table {root}: column {name!r} already exists"
         )
-    # validate the type string the same way reads will consume it
-    spark.createDataFrame([], f"`{name}` {type_str}")
     new_field = {
         "id": max(f["id"] for f in schema) + 1,
         "name": name,
         "type": type_str,
     }
-    version = _claim_version(root)
-    new_props = {**props, "schema": schema + [new_field], "parent": parent}
-    _write_manifest(
-        root, version, fl_manifest(root, parent), new_props,
+    # validate the type string the same way reads will consume it
+    _empty_relation(spark, [new_field])
+    return _commit(
+        root, parent, fl_manifest(root, parent),
+        {**props, "schema": schema + [new_field]},
         operation="add_column",
     )
-    manifest_commit_cas(root, version, parent)
-    return version
 
 
 def fl_rename_column(
@@ -2045,29 +2002,21 @@ def fl_rename_column(
             f"CHECK constraint(s) {referencing} — drop them first and "
             f"re-add under the new name"
         )
-    new_schema = [
-        {**f, "name": new} if f["name"] == old else f for f in schema
-    ]
-    new_props = {**props, "schema": new_schema, "parent": parent}
-    if props["key"] == old:
-        new_props["key"] = new
-    if old in props.get("stats_cols", []):
-        new_props["stats_cols"] = [
-            new if c == old else c for c in props["stats_cols"]
-        ]
-    if old in props.get("zorder_by", []):
-        new_props["zorder_by"] = [
-            new if c == old else c for c in props["zorder_by"]
-        ]
-    m = fl_manifest(root, parent)
-    if old in props.get("stats_cols", []):
-        m = m.rename(
-            columns={f"min_{old}": f"min_{new}", f"max_{old}": f"max_{new}"}
-        )
-    version = _claim_version(root)
-    _write_manifest(root, version, m, new_props, operation="rename_column")
-    manifest_commit_cas(root, version, parent)
-    return version
+    def ren(c: str) -> str:
+        return new if c == old else c
+
+    new_props = {
+        **props,
+        "schema": [{**f, "name": ren(f["name"])} for f in schema],
+        "key": ren(props["key"]),
+        "stats_cols": [ren(c) for c in props["stats_cols"]],
+        "zorder_by": [ren(c) for c in props.get("zorder_by") or []],
+    }
+    # an untracked column has no stat headers: rename skips them
+    m = fl_manifest(root, parent).rename(
+        columns={f"min_{old}": f"min_{new}", f"max_{old}": f"max_{new}"}
+    )
+    return _commit(root, parent, m, new_props, operation="rename_column")
 
 
 # ---------------------------------------------------------------------------
@@ -2084,16 +2033,12 @@ def fl_skip_layout_only(root: str, from_version: str, to_version: str) -> str:
     ``to_version``. Walks parent pointers: O(commits between) props
     reads, no Spark job."""
     path: list[tuple[str, bool]] = []
-    v: str | None = to_version
-    while v != from_version:
-        if v is None:
-            return from_version
-        try:
-            props = fl_table_props(root, v)
-        except FileNotFoundError:  # vacuumed ancestry
-            return from_version
+    for v, props in _ancestry(root, to_version):
+        if v == from_version:
+            break
         path.append((v, props.get("data_change", True)))
-        v = props.get("parent")
+    else:  # not an ancestor, or its ancestry was vacuumed
+        return from_version
     for v, data_change in reversed(path):
         if data_change:
             break
@@ -2147,15 +2092,12 @@ def fl_changes(
     key = props_new["key"]
     payload = [f["name"] for f in props_new["schema"] if f["name"] != key]
     if from_version == to_version:
-        # constant-false filter: the optimizer folds it to an empty
-        # local relation, which collects without a Spark job
-        types = {f["name"]: f["type"] for f in props_new["schema"]}
-        cols = ", ".join(
-            f"CAST(NULL AS {t}) AS `{c}`"
-            for c, t in [("op", "string")]
-            + [(c, types[c]) for c in (key, *payload)]
+        fields = {f["name"]: f for f in props_new["schema"]}
+        return _empty_relation(
+            spark,
+            [{"name": "op", "type": "string"}]
+            + [fields[c] for c in (key, *payload)],
         )
-        return spark.sql(f"SELECT {cols} WHERE false")
     props_old = fl_table_props(root, from_version)
     m_old = fl_manifest(root, from_version)
     m_new = fl_manifest(root, to_version)
@@ -2167,18 +2109,13 @@ def fl_changes(
     old_dels = _delete_keys_df(spark, props_old, key)
     new_dels = _delete_keys_df(spark, props_new, key)
 
-    old_side = _read_files(spark, removed, props_new)
-    if old_dels is not None:
-        old_side = old_side.join(old_dels, key, "left_anti")
-    new_side = _read_files(spark, added, props_new)
-    if new_dels is not None:
-        new_side = new_side.join(new_dels, key, "left_anti")
+    old_side, new_side = (
+        _minus_keys(_read_files(spark, files, props_new), dels, key)
+        for files, dels in ((removed, old_dels), (added, new_dels))
+    )
 
     def _set_minus(a: DataFrame | None, b: DataFrame | None):
-        if a is None:
-            return None
-        a = a.distinct()
-        return a if b is None else a.join(b, key, "left_anti")
+        return None if a is None else _minus_keys(a.distinct(), b, key)
 
     # carried files never changed content; only delete-set deltas can
     # change what a reader sees in them — target just those files
@@ -2188,7 +2125,9 @@ def fl_changes(
     ):
         if delta is None:
             continue
-        touched = _zone_touched_paths(spark, carried, key, delta)
+        touched, hits = _targeting_hits(spark, carried, key, delta)
+        if hits is not None:
+            touched |= {r["path"] for r in hits.collect()}
         if not touched:
             continue
         rows = _read_files(

@@ -210,6 +210,17 @@ class FlChangesCursor:
         self.offset = new_offset
         _write_offset(self.checkpoint_dir, new_offset)
 
+    def pump(self, step: Callable[[DataFrame, str], None]) -> bool:
+        """Deliver the next batch through ``step(changes_df, offset)``,
+        then ack it; False (and no step) when caught up."""
+        nxt = self.next_batch()
+        if nxt is None:
+            return False
+        df, new_offset = nxt
+        step(df, new_offset)
+        self.ack(new_offset)
+        return True
+
 
 def run_fl_changes_stream(
     spark: SparkSession,
@@ -228,13 +239,7 @@ def run_fl_changes_stream(
         spark, root, from_version, versions_per_batch, checkpoint_dir
     )
     n = 0
-    while max_batches is None or n < max_batches:
-        nxt = cur.next_batch()
-        if nxt is None:
-            break
-        df, new_offset = nxt
-        step(df, new_offset)
-        cur.ack(new_offset)
+    while (max_batches is None or n < max_batches) and cur.pump(step):
         n += 1
     return n
 
@@ -260,12 +265,7 @@ def start_fl_changes_feed(
     )
 
     def tick(_batch_df: DataFrame, _epoch_id: int) -> None:
-        nxt = cur.next_batch()
-        if nxt is None:
-            return
-        df, new_offset = nxt
-        step(df, new_offset)
-        cur.ack(new_offset)
+        cur.pump(step)
 
     return (
         spark.readStream.format("rate")

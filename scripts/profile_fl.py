@@ -64,13 +64,14 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # phase timers on the internals the lifecycle queries compose
+    timed(tf, "_write_files")
     timed(tf, "_stats_of_commit")
-    timed(tf, "_zone_touched_paths")
+    timed(tf, "_targeting_hits")
     timed(tf, "_read_files")
     timed(tf, "_delete_keys_df")
-    timed(tf, "_parquet_rows")
+    timed(tf, "_write_nonempty")
     timed(tf, "_claim_version")
-    timed(tf, "_write_manifest")
+    timed(tf, "_commit")
     timed(tf, "manifest_commit_cas")
     timed(tf, "fl_changes")
 

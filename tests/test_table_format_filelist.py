@@ -678,3 +678,86 @@ def test_commits_record_operation_and_data_change(spark, tmp_path):
         ("add_column", True), ("rename_column", True), ("restore", True),
         ("clone", True),
     ]
+
+
+def test_vacuum_keep_zero_keeps_only_the_pointer_target(spark, tmp_path):
+    """``keep`` counts the newest versions kept besides the pointer's
+    target: 0 keeps the target alone, more than there are keeps all,
+    and a negative count is refused before anything is dropped."""
+    root = str(tmp_path / "vac")
+    df = spark.range(0, 40).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
+    )
+    fl_init(spark, root, df.repartition(2), key="k")
+    for lo in (0, 10, 20):
+        fl_merge_upsert(
+            spark, root, df.where(f"k BETWEEN {lo} AND {lo + 2}"), key="k"
+        )
+    head = fl_current_version(root)
+    want = sorted(map(tuple, fl_read(spark, root).collect()))
+    assert len(fl_versions(root)) == 4
+    with pytest.raises(ValueError, match="keep"):
+        fl_vacuum(spark, root, keep=-1, retain_hours=0.0)
+    assert fl_vacuum(spark, root, keep=10, retain_hours=0.0) == []
+    assert len(fl_versions(root)) == 4
+    deleted = fl_vacuum(spark, root, keep=0, retain_hours=0.0)
+    assert fl_versions(root) == [head]
+    assert deleted and not any(os.path.exists(p) for p in deleted)
+    assert sorted(map(tuple, fl_read(spark, root).collect())) == want
+
+
+def _count_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_emptied_table_reads_without_a_job_and_add_column_checks_type(
+    spark, tmp_path
+):
+    """A table with nested and decimal columns, every row deleted and
+    compacted: the empty manifest reads as an empty relation with the
+    table's schema and collects without a Spark job, a type string
+    that is not one data type is refused without a commit, and the
+    empty table still takes a merge."""
+    from pyspark.errors import ParseException
+
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_add_column,
+    )
+
+    root = str(tmp_path / "emptied")
+    df = spark.range(0, 20).select(
+        F.col("id").alias("k"),
+        F.array(
+            F.struct(
+                F.col("id").cast("int").alias("x"), F.lit("a").alias("y")
+            )
+        ).alias("tags"),
+        (F.col("id") / 4).cast("decimal(10,2)").alias("amt"),
+    )
+    v1 = fl_init(spark, root, df, key="k", zorder_by=("k",), layout_files=2)
+    schema = fl_read(spark, root, v1).schema
+    fl_delete(spark, root, df.select("k"))
+    fl_compact(spark, root)
+    v_empty = fl_compact(spark, root)  # compacting an empty table
+    assert len(fl_manifest(root)) == 0
+    assert not os.path.exists(table_format._commit_dir(root, v_empty))
+
+    empty = fl_read(spark, root)
+    assert empty.schema == schema
+    assert _count_jobs(spark, "emptied_read", empty.collect) == ([], 0)
+
+    with pytest.raises(ParseException):
+        fl_add_column(spark, root, "x", "int) AS y, CAST(NULL AS int")
+    assert fl_current_version(root) == v_empty
+
+    fl_merge_upsert(spark, root, df.where("k < 5"), key="k")
+    assert sorted(r["k"] for r in fl_read_mor(spark, root).collect()) == [
+        0, 1, 2, 3, 4,
+    ]

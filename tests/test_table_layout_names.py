@@ -59,3 +59,51 @@ def test_only_table_format_spells_the_table_layout():
     assert not stray, f"table layout names outside {_OWNER}: {stray}"
     # the scan must actually see the names where they belong
     assert _layout_constants(_PKG / _OWNER)
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    return None
+
+
+def test_table_format_has_one_commit_path_and_one_file_write():
+    """Inside ``table_format.py`` every commit publishes through
+    ``_commit`` (the only caller of ``manifest_commit_cas``) and every
+    data-file write lays its files out through ``_write_files`` (the
+    only caller of ``_apply_layout``). The props file name is spelled
+    once, in ``_props_file``, which only ``_commit`` writes through
+    and only ``fl_table_props`` reads through — a second commit
+    protocol has to break one of these."""
+    tree = ast.parse((_PKG / _OWNER).read_text())
+    docs = _docstring_nodes(tree)
+    fns = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def callers(name: str) -> list[str]:
+        return sorted(
+            fn
+            for fn, node in fns.items()
+            if any(
+                isinstance(c, ast.Call) and _callee(c) == name
+                for c in ast.walk(node)
+            )
+        )
+
+    def props_spellings(node: ast.AST) -> set[int]:
+        return {
+            id(c)
+            for c in ast.walk(node)
+            if isinstance(c, ast.Constant)
+            and isinstance(c.value, str)
+            and id(c) not in docs
+            and ".props.json" in c.value
+        }
+
+    assert callers("manifest_commit_cas") == ["_commit"]
+    assert callers("_apply_layout") == ["_write_files"]
+    assert callers("_props_file") == ["_commit", "fl_table_props"]
+    assert props_spellings(tree) == props_spellings(fns["_props_file"])
+    assert props_spellings(tree)
