@@ -83,6 +83,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from citybikedatawarehouse_spark.operators.maintenance import cdc_extract
 
@@ -415,6 +416,16 @@ def footer_stats_trustworthy(arrow_type) -> bool:
     )
 
 
+def _data_files(path: str) -> list[str]:
+    """The parquet data files directly under a written dir, sorted
+    (Spark's ``_SUCCESS`` and hidden checksum files excluded)."""
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
 def footer_zone_stats(path: str, cols: tuple[str, ...]):
     """Per-file (path, n_rows, min_<c>, max_<c>) for every parquet
     data file directly under ``path``, read from the file FOOTERS —
@@ -429,10 +440,7 @@ def footer_zone_stats(path: str, cols: tuple[str, ...]):
     import pyarrow.parquet as pq
 
     recs: list[dict] = []
-    for fname in sorted(os.listdir(path)):
-        if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
-            continue
-        fp = os.path.join(path, fname)
+    for fp in _data_files(path):
         md = pq.read_metadata(fp)
         arrow_schema = md.schema.to_arrow_schema()
         rec: dict = {"path": fp, "n_rows": md.num_rows}
@@ -660,15 +668,33 @@ def _schema_sig(fields: list[dict]) -> str:
     return json.dumps([[f["id"], f["name"]] for f in fields])
 
 
+def _parse_types(spark: SparkSession, fields: list[dict]) -> list[T.DataType]:
+    """The engine's one type parser: each of ``fields``' type strings
+    (``{"name", "type"}`` dicts, the schema-props shape) parsed on its
+    own as exactly one data type, by the parser ``Column.cast`` applies
+    to a string — an invalid type raises ``ParseException`` and no
+    text is spliced into SQL. One driver-side JVM call per distinct
+    string, no Spark job and no query analysis (building a relation
+    to read the types off would cost tens of milliseconds a call)."""
+    parse = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.parseDataType
+    types = {
+        t: T._parse_datatype_json_string(parse(t).json())
+        for t in {f["type"] for f in fields}
+    }
+    return [types[f["type"]] for f in fields]
+
+
 def _empty_relation(spark: SparkSession, fields: list[dict]) -> DataFrame:
     """An empty relation with ``fields`` (``{"name", "type"}`` dicts,
     the schema-props shape) as its columns. A constant-false filter
     that the optimizer folds to an empty local relation, so it
-    collects without a Spark job; each type string is parsed as a
-    data type on its own and each name is only an alias, so an
-    invalid type raises and no text is spliced into SQL."""
+    collects without a Spark job; the types come from
+    ``_parse_types`` and each name is only an alias."""
     return spark.range(1).where(F.lit(False)).select(
-        *[F.lit(None).cast(f["type"]).alias(f["name"]) for f in fields]
+        *[
+            F.lit(None).cast(t).alias(f["name"])
+            for f, t in zip(fields, _parse_types(spark, fields))
+        ]
     )
 
 
@@ -682,18 +708,19 @@ def _schema_additions(
     type change upstream — and raises instead of silently dropping
     data. Driver-side analysis only, zero jobs."""
     incoming = {f.name: f.dataType for f in df.schema.fields}
-    for f in _empty_relation(spark, props["schema"]).schema.fields:
-        if f.name not in incoming:
+    schema = props["schema"]
+    for f, t in zip(schema, _parse_types(spark, schema)):
+        if f["name"] not in incoming:
             raise ValueError(
-                f"filelist table {root}: column {f.name!r} is missing "
+                f"filelist table {root}: column {f['name']!r} is missing "
                 f"from the incoming rows (renamed or dropped upstream); "
                 f"schema merge follows columns by name only"
             )
-        if incoming[f.name] != f.dataType:
+        if incoming[f["name"]] != t:
             raise ValueError(
-                f"filelist table {root}: column {f.name!r} changed type "
-                f"{f.dataType.simpleString()} -> "
-                f"{incoming[f.name].simpleString()}; schema merge "
+                f"filelist table {root}: column {f['name']!r} changed type "
+                f"{t.simpleString()} -> "
+                f"{incoming[f['name']].simpleString()}; schema merge "
                 f"cannot follow a type change"
             )
     names = {f["name"] for f in props["schema"]}
@@ -724,13 +751,16 @@ def _store_assign(
         for f in df.schema
     ):
         return df  # the common case, decided without a JVM call
-    table = _empty_relation(spark, props["schema"]).schema
+    table = {
+        f["name"]: t
+        for f, t in zip(props["schema"], _parse_types(spark, props["schema"]))
+    }
     jvm = spark._jvm
     to_jvm = jvm.org.apache.spark.sql.types.DataType.fromJson
     can_assign = jvm.org.apache.spark.sql.catalyst.expressions.Cast.canANSIStoreAssign
     sel = []
     for f in df.schema:
-        want = table[f.name].dataType if f.name in types else f.dataType
+        want = table.get(f.name, f.dataType)
         if want == f.dataType:
             sel.append(F.col(f.name))
             continue
@@ -754,10 +784,18 @@ def _read_files(
     NULLs (add-column) — no data file is ever rewritten for an
     evolution commit. The group count is O(distinct schemas ever
     written), a handful; each group is one ordinary pruned parquet
-    scan, so pushdown/pruning per group is untouched."""
-    if len(m_subset) == 0:
-        return _empty_relation(spark, props["schema"])
+    scan, so pushdown/pruning per group is untouched.
+
+    Each group is read with a DECLARED schema built from metadata:
+    physical names from the group's field-id map, types from the
+    table schema (every commit's files carry the table's types, see
+    ``_store_assign``), parsed once by ``_parse_types``. Spark never
+    infers a schema from the footers, which costs one Spark job per
+    group."""
     cur = props["schema"]
+    if len(m_subset) == 0:
+        return _empty_relation(spark, cur)
+    types = {f["id"]: t for f, t in zip(cur, _parse_types(spark, cur))}
     cur_sig = _schema_sig(cur)
     if "schema_cols" not in m_subset.columns:
         sigs = pd.Series(cur_sig, index=m_subset.index)
@@ -766,13 +804,25 @@ def _read_files(
     parts = []
     for sig in sorted(sigs.unique()):
         paths = sorted(m_subset.loc[sigs == sig, "path"])
-        dfg = spark.read.parquet(*paths)
         mapping = {fid: name for fid, name in json.loads(sig)}
+        read_schema = T.StructType(
+            [
+                T.StructField(mapping[fid], types[fid])
+                for fid in types
+                if fid in mapping
+            ]
+        )
+        dfg = spark.read.schema(read_schema).parquet(*paths)
+        if all(mapping.get(f["id"]) == f["name"] for f in cur):
+            # written under the current schema: the declared read is
+            # already aligned, and the select would only cost analysis
+            parts.append(dfg)
+            continue
         sel = []
         for f in cur:
             phys = mapping.get(f["id"])
             if phys is None:
-                sel.append(F.lit(None).cast(f["type"]).alias(f["name"]))
+                sel.append(F.lit(None).cast(types[f["id"]]).alias(f["name"]))
             else:
                 sel.append(F.col(phys).alias(f["name"]))
         parts.append(dfg.select(*sel))
@@ -1256,14 +1306,14 @@ def fl_merge_upsert(
                 f"MERGE requires unique source keys"
             )
         if deletes is not None:
-            staged, _ = _stage_delete_keys(root, deletes, key)
+            staged, _ = _stage_delete_keys(spark, root, props, deletes)
 
         def publish(version: str, manifest: pd.DataFrame, dels: list[str]):
             # the merge's commit tail: fused delete batch, then _commit
             nonlocal staged
             if staged is not None:
                 dels = _publish_delete_keys(
-                    spark, key, staged, _delete_dir(root, f"{version}_del"),
+                    spark, props, staged, _delete_dir(root, f"{version}_del"),
                     dels,
                 )
                 staged = None
@@ -1456,11 +1506,7 @@ def _write_nonempty(df: DataFrame, path: str) -> int:
     import pyarrow.parquet as pq
 
     df.write.mode("errorifexists").parquet(path)
-    n = sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+    n = sum(pq.read_metadata(f).num_rows for f in _data_files(path))
     if n == 0:
         shutil.rmtree(path, ignore_errors=True)
     return n
@@ -1479,27 +1525,42 @@ def _delete_keys_df(
     deleted rows would silently resurface. Per-dir positional
     binding keys the files by position, which is exactly the rename
     contract (delete files are single-column by construction — the
-    assertion makes that structural). May contain duplicate keys
-    across files — harmless to the anti-joins that consume it."""
+    check makes that structural). The read schema comes from
+    metadata, never from a Spark inference job: the dir's physical
+    column name from one file's parquet footer (driver-side, like
+    ``_write_nonempty``'s row count), its type from the table
+    schema's key field (``_stage_delete_keys`` writes the key's
+    type). May contain duplicate keys across files — harmless to the
+    anti-joins that consume it."""
+    import pyarrow.parquet as pq
+
     dirs = props.get("delete_dirs") or []
     if not dirs:
         return None
-    key = key or props["key"]
-    parts = []
+    phys = []
     for d in dirs:
-        df = spark.read.parquet(d)
-        if len(df.columns) != 1:
+        names = pq.read_schema(_data_files(d)[0]).names
+        if len(names) != 1:
             raise ValueError(
                 f"delete dir {d}: expected exactly 1 column, found "
-                f"{df.columns} — positional key binding would mis-bind"
+                f"{names} — positional key binding would mis-bind"
             )
-        parts.append(df.toDF(key))
+        phys.append(names[0])
+    key_field = next(f for f in props["schema"] if f["name"] == props["key"])
+    (key_type,) = _parse_types(spark, [key_field])
+    key = key or props["key"]
+    parts = [
+        spark.read.schema(T.StructType([T.StructField(name, key_type)]))
+        .parquet(d)
+        .toDF(key)
+        for d, name in zip(dirs, phys)
+    ]
     # positional union: every side is already renamed
     return reduce(DataFrame.union, parts)
 
 
 def _stage_delete_keys(
-    root: str, keys: DataFrame, key: str
+    spark: SparkSession, root: str, props: dict, keys: DataFrame
 ) -> tuple[str | None, int]:
     """Write a delete batch's distinct keys into a temp dir BEFORE any
     version is claimed; returns (staged dir, n keys), or (None, 0) for
@@ -1509,15 +1570,18 @@ def _stage_delete_keys(
     forever (claimed numbers are never reissued). An empty batch must
     also be a no-op, not an empty commit — a committed zero-row dir
     would make the delete set non-empty forever, so every later read
-    pays the anti-join and merges lose the pure-append fast path."""
+    pays the anti-join and merges lose the pure-append fast path.
+    The keys are stored as the table's key type (``_store_assign``),
+    the type every reader of the delete set declares."""
     tdir = _delete_dir(root, f"tmp_{uuid.uuid4().hex}")
-    n = _write_nonempty(keys.select(key).distinct(), tdir)
+    keys = _store_assign(spark, root, props, keys.select(props["key"]))
+    n = _write_nonempty(keys.distinct(), tdir)
     return (tdir if n else None), n
 
 
 def _publish_delete_keys(
     spark: SparkSession,
-    key: str,
+    props: dict,
     staged: str,
     ddir: str,
     dirs: list[str],
@@ -1525,7 +1589,8 @@ def _publish_delete_keys(
     """Move a staged delete batch to ``ddir`` (named after the claimed
     version) and return the commit's delete-dir list: ``dirs`` plus
     it, folded into one ``<ddir>_fold`` dir (executor-side distinct +
-    rewrite) once past ``_DELETE_FOLD_AFTER`` dirs."""
+    rewrite) once past ``_DELETE_FOLD_AFTER`` dirs. ``props`` (the
+    table's key and schema) declares the fold's read schema."""
     os.rename(staged, ddir)  # same filesystem: atomic move into place
     dirs = list(dirs) + [ddir]
     if len(dirs) > _DELETE_FOLD_AFTER:
@@ -1535,7 +1600,7 @@ def _publish_delete_keys(
         # and a multi-dir read resolves by name -> NULLs. Route
         # through the same reader every consumer uses.
         (
-            _delete_keys_df(spark, {"delete_dirs": dirs, "key": key})
+            _delete_keys_df(spark, {**props, "delete_dirs": dirs})
             .distinct()
             .write.mode("errorifexists")
             .parquet(fdir)
@@ -1630,13 +1695,12 @@ def fl_delete(
     matrix as every other commit."""
     parent = fl_current_version(root)
     props = fl_table_props(root, parent)
-    key = props["key"]
-    tdir, n_new = _stage_delete_keys(root, keys, key)
+    tdir, n_new = _stage_delete_keys(spark, root, props, keys)
     if tdir is None:
         return 0, parent
     version = _claim_version(root)
     dirs = _publish_delete_keys(
-        spark, key, tdir, _delete_dir(root, version),
+        spark, props, tdir, _delete_dir(root, version),
         props.get("delete_dirs") or [],
     )
     _commit(
@@ -1961,7 +2025,7 @@ def fl_add_column(
         "type": type_str,
     }
     # validate the type string the same way reads will consume it
-    _empty_relation(spark, [new_field])
+    _parse_types(spark, [new_field])
     return _commit(
         root, parent, fl_manifest(root, parent),
         {**props, "schema": schema + [new_field]},

@@ -9,7 +9,14 @@ Two groups:
   * RIDE / star-schema types, mirroring the reference DDL
     (/root/reference/src/check_and_create_db_v4.py:66-135 — cited for
     parity only, re-expressed as Spark StructTypes).
-  * The driver testdata tables (TESTDATA.md / FIXTURES.md section B).
+  * The driver testdata tables (TESTDATA.md / FIXTURES.md section B):
+    ``TESTDATA_SCHEMAS`` declares nine of them, the schemas Spark
+    infers from their Parquet footers (``tests/test_declared_schemas``
+    pins the equality at every scale factor). A declared Parquet read
+    plans without the one Spark job an inference launches, so
+    building a catalog query runs no job. ``events`` is not declared:
+    its ``ts`` column may be TIMESTAMP(NANOS), which
+    ``sources.readers.load_table`` heals at read time.
 """
 
 from __future__ import annotations
@@ -101,3 +108,94 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+_NTZ = T.TimestampNTZType()  # a Parquet timestamp without a time zone
+
+
+def _nullable(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in cols])
+
+
+REGION_SCHEMA = _nullable(
+    ("r_regionkey", T.IntegerType()),
+    ("r_name", T.StringType()),
+)
+
+NATION_SCHEMA = _nullable(
+    ("n_nationkey", T.IntegerType()),
+    ("n_name", T.StringType()),
+    ("n_regionkey", T.IntegerType()),
+)
+
+CUSTOMER_SCHEMA = _nullable(
+    ("c_custkey", T.LongType()),
+    ("c_name", T.StringType()),
+    ("c_nationkey", T.IntegerType()),
+    ("c_acctbal", T.DoubleType()),
+    ("c_mktsegment", T.StringType()),
+)
+
+SUPPLIER_SCHEMA = _nullable(
+    ("s_suppkey", T.LongType()),
+    ("s_name", T.StringType()),
+    ("s_nationkey", T.IntegerType()),
+    ("s_acctbal", T.DoubleType()),
+)
+
+PART_SCHEMA = _nullable(
+    ("p_partkey", T.LongType()),
+    ("p_name", T.StringType()),
+    ("p_brand", T.StringType()),
+    ("p_type", T.StringType()),
+    ("p_size", T.IntegerType()),
+    ("p_retailprice", T.DoubleType()),
+)
+
+ORDERS_SCHEMA = _nullable(
+    ("o_orderkey", T.LongType()),
+    ("o_custkey", T.LongType()),
+    ("o_orderstatus", T.StringType()),
+    ("o_totalprice", T.DoubleType()),
+    ("o_orderdate", _NTZ),
+    ("o_orderpriority", T.StringType()),
+)
+
+LINEITEM_SCHEMA = _nullable(
+    ("l_orderkey", T.LongType()),
+    ("l_partkey", T.LongType()),
+    ("l_suppkey", T.LongType()),
+    ("l_linenumber", T.IntegerType()),
+    ("l_quantity", T.DoubleType()),
+    ("l_extendedprice", T.DoubleType()),
+    ("l_discount", T.DoubleType()),
+    ("l_tax", T.DoubleType()),
+    ("l_returnflag", T.StringType()),
+    ("l_linestatus", T.StringType()),
+    ("l_shipdate", _NTZ),
+)
+
+DOCUMENTS_SCHEMA = _nullable(
+    ("doc_id", T.LongType()),
+    ("text", T.StringType()),
+    ("lang", T.StringType()),
+    ("source", T.StringType()),
+    ("n_chars", T.LongType()),
+)
+
+EMBEDDINGS_SCHEMA = _nullable(
+    ("vec_id", T.LongType()),
+    ("embedding", T.ArrayType(T.FloatType(), True)),
+    ("label", T.IntegerType()),
+)
+
+TESTDATA_SCHEMAS: dict[str, T.StructType] = {
+    "region": REGION_SCHEMA,
+    "nation": NATION_SCHEMA,
+    "customer": CUSTOMER_SCHEMA,
+    "supplier": SUPPLIER_SCHEMA,
+    "part": PART_SCHEMA,
+    "orders": ORDERS_SCHEMA,
+    "lineitem": LINEITEM_SCHEMA,
+    "documents": DOCUMENTS_SCHEMA,
+    "embeddings": EMBEDDINGS_SCHEMA,
+}

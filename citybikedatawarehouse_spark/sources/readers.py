@@ -19,27 +19,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from citybikedatawarehouse_spark.schemas import RIDE_SCHEMA, TESTDATA_TABLES
+from citybikedatawarehouse_spark.schemas import (
+    RIDE_SCHEMA,
+    TESTDATA_SCHEMAS,
+    TESTDATA_TABLES,
+)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (TESTDATA.md) as a DataFrame.
 
+    The nine tables of ``schemas.TESTDATA_SCHEMAS`` are read with
+    their declared schema, so loading one (and building a query over
+    it) runs no Spark job; an inferred Parquet schema costs one job
+    per table.
+
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark rejects by
     default; we read it as a long (``nanosAsLong``, set defensively at
     runtime in case the session wasn't built by :func:`get_spark`) and
     convert to a microsecond TIMESTAMP_NTZ — the same truncation DuckDB
-    applies, so oracle comparisons agree.
+    applies, so oracle comparisons agree. Its schema is inferred,
+    because which of the two types ``ts`` reads as depends on the file.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
             )
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

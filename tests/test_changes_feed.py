@@ -30,6 +30,7 @@ from citybikedatawarehouse_spark.streaming.changes_feed import (
     run_fl_changes_stream,
     start_fl_changes_feed,
 )
+from tests.spark_jobs import count_jobs as _count_jobs
 
 
 def _orders(spark, sf_dir):
@@ -38,20 +39,6 @@ def _orders(spark, sf_dir):
     return load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-
-
-def _count_jobs(spark, group, fn):
-    """Run ``fn`` under a Spark job group and return (its result, the
-    number of jobs the group ran) — read once the listener bus has
-    drained, so no job is missed."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _history(spark, sf_dir, tmp_path, name, merge_jobs=None):
@@ -593,14 +580,18 @@ def test_replication_batches_budget_and_lineage(spark, sf_dir, tmp_path):
     - every replica version is the exact MOR state of the source
       version its ``replicated_from`` tag names, so no reader of the
       replica sees a state the source never had;
-    - deterministic cost counters: at most ceil(4 / 2) replica
-      versions, and at most 23 Spark jobs, measured with 4 local
-      cores (22 when the test runs first in its session; the one-job
-      difference is not explained): the first batch is a clone that
-      runs none (seeding by rewriting the snapshot took 28 in all,
-      the per-commit delete-then-merge pump before that 78); a merge
-      with no D keys still runs exactly the jobs it ran before the
-      fused delete existed (14 with no delete set, 22 with one)."""
+    - cost counters: at most ceil(4 / 2) replica versions, and 18
+      Spark jobs, measured with 4 local cores: the first batch is a
+      clone that runs none (seeding by rewriting the snapshot took 28
+      in all, the per-commit delete-then-merge pump before that 78);
+      a merge with no D keys still runs exactly the jobs it ran
+      before the fused delete existed (13 with no delete set, 20
+      with one). Every read declares its schema from table metadata;
+      inferring it cost one job per file group and per delete dir
+      (14, 22 and 22-23). The replication count is 19 in some runs
+      after the file's other tests: the second batch's merge then
+      runs one more adaptive query-stage job (cause not found), so
+      the pin is a range."""
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_table_props,
     )
@@ -611,7 +602,7 @@ def test_replication_batches_budget_and_lineage(spark, sf_dir, tmp_path):
 
     merge_jobs = []
     src, _ = _history(spark, sf_dir, tmp_path, "batch_src", merge_jobs)
-    assert merge_jobs == [14, 22]
+    assert merge_jobs == [13, 20]
 
     dst = str(tmp_path / "batch_dst")
     applied, n_jobs = _count_jobs(
@@ -620,7 +611,7 @@ def test_replication_batches_budget_and_lineage(spark, sf_dir, tmp_path):
     )
     src_lineage = fl_lineage(src)
     assert applied == len(src_lineage) == 4
-    assert n_jobs <= 23
+    assert 18 <= n_jobs <= 19
     assert len(fl_lineage(dst)) <= -(-4 // 2)
 
     tags = []

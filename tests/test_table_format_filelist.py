@@ -27,6 +27,7 @@ from citybikedatawarehouse_spark.operators.table_format import (
     fl_vacuum,
     fl_versions,
 )
+from tests.spark_jobs import count_jobs as _count_jobs
 
 
 def _orders(spark, sf_dir):
@@ -704,17 +705,6 @@ def test_vacuum_keep_zero_keeps_only_the_pointer_target(spark, tmp_path):
     assert fl_versions(root) == [head]
     assert deleted and not any(os.path.exists(p) for p in deleted)
     assert sorted(map(tuple, fl_read(spark, root).collect())) == want
-
-
-def _count_jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_emptied_table_reads_without_a_job_and_add_column_checks_type(

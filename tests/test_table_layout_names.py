@@ -107,3 +107,38 @@ def test_table_format_has_one_commit_path_and_one_file_write():
     assert callers("_props_file") == ["_commit", "fl_table_props"]
     assert props_spellings(tree) == props_spellings(fns["_props_file"])
     assert props_spellings(tree)
+
+
+def _attr_chain(node: ast.AST) -> list[str]:
+    """The attribute names along a call chain, outermost first:
+    ``spark.read.schema(s).parquet(p)`` -> parquet, schema, read."""
+    attrs = []
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Call):
+            node = node.func
+        else:
+            attrs.append(node.attr)
+            node = node.value
+    return attrs
+
+
+def test_table_format_reads_parquet_with_a_declared_schema():
+    """Every ``spark.read ... .parquet(`` in ``table_format.py``
+    declares ``.schema(...)``: an inferred Parquet schema costs one
+    Spark job per read, and the table's metadata already holds the
+    schema. The one exception is ``zone_map_stats``, the commit-time
+    scan fallback over a plain directory, which has no table props."""
+    tree = ast.parse((_PKG / _OWNER).read_text())
+    declared, inferred = [], []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for c in ast.walk(fn):
+            if not isinstance(c, ast.Call):
+                continue
+            chain = _attr_chain(c)
+            if chain[:1] == ["parquet"] and "read" in chain:
+                (declared if "schema" in chain else inferred).append(fn.name)
+    assert inferred == ["zone_map_stats"]
+    # the scan must actually see the declared reads
+    assert {"_read_files", "_delete_keys_df"} <= set(declared)
