@@ -157,10 +157,11 @@ def q109_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _zorder_oracle_sql(bits: int = 16) -> str:
     """DuckDB replay of the q77 Z-order key: same 1-row bounds agg,
-    same exact-BIGINT bucket scaling ('div' == '//'), same 32-term
+    same exact-BIGINT bucket scaling ('div' == '//'), a 32-term
     shift/mask interleave (custkey owns even bit positions, epoch-day
-    odd) — generated programmatically to match
-    functions/layout.morton_interleave term by term."""
+    odd) — generated programmatically, one term per bit: an
+    independent replay of what functions/layout.morton_interleave
+    computes with its magic-bits spread."""
     top = (1 << bits) - 1
     terms = []
     for j in range(bits):

@@ -751,3 +751,49 @@ def test_emptied_table_reads_without_a_job_and_add_column_checks_type(
     assert sorted(r["k"] for r in fl_read_mor(spark, root).collect()) == [
         0, 1, 2, 3, 4,
     ]
+
+
+def test_zorder_column_name_that_needs_quoting(spark, tmp_path):
+    """A Z-order column named ``order key`` clusters like any other
+    (its name once reached SQL text unquoted and failed to parse):
+    init (bounds computed in the plan), a merge and a compaction
+    (bounds from the manifest zones) all commit, and the reads see
+    every row with its latest values."""
+    root = str(tmp_path / "quoted")
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 7 % 50).alias("order key"),
+        F.lit("x").alias("v"),
+    )
+    fl_init(
+        spark, root, df, key="k", stats_cols=("order key",),
+        zorder_by=("order key",), layout_files=4,
+    )
+    assert "min_order key" in fl_manifest(root).columns
+    assert fl_read_mor(spark, root).count() == 200
+    inserts = spark.range(500, 510).select(
+        F.col("id").alias("k"),
+        F.lit(3).cast("long").alias("order key"),
+        F.lit("n").alias("v"),
+    )
+    fl_merge_upsert(
+        spark, root,
+        df.where("k < 20").withColumn("v", F.lit("y")).unionByName(inserts),
+        key="k",
+    )
+    fl_compact(spark, root)
+    got = {
+        r["k"]: (r["order key"], r["v"])
+        for r in fl_read_mor(spark, root).collect()
+    }
+    want = {i: (i * 7 % 50, "y" if i < 20 else "x") for i in range(200)}
+    want.update({i: (3, "n") for i in range(500, 510)})
+    assert got == want
+    pruned, n_read, n_total = fl_read_pruned(
+        spark, root, {"order key": (0, 9)}
+    )
+    assert n_read < n_total
+    low = pruned.where(F.col("order key") <= 9).collect()
+    assert sorted(r["k"] for r in low) == sorted(
+        k for k, (ok, _) in want.items() if ok <= 9
+    )
