@@ -1,90 +1,15 @@
-"""Warehouse maintenance on plain Parquet directories.
-
-Streaming sinks and frequent incremental appends (the reference's
-``if_exists='append'`` pattern) fragment a table into many small
-files; at scale, scan cost becomes dominated by file-open overhead
-and the NameNode/listing path. Compaction rewrites a parquet
-directory into size-targeted files. The module also holds snapshot
-CDC extraction and bucket digests. Everything versioned — MERGE,
-per-file zone stats and pruned reads — is the table format in
+"""Snapshot change-data extraction and bucket digests: diff two
+table snapshots into a minimal insert/update/delete log, and fold a
+snapshot into per-bucket row digests that two copies compare. Every
+operation that rewrites a table — MERGE, compaction, per-file zone
+stats and pruned reads — is the table format in
 ``operators/table_format.py``.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _fs_swap(spark: SparkSession, staging: str, target: str, backup: str) -> None:
-    """Swap ``staging`` into place over ``target`` through the Hadoop
-    ``FileSystem`` API (rename target->backup, staging->target, delete
-    backup) instead of ``shutil`` — so the same code path runs on any
-    Hadoop-supported store, not just the local POSIX filesystem.
-
-    Atomicity caveat: HDFS (and local fs) rename is atomic, so a crash
-    mid-swap leaves either the old directory or the new one. On object
-    stores (S3A and friends) "rename" is a server-side COPY + DELETE —
-    there is a window where readers see a partial table. At that scale
-    use a transactional table format (Delta/Iceberg) or publish into a
-    versioned directory and flip a pointer; this helper is the plain-
-    Parquet fallback, correct-on-crash only where rename is native.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path
-    fs = jpath(target).getFileSystem(hconf)
-    if not fs.rename(jpath(target), jpath(backup)):
-        raise IOError(f"swap: rename {target} -> {backup} failed")
-    if not fs.rename(jpath(staging), jpath(target)):
-        # roll back so the table is never missing
-        fs.rename(jpath(backup), jpath(target))
-        raise IOError(f"swap: rename {staging} -> {target} failed")
-    fs.delete(jpath(backup), True)
-
-
-def parquet_file_stats(path: str) -> tuple[int, int]:
-    """(file_count, total_bytes) of the parquet data files under
-    ``path`` (recursive — includes partition subdirs; skips hidden
-    ``_``/``.`` subtrees such as a table's ``_manifests``, matching
-    Spark's own scan listing)."""
-    n, size = 0, 0
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.endswith(".parquet"):
-                n += 1
-                size += os.path.getsize(os.path.join(root, f))
-    return n, size
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_by: tuple[str, ...] = (),
-) -> DataFrame:
-    """Rewrite the parquet directory into ~target-sized files.
-
-    Reads, coalesces to ceil(bytes/target) files (repartitionByRange
-    when ``sort_by`` given — also restores clustering, which feeds
-    min/max-based row-group skipping), writes to a staging dir, then
-    swaps. Returns the compacted DataFrame handle.
-    """
-    df = spark.read.parquet(path)
-    _, total = parquet_file_stats(path)
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    if sort_by:
-        out = df.repartitionByRange(n_files, *sort_by)
-    else:
-        out = df.coalesce(n_files)
-    staging = path.rstrip("/") + "__compacting"
-    out.write.mode("overwrite").parquet(staging)
-    _fs_swap(spark, staging, path, path.rstrip("/") + "__precompact")
-    return spark.read.parquet(path)
 
 
 def cdc_extract(

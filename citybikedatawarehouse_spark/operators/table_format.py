@@ -37,11 +37,14 @@ keys of a 100 TB table costs those files, not a full rewrite:
   ``CommitConflictError`` and its orphan stays invisible to readers.
   Every operation publishes through ONE path, ``_commit`` (stage
   manifest + props, then flip), and writes its data files through
-  ONE path, ``_write_files`` (layout, write, footer stats);
+  ONE path, ``_write_files`` (layout, write, footer stats). A commit
+  that replaces all of a table's files (compact, and the streaming
+  SCD2 dimension's overwrite) goes through ``_replace_all``, so this
+  module is the only package code that replaces a live table;
 - **every commit records what it did**: its props carry
   ``operation`` (init, merge, delete, compact, optimize, set_zorder,
   add_constraint, drop_constraint, restore, add_column,
-  rename_column, clone) and ``data_change`` — False for the
+  rename_column, clone, overwrite) and ``data_change`` — False for the
   layout-only operations (compact, optimize, set_zorder and the two
   constraint commits), which leave ``fl_read_mor`` unchanged, so the
   change feed steps over them without reading a file (Delta's
@@ -684,22 +687,31 @@ def _parse_types(spark: SparkSession, fields: list[dict]) -> list[T.DataType]:
     return [types[f["type"]] for f in fields]
 
 
-def _empty_relation(spark: SparkSession, fields: list[dict]) -> DataFrame:
-    """An empty relation with ``fields`` (``{"name", "type"}`` dicts,
-    the schema-props shape) as its columns, every one nullable: a
-    local relation with no rows, so it collects without a Spark job,
-    built by one JVM call that analyses one plan (a few ms, where a
-    projection over a filtered range took ~40). The types come from
-    ``_parse_types`` and each name is only a struct field name."""
-    schema = T.StructType(
-        [
-            T.StructField(f["name"], t)
-            for f, t in zip(fields, _parse_types(spark, fields))
-        ]
-    )
+def _local_relation(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty relation with ``schema``: a local relation with no
+    rows, so it collects without a Spark job, built by one JVM call
+    that analyses one plan (a few ms, where a projection over a
+    filtered range took ~40 and ``spark.createDataFrame([], schema)``
+    runs a job when collected)."""
     jss = spark._jsparkSession
     return DataFrame(
         jss.createDataFrame([], jss.parseDataType(schema.json())), spark
+    )
+
+
+def _empty_relation(spark: SparkSession, fields: list[dict]) -> DataFrame:
+    """``_local_relation`` with ``fields`` (``{"name", "type"}`` dicts,
+    the schema-props shape) as its columns, every one nullable. The
+    types come from ``_parse_types`` and each name is only a struct
+    field name."""
+    return _local_relation(
+        spark,
+        T.StructType(
+            [
+                T.StructField(f["name"], t)
+                for f, t in zip(fields, _parse_types(spark, fields))
+            ]
+        ),
     )
 
 
@@ -1718,26 +1730,57 @@ def fl_delete(
     return n_new, version
 
 
+def _replace_all(
+    spark: SparkSession,
+    root: str,
+    parent: str,
+    props: dict,
+    df: DataFrame,
+    *,
+    operation: str,
+    bounds: dict[str, tuple[int, int]] | None = None,
+    persist: bool = False,
+) -> str:
+    """One commit that replaces every file of ``parent`` with ``df``'s
+    rows, stored in the table's types (``_store_assign``), packed into
+    the table's ``layout_files`` and published with an EMPTY delete
+    set. ``df`` may read ``parent`` lazily while the new files are
+    written: a version's files are immutable, and readers stay on
+    ``parent`` until the pointer flips. Emptiness is read from the new
+    files' footers after the write, not probed before it: an empty
+    ``df`` has its commit dir removed and commits an explicitly-empty
+    manifest (``fl_read`` then returns an empty relation with the
+    table schema). Returns the new version name."""
+    props = {**props, "delete_dirs": []}
+    version = _claim_version(root)
+    manifest = _write_files(
+        spark, root, version, _store_assign(spark, root, props, df), props,
+        bounds=bounds, pack=True, persist=persist,
+    )
+    if int(manifest["n_rows"].sum()) == 0:
+        shutil.rmtree(_commit_dir(root, version), ignore_errors=True)
+        manifest = manifest.iloc[:0]
+    return _commit(
+        root, parent, manifest, props, operation=operation, version=version
+    )
+
+
 def fl_compact(
     spark: SparkSession, root: str, layout_files: int | None = None
 ) -> str:
     """Copy-on-write fold: rewrite the current merge-on-read state
     (files minus delete set) into a fresh clustered layout and commit
-    it with an EMPTY delete set — deletes become physical, the
-    read-side anti-join disappears, and streaming-epoch file
-    fragmentation is bin-packed away. One full rewrite, amortized
+    it with an EMPTY delete set (``_replace_all``) — deletes become
+    physical, the read-side anti-join disappears, and streaming-epoch
+    file fragmentation is bin-packed away. One full rewrite, amortized
     across every delete and small commit since the last fold — the
-    OPTIMIZE of this format. Emptiness is read from the new files'
-    footers after the write, not probed before it: a state left empty
-    by deletes has its commit dir removed and commits an
-    explicitly-empty manifest (``fl_read`` then returns an empty
-    relation with the table schema). Returns the new version name."""
+    OPTIMIZE of this format. A state left empty by deletes commits an
+    explicitly-empty manifest. Returns the new version name."""
     parent = fl_current_version(root)
-    props = {**fl_table_props(root, parent), "delete_dirs": []}
+    props = fl_table_props(root, parent)
     if layout_files is not None:
         props["layout_files"] = layout_files
     m = fl_manifest(root, parent)
-    version = _claim_version(root)
     # persist the MOR state across the range partitioner's sampling
     # pass and the write (otherwise the files-minus-delete-set plan
     # computes twice) — adaptively, on the manifest's row total (an
@@ -1745,19 +1788,11 @@ def fl_compact(
     # build loses to the recompute, _persist_wanted). Z-order bounds
     # come from the manifest zones when complete — wider than the
     # post-delete data is fine, narrower impossible
-    manifest = _write_files(
-        spark, root, version, fl_read_mor(spark, root, parent), props,
+    return _replace_all(
+        spark, root, parent, props, fl_read_mor(spark, root, parent),
+        operation="compact",
         bounds=_manifest_bounds(m, list(props.get("zorder_by") or [])),
-        pack=True,
         persist=_persist_wanted(int(m["n_rows"].sum())),
-    )
-    if int(manifest["n_rows"].sum()) == 0:
-        # every row deleted: no data dir at all, and the delete set is
-        # gone with it
-        shutil.rmtree(_commit_dir(root, version), ignore_errors=True)
-        manifest = manifest.iloc[:0]
-    return _commit(
-        root, parent, manifest, props, operation="compact", version=version
     )
 
 

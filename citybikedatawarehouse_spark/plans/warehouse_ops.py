@@ -23,6 +23,15 @@ from citybikedatawarehouse_spark.plans.catalog import register
 from citybikedatawarehouse_spark.sources.readers import load_table as _t
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory for a query's tables, removed at
+    interpreter exit and not before: the DataFrame a query returns
+    reads its tables lazily, when the caller collects it."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    return base
+
+
 @register(
     "q108_scd2_merge",
     oracle="""
@@ -125,33 +134,29 @@ def q108_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q109_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction round-trip (operators/maintenance.py):
-    fragment the documents table into 64 files, compact to
-    size-targeted files, and prove (a) content survives bit-exact
-    (doc_id + md5(text) vs the source — the oracle) and (b) the file
-    count actually dropped (self-oracled boolean; exact counts are
+    """Small-file compaction round-trip (``fl_compact``, the table
+    format's OPTIMIZE): fragment the documents table into a 64-file
+    file-list table, compact it into one file, and prove (a) content
+    survives bit-exact (doc_id + md5(text) vs the source — the
+    oracle) and (b) the file count actually dropped (self-oracled
+    boolean from the two versions' manifests; exact counts are
     parallelism-dependent, the reduction claim is not)."""
-    from citybikedatawarehouse_spark.operators.maintenance import (
-        compact_parquet,
-        parquet_file_stats,
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_compact,
+        fl_init,
+        fl_manifest,
+        fl_read,
     )
 
     d = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="cbdw_compact_")
-    # the returned DataFrame reads the compacted dir lazily (the
-    # driver collects it later), so the dir must outlive this call —
-    # clean up at interpreter exit, never materialize through the
-    # driver here
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    work = base + "/documents"
-    d.repartition(64).write.mode("overwrite").parquet(work)
-    n_before, _ = parquet_file_stats(work)
-    compacted = compact_parquet(spark, work, target_file_mb=128)
-    n_after, _ = parquet_file_stats(work)
-    return compacted.select(
+    root = _scratch_dir("cbdw_compact_") + "/documents"
+    v_frag = fl_init(spark, root, d.repartition(64), key="doc_id")
+    fl_compact(spark, root, layout_files=1)
+    files_reduced = len(fl_manifest(root)) < len(fl_manifest(root, v_frag))
+    return fl_read(spark, root).select(
         "doc_id",
         F.md5("text").alias("content_hash"),
-        F.lit(n_after < n_before).alias("files_reduced"),
+        F.lit(files_reduced).alias("files_reduced"),
     )
 
 
@@ -1334,8 +1339,7 @@ def q278_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = _t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="cbdw_zonemap_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_zonemap_")
     root = base + "/orders_by_date"
     fl_init(
         spark,
@@ -1457,8 +1461,7 @@ def q280_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_timetravel_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_timetravel_")
     root = base + "/orders_versioned"
     v1_name = fl_init(
         spark, root, o.where(F.col("o_orderkey") % 10 == 0), key="o_orderkey"
@@ -1554,8 +1557,7 @@ def q281_zorder_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__day",
         F.datediff(F.to_date("o_orderdate"), F.to_date(F.lit("1970-01-01"))),
     )
-    base = tempfile.mkdtemp(prefix="cbdw_zorder_zm_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_zorder_zm_")
     root = base + "/orders_zordered"
     fl_init(
         spark,
@@ -1695,8 +1697,7 @@ def q283_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         day,
     )
-    base = tempfile.mkdtemp(prefix="cbdw_tableformat_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_tableformat_")
     root = base + "/orders_tf"
     fl_init(
         spark,
@@ -1835,8 +1836,7 @@ def q284_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_streamsink_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_streamsink_")
     root = base + "/orders_sink"
     fl_init(
         spark, root, o.where(F.col("o_orderkey") % 10 == 0), key="o_orderkey"
@@ -1961,8 +1961,7 @@ def q285_filelist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_filelist_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_filelist_")
     root = base + "/orders_fl"
     fl_init(
         spark,
@@ -2094,8 +2093,7 @@ def q286_filelist_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flmor_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flmor_")
     root = base + "/orders_mor"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2233,8 +2231,7 @@ def q287_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="cbdw_flevo_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flevo_")
     root = base + "/orders_evo"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2363,8 +2360,7 @@ def q288_fl_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flcdc_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flcdc_")
     root = base + "/orders_cdc"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2466,8 +2462,7 @@ def q289_fl_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flrestore_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flrestore_")
     root = base + "/orders_restore"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2586,8 +2581,7 @@ def q290_fl_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flopt_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flopt_")
     root = base + "/orders_opt"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2695,8 +2689,7 @@ def q291_fl_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flck_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flck_")
     root = base + "/orders_ck"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2840,8 +2833,7 @@ def q292_fl_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flfeed_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flfeed_")
     root = base + "/orders_feed"
     fl_init(
         spark, root, o, key="o_orderkey",
@@ -2975,8 +2967,7 @@ def q293_fl_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flrepl_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flrepl_")
     src = base + "/src"
     dst = base + "/dst"
     fl_init(
@@ -3090,8 +3081,7 @@ def q294_fl_set_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="cbdw_flzo_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    base = _scratch_dir("cbdw_flzo_")
     root = base + "/orders_zo"
     fl_init(
         spark, root, o, key="o_orderkey",

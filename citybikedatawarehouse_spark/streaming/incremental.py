@@ -1,34 +1,35 @@
-"""Cross-batch streaming dedup with persistent digest state.
+"""Streaming twins of batch queries, as foreachBatch loops with
+persistent state. foreachBatch makes each micro-batch a normal batch
+job, so every step is the oracle-verified batch plan (AQE, broadcast
+of a small state side included), executed incrementally. Delivery is
+at-least-once: after a crash between a step's side effects and the
+stream's checkpoint, Structured Streaming replays the epoch. The
+state takes one of two shapes, each replay-safe:
 
-``dropDuplicatesWithinWatermark`` (windows.py) bounds its state by
-the watermark horizon — correct for event streams, wrong for corpus
-ingestion, where "have we EVER seen this document" has no horizon.
-This module is the streaming twin of q86_incremental_dedup
-(plans/curation.py): each micro-batch is deduplicated within itself
-(min-id survivor per digest — deterministic regardless of arrival
-order inside the batch) and against a persistent digest-state table,
-survivors are appended to the output corpus and their digests to the
-state.
+- **Epoch slices** (dedup, novelty, transitions, funnel and the
+  sketch and monoid feeds): each epoch writes its state slice, and
+  any output, to epoch-keyed directories (``state_dir/epoch=N``) by
+  overwrite, and the state read unions every slice EXCEPT the current
+  epoch's. A replayed epoch sees exactly the state its first attempt
+  saw and overwrites its own slices idempotently: a batch can never
+  anti-join against digests its own crashed attempt recorded, which
+  would yield an empty "fresh" set that overwrites the epoch dir
+  holding the real survivors. Only a replay rewrites a slice, before
+  any later epoch has read it.
+- **A file-list table** (``operators/table_format.py``: the SCD2
+  dimension of ``start_scd2_stream`` and the upsert sink of
+  ``start_fl_upsert_stream``): each epoch is ONE atomic commit that
+  records the epoch id and the stream's id in its props, the Delta
+  ``txnAppId``/``txnVersion`` idempotent-sink pattern. A crash before
+  the pointer flip leaves readers on the previous version, and a
+  replay of a published epoch is skipped (``_epoch_is_replay``).
 
-State is a plain parquet directory of 32-byte digests. At scale the
-same loop runs unchanged with the state in a transactional table
-format (Delta/Iceberg MERGE) or behind a Bloom-filter pre-check; the
-anti-join already shuffles only digests, never text (q60's rule).
-foreachBatch makes each micro-batch a normal batch job, so the whole
-dedup plan — including AQE and broadcast of a small state side — is
-the oracle-verified batch plan, executed incrementally.
-
-Epoch replays (failure recovery) are tolerated by routing BOTH
-writes to epoch-keyed subdirectories (the idempotent-sink pattern of
-windows.run_foreach_batch_parquet): a replayed epoch overwrites its
-own output AND its own state slice, and the state read excludes the
-current epoch — so a batch can never anti-join against digests its
-own crashed attempt recorded (which would yield an empty "fresh"
-that overwrites the epoch dir holding the real survivors). Both
-writes are idempotent under replay on plain parquet; at scale the
-same loop gains atomicity-per-write from a transactional table
-format (Delta/Iceberg), with the epoch key doubling as the
-partition column.
+The module starts with the cross-batch dedup, the streaming twin of
+q86_incremental_dedup (plans/curation.py). Unlike
+``dropDuplicatesWithinWatermark`` (windows.py), its state has no
+horizon: "have we EVER seen this document". Each micro-batch keeps
+its min-id survivor per digest and anti-joins the accumulated 32-byte
+digests, shuffling only digests, never text (q60's rule).
 """
 
 from __future__ import annotations
@@ -52,7 +53,13 @@ SHINGLE_STATE_SCHEMA = T.StructType(
 def _read_epoch_state(spark, state_dir, schema, epoch_id):
     """Union every epoch slice EXCEPT the current one (a replayed
     batch must never see state its own crashed attempt recorded) —
-    the shared replay-safe state read of this module's loops."""
+    the shared replay-safe state read of this module's loops. With no
+    slice yet it is an empty local relation, which collects without
+    a Spark job."""
+    from citybikedatawarehouse_spark.operators.table_format import (
+        _local_relation,
+    )
+
     dirs = []
     if os.path.isdir(state_dir):
         dirs = [
@@ -61,7 +68,7 @@ def _read_epoch_state(spark, state_dir, schema, epoch_id):
             if d.startswith("epoch=") and d != f"epoch={epoch_id}"
         ]
     if not dirs:
-        return spark.createDataFrame([], schema)
+        return _local_relation(spark, schema)
     return spark.read.schema(schema).parquet(*dirs)
 
 
@@ -98,17 +105,28 @@ def start_scd2_stream(
     — the incremental upsert-with-history the reference's
     ``if_exists='replace'`` wholesale reload loses.
 
-    The state parquet is rewritten via staging-dir swap each epoch
-    (the dimension is read lazily while being replaced; at scale this
-    rewrite is a transactional-format MERGE and only touched
-    partitions rewrite). First batch bootstraps via scd2_init."""
-    import shutil
-
+    ``state_dir`` is a file-list table (operators/table_format.py).
+    The first batch creates it with ``fl_init(scd2_init(latest))``;
+    every later epoch is ONE commit that replaces the dimension's
+    files with ``scd2_merge(fl_read(parent), latest)`` — the parent
+    version's files are immutable, so the lazy read of the old
+    dimension while the new one is written is safe. Each commit
+    records the epoch and the query's id (stable across restarts from
+    one checkpoint), so a crash before the pointer flip leaves readers
+    on the previous dimension and a replay of a published epoch is
+    skipped (``_epoch_is_replay``); a restart from a fresh checkpoint
+    merges its batches into the existing dimension."""
     from citybikedatawarehouse_spark.operators.scd import scd2_init, scd2_merge
-
-    spark = updates_stream.sparkSession
+    from citybikedatawarehouse_spark.operators.table_format import (
+        _replace_all,
+        fl_current_version,
+        fl_init,
+        fl_read,
+        fl_table_props,
+    )
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
         w = Window.partitionBy(key).orderBy(
             F.col(effective_ts).desc(), *[F.col(a).desc() for a in attrs]
         )
@@ -117,19 +135,29 @@ def start_scd2_stream(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        has_state = os.path.isdir(state_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(state_dir)
+        txn_app_id = spark.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
         )
-        if has_state:
-            dim = spark.read.parquet(state_dir)
-            merged = scd2_merge(dim, latest, key, attrs, effective_ts)
-        else:
-            merged = scd2_init(latest, key, effective_ts)
-        staging = state_dir.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        epoch = {"last_epoch": int(epoch_id), "txn_app_id": txn_app_id}
+        try:
+            parent = fl_current_version(state_dir)
+        except FileNotFoundError:
+            fl_init(
+                spark, state_dir, scd2_init(latest, key, effective_ts),
+                key=key, extra_props=epoch,
+            )
+            return
+        props = fl_table_props(state_dir, parent)
+        if _epoch_is_replay(props, epoch_id, txn_app_id):
+            return
+        merged = scd2_merge(
+            fl_read(spark, state_dir, parent), latest, key, attrs,
+            effective_ts,
+        )
+        _replace_all(
+            spark, state_dir, parent, {**props, **epoch}, merged,
+            operation="overwrite",
+        )
 
     return updates_stream.writeStream.foreachBatch(step).start()
 
@@ -544,31 +572,17 @@ def resolve_cell_state(state_df: DataFrame) -> DataFrame:
     )
 
 
-def start_incremental_assign(
-    vec_stream: DataFrame, centroids: DataFrame, state_dir: str
-):
-    """Streaming ANN ingest against a frozen quantizer: each epoch's
-    per-cell (count, sum_sq) slice lands under ``state_dir/epoch=N``.
-    Same replay-safety contract as the sibling loops — per-epoch
-    overwrites are idempotent, and since the emitted stats are a
-    pure function of the batch alone (the state is never READ by the
-    step), replays cannot corrupt anything. resolve_cell_state reads
-    the drift picture at any time."""
-    cents = centroids.localCheckpoint(eager=True)  # k rows, every epoch
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        assign_epoch_step(batch_df, epoch_id, state_dir, cents)
-
-    return vec_stream.writeStream.foreachBatch(step).start()
-
-
 def assign_epoch_step(
     batch_df: DataFrame,
     epoch_id: int,
     state_dir: str,
     centroids: DataFrame,
 ) -> None:
-    """One assign epoch (module-level; see dedup_epoch_step)."""
+    """One streaming ANN-ingest epoch against a frozen quantizer: the
+    batch's per-cell (count, sum_sq) slice lands under
+    ``state_dir/epoch=N``. The slice is a pure function of the batch
+    (the step never reads state), so a replayed epoch's overwrite is
+    idempotent; resolve_cell_state reads the drift picture."""
     assign_batch_against_centroids(batch_df, centroids).write.mode(
         "overwrite"
     ).parquet(f"{state_dir}/epoch={epoch_id}")
@@ -582,23 +596,13 @@ USER_DAY_STATE_SCHEMA = T.StructType(
 )
 
 
-def start_incremental_wau(events_stream: DataFrame, state_dir: str):
-    """Streaming rolling-WAU feed: each epoch persists its distinct
-    (user_id, day) slice under ``state_dir/epoch=N``. Distinct
-    user-days form a set (idempotent union), so slices resolve by a
-    plain distinct and the step never reads state — replays are
-    trivially idempotent. resolve_wau computes the q173 batch rollup
-    from the accumulated slices at any time."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        wau_epoch_step(batch_df, epoch_id, state_dir)
-
-    return events_stream.writeStream.foreachBatch(step).start()
-
-
 def wau_epoch_step(
     batch_df: DataFrame, epoch_id: int, state_dir: str
 ) -> None:
-    """One WAU epoch (module-level; see dedup_epoch_step)."""
+    """One rolling-WAU epoch: the batch's distinct (user_id, day)
+    slice lands under ``state_dir/epoch=N``. User-days form a set, so
+    the step never reads state and a replay is idempotent; resolve_wau
+    computes q173's rollup from the accumulated slices."""
     (
         batch_df.select("user_id", F.to_date("ts").alias("day"))
         .distinct()
@@ -637,25 +641,15 @@ SOURCE_WORD_STATE_SCHEMA = T.StructType(
 )
 
 
-def start_incremental_jsd(docs_stream: DataFrame, state_dir: str):
-    """Streaming distribution-drift feed: each epoch persists its
-    per-(source, word) COUNT slice — counts form a commutative
-    monoid, so slices resolve by one re-aggregate and a replayed
-    epoch (same epoch id) overwrites its own directory instead of
-    double-counting. ``resolve_source_jsd`` then computes q188's
-    exact pairwise Jensen-Shannon divergence from the accumulated
-    state at any time — the "is source X drifting away from source Y
-    as data lands" monitor."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        wordcount_epoch_step(batch_df, epoch_id, state_dir)
-
-    return docs_stream.writeStream.foreachBatch(step).start()
-
-
 def wordcount_epoch_step(
     batch_df: DataFrame, epoch_id: int, state_dir: str
 ) -> None:
-    """One JSD-feed epoch (module-level; see dedup_epoch_step)."""
+    """One distribution-drift epoch: the batch's per-(source, word)
+    COUNT slice lands under ``state_dir/epoch=N``. Counts are a
+    commutative monoid, so slices resolve by one re-aggregate and a
+    replayed epoch overwrites its own slice instead of
+    double-counting; resolve_source_jsd computes q188's pairwise
+    Jensen-Shannon divergence from them."""
     from citybikedatawarehouse_spark.functions.textfns import words
 
     (
@@ -733,18 +727,6 @@ def keycount_epoch_step(
     )
 
 
-def start_incremental_key_census(events_stream: DataFrame, state_dir: str):
-    """Streaming twin of q210's events/user_id row: each epoch lands
-    its per-key count slice; ``resolve_key_census`` reads the
-    accumulated state at any time and emits the census — the live
-    "is one user becoming a hot key" monitor that decides salting
-    (q106/q107) BEFORE the nightly batch job straggles."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        keycount_epoch_step(batch_df, epoch_id, state_dir)
-
-    return events_stream.writeStream.foreachBatch(step).start()
-
-
 def resolve_key_census(state_df: DataFrame) -> DataFrame:
     """q210's summary over the accumulated (k, c) slices: merge the
     monoid (sum per key), then the identical census expression —
@@ -817,19 +799,6 @@ def cms_epoch_step(
     )
 
 
-def start_incremental_cms(stream: DataFrame, state_dir: str, key_col: str):
-    """Streaming twin of q243's sketch build: each micro-batch lands
-    its counter slice; ``resolve_cms`` merges them at any time into
-    the exact batch sketch — bounded state (1024 counters per epoch)
-    no matter the key cardinality, which is the whole point of
-    keeping a CMS beside the stream instead of a per-key census when
-    keys are unbounded."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        cms_epoch_step(batch_df, epoch_id, state_dir, key_col)
-
-    return stream.writeStream.foreachBatch(step).start()
-
-
 def resolve_cms(state_df: DataFrame) -> DataFrame:
     """Merge the per-epoch counter slices into the sketch: SUM per
     (j, bucket) — byte-compatible with q243's batch-built `cms`
@@ -892,16 +861,6 @@ def hll_epoch_step(
         .write.mode("overwrite")
         .parquet(f"{state_dir}/epoch={epoch_id}")
     )
-
-
-def start_incremental_hll(stream: DataFrame, state_dir: str, key_col: str):
-    """Streaming distinct-count sketch: bounded state (<= 256 rows
-    per epoch) for any key cardinality — the merge-at-read sibling
-    of the count-min stream (`start_incremental_cms`)."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        hll_epoch_step(batch_df, epoch_id, state_dir, key_col)
-
-    return stream.writeStream.foreachBatch(step).start()
 
 
 def resolve_hll_estimate(state_df: DataFrame) -> DataFrame:
@@ -981,19 +940,6 @@ def cdc_epoch_step(
     )
 
 
-def start_incremental_cdc(ops_stream: DataFrame, state_dir: str):
-    """Streaming CDC apply: micro-batches of the insert/update/
-    delete log reduce to per-key last-ops per epoch; ``resolve_cdc``
-    merges the slices into the final table at any time — the
-    foreachBatch shape a Delta/Iceberg MERGE sink replaces 1:1 at
-    100 TB (the semilattice step IS the MERGE's matched-clause
-    logic)."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        cdc_epoch_step(batch_df, epoch_id, state_dir)
-
-    return ops_stream.writeStream.foreachBatch(step).start()
-
-
 def resolve_cdc(state_df: DataFrame) -> DataFrame:
     """Merge per-epoch last-op slices by one more last-writer-wins
     pass and drop deleted keys: the live table (k, cents, op)."""
@@ -1048,17 +994,6 @@ def hist_epoch_step(
         .write.mode("overwrite")
         .parquet(f"{state_dir}/epoch={epoch_id}")
     )
-
-
-def start_incremental_hist(stream: DataFrame, state_dir: str, value_col: str):
-    """Streaming quantile sketch: per-epoch (bin, count) slices, the
-    SUM-merge sibling of the count-min stream — completing the live
-    sketch quartet (CMS frequency / HLL cardinality / Bloom
-    membership / histogram quantiles)."""
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        hist_epoch_step(batch_df, epoch_id, state_dir, value_col)
-
-    return stream.writeStream.foreachBatch(step).start()
 
 
 def resolve_hist(state_df: DataFrame) -> DataFrame:
@@ -1133,19 +1068,6 @@ def kmv_epoch_step(
         .write.mode("overwrite")
         .parquet(f"{state_dir}/epoch={epoch_id}")
     )
-
-
-def start_incremental_kmv(stream: DataFrame, state_dir: str, key_col: str):
-    """Streaming distinct-count + intersect-capable sketch: bounded
-    state (<= 256 rows per epoch) for any key cardinality — the
-    bottom-k sibling of the HLL stream, kept when sketches must also
-    INTERSECT downstream (audience overlap), which HLL registers
-    cannot."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        kmv_epoch_step(batch_df, epoch_id, state_dir, key_col)
-
-    return stream.writeStream.foreachBatch(step).start()
 
 
 def resolve_kmv(state_df: DataFrame) -> DataFrame:

@@ -1,14 +1,12 @@
-"""Compaction utility + stream-static and stream-stream joins."""
+"""Stream-static and stream-stream joins, as-of joins, CDC
+extraction, and file-list commits (merge crash injection,
+compaction)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from citybikedatawarehouse_spark.operators.maintenance import (
-    compact_parquet,
-    parquet_file_stats,
-)
 from citybikedatawarehouse_spark.sources.readers import load_table
 from citybikedatawarehouse_spark.streaming.windows import (
     enrich_stream_static,
@@ -16,29 +14,6 @@ from citybikedatawarehouse_spark.streaming.windows import (
     run_to_memory,
     stream_stream_self_join,
 )
-
-
-def test_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
-    frag = str(tmp_path / "frag")
-    src = load_table(spark, sf_dir, "lineitem")
-    src.repartition(40).write.parquet(frag)  # fragment: 40 small files
-    n_before, _ = parquet_file_stats(frag)
-    assert n_before >= 40
-    rows_before = spark.read.parquet(frag).count()
-    checksum_before = spark.read.parquet(frag).agg(
-        F.sum("l_orderkey"), F.round(F.sum("l_extendedprice"), 2)
-    ).collect()
-
-    compacted = compact_parquet(spark, frag, target_file_mb=128)
-    n_after, _ = parquet_file_stats(frag)
-    assert n_after < n_before and n_after <= 2
-    assert compacted.count() == rows_before
-    assert (
-        spark.read.parquet(frag)
-        .agg(F.sum("l_orderkey"), F.round(F.sum("l_extendedprice"), 2))
-        .collect()
-        == checksum_before
-    )
 
 
 @pytest.fixture()
@@ -333,30 +308,59 @@ def test_fl_merge_crash_injection(spark, tmp_path):
     assert fl_current_version(root) == current
 
 
-def test_fl_compact_is_a_commit(spark, tmp_path):
-    """File-list compaction: same rows, fewer files, published by a
-    pointer flip — the old version intact until vacuum."""
+def _assert_compaction(spark, root, v1, n_frag, sums, n_jobs):
+    """``fl_compact`` the fragmented table at ``root`` (``v1`` holding
+    at least ``n_frag`` files): fewer files (at most 2), the same rows
+    and ``sums`` checksums, published by a pointer flip in ``n_jobs``
+    Spark jobs, the pre-compaction version readable until vacuum."""
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_compact,
         fl_current_version,
-        fl_init,
         fl_manifest,
         fl_read,
     )
+    from tests.spark_jobs import count_jobs
 
-    root = str(tmp_path / "ct")
-    # a 16-file range layout stands in for a fragmented table
+    n_before = len(fl_manifest(root, v1))
+    assert n_before >= n_frag
+    v2, jobs = count_jobs(
+        spark, f"compact_{n_frag}",
+        lambda: fl_compact(spark, root, layout_files=2),
+    )
+    assert jobs == n_jobs
+    assert fl_current_version(root) == v2
+    n_after = len(fl_manifest(root))
+    assert n_after < n_before and n_after <= 2
+    before, after = fl_read(spark, root, v1), fl_read(spark, root)
+    assert sorted(after.collect()) == sorted(before.collect())
+    assert after.agg(*sums).collect() == before.agg(*sums).collect()
+
+
+def test_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
+    """40 small unclustered files of lineitem compact through
+    ``fl_compact`` (a coalescing write) in two Spark jobs."""
+    from citybikedatawarehouse_spark.operators.table_format import fl_init
+
+    root = str(tmp_path / "fragmented")
+    v1 = fl_init(
+        spark, root,
+        load_table(spark, sf_dir, "lineitem").repartition(40),
+        key="l_orderkey",
+    )
+    _assert_compaction(
+        spark, root, v1, 40,
+        [F.sum("l_orderkey"), F.round(F.sum("l_extendedprice"), 2)], 2,
+    )
+
+
+def test_fl_compact_is_a_commit(spark, tmp_path):
+    """File-list compaction of a 16-file Z-ordered range layout: a
+    sampling job for the range partitioner, then the write."""
+    from citybikedatawarehouse_spark.operators.table_format import fl_init
+
+    root = str(tmp_path / "zordered")
     v1 = fl_init(
         spark, root, spark.range(1000), key="id",
         zorder_by=("id",), layout_files=16,
     )
-    n_before = len(fl_manifest(root, v1))
-    assert n_before >= 16
-    v2 = fl_compact(spark, root, layout_files=2)
-    assert fl_current_version(root) == v2
-    n_after = len(fl_manifest(root))
-    assert n_after < n_before
-    got = sorted(r.id for r in fl_read(spark, root).collect())
-    assert got == list(range(1000))
-    # pre-compaction version still readable until vacuumed
-    assert fl_read(spark, root, v1).count() == 1000
+    _assert_compaction(spark, root, v1, 16, [F.sum("id")], 3)

@@ -20,9 +20,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from citybikedatawarehouse_spark.operators.maintenance import (
-    parquet_file_stats,
-)
 from citybikedatawarehouse_spark.operators.table_format import (
     _norm_file_uri,
     fl_compact,
@@ -240,5 +237,4 @@ def test_hidden_dirs_invisible_to_data_scans(spark, sf_dir, tmp_path):
     assert set(df.columns) == {
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderday"
     }
-    n_files, _ = parquet_file_stats(root)
-    assert n_files == len(_data_file_set(spark, root)) == 8
+    assert len(fl_manifest(root)) == len(_data_file_set(spark, root)) == 8

@@ -117,6 +117,11 @@ UPD_SCHEMA = T.StructType(
 )
 
 
+def _scd2_rows(df):
+    cols = ["station_id", "name", "capacity", "valid_from", "valid_to", "is_current"]
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
 def test_scd2_stream_equals_sequential_batch_merges(spark, tmp_path):
     """Two micro-batches of dimension updates through the stream must
     produce exactly the state of applying scd2_init + scd2_merge
@@ -125,6 +130,7 @@ def test_scd2_stream_equals_sequential_batch_merges(spark, tmp_path):
     import datetime as dt
 
     from citybikedatawarehouse_spark.operators.scd import scd2_init, scd2_merge
+    from citybikedatawarehouse_spark.operators.table_format import fl_read
     from citybikedatawarehouse_spark.streaming.incremental import start_scd2_stream
 
     t0 = dt.datetime(2026, 1, 1)
@@ -155,7 +161,7 @@ def test_scd2_stream_equals_sequential_batch_merges(spark, tmp_path):
     finally:
         q.stop()
 
-    got = spark.read.parquet(state)
+    got = fl_read(spark, state)
     # expected: batch twin applied in order, with day2's in-batch
     # conflict collapsed to the t1 row first
     d1 = spark.createDataFrame(day1, UPD_SCHEMA)
@@ -167,15 +173,159 @@ def test_scd2_stream_equals_sequential_batch_merges(spark, tmp_path):
         ["name", "capacity"],
         "eff",
     )
-    cols = ["station_id", "name", "capacity", "valid_from", "valid_to", "is_current"]
-    key = lambda df: sorted(tuple(r[c] for c in cols) for r in df.collect())
-    assert key(got) == key(want)
+    assert _scd2_rows(got) == _scd2_rows(want)
     # invariant: exactly one current row per key
     cur = got.filter(F.col("is_current")).groupBy("station_id").count()
     assert cur.filter(F.col("count") > 1).count() == 0
     # history survived: station 1 and 2 have a closed version each
     closed = got.filter(~F.col("is_current"))
     assert {r["station_id"] for r in closed.collect()} == {1, 2}
+
+
+def _crash_once(monkeypatch, point, state):
+    """Arm one injected crash inside the next SCD2 epoch, defined at
+    the filesystem boundary so it means the same for any state
+    protocol: ``before_write`` fails the epoch's first parquet write
+    under ``state``; ``before_flip`` fails its first rename or replace
+    that lands in ``state`` (the step that publishes the new
+    dimension); ``after_flip`` lets that one through, then fails
+    before the stream can checkpoint the epoch."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    armed = [True]
+
+    def fire():
+        armed[0] = False
+        raise RuntimeError(f"injected crash {point}")
+
+    if point == "before_write":
+        orig = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **k):
+            if armed[0] and str(path).startswith(state):
+                fire()
+            return orig(self, path, *a, **k)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        return
+    for name in ("rename", "replace"):
+        orig = getattr(os, name)
+
+        def move(src, dst, *a, _orig=orig, **k):
+            if not (armed[0] and str(dst).startswith(state)):
+                return _orig(src, dst, *a, **k)
+            if point == "before_flip":
+                fire()
+            out = _orig(src, dst, *a, **k)
+            fire()
+            return out
+
+        monkeypatch.setattr(os, name, move)
+
+
+@pytest.mark.parametrize("point", ["before_write", "before_flip", "after_flip"])
+def test_scd2_stream_crash_then_checkpointed_restart(
+    spark, tmp_path, monkeypatch, point
+):
+    """A crash at any step of an SCD2 epoch, then a restart of the
+    query from its checkpoint: the previous dimension stays readable
+    through ``fl_read`` and the replayed epoch converges to
+    ``scd2_merge(scd2_init(d0), d1)``; the replay of an epoch
+    published before the crash commits nothing. A delete-then-rename
+    state swap fails ``before_flip``: the replay finds no state and
+    bootstraps the dimension from the batch alone."""
+    import datetime as dt
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from citybikedatawarehouse_spark.operators.scd import scd2_init, scd2_merge
+    from citybikedatawarehouse_spark.operators.table_format import (
+        fl_current_version,
+        fl_read,
+        fl_table_props,
+    )
+    from citybikedatawarehouse_spark.streaming.incremental import start_scd2_stream
+
+    t0, t1 = dt.datetime(2026, 1, 1), dt.datetime(2026, 2, 1)
+    d0 = [(1, "a", 10, t0), (2, "b", 20, t0)]
+    d1 = [(2, "b", 25, t1), (3, "c", 5, t1)]
+    src, state = str(tmp_path / "upd"), str(tmp_path / "dim")
+    # start_scd2_stream takes no checkpoint: give every start of this
+    # test's queries the same one, so a restart replays the epoch
+    start = DataStreamWriter.start
+    monkeypatch.setattr(
+        DataStreamWriter,
+        "start",
+        lambda self, *a, **k: start(
+            self.option("checkpointLocation", str(tmp_path / "ck")), *a, **k
+        ),
+    )
+
+    def run():
+        q = start_scd2_stream(
+            spark.readStream.schema(UPD_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            state, "station_id", ["name", "capacity"], "eff",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def land(rows):
+        spark.createDataFrame(rows, UPD_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    land(d0)
+    run()
+    v0 = fl_current_version(state)
+    dim0 = _scd2_rows(fl_read(spark, state))
+    assert [r[:3] for r in dim0] == [(1, "a", 10), (2, "b", 20)]
+
+    land(d1)
+    with monkeypatch.context() as m:
+        _crash_once(m, point, state)
+        with pytest.raises(Exception, match=f"injected crash {point}"):
+            run()
+    # the previous dimension stays readable; only after the flip is
+    # the epoch's new one current
+    assert _scd2_rows(fl_read(spark, state, v0)) == dim0
+    assert (fl_current_version(state) == v0) == (point != "after_flip")
+    if point != "after_flip":
+        assert _scd2_rows(fl_read(spark, state)) == dim0
+
+    v_crash = fl_current_version(state)
+    run()  # restart from the checkpoint: epoch 1 is replayed
+    assert (fl_current_version(state) == v_crash) == (point == "after_flip")
+    want = scd2_merge(
+        scd2_init(spark.createDataFrame(d0, UPD_SCHEMA), "station_id", "eff"),
+        spark.createDataFrame(d1, UPD_SCHEMA),
+        "station_id",
+        ["name", "capacity"],
+        "eff",
+    )
+    assert _scd2_rows(fl_read(spark, state)) == _scd2_rows(want)
+    props = fl_table_props(state)
+    assert props["last_epoch"] == 1 and props["operation"] == "overwrite"
+
+
+def test_empty_epoch_state_collects_without_a_job(spark, tmp_path):
+    """Epoch 0 of a slice loop reads no state: an empty local
+    relation with the state schema, which collects without a job."""
+    from citybikedatawarehouse_spark.streaming.incremental import (
+        _read_epoch_state,
+    )
+    from tests.spark_jobs import count_jobs
+
+    state = _read_epoch_state(
+        spark, str(tmp_path / "state"), DIGEST_STATE_SCHEMA, 0
+    )
+    assert state.schema == DIGEST_STATE_SCHEMA
+    assert count_jobs(spark, "epoch0_state", state.collect) == ([], 0)
 
 
 def test_stream_novelty_equals_batch_q114_semantics(spark, tmp_path):

@@ -142,3 +142,47 @@ def test_table_format_reads_parquet_with_a_declared_schema():
     assert inferred == ["zone_map_stats"]
     # the scan must actually see the declared reads
     assert {"_read_files", "_delete_keys_df"} <= set(declared)
+
+
+def _name(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.Name):
+        return node.id
+    return None
+
+
+def test_only_table_format_replaces_live_directories():
+    """A live table or state directory is replaced only by a commit of
+    ``operators/table_format.py`` (claim, write new files, flip one
+    pointer), which a crash cannot tear. No other package module
+    renames or deletes: no ``os.rename``, no Hadoop
+    ``FileSystem.rename``/``delete``, and ``shutil.rmtree`` only as the
+    interpreter-exit cleanup ``_scratch_dir`` registers for query
+    scratch space. ``os.replace`` of a single file stays allowed in
+    ``changes_feed`` (the consumer cursor)."""
+    moves, rmtrees, registered, replaces = [], [], [], []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = str(path.relative_to(_PKG))
+        if rel == _OWNER:
+            continue
+        for top in ast.parse(path.read_text()).body:
+            where = (rel, getattr(top, "name", None))
+            for node in ast.walk(top):
+                if _name(node) == "rmtree":
+                    rmtrees.append(where)
+                if not isinstance(node, ast.Call):
+                    continue
+                if _callee(node) in ("rename", "delete"):
+                    moves.append((*where, node.lineno))
+                if _callee(node) == "register" and any(
+                    _name(a) == "rmtree" for a in node.args
+                ):
+                    registered.append(where)
+                if _name(getattr(node.func, "value", None)) == "os" and (
+                    _callee(node) == "replace"
+                ):
+                    replaces.append(rel)
+    assert not moves, f"rename/delete outside {_OWNER}: {moves}"
+    assert rmtrees == registered == [("plans/warehouse_ops.py", "_scratch_dir")]
+    assert replaces == ["streaming/changes_feed.py"]
