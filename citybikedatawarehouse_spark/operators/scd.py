@@ -84,9 +84,12 @@ def scd2_merge(
         )
 
     passthrough = _as_struct({})
+    # the closed version's valid_to takes the dimension's type: a
+    # TIMESTAMP effective_ts would otherwise widen the TIMESTAMP_NTZ
+    # column scd2_init types, changing the schema on every merge
     closed = _as_struct(
         {
-            "valid_to": F.col("__eff"),
+            "valid_to": F.col("__eff").cast(dim.schema["valid_to"].dataType),
             "is_current": F.lit(False),
         }
     )

@@ -1009,55 +1009,85 @@ def fl_read_pruned(
     return _read_files(spark, m[keep], props), int(keep.sum()), len(m)
 
 
+def _exact_ints(values) -> list[int] | None:
+    """``values`` as Python ints when every one is exactly integral
+    (python-int arithmetic is then exact at any magnitude), else None."""
+    try:
+        out = [int(v) for v in values]
+    except (TypeError, ValueError, OverflowError):
+        return None
+    return out if all(i == v for i, v in zip(out, values)) else None
+
+
 def _targeting_hits(
-    spark: SparkSession, m_subset: pd.DataFrame, key: str, keys_df: DataFrame
+    spark: SparkSession,
+    m_subset: pd.DataFrame,
+    key: str,
+    keys_df: DataFrame,
+    key_bounds: tuple | None = None,
 ) -> tuple[set[str], DataFrame | None]:
     """Exact per-file merge/change targeting: which files' [min, max]
     key zones contain at least one key of ``keys_df``. Returns (the
-    paths touched with no Spark job needed — NULL-zone files, which
-    are conservatively touched — , a LAZY distinct touched-``path``
-    frame for the caller to collect, or None when the zone set
-    resolves entirely driver-side).
+    paths known touched with no Spark job, a LAZY distinct
+    touched-``path`` frame for the caller to collect, or None when
+    the zone set resolves entirely driver-side).
 
-    Integer keys (every merge key in practice) take a grid-bucketed
-    BROADCAST HASH JOIN: the zone set is cut into uniform integer
-    buckets driver-side (a file registers in every bucket its zone
+    ``key_bounds`` is ``(kmin, kmax)`` of ``keys_df``'s non-NULL keys
+    when the caller already computed them (``(None, None)``: there
+    are none), or None when unknown. NULL-zone files are
+    conservatively touched; the other zones split three ways:
+
+    - **untouched**: the zone is disjoint from ``[kmin, kmax]``;
+    - **touched**: the zone contains ``kmin`` or ``kmax`` (both are
+      real keys), no job needed;
+    - **undecided**: every other zone, i.e. one strictly inside
+      ``(kmin, kmax)``.
+
+    Only the undecided zones go to the join, so a contiguous band or
+    an append beyond every zone resolves with no Spark job at all.
+    The split needs exactly integral zones and bounds (every merge
+    key in practice); otherwise every zone goes to the join. With no
+    non-NULL key, no zone is touched (a NULL key matches no zone).
+
+    The join over integer zones is a grid-bucketed BROADCAST HASH
+    JOIN: the zone set is cut into uniform integer buckets
+    driver-side (a file registers in every bucket its zone
     overlaps), each key computes its bucket with one integer
     division, and the join is an equi-join on the bucket id with the
-    exact between() as a post-filter. The old shape — distinct keys
-    range-joined on a pure inequality — planned as a
-    BroadcastNestedLoopJoin: |keys| x |files| predicate evaluations
-    (at 100 TB, billions x 10^5) plus a full distinct exchange of
-    the update keys; the bucketed form is O(keys + matches) with no
-    key-side shuffle at all. Non-integer keys fall back to the range
-    join. The collect is O(touched files) paths, the same
-    cardinality the driver already plans scans with — never the keys
-    themselves."""
+    exact between() as a post-filter, O(keys + matches) with no
+    key-side shuffle (a pure-inequality range join plans as a
+    BroadcastNestedLoopJoin: |keys| x |files| predicate
+    evaluations). Non-integer keys fall back to that range join. The
+    collect is O(touched files) paths, the same cardinality the
+    driver already plans scans with — never the keys themselves."""
     if len(m_subset) == 0:
         return set(), None
     mn_s, mx_s = m_subset[f"min_{key}"], m_subset[f"max_{key}"]
     null_zone = mn_s.isna() | mx_s.isna()
     touched = set(m_subset.loc[null_zone, "path"])
     zones = m_subset.loc[~null_zone, ["path", f"min_{key}", f"max_{key}"]]
-    if zones.empty:
+    if zones.empty or (key_bounds is not None and key_bounds[0] is None):
         return touched, None
     paths = zones["path"].tolist()
-    try:
-        mins = [int(v) for v in zones[f"min_{key}"].tolist()]
-        maxs = [int(v) for v in zones[f"max_{key}"].tolist()]
-        exact = all(
-            i == v
-            for i, v in zip(
-                mins + maxs,
-                list(zones[f"min_{key}"]) + list(zones[f"max_{key}"]),
-            )
-        )
-    except (TypeError, ValueError, OverflowError):
-        exact = False
+    mins = _exact_ints(zones[f"min_{key}"].tolist())
+    maxs = _exact_ints(zones[f"max_{key}"].tolist())
+    exact = mins is not None and maxs is not None
+    bounds = _exact_ints(key_bounds) if exact and key_bounds else None
+    if bounds is not None:
+        kmin, kmax = bounds
+        undecided = []
+        for p, mn, mx in zip(paths, mins, maxs):
+            if mn <= kmin <= mx or mn <= kmax <= mx:
+                touched.add(p)
+            elif kmin < mn and mx < kmax:
+                undecided.append((p, mn, mx))
+        if not undecided:
+            return touched, None
+        paths, mins, maxs = (list(c) for c in zip(*undecided))
     gmin = min(mins) if exact else 0
     gmax = max(maxs) if exact else 0
-    # python-int arithmetic: exact at any magnitude; bail to the
-    # range join if the span would overflow the BIGINT bucket math
+    # bail to the range join if the span would overflow the BIGINT
+    # bucket math
     if not exact or (gmax - gmin) >= (1 << 62):
         zdf = spark.createDataFrame(
             zones[["path", f"min_{key}", f"max_{key}"]]
@@ -1075,14 +1105,14 @@ def _targeting_hits(
         )
         return touched, hits
     span = gmax - gmin + 1
-    n_buckets = max(1, min(4 * len(zones), 4096))
+    n_buckets = max(1, min(4 * len(paths), 4096))
     while True:
         width = -(-span // n_buckets)  # ceil
         n_pairs = sum(
             (mx - gmin) // width - (mn - gmin) // width + 1
             for mn, mx in zip(mins, maxs)
         )
-        if n_pairs <= 32 * len(zones) + 1024 or n_buckets == 1:
+        if n_pairs <= 32 * len(paths) + 1024 or n_buckets == 1:
             break
         n_buckets //= 2  # wide overlapping zones: coarser grid
     pairs = [
@@ -1184,10 +1214,13 @@ def fl_merge_upsert(
     key ranges rewrite zero files. Returns
     (n_replaced, n_inserted, files_rewritten, files_total).
 
-    Targeting is exact per file: the distinct update keys are joined
-    against the broadcast manifest key-zones (``key BETWEEN min AND
-    max``) — a file is touched iff at least one update key falls
-    inside its zone (NULL-zone files conservatively touched).
+    Targeting is exact per file: a file is touched iff at least one
+    update key falls inside its manifest key zone (NULL-zone files
+    conservatively touched). The update keys' bounds decide most
+    zones with no job (``_targeting_hits``): a zone disjoint from
+    ``[kmin, kmax]`` is untouched, one holding ``kmin`` or ``kmax``
+    is touched, and only the zones strictly between go to a join of
+    the distinct update keys against them.
     Touched files are read ONCE — the replaced-row count is derived
     from zero-job metadata arithmetic (touched files' manifest row
     total + update count − rows actually written, read back from the
@@ -1235,16 +1268,19 @@ def fl_merge_upsert(
     the commit (the streaming epoch / txnVersion pattern).
 
     Scale shape: the ``updates`` lineage is persisted across the
-    merge's actions and unpersisted on exit: ONE aggregate over the
+    merge's actions and unpersisted on exit. ONE aggregate over the
     updates materializes the cache and carries the row count, CHECK
-    violations, duplicate-key check and Z-order bounds together (an
-    empty micro-batch returns here, before any targeting job);
-    targeting is then ONE broadcast range join of distinct update
-    keys x O(files) zones reading from the cache; one scan of the
-    touched subset for the merge itself; shuffle volume
-    O(touched + updates), never O(table). ``deletes`` adds one write
-    of its distinct keys; without it the job sequence is the plain
-    merge's.
+    violations, duplicate-key check, Z-order bounds and key bounds
+    together (an empty micro-batch returns here: 1 action). The key
+    bounds sort the zones driver-side; a batch they decide — a
+    contiguous key band, an upsert across the tail, a pure append —
+    goes straight to the write (2 actions in all). Only a batch with
+    zones strictly inside its key range runs a targeting action, one
+    bucketed broadcast join of the distinct update keys (read from
+    the cache) against those zones (3 actions). The write scans the
+    touched subset once; shuffle volume O(touched + updates), never
+    O(table). ``deletes`` adds one write of its distinct keys;
+    without it the action sequence is the plain merge's.
 
     Counts deliberately avoid ``observe()``/``Observation.get``: its
     py4j row fetch hard-crashes (toPyRow assertion) when AQE
@@ -1297,15 +1333,18 @@ def fl_merge_upsert(
         ]
         m = fl_manifest(root, parent)
         # ONE plain aggregate over the (persisted) updates carries the
-        # row count, CHECK violations, Z-order bounds AND the
+        # row count, CHECK violations, Z-order bounds, the
         # duplicate-source-key check (count_distinct excludes NULL —
-        # counted separately); the targeting pass below then reuses
-        # the materialized cache, and an empty batch returns before
-        # any targeting job (no observe(): see the docstring)
+        # counted separately) AND the key bounds that decide most of
+        # the targeting; a targeting join then reuses the
+        # materialized cache, and an empty batch returns before any
+        # targeting (no observe(): see the docstring)
         counts = updates.agg(
             *row_metrics,
             F.count_distinct(F.col(key)).alias("__kd"),
             F.max(F.col(key).isNull().cast("int")).alias("__has_null"),
+            F.min(F.col(key)).alias("__kmin"),
+            F.max(F.col(key)).alias("__kmax"),
         ).first().asDict()
         n_updates = counts["n"]
         for name, sql in constraints.items():
@@ -1354,8 +1393,10 @@ def fl_merge_upsert(
                     _claim_version(root), m, props.get("delete_dirs") or []
                 )
             return 0, 0, 0, len(m)
-        keys_frame = updates.select(key).distinct()
-        touched, hits = _targeting_hits(spark, m, key, keys_frame)
+        touched, hits = _targeting_hits(
+            spark, m, key, updates.select(key).distinct(),
+            (counts["__kmin"], counts["__kmax"]),
+        )
         if hits is not None:
             touched = touched | {r["path"] for r in hits.collect()}
         touched_m = m[m["path"].isin(touched)]
@@ -1364,8 +1405,9 @@ def fl_merge_upsert(
         cols = [f["name"] for f in props["schema"]]
         if not touched and dels_df is None:
             # pure-append fast path (THE streaming hot shape: every
-            # batch key beyond every zone): no file intersects, so
-            # there is no matched count to take and no survivor
+            # batch key beyond every zone, decided from the key
+            # bounds): no file intersects, so there is no targeting
+            # join, no matched count to take and no survivor
             # anti-join to run — zero jobs beyond the write itself
             n_replaced = 0
             merged = updates.select(*cols)

@@ -5,6 +5,13 @@ then runs a q285/q293-shaped lifecycle at $SPARK_GRAFT_SF_DIR
 (default sf0.1) and prints per-phase totals — the measurement §1 of
 the optimization guide asks for before touching anything.
 
+Each commit of the lifecycle also prints its anatomy: one line per
+SQL execution it started (one per DataFrame action or write) with the
+execution's jobs, its duration and the driver gap before it (from the
+previous execution's end, or from the commit's start for the first),
+then the commit's totals. A commit-path change starts from these
+counts.
+
 Run: python scripts/profile_fl.py [sf_dir]
 """
 
@@ -44,6 +51,52 @@ def timed(mod, name, label=None):
 
     setattr(mod, name, wrap)
     return orig
+
+
+def _sql_store(spark):
+    """The SQL status store, once the listener bus has drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _executions_after(store, last_id: int) -> list:
+    """``store``'s executions with an id above ``last_id``, oldest
+    first."""
+    n = store.executionsCount()
+    out = []
+    while len(out) < n:
+        e = store.executionsList(n - 1 - len(out), 1).head()
+        if e.executionId() <= last_id:
+            break
+        out.append(e)
+    return out[::-1]
+
+
+def anatomy(spark, label: str, fn):
+    """Run the commit ``fn`` and print its SQL executions: jobs,
+    duration and the driver gap before each."""
+    store = _sql_store(spark)
+    n = store.executionsCount()
+    last_id = store.executionsList(n - 1, 1).head().executionId() if n else -1
+    t0_ms = time.time() * 1000.0
+    out = fn()
+    t1_ms = time.time() * 1000.0
+    execs = _executions_after(_sql_store(spark), last_id)
+    print(f"anatomy {label}: {len(execs)} executions, "
+          f"{sum(e.jobs().size() for e in execs)} jobs, "
+          f"{t1_ms - t0_ms:.0f} ms", flush=True)
+    prev_end = t0_ms
+    for e in execs:
+        start = e.submissionTime()
+        done = e.completionTime()
+        end = done.get().getTime() if done.isDefined() else t1_ms
+        desc = e.description().replace("\n", " ")[:48]
+        print(f"  exec {e.executionId():5d} jobs={e.jobs().size():2d} "
+              f"run={end - start:6.0f} ms gap={start - prev_end:6.0f} ms  "
+              f"{desc}", flush=True)
+        prev_end = end
+    print(f"  tail gap={t1_ms - prev_end:6.0f} ms", flush=True)
+    return out
 
 
 def main() -> None:
@@ -94,8 +147,10 @@ def main() -> None:
     src = base + "/src"
 
     t0 = time.perf_counter()
-    tf.fl_init(spark, src, o, key="o_orderkey",
-               zorder_by=("o_orderkey",), layout_files=16)
+    anatomy(spark, "init", lambda: tf.fl_init(
+        spark, src, o, key="o_orderkey", zorder_by=("o_orderkey",),
+        layout_files=16,
+    ))
     print(f"init: {time.perf_counter()-t0:.2f}s", flush=True)
 
     band = F.col("o_orderkey").between(1000, 2000)
@@ -110,13 +165,14 @@ def main() -> None:
         "o_custkey", "o_totalprice", F.lit("N").alias("o_orderstatus"),
     )
     t0 = time.perf_counter()
-    tf.fl_merge_upsert(spark, src, updates.unionByName(inserts),
-                       key="o_orderkey")
+    anatomy(spark, "merge1", lambda: tf.fl_merge_upsert(
+        spark, src, updates.unionByName(inserts), key="o_orderkey"
+    ))
     print(f"merge1: {time.perf_counter()-t0:.2f}s", flush=True)
 
     t0 = time.perf_counter()
     doomed = tf.fl_read_mor(spark, src).where(F.col("o_orderkey") % 10 == 7)
-    tf.fl_delete(spark, src, doomed)
+    anatomy(spark, "delete", lambda: tf.fl_delete(spark, src, doomed))
     print(f"delete: {time.perf_counter()-t0:.2f}s", flush=True)
 
     reinserts = o.where(F.col("o_orderkey") % 50 == 7).select(
@@ -124,7 +180,9 @@ def main() -> None:
         F.lit("N").alias("o_orderstatus"),
     )
     t0 = time.perf_counter()
-    tf.fl_merge_upsert(spark, src, reinserts, key="o_orderkey")
+    anatomy(spark, "merge2", lambda: tf.fl_merge_upsert(
+        spark, src, reinserts, key="o_orderkey"
+    ))
     print(f"merge2: {time.perf_counter()-t0:.2f}s", flush=True)
 
     from citybikedatawarehouse_spark.streaming.changes_feed import (

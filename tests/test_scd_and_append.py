@@ -89,3 +89,29 @@ def test_append_mode_accumulates(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2 * rides.count()
     write_parquet(rides, out, mode="overwrite")  # if_exists='replace'
     assert spark.read.parquet(out).count() == rides.count()
+
+
+def test_merge_keeps_the_dimension_schema_with_a_timestamp_eff(spark):
+    """A TIMESTAMP (local time zone) ``effective_ts`` closes versions
+    at the dimension's TIMESTAMP_NTZ ``valid_to`` type, so chained
+    merges keep one schema. Names and types are compared: nullability
+    is not kept (``scd2_init``'s ``is_current`` is a non-null literal,
+    nullable once the merge's full outer join has run, whatever the
+    ``effective_ts`` type)."""
+    schema = "station_id int, name string, eff timestamp"
+    d0 = spark.createDataFrame([(1, "Grove St", None)], schema).withColumn(
+        "eff", F.lit("2025-01-01 00:00:00").cast("timestamp")
+    )
+    d1 = spark.createDataFrame([(1, "Grove St PATH", None)], schema).withColumn(
+        "eff", F.lit("2025-02-01 00:00:00").cast("timestamp")
+    )
+    dim = scd2_init(d0, "station_id", "eff")
+    merged = scd2_merge(dim, d1, "station_id", ["name"], "eff")
+
+    def types(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    assert types(merged) == types(dim)
+    assert types(scd2_merge(merged, d1, "station_id", ["name"], "eff")) == types(dim)
+    old = merged.where(~F.col("is_current")).collect()
+    assert [str(r["valid_to"]) for r in old] == ["2025-02-01 00:00:00"]

@@ -27,6 +27,7 @@ from citybikedatawarehouse_spark.operators.table_format import (
     fl_vacuum,
     fl_versions,
 )
+from tests.spark_jobs import count_actions
 from tests.spark_jobs import count_jobs as _count_jobs
 
 
@@ -107,6 +108,121 @@ def test_pure_inserts_touch_zero_files(spark, sf_dir, tmp_path):
     assert (n_rep, n_ins) == (0, 50)
     assert n_touch == 0, "append-only keys must rewrite no existing file"
     assert fl_read(spark, root).count() == o.count() + 50
+
+
+def _merge_batch(o, zones, shape):
+    """A micro-batch of the given targeting shape for the 16-file
+    orders table whose sorted key zones are ``zones``."""
+    k = F.col("o_orderkey")
+    lo3, lo4, top = zones[3][0], zones[4][0], zones[-1][1]
+    if shape == "band_one_zone":
+        rows = o.where(k.between(lo3 + 5, lo3 + 30))
+    elif shape == "band_two_zones":
+        rows = o.where(k.between(lo4 - 40, lo4 + 40))
+    elif shape == "append":
+        rows = o.limit(20).withColumn("o_orderkey", k + top + 1)
+    elif shape == "undecided":
+        # the key range spans every zone, and most are strictly inside
+        rows = o.where((k < lo3) & (k % 97 == 0) | (k > top - 300))
+    else:
+        rows = o.limit(0)
+    return rows.withColumn("o_orderstatus", F.lit("R"))
+
+
+@pytest.mark.parametrize(
+    "shape, n_actions",
+    [
+        # the key bounds decide every zone: the aggregate, the write
+        ("band_one_zone", 2),
+        ("band_two_zones", 2),
+        ("append", 2),
+        # zones strictly inside the key range add the targeting join
+        ("undecided", 3),
+        # an empty micro-batch stops after the aggregate
+        ("empty", 1),
+    ],
+)
+def test_merge_action_budget(spark, sf_dir, tmp_path, shape, n_actions):
+    root, o = _init(spark, sf_dir, tmp_path)
+    zones = sorted(
+        fl_manifest(root)[["min_o_orderkey", "max_o_orderkey"]]
+        .itertuples(index=False, name=None)
+    )
+    batch = _merge_batch(o, [(int(a), int(b)) for a, b in zones], shape)
+    _, got = count_actions(
+        spark, lambda: fl_merge_upsert(spark, root, batch, key="o_orderkey")
+    )
+    assert got == n_actions
+
+
+def test_delete_and_compact_are_one_action_each(spark, sf_dir, tmp_path):
+    root, o = _init(spark, sf_dir, tmp_path)
+    doomed = o.where(F.col("o_orderkey") % 50 == 3)
+    assert count_actions(spark, lambda: fl_delete(spark, root, doomed))[1] == 1
+    assert count_actions(spark, lambda: fl_compact(spark, root))[1] == 1
+
+
+# A 160-row table of keys 0, 10, ..., 1590 with a second column v:
+# Z-ordered on k alone its 8 zones are disjoint with gaps between them
+# ([0, 190], [200, 390], ...); Z-ordered on (k, v) they overlap.
+_GAP_KEYS = range(0, 1600, 10)
+
+
+@pytest.mark.parametrize(
+    "zorder, keys",
+    [
+        (("k",), list(range(300, 500, 10))),  # contiguous band
+        (("k",), list(range(1400, 1800, 10))),  # band + tail inserts
+        (("k",), list(range(2000, 2100, 10))),  # pure append
+        (("k",), [195, 395, 595]),  # only in gaps between zones
+        (("k",), [390, 400]),  # zone edges
+        (("k",), [None]),  # all-NULL keys
+        (("k",), [5, 805, 1505]),  # scattered: a zone strictly inside
+        (("k", "v"), [50, 730, 1210, 1590]),  # overlapping zones
+    ],
+    ids=[
+        "band", "band_tail", "append", "gaps", "edges", "null",
+        "scattered", "zorder2",
+    ],
+)
+def test_bounds_targeting_is_exact(spark, tmp_path, zorder, keys):
+    """The key-bounds split of ``_targeting_hits`` touches exactly the
+    files the join-only path touches, which are exactly the files whose
+    zone holds an update key; the merge's counts match a pandas model."""
+    import pandas as pd
+
+    root = str(tmp_path / "t")
+    base = pd.DataFrame(
+        {"k": list(_GAP_KEYS), "v": [k * 7919 % 1000 for k in _GAP_KEYS]}
+    )
+    fl_init(
+        spark, root, spark.createDataFrame(base, "k long, v long"), key="k",
+        zorder_by=zorder, layout_files=8,
+    )
+    m = fl_manifest(root)
+    updates = spark.createDataFrame(
+        [(k, -1) for k in keys], "k long, v long"
+    )
+    real = [k for k in keys if k is not None]
+    bounds = (min(real), max(real)) if real else (None, None)
+
+    def touched(key_bounds):
+        paths, hits = table_format._targeting_hits(
+            spark, m, "k", updates.select("k").distinct(), key_bounds
+        )
+        return paths | {r["path"] for r in (hits.collect() if hits else [])}
+
+    want = {
+        p for p, lo, hi in zip(m["path"], m["min_k"], m["max_k"])
+        if any(lo <= k <= hi for k in real)
+    }
+    assert touched(bounds) == touched(None) == want
+
+    n_replaced = len(set(real) & set(_GAP_KEYS))
+    assert fl_merge_upsert(spark, root, updates, key="k")[:3] == (
+        n_replaced, len(keys) - n_replaced, len(want),
+    )
+    assert fl_read(spark, root).count() == len(base) + len(keys) - n_replaced
 
 
 def test_time_travel_shares_files_and_v1_immutable(
