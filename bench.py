@@ -5,8 +5,13 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is fully materialized through the noop sink (no driver
-collect — measures the distributed plan, not result transfer).
+Every query is timed by ``time_query``, the one timed run of a
+catalog query: it rebuilds the query, writes it through the noop sink
+(no driver collect — measures the distributed plan, not result
+transfer) and clears the cache, timing the build and the write apart.
+A query's number is the fastest of three such runs after one untimed
+warm-up run; its build/exec split goes to
+scripts/bench_last_detail.json.
 """
 
 from __future__ import annotations
@@ -130,54 +135,6 @@ HEADLINE = [
     "q294_fl_set_zorder",
 ]
 
-# Queries whose iterative driver loop (convergence counts, d-row
-# collects, eager checkpoints) runs at PLAN-BUILD time: the returned
-# DataFrame is already materialized, so timing only the noop write
-# would measure a cached 20k-row scan (q64 recorded 0.013 s that way
-# through round 4 — restated in round 5). For these, each timed run
-# REBUILDS the query so the number covers fit + serve.
-EAGER_BUILD = {
-    "q64_dedup_clusters",
-    "q133_copurchase_pagerank",
-    "q135_pca_power_iteration",
-    "q143_bpe_merges",
-    # q179's per-round label checkpoints run at plan-build time;
-    # q176 persists its oriented edge list, so a re-timed SAME
-    # DataFrame would read the cache — rebuilding per run keeps the
-    # number covering edge build + wedge join, not a cached scan
-    "q176_triangle_participation",
-    "q179_copurchase_communities",
-    # q262 persists its flagged edge list (same rationale as q176)
-    "q262_triangle_sample_estimate",
-    # q278's fl_init (layout write + footer zone stats + pointer flip)
-    # and manifest prune run at plan-build time; timing only the
-    # returned 5-row aggregate would measure none of the skipping
-    # round-trip
-    "q278_zonemap_prune",
-    # q283/q284 run their file-list commits (fl_init, fl_merge_upsert,
-    # fl_epoch_step crash/replay epochs) at plan-build time; the
-    # returned DataFrame is a small aggregate over the final table —
-    # rebuilding per run keeps the number covering the whole commit +
-    # read round-trip
-    "q283_manifest_pruned_read",
-    "q284_stream_manifest_sink",
-    "q285_filelist_merge",
-    "q286_filelist_delete_mor",
-    # q287-q289 likewise run their whole commit lifecycle (init,
-    # merges, evolution/restore commits, feed build) at plan-build
-    # time
-    "q287_schema_evolution",
-    "q288_fl_changes",
-    "q289_fl_restore",
-    "q290_fl_optimize",
-    "q291_fl_constraints",
-    # q292 builds its 4-commit history and drains the feed pump at
-    # plan-build time; the returned DataFrame is a tiny aggregate
-    "q292_fl_changes_stream",
-    "q293_fl_replicate",
-    "q294_fl_set_zorder",
-}
-
 # the round-1 baseline benched exactly these 13; rounds add queries
 # to HEADLINE for regression visibility, so the raw total is not
 # comparable across rounds — value_r1_subset is
@@ -190,16 +147,32 @@ R1_SUBSET = [
 ]
 
 # every headline name must resolve — a renamed query must fail here,
-# not silently drop out of the bench (the in-loop `continue` guard
-# only protects a PARTIAL registry import); and the r1 subset must
-# stay inside HEADLINE, else value_r1_subset silently shrinks and
+# not silently drop out of the bench; and the r1 subset must stay
+# inside HEADLINE, else value_r1_subset silently shrinks and
 # cross-round comparability is gone
 _missing = [q for q in HEADLINE if q not in QUERIES]
 assert not _missing, f"HEADLINE names not in registry: {_missing}"
 _drifted = [q for q in R1_SUBSET if q not in HEADLINE]
 assert not _drifted, f"R1_SUBSET names not in HEADLINE: {_drifted}"
-_eager_stray = [q for q in EAGER_BUILD if q not in HEADLINE]
-assert not _eager_stray, f"EAGER_BUILD names not in HEADLINE: {_eager_stray}"
+
+
+def time_query(spark, name: str, sf_dir: str) -> tuple[float, float]:
+    """The one timed run of a catalog query: build ``name`` from the
+    catalog, write it through the noop sink, then clear the cache.
+    Returns (build_s, exec_s). The build covers what a query does on
+    the driver before it returns its DataFrame (eager fits, table
+    commits, collects), the execution the write. Rebuilding per run
+    and clearing the cache after it mean no timed run reads a cache
+    that an earlier run built, whether a query persists lazily or
+    eagerly."""
+    try:
+        t0 = time.perf_counter()
+        df = QUERIES[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return t1 - t0, time.perf_counter() - t1
+    finally:
+        spark.catalog.clearCache()
 
 
 def _calibrate() -> float:
@@ -253,6 +226,8 @@ def main() -> None:
     spark = get_spark(app_name="cbdw-bench")
 
     timings: dict[str, float] = {}
+    build_s: dict[str, float] = {}
+    exec_s: dict[str, float] = {}
     # Interleaved contention probes (round-7 postmortem): the old
     # end-of-run calib ran AFTER all queries, so host load DURING the
     # sweep was invisible — r7's driver run recorded a phantom 3.4x
@@ -268,22 +243,15 @@ def main() -> None:
     t_bench0 = time.perf_counter()
     calib_inline["_start"] = _calibrate_parallel()
     for i, name in enumerate(HEADLINE):
-        if name not in QUERIES:
-            continue
-        df = QUERIES[name](spark, sf_dir)
-        df.count()  # warm: plan + scan caches (file listing, footers)
-        best = float("inf")
+        # untimed warm-up run: plan + scan caches (file listing, footers)
+        time_query(spark, name, sf_dir)
         # min-of-3: round-1 measured up to 4x run-to-run variance
         # (JIT/GC regime in a long-lived JVM); min-of-2 misgraded a
         # 2x perf gate, min-of-3 kept consecutive full runs within
         # 20% per query
-        for _ in range(3):
-            t0 = time.perf_counter()
-            if name in EAGER_BUILD:
-                df = QUERIES[name](spark, sf_dir)  # fit happens here
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 4)
+        b, e = min((time_query(spark, name, sf_dir) for _ in range(3)), key=sum)
+        timings[name] = round(b + e, 4)
+        build_s[name], exec_s[name] = round(b, 4), round(e, 4)
         query_ts[name] = round(time.perf_counter() - t_bench0, 2)
         if i % 3 == 2:  # one ~0.1 s probe per 3 queries (~3% overhead)
             calib_inline[name] = _calibrate_parallel()
@@ -313,14 +281,14 @@ def main() -> None:
     # calib_par samples (key = query just finished; "_start" = before
     # the first; a query whose nearest inline calib is
     # >>min(calib_inline) ran on a contended host), per-query end
-    # offsets, and the EAGER_BUILD restatement list (those queries
-    # REBUILD fit+serve per timed run, not comparable to pre-
-    # restatement rounds) — goes to scripts/bench_last_detail.json.
+    # offsets, and the build/exec split of each query's fastest run
+    # — goes to scripts/bench_last_detail.json.
     detail = {
         **summary,
+        "build_s": build_s,
+        "exec_s": exec_s,
         "calib_inline": calib_inline,
         "query_ts_sec": query_ts,
-        "eager_build": sorted(EAGER_BUILD),
     }
     try:
         detail_path = os.path.join(

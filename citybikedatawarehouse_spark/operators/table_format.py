@@ -1159,12 +1159,12 @@ def _manifest_bounds(
         if mns.isna().any() or mxs.isna().any():
             return None
         try:
-            lo, hi = mns.min(), mxs.max()
-            if int(lo) != lo or int(hi) != hi:
-                return None
-        except (TypeError, ValueError, OverflowError):
+            bounds = _exact_ints([mns.min(), mxs.max()])
+        except TypeError:  # stats that do not compare
             return None
-        out[c] = (int(lo), int(hi))
+        if bounds is None:
+            return None
+        out[c] = (bounds[0], bounds[1])
     return out
 
 

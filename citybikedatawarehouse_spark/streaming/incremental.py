@@ -3,8 +3,10 @@ persistent state. foreachBatch makes each micro-batch a normal batch
 job, so every step is the oracle-verified batch plan (AQE, broadcast
 of a small state side included), executed incrementally. Delivery is
 at-least-once: after a crash between a step's side effects and the
-stream's checkpoint, Structured Streaming replays the epoch. The
-state takes one of two shapes, each replay-safe:
+stream's checkpoint, Structured Streaming replays the epoch. Every
+``start_*`` starter takes an optional ``checkpoint_location`` to
+restart a stopped query where it left off (``_start``). The state
+takes one of two shapes, each replay-safe:
 
 - **Epoch slices** (dedup, novelty, transitions, funnel and the
   sketch and monoid feeds): each epoch writes its state slice, and
@@ -72,6 +74,19 @@ def _read_epoch_state(spark, state_dir, schema, epoch_id):
     return spark.read.schema(schema).parquet(*dirs)
 
 
+def _start(stream: DataFrame, step, checkpoint_location: str | None):
+    """Start ``stream`` with ``step`` as its foreachBatch function —
+    the one start of this module's starters. With a
+    ``checkpoint_location`` a stopped or crashed query restarts from
+    its checkpoint: the epochs it acknowledged do not run again, and
+    an epoch that had not been acknowledged is replayed under the same
+    id. Without one, Spark gives each start a fresh checkpoint."""
+    writer = stream.writeStream.foreachBatch(step)
+    if checkpoint_location is not None:
+        writer = writer.option("checkpointLocation", checkpoint_location)
+    return writer.start()
+
+
 def dedup_batch_against_state(
     batch: DataFrame, state_df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
@@ -95,6 +110,7 @@ def start_scd2_stream(
     key: str,
     attrs: list[str],
     effective_ts: str,
+    checkpoint_location: str | None = None,
 ):
     """Streaming SCD2 maintenance: each micro-batch of dimension
     updates is collapsed to its latest row per key (history inside
@@ -159,7 +175,7 @@ def start_scd2_stream(
             operation="overwrite",
         )
 
-    return updates_stream.writeStream.foreachBatch(step).start()
+    return _start(updates_stream, step, checkpoint_location)
 
 
 def start_incremental_dedup(
@@ -168,6 +184,7 @@ def start_incremental_dedup(
     state_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
+    checkpoint_location: str | None = None,
 ):
     """Start the streaming dedup: survivors land under
     ``out_dir/epoch=N``, digests under ``state_dir/epoch=N``.
@@ -185,7 +202,7 @@ def start_incremental_dedup(
             batch_df, epoch_id, out_dir, state_dir, id_col, text_col
         )
 
-    return docs_stream.writeStream.foreachBatch(step).start()
+    return _start(docs_stream, step, checkpoint_location)
 
 
 def dedup_epoch_step(
@@ -262,6 +279,7 @@ def start_incremental_novelty(
     state_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
+    checkpoint_location: str | None = None,
 ):
     """Streaming n-gram novelty: per-doc novelty scores land under
     ``out_dir/epoch=N``, the accumulated shingle vocabulary under
@@ -276,7 +294,7 @@ def start_incremental_novelty(
             batch_df, epoch_id, out_dir, state_dir, id_col, text_col
         )
 
-    return docs_stream.writeStream.foreachBatch(step).start()
+    return _start(docs_stream, step, checkpoint_location)
 
 
 def novelty_epoch_step(
@@ -376,7 +394,10 @@ def transitions_batch_with_state(
 
 
 def start_incremental_transitions(
-    events_stream: DataFrame, out_dir: str, state_dir: str
+    events_stream: DataFrame,
+    out_dir: str,
+    state_dir: str,
+    checkpoint_location: str | None = None,
 ):
     """Streaming first-order transition matrix: per-epoch
     (from_type, to_type, n) counts land under ``out_dir/epoch=N``
@@ -388,7 +409,7 @@ def start_incremental_transitions(
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         transitions_epoch_step(batch_df, epoch_id, out_dir, state_dir)
 
-    return events_stream.writeStream.foreachBatch(step).start()
+    return _start(events_stream, step, checkpoint_location)
 
 
 def transitions_epoch_step(
@@ -506,7 +527,9 @@ def funnel_batch_with_state(
 
 
 def start_incremental_funnel(
-    events_stream: DataFrame, state_dir: str
+    events_stream: DataFrame,
+    state_dir: str,
+    checkpoint_location: str | None = None,
 ):
     """Streaming funnel: per-user stage timestamps accumulate under
     ``state_dir/epoch=N`` (semilattice slices — resolve with
@@ -515,7 +538,7 @@ def start_incremental_funnel(
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         funnel_epoch_step(batch_df, epoch_id, state_dir)
 
-    return events_stream.writeStream.foreachBatch(step).start()
+    return _start(events_stream, step, checkpoint_location)
 
 
 def funnel_epoch_step(
@@ -1211,6 +1234,7 @@ def start_fl_upsert_stream(
     key: str,
     dedup_order_col: str | None = None,
     txn_app_id: str | None = None,
+    checkpoint_location: str | None = None,
 ):
     """Streaming upsert sink into a file-list manifest table
     (``fl_init`` first; cluster by the merge key so epochs stay
@@ -1227,4 +1251,4 @@ def start_fl_upsert_stream(
             batch_df, epoch_id, root, key, dedup_order_col, txn_app_id
         )
 
-    return updates_stream.writeStream.foreachBatch(step).start()
+    return _start(updates_stream, step, checkpoint_location)

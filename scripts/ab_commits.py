@@ -11,9 +11,11 @@ tree-by-tree (side order flipped every round so neither side owns the
 calib_par probes before/after, and compares per-side minima taken
 from the SAME drift window.
 
-Timing semantics per child mirror bench.py exactly: build, warm
-count(), then `runs` timed noop-sink writes (EAGER_BUILD queries are
-rebuilt inside the timed region, exactly as the bench does).
+Every child times with THIS script's ``bench.time_query`` (rebuild,
+noop-sink write, cache cleared; one untimed warm-up run, then `runs`
+timed runs) and takes only the query catalog and session from its
+tree, so an A/B against a tree with an older timing rule still times
+both sides the same way.
 
 Run (parent):
     python scripts/ab_commits.py --reps 3 --runs 2 \
@@ -23,7 +25,8 @@ Writes scripts/ab_commits.json.
 
 Child mode (internal):
     python scripts/ab_commits.py --child <tree> <runs> <names...>
-prints one JSON line {calib_pre, times:{name:[s,...]}, calib_post}.
+prints one JSON line {calib_pre, times:{name:[[build_s, exec_s],...]},
+calib_post}.
 """
 
 from __future__ import annotations
@@ -33,13 +36,15 @@ import json
 import os
 import subprocess
 import sys
-import time
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_bench(tree: str):
+    """This checkout's bench.py, importing the catalog from ``tree``."""
     sys.path.insert(0, tree)
     spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(tree, "bench.py")
+        "bench", os.path.join(_REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
@@ -56,16 +61,11 @@ def child(tree: str, runs: int, names: list[str]) -> None:
         "times": {},
     }
     for name in names:
-        df = bench.QUERIES[name](spark, sf_dir)
-        df.count()  # warm: plan + scan caches
-        ts = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            if name in bench.EAGER_BUILD:
-                df = bench.QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 4))
-        out["times"][name] = ts
+        bench.time_query(spark, name, sf_dir)  # untimed warm-up run
+        out["times"][name] = [
+            [round(t, 4) for t in bench.time_query(spark, name, sf_dir)]
+            for _ in range(runs)
+        ]
     out["calib_post"] = bench._calibrate_parallel()
     print("AB_CHILD " + json.dumps(out), flush=True)
     spark.stop()
@@ -118,7 +118,7 @@ def main() -> None:
                 f"round {r} {label}: calib "
                 f"{rnd[label]['calib_pre']:.3f}/{rnd[label]['calib_post']:.3f} "
                 + " ".join(
-                    f"{n.split('_')[0]}={min(v):.2f}"
+                    f"{n.split('_')[0]}={min(map(sum, v)):.2f}"
                     for n, v in rnd[label]["times"].items()
                 ),
                 flush=True,
@@ -129,7 +129,7 @@ def main() -> None:
         per_q = {}
         for n in names:
             vals = [
-                v
+                sum(v)
                 for rnd in rounds
                 if label in rnd
                 for v in rnd[label]["times"].get(n, [])

@@ -1,7 +1,7 @@
-"""Interleaved same-session re-measurement of the round-9 solo-bench
-regression suspects (VERDICT r9 item 1): q264_ivm_join_view (+81 %
-per-query wall r8s2 -> r9), q88/q117 semantic dedup (+40 %), q176
-triangle participation (+26 %).
+"""Interleaved same-session re-measurement of suspected per-query
+regressions (first written for the round-9 solo-bench suspects:
+q264_ivm_join_view, q88/q117 semantic dedup, q176 triangle
+participation).
 
 Methodology (PERFORMANCE.md, q237 co_sym note): cross-run deltas on
 this host routinely reach ±30-40 % from JVM warmup order and
@@ -12,10 +12,9 @@ regression shows up as a consistent per-round gap instead of a
 between-sessions offset. A calib_par probe per round pins each round
 to the CPU availability at that moment.
 
-Timing mirrors bench.py exactly: warm once (plan + scan caches), then
-per rep a noop write; q176 is EAGER_BUILD (its persist happens at
-plan-build), so each rep rebuilds the plan — same semantics as the
-bench's numbers being compared.
+Every run is one ``bench.time_query`` (rebuild, noop-sink write,
+cache cleared), the bench's own rule: one untimed warm-up run per
+query, then `reps` round-robin rounds.
 
 Run: python scripts/ab_interleaved.py [reps]
 Writes scripts/ab_interleaved.json.
@@ -23,20 +22,14 @@ Writes scripts/ab_interleaved.json.
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import sys
-import time
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
-spec = importlib.util.spec_from_file_location(
-    "bench", os.path.join(_HERE, "bench.py")
-)
-bench = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(bench)
+import bench  # noqa: E402
 
 TARGETS = [
     "q264_ivm_join_view",
@@ -50,24 +43,14 @@ def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = bench.get_spark(app_name="cbdw-ab-interleaved")
-    qs = bench.QUERIES
-
-    dfs = {}
     for name in TARGETS:
-        df = qs[name](spark, sf_dir)
-        df.count()  # warm
-        dfs[name] = df
+        bench.time_query(spark, name, sf_dir)  # untimed warm-up run
 
     times: dict[str, list[float]] = {n: [] for n in TARGETS}
     calib: list[float] = [bench._calibrate_parallel()]
-    for r in range(reps):
+    for _ in range(reps):
         for name in TARGETS:
-            df = dfs[name]
-            t0 = time.perf_counter()
-            if name in bench.EAGER_BUILD:
-                df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            times[name].append(round(time.perf_counter() - t0, 4))
+            times[name].append(round(sum(bench.time_query(spark, name, sf_dir)), 4))
         calib.append(bench._calibrate_parallel())
 
     out = {
@@ -77,18 +60,6 @@ def main() -> None:
         "min": {n: min(v) for n, v in times.items()},
         "median": {n: sorted(v)[len(v) // 2] for n, v in times.items()},
         "calib_par_per_round": [round(c, 4) for c in calib],
-        "r8s2_min_reference": {
-            "q264_ivm_join_view": 0.4759,
-            "q88_semantic_dedup": 2.5303,
-            "q117_semantic_dedup_hier": 1.6244,
-            "q176_triangle_participation": 5.9113,
-        },
-        "r9_min_reference": {
-            "q264_ivm_join_view": 0.5956,
-            "q88_semantic_dedup": 3.5145,
-            "q117_semantic_dedup_hier": 2.2469,
-            "q176_triangle_participation": 8.1288,
-        },
     }
     with open(os.path.join(_HERE, "scripts", "ab_interleaved.json"), "w") as f:
         json.dump(out, f, indent=1)

@@ -34,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import time_query  # noqa: E402
 from citybikedatawarehouse_spark.session import get_spark  # noqa: E402
 from citybikedatawarehouse_spark.sources.readers import load_table  # noqa: E402
 
@@ -205,6 +206,17 @@ def cap_stats(spark, out: str) -> None:
     )
 
 
+def time_each(spark, names, out: str, label: str) -> None:
+    """One ``bench.time_query`` run per query, printed as one line."""
+    for name in names:
+        b, e = time_query(spark, name, out)
+        print(
+            f"[time] {name}: {b + e:.1f} s (build {b:.1f} + exec {e:.1f}, "
+            f"single-shot, {label})",
+            flush=True,
+        )
+
+
 def main() -> None:
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     out = sys.argv[2] if len(sys.argv) > 2 else f"/tmp/sf100x_m{mult}"
@@ -216,14 +228,7 @@ def main() -> None:
     build(spark, mult, out)
     print(f"[build] {mult}x tables in {time.perf_counter() - t0:.1f} s -> {out}")
 
-    from citybikedatawarehouse_spark.plans.catalog import QUERIES
-
-    for name in QUERIES_UNDER_TEST:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, out)  # eager fits run here
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        print(f"[time] {name}: {dt:.1f} s (single-shot, {mult}x)")
+    time_each(spark, QUERIES_UNDER_TEST, out, f"{mult}x")
 
     try:
         cap_stats(spark, out)
@@ -312,18 +317,7 @@ def main_joins(mult: int, out: str) -> None:
     build_joins(spark, mult, out)
     print(f"[build] joins {mult}x in {time.perf_counter() - t0:.1f} s -> {out}")
 
-    from citybikedatawarehouse_spark.plans.catalog import QUERIES
-
-    for name in JOIN_QUERIES:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, out).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        print(
-            f"[time] {name}: {time.perf_counter() - t0:.1f} s "
-            f"(single-shot, joins {mult}x)",
-            flush=True,
-        )
+    time_each(spark, JOIN_QUERIES, out, f"joins {mult}x")
     spark.stop()
 
 
@@ -349,18 +343,7 @@ def main_evals(mult: int, out: str) -> None:
     print(f"[build] evals {mult}x in {time.perf_counter() - t0:.1f} s -> {out}",
           flush=True)
 
-    from citybikedatawarehouse_spark.plans.catalog import QUERIES
-
-    for name in EVAL_QUERIES:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, out).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        print(
-            f"[time] {name}: {time.perf_counter() - t0:.1f} s "
-            f"(single-shot, evals {mult}x)",
-            flush=True,
-        )
+    time_each(spark, EVAL_QUERIES, out, f"evals {mult}x")
     spark.stop()
 
 

@@ -3,7 +3,8 @@
 builds coherent N-copy unions of orders / customer / events at sf0.1
 (keys offset per copy, so per-customer and per-shard structure — the
 thing the window chains partition on — is preserved while row count
-multiplies), then single-shot times each query.
+multiplies), then single-shot times each query with
+``bench.time_query``.
 
 Usage:  python scripts/scale_r8s2.py [multiplier] [out_dir]
 Prints one wall line per query — the numbers PERFORMANCE.md records.
@@ -20,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import time_query  # noqa: E402
 from citybikedatawarehouse_spark.session import get_spark  # noqa: E402
 from citybikedatawarehouse_spark.sources.readers import load_table  # noqa: E402
 
@@ -196,14 +198,11 @@ def main() -> None:
         build(spark, mult, out)
         print(f"build {mult}x: {time.time() - t0:.1f}s", flush=True)
 
-    from citybikedatawarehouse_spark.plans.catalog import QUERIES
-
     for name in QUERIES_UNDER_TEST:
-        spark.catalog.clearCache()
-        t0 = time.time()
-        n = QUERIES[name](spark, out).count()
+        b, e = time_query(spark, name, out)
         print(
-            f"{name}: {time.time() - t0:.1f}s rows={n} ({mult}x)", flush=True
+            f"{name}: {b + e:.1f}s (build {b:.1f} + exec {e:.1f}, {mult}x)",
+            flush=True,
         )
 
 

@@ -55,6 +55,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import time_query  # noqa: E402
 from citybikedatawarehouse_spark.session import get_spark  # noqa: E402
 from citybikedatawarehouse_spark.sources.readers import load_table  # noqa: E402
 
@@ -238,21 +239,16 @@ def run_skew(mult: int, out: str, only: list[str] | None = None) -> None:
         )
     skew_stats(spark, out)
 
-    from citybikedatawarehouse_spark.plans.catalog import QUERIES
-
     for name in only or (
         "q61_ngram_jaccard",
         "q62_minhash_lsh",
         "q107_salted_join",
         "q237_hitrate_eval",
     ):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, out).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        b, e = time_query(spark, name, out)
         print(
-            f"[time] {name}: {time.perf_counter() - t0:.1f} s "
-            f"(single-shot, skewed {mult}x)"
+            f"[time] {name}: {b + e:.1f} s (build {b:.1f} + exec {e:.1f}, "
+            f"single-shot, skewed {mult}x)"
         )
     spark.stop()
 

@@ -15,23 +15,15 @@ import time
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entry_mod
+from citybikedatawarehouse_spark.session import get_spark
 from tests.oracle_harness import duckdb_con
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .appName("time_catalog")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="time_catalog")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entry_mod.queries()

@@ -30,6 +30,7 @@ from citybikedatawarehouse_spark.streaming.changes_feed import (
     run_fl_changes_stream,
     start_fl_changes_feed,
 )
+from tests.spark_jobs import count_actions
 from tests.spark_jobs import count_jobs as _count_jobs
 
 
@@ -591,7 +592,10 @@ def test_replication_batches_budget_and_lineage(spark, sf_dir, tmp_path):
       (14, 22 and 22-23). The replication count is 19 in some runs
       after the file's other tests: the second batch's merge then
       runs one more adaptive query-stage job (cause not found), so
-      the pin is a range."""
+      the pin is a range;
+    - driver actions: exactly 4 SQL executions in every run, so the
+      job wobble is a stage split inside an action, never an extra
+      action."""
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_table_props,
     )
@@ -605,12 +609,16 @@ def test_replication_batches_budget_and_lineage(spark, sf_dir, tmp_path):
     assert merge_jobs == [13, 20]
 
     dst = str(tmp_path / "batch_dst")
-    applied, n_jobs = _count_jobs(
-        spark, "batch_replicate",
-        lambda: replicate_changes(spark, src, dst, versions_per_batch=2),
+    (applied, n_jobs), n_actions = count_actions(
+        spark,
+        lambda: _count_jobs(
+            spark, "batch_replicate",
+            lambda: replicate_changes(spark, src, dst, versions_per_batch=2),
+        ),
     )
     src_lineage = fl_lineage(src)
     assert applied == len(src_lineage) == 4
+    assert n_actions == 4
     assert 18 <= n_jobs <= 19
     assert len(fl_lineage(dst)) <= -(-4 // 2)
 

@@ -6,6 +6,7 @@ boundaries."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,6 +74,65 @@ def test_stream_dedup_equals_batch_first_seen(spark, stream_dirs):
     # state holds each digest exactly once (appends never re-record)
     digests = spark.read.parquet(state).collect()
     assert len(digests) == len({r["digest"] for r in digests}) == len(first_seen)
+
+
+def test_stream_dedup_restarts_from_its_checkpoint(spark, tmp_path):
+    """A dedup query stopped and restarted on the same checkpoint runs
+    only the new epochs: the acknowledged epoch slices are not written
+    again (no second ``epoch=0`` slice) and the survivors are the batch
+    first-seen set of all three days. Without the checkpoint the
+    restart would re-read every file from epoch 0, and epoch 0's replay
+    would anti-join DAY1 against DAY2's digests."""
+    src, out, state = (str(tmp_path / d) for d in ("src", "out", "state"))
+    ck = str(tmp_path / "ck")
+
+    def land(day):
+        spark.createDataFrame(day, DOCS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def run():
+        stream = (
+            spark.readStream.schema(DOCS_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = start_incremental_dedup(stream, out, state, checkpoint_location=ck)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def slices():  # each epoch slice under out/ and state/ -> its files
+        return {
+            os.path.relpath(d, tmp_path): sorted(os.listdir(d))
+            for d in glob.glob(f"{tmp_path}/*/epoch=*")
+        }
+
+    land(DAY1)
+    land(DAY2)
+    run()
+    first = slices()
+    assert sorted(first) == [
+        "out/epoch=0", "out/epoch=1", "state/epoch=0", "state/epoch=1"
+    ]
+    land(DAY3)
+    run()
+    again = slices()
+    assert set(again) == set(first) | {"out/epoch=2", "state/epoch=2"}
+    # part-file names are unique per write: a rerun would rename them
+    assert {d: again[d] for d in first} == first
+
+    got = {
+        (r["doc_id"], r["text"])
+        for r in spark.read.parquet(f"{out}/epoch=*").select(
+            "doc_id", "text"
+        ).collect()
+    }
+    first_seen = {}
+    for doc_id, text in sorted(DAY1 + DAY2 + DAY3):
+        first_seen.setdefault(text, (doc_id, text))
+    assert got == set(first_seen.values())
 
 
 def test_batch_step_is_pure_q86_shape(spark):
@@ -190,8 +250,6 @@ def _crash_once(monkeypatch, point, state):
     that lands in ``state`` (the step that publishes the new
     dimension); ``after_flip`` lets that one through, then fails
     before the stream can checkpoint the epoch."""
-    import os
-
     from pyspark.sql.readwriter import DataFrameWriter
 
     armed = [True]
@@ -238,8 +296,6 @@ def test_scd2_stream_crash_then_checkpointed_restart(
     bootstraps the dimension from the batch alone."""
     import datetime as dt
 
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
     from citybikedatawarehouse_spark.operators.scd import scd2_init, scd2_merge
     from citybikedatawarehouse_spark.operators.table_format import (
         fl_current_version,
@@ -252,23 +308,14 @@ def test_scd2_stream_crash_then_checkpointed_restart(
     d0 = [(1, "a", 10, t0), (2, "b", 20, t0)]
     d1 = [(2, "b", 25, t1), (3, "c", 5, t1)]
     src, state = str(tmp_path / "upd"), str(tmp_path / "dim")
-    # start_scd2_stream takes no checkpoint: give every start of this
-    # test's queries the same one, so a restart replays the epoch
-    start = DataStreamWriter.start
-    monkeypatch.setattr(
-        DataStreamWriter,
-        "start",
-        lambda self, *a, **k: start(
-            self.option("checkpointLocation", str(tmp_path / "ck")), *a, **k
-        ),
-    )
 
-    def run():
+    def run():  # every start shares one checkpoint: a restart replays
         q = start_scd2_stream(
             spark.readStream.schema(UPD_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src),
             state, "station_id", ["name", "capacity"], "eff",
+            checkpoint_location=str(tmp_path / "ck"),
         )
         try:
             q.processAllAvailable()
